@@ -1186,8 +1186,7 @@ def q_stream_windowed_verdicts_json(spark, sf_dir):
     shape): a readStream source carrying deterministic JSON payloads,
     validated in the DEFAULT variant runtime-dispatch mode inside
     watermarked 1-hour windowed verdicts, drained with availableNow.
-    The hoisted variant projection chain is stateless, so it is
-    streaming-legal; the oracle re-derives each document's violation
+    The variant shred is stateless, so it is streaming-legal; the oracle re-derives each document's violation
     count in pure SQL and windows by time_bucket."""
     from jsonschema_spark.streaming.validate import windowed_verdicts
 
@@ -1301,7 +1300,7 @@ JSON_TYPED_SCHEMA_V2 = {
 def q_migration_impact_json_events(spark, sf_dir):
     """Schema migration over a dynamic JSON column
     (plans/migration.migration_impact_json): ONE try_parse_json into
-    Variant feeds BOTH compiled rule sets through a SHARED CSE hoist —
+    Variant feeds BOTH compiled rule sets through one shared shred —
     newly-violating documents under the tightened schema, with
     wrong-typed / malformed documents correctly excluded as
     pre-existing dirt (they violate the old rules too)."""
@@ -1331,11 +1330,11 @@ def q_validate_json_typed(spark, sf_dir):
 
 
 def q_verdict_counts_json_typed(spark, sf_dir):
-    """The variant-mode verdict hot path: fail_verdicts routes through
-    the hoisted-CSE annotate projection (each variant primitive
-    evaluated once per row) + size(violations)>0 | malformed — verdict
-    counting with runtime type fidelity.  ~1.8x faster than the
-    single-Column fail_predicate form, which cannot carry the hoist."""
+    """The variant-mode verdict hot path: fail_verdicts shreds the
+    parsed document once into typed per-path columns and evaluates
+    each keyword's boolean fails predicate over them, plus malformed —
+    verdict counting with runtime type fidelity and no violation
+    arrays."""
     doc_df = _json_typed_payload_df(spark, sf_dir)
     plan = js.compile_schema(JSON_TYPED_SCHEMA)
     vdf = plan.fail_verdicts(doc_df, json_col="payload", col="__fails__")
@@ -2215,24 +2214,33 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_validate_orders(spark, "/root/testdata/sf0.001")
 
 
-def _rotate(qs: dict) -> dict:
+def _rotate(qs: dict, path: str | None = None) -> dict:
     """Order the registry by rotation_order.json when present (written
     by tools/rotation.py from git diff + CORRECTNESS history): queries
     whose code changed since the last driver round lead, then the
     longest-unverified tail — the driver's oracle gate checks the
     first 50 entries, so the window must track the diff, not a manual
-    shuffle (r4 judge #2 / advice #2)."""
+    shuffle (r4 judge #2 / advice #2).
+
+    Only a MISSING file means "no rotation"; a corrupt or truncated one
+    raises, because falling back to the unrotated registry would
+    silently move changed queries out of the checked window."""
     import json as _json
     import os as _os
 
-    path = _os.path.join(
-        _os.path.dirname(_os.path.abspath(__file__)), "rotation_order.json"
-    )
+    if path is None:
+        path = _os.path.join(
+            _os.path.dirname(_os.path.abspath(__file__)), "rotation_order.json"
+        )
     try:
         with open(path) as f:
-            order = _json.load(f)["order"]
-    except Exception:
+            text = f.read()
+    except FileNotFoundError:
         return qs
+    try:
+        order = _json.loads(text)["order"]
+    except (ValueError, KeyError, TypeError) as e:
+        raise RuntimeError(f"corrupt rotation order file {path}: {e!r}") from e
     ranked = [q for q in order if q in qs] + [q for q in qs if q not in order]
     return {q: qs[q] for q in ranked}
 

@@ -283,10 +283,16 @@ class ResumableRun:
     partition_by: Sequence[str] | None = None
     source_id: str = ""
 
-    def run(self, df: DataFrame) -> DataFrame:
+    def run(self, df: DataFrame, sink=None) -> DataFrame:
         """Execute only the (partition, check) pairs missing from the
         manifest; append new checkpoint rows; return the verdicts of
-        THIS run (empty if everything was already done)."""
+        THIS run (empty if everything was already done).
+
+        ``sink``, when given, is called with those verdicts BEFORE the
+        checkpoint rows are appended — the order SideOutput enforces for
+        the violations sink: a crash between the two re-runs the
+        partitions (at-least-once) instead of skipping them with their
+        verdicts never written."""
         spark = df.sparkSession
         lineages = {c.name: _lineage(self.source_id, c) for c in self.suite.checks}
         done = self.manifest.completed(spark, lineages)
@@ -345,13 +351,17 @@ class ResumableRun:
                 new_rows.extend(rows)
                 all_new = v if all_new is None else all_new.unionByName(v)
 
-        if new_rows:
-            self.manifest.append(spark, new_rows, lineages)
         if all_new is None:
             from .operators.checks import VERDICT_SCHEMA
 
-            return spark.createDataFrame([], VERDICT_SCHEMA)
-        return spark.createDataFrame(new_rows, all_new.schema)
+            out = spark.createDataFrame([], VERDICT_SCHEMA)
+        else:
+            out = spark.createDataFrame(new_rows, all_new.schema)
+        if sink is not None:
+            sink(out)
+        if new_rows:
+            self.manifest.append(spark, new_rows, lineages)
+        return out
 
 @dataclass
 class SideOutput:

@@ -169,6 +169,9 @@ def cmd_run(args) -> int:
     suite = CheckSuite(build_suite(spark, cfg))
     out = cfg.get("output", {})
 
+    def write_verdicts(v):
+        write_output(v, out["verdicts"])
+
     run = None
     if out.get("manifest"):
         run = ResumableRun(
@@ -177,14 +180,17 @@ def cmd_run(args) -> int:
             partition_by=cfg.get("partition_by"),
             source_id=cfg["source"],
         )
-        verdicts = run.run(df)
+        # the verdict sink is written before the manifest marks the
+        # partitions done (ResumableRun.run), so a crash in between
+        # cannot lose their verdicts
+        verdicts = run.run(df, sink=write_verdicts if out.get("verdicts") else None)
+        n_fail = verdicts.filter("NOT pass").count()
     else:
         verdicts = suite.run(df)
-
-    n_fail = verdicts.filter("NOT pass").count()
-    if out.get("verdicts"):
-        write_output(verdicts, out["verdicts"])
-    else:
+        n_fail = verdicts.filter("NOT pass").count()
+        if out.get("verdicts"):
+            write_verdicts(verdicts)
+    if not out.get("verdicts"):
         verdicts.show(100, truncate=False)
 
     if out.get("violations") and cfg.get("schema"):

@@ -13,21 +13,16 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-VIOLATION_STRUCT = T.StructType(
-    [
-        T.StructField("path", T.StringType(), True),
-        T.StructField("info", T.StringType(), True),
-    ]
-)
-VIOLATION_ARRAY = T.ArrayType(VIOLATION_STRUCT, True)
 VIOLATION_ARRAY_DDL = "array<struct<path:string,info:string>>"
 
 
 def empty_violations() -> Column:
-    """A typed empty violations array (the 'no error' value)."""
-    return F.array().cast(VIOLATION_ARRAY)
+    """A typed empty violations array (the 'no error' value).  SQL text
+    rather than ``F.array().cast(...)``: a plan holds one per keyword,
+    and each Column method call costs a JVM round trip plus a call-site
+    capture on the driver."""
+    return F.expr(f"CAST(array() AS {VIOLATION_ARRAY_DDL})")
 
 
 def violation(path: str | Column, info: str | Column) -> Column:

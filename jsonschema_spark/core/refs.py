@@ -25,58 +25,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .variant import KIND_NULL, Shred
 from .variant import variant_child as _variant_child
-
-
-class Hoist:
-    """Common-subexpression hoisting for the variant validation path.
-
-    Every keyword touching a variant field independently rebuilds the
-    same primitives — the field's ``try_variant_get``, its container
-    casts, its ``schema_of_variant`` — and most of those copies sit
-    inside CASE WHEN branches, where Spark's codegen-level
-    subexpression elimination does NOT deduplicate (measured: 30
-    conditional uses of one get = 2-3x the hoisted cost).  The fix:
-    register each distinct primitive ONCE as a named projection column
-    below the violations projection.  ``CollapseProject`` keeps the
-    extra Project levels because the hoisted expressions are non-cheap
-    and multiply-referenced, so each primitive is evaluated exactly
-    once per row; whole-stage codegen still fuses the chain into one
-    stage (no materialization between levels).
-
-    Levels order dependencies: an expression referencing a hoisted
-    placeholder must live in a LATER projection than the placeholder
-    (sibling columns of one Project cannot see each other)."""
-
-    def __init__(self, prefix: str = "__jsvh_"):
-        self._prefix = prefix
-        self._entries: dict[tuple, tuple[str, int, Column]] = {}
-
-    def get(self, key: tuple, level: int, build) -> Column:
-        """Placeholder Column for `key`, registering `build()` at
-        `level` on first request."""
-        if key not in self._entries:
-            name = f"{self._prefix}{len(self._entries)}"
-            self._entries[key] = (name, level, build())
-        return F.col(self._entries[key][0])
-
-    def level_of(self, key: tuple) -> int:
-        return self._entries[key][1]
-
-    def names(self) -> list[str]:
-        return [name for (name, _, _) in self._entries.values()]
-
-    def apply(self, df):
-        """Materialize the registered columns as a chain of projections
-        (one per level, each referencing only earlier levels)."""
-        if not self._entries:
-            return df
-        by_level: dict[int, dict[str, Column]] = {}
-        for name, level, expr in self._entries.values():
-            by_level.setdefault(level, {})[name] = expr
-        for level in sorted(by_level):
-            df = df.withColumns(by_level[level])
-        return df
 
 
 @dataclass
@@ -89,12 +39,13 @@ class ValueRef:
     # lambda-scope bindings (foreach's __key/__val, foreach.go:22-32):
     # consulted by child() before the static schema lookup
     bindings: dict | None = None
-    # variant-path CSE (annotate_json wires these on the root; children
-    # inherit; lambda-bound element refs never hoist — their columns
-    # are lambda variables that cannot leave the enclosing HOF)
-    hoist: Hoist | None = None
-    hkey: tuple | None = None  # identity of the value this ref points at
-    hlevel: int = 0  # projection level col becomes available at
+    # the shredded variant document this ref reads from, and its
+    # key/index path from the document root (annotate_json and
+    # fail_verdicts wire these on the root; children inherit; refs whose
+    # column is not the document's own value — lambda elements,
+    # defaulted children — carry none)
+    shred: Shred | None = None
+    spath: tuple | None = None
 
     def null(self) -> Column:
         """Runtime 'value missing' predicate (never true for the root)."""
@@ -107,6 +58,8 @@ class ValueRef:
             # validator except `required`/`dependencies` (which read
             # map-key presence — the reference's m[key] lookup finds a
             # nil entry; use missing() there)
+            if self._shredded():
+                return self.shred.test(self.spath, "null", f"{{k}} IS NULL OR {{k}} = '{KIND_NULL}'")
             return self.col.isNull() | F.is_variant_null(self.col)
         return self.col.isNull()
 
@@ -121,6 +74,8 @@ class ValueRef:
             return F.lit(False)
         if not self.exists:
             return F.lit(True)
+        if self._shredded():
+            return self.shred.test(self.spath, "missing", "{k} IS NULL")
         return self.col.isNull()
 
     def present(self) -> Column:
@@ -140,17 +95,8 @@ class ValueRef:
             # variant parent (incl. a variant ROOT document): binary
             # path walk; absent key -> SQL NULL, present JSON null ->
             # variant-null (required semantics preserved)
-            if self.hoist is not None and self.hkey is not None:
-                key = self.hkey + ("k", name)
-                col = self.hoist.get(
-                    key,
-                    self.hlevel + 1,
-                    lambda: _variant_child(self.col, name),
-                )
-                return ValueRef(
-                    col, T.VariantType(), child_path,
-                    hoist=self.hoist, hkey=key, hlevel=self.hlevel + 1,
-                )
+            if self._shredded() and Shred.addressable(self.spath + (name,)):
+                return self._shred_ref(self.spath + (name,), child_path)
             return ValueRef(
                 _variant_child(self.col, name), T.VariantType(), child_path
             )
@@ -184,17 +130,8 @@ class ValueRef:
                 F.try_element_at(self.col, F.lit(i + 1)), self.dtype.elementType, child_path
             )
         if isinstance(self.dtype, T.VariantType):
-            if self.hoist is not None and self.hkey is not None:
-                key = self.hkey + ("i", i)
-                col = self.hoist.get(
-                    key,
-                    self.hlevel + 1,
-                    lambda: F.try_variant_get(self.col, f"$[{i}]", "variant"),
-                )
-                return ValueRef(
-                    col, T.VariantType(), child_path,
-                    hoist=self.hoist, hkey=key, hlevel=self.hlevel + 1,
-                )
+            if self._shredded():
+                return self._shred_ref(self.spath + (i,), child_path)
             return ValueRef(
                 F.try_variant_get(self.col, f"$[{i}]", "variant"),
                 T.VariantType(),
@@ -205,7 +142,7 @@ class ValueRef:
     def element(self, lam_var: Column) -> "ValueRef":
         """The per-element ref inside a higher-order-function lambda
         (reference Items path suffix '[*]', validator_base.go:646-650).
-        Never hoisted: the column is a lambda variable that cannot
+        Never shredded: the column is a lambda variable that cannot
         leave the enclosing higher-order function."""
         elem_dt = (
             self.dtype.elementType if isinstance(self.dtype, T.ArrayType) else None
@@ -215,210 +152,127 @@ class ValueRef:
     def with_path(self, path: str) -> "ValueRef":
         return replace(self, path=path)
 
-    # ----- variant runtime views (hoisted primitives, inline fallback)
-    #
-    # Each keyword touching a variant value needs some of: its
-    # container casts, its scalar schema, its typed scalar gets.  When
-    # the ref is hoist-wired (annotate_json), each primitive becomes
-    # ONE named projection column shared by every keyword; otherwise
-    # (fail_predicate's single-Column contract, lambda elements) the
-    # core.variant inline forms are returned unchanged.
+    def with_col(self, col: Column) -> "ValueRef":
+        """The same ref over a different value column (e.g. a default
+        filled in): no longer the shredded document's own value."""
+        return replace(self, col=col, shred=None, spath=None)
 
-    def _hoistable(self) -> bool:
+    def _shred_ref(self, segs: tuple, path: str) -> "ValueRef":
+        return ValueRef(
+            self.shred.value(segs), T.VariantType(), path, shred=self.shred, spath=segs
+        )
+
+    # ----- variant runtime views (shredded, inline fallback)
+    #
+    # Each keyword touching a variant value needs some of: its kind,
+    # its container views, its strict typed views, its coercions.  On a
+    # shred-wired ref (annotate_json, fail_verdicts) each is the path's
+    # one shredded expression, shared by every keyword; otherwise
+    # (lambda elements, defaulted children, paths with no variant-path
+    # form) the core.variant inline forms are returned.
+
+    def _shredded(self) -> bool:
         return (
-            self.hoist is not None
-            and self.hkey is not None
+            self.shred is not None
+            and self.spath is not None
             and isinstance(self.dtype, T.VariantType)
         )
 
-    def _hp(self, tag: str, extra: int, build) -> Column:
-        return self.hoist.get(self.hkey + (tag,), self.hlevel + extra, build)
+    def _view(self, name: str, inline) -> Column:
+        if self._shredded():
+            return self.shred.view(self.spath, name)
+        return inline(self.col)
 
     def v_object(self) -> Column:
         """map<string,variant> view; NULL unless a JSON object."""
         from .variant import variant_object
 
-        if not self._hoistable():
-            return variant_object(self.col)
-        return self._hp("obj", 1, lambda: variant_object(self.col))
+        return self._view("obj", variant_object)
 
     def v_array(self) -> Column:
         """array<variant> view; NULL unless a JSON array."""
         from .variant import variant_array
 
-        if not self._hoistable():
-            return variant_array(self.col)
-        return self._hp("arr", 1, lambda: variant_array(self.col))
-
-    def v_sch(self) -> Column:
-        """schema_of_variant, guarded to scalar values (NULL for SQL
-        null and containers — callers' kind branches never read it
-        there, and the guard keeps the hoisted column from walking
-        whole objects/arrays every row)."""
-        from .variant import _scalar_schema
-
-        if not self._hoistable():
-            return _scalar_schema(self.col)
-        obj, arr = self.v_object(), self.v_array()
-        return self._hp(
-            "sch",
-            2,
-            lambda: F.when(
-                self.col.isNotNull() & obj.isNull() & arr.isNull(),
-                F.schema_of_variant(self.col),
-            ),
-        )
+        return self._view("arr", variant_array)
 
     def v_string(self) -> Column:
         """Strict string view (NULL unless a JSON string)."""
         from .variant import variant_string
 
-        if not self._hoistable():
-            return variant_string(self.col)
-        sch = self.v_sch()
-        return self._hp(
-            "str",
-            3,
-            lambda: F.when(
-                sch == "STRING", F.try_variant_get(self.col, "$", "string")
-            ),
-        )
+        return self._view("str", variant_string)
 
     def v_double(self) -> Column:
         """Strict numeric view as double (valueOfFloat,
         validator_base.go:405-425); NULL unless a JSON number."""
         from .variant import variant_double
 
-        if not self._hoistable():
-            return variant_double(self.col)
-        sch = self.v_sch()
-        return self._hp(
-            "dbl",
-            3,
-            lambda: F.when(
-                sch.isNotNull() & ~sch.isin("STRING", "BOOLEAN", "VOID", "BINARY"),
-                F.try_variant_get(self.col, "$", "double"),
-            ),
-        )
+        return self._view("num", variant_double)
 
     def v_bool(self) -> Column:
         """Strict boolean view (NULL unless a JSON bool)."""
         from .variant import variant_bool
 
-        if not self._hoistable():
-            return variant_bool(self.col)
-        sch = self.v_sch()
-        return self._hp(
-            "bool",
-            3,
-            lambda: F.when(
-                sch == "BOOLEAN", F.try_variant_get(self.col, "$", "boolean")
-            ),
-        )
+        return self._view("bool", variant_bool)
 
     def v_kind(self) -> Column:
         """Runtime kind ∈ {string,number,bool,object,array,null}
         (typeOf, type.go:3-20); NULL for SQL-null."""
-        from .variant import (
-            KIND_ARRAY,
-            KIND_BOOL,
-            KIND_NULL,
-            KIND_NUMBER,
-            KIND_OBJECT,
-            KIND_STRING,
-            variant_kind,
-        )
+        from .variant import variant_kind
 
-        if not self._hoistable():
-            return variant_kind(self.col)
-        obj, arr, sch = self.v_object(), self.v_array(), self.v_sch()
-        return self._hp(
-            "kind",
-            3,
-            lambda: (
-                F.when(self.col.isNull(), F.lit(None).cast("string"))
-                .when(F.is_variant_null(self.col), F.lit(KIND_NULL))
-                .when(obj.isNotNull(), F.lit(KIND_OBJECT))
-                .when(arr.isNotNull(), F.lit(KIND_ARRAY))
-                .when(sch == "STRING", F.lit(KIND_STRING))
-                .when(sch == "BOOLEAN", F.lit(KIND_BOOL))
-                .otherwise(F.lit(KIND_NUMBER))
-            ),
-        )
+        return self._view("kind", variant_kind)
+
+    def is_object(self) -> Column:
+        """Whether the value is a JSON object (never NULL) — the
+        reference's ``value.(map[string]interface{})`` guard."""
+        from .variant import KIND_OBJECT, variant_is_object
+
+        if self._shredded():
+            return self.shred.test(
+                self.spath, "is_object", f"coalesce({{k}} = '{KIND_OBJECT}', false)"
+            )
+        return variant_is_object(self.col)
 
     def go_label(self) -> Column:
         """reflect.TypeOf(...).String() label for type-error messages."""
         from .variant import GO_TYPE_LABELS, go_type_label
 
-        if not self._hoistable():
+        if not self._shredded():
             return go_type_label(self.col)
-        k = self.v_kind()
-        expr = None
-        for kind, label in GO_TYPE_LABELS.items():
-            expr = F.when(k == kind, label) if expr is None else expr.when(k == kind, label)
-        return expr.otherwise(F.lit(None).cast("string"))
+        whens = " ".join(
+            f"WHEN '{kind}' THEN '{label}'".replace("{", "{{").replace("}", "}}")
+            for kind, label in GO_TYPE_LABELS.items()
+        )
+        return self.shred.test(self.spath, "go_label", f"CASE {{k}} {whens} END")
 
     def str_of(self) -> Column:
         """StringOf coercion (common.go:71-91) over this ref."""
         from .coerce import string_of
-        from .variant import KIND_BOOL, KIND_NUMBER, KIND_STRING
 
-        if not self._hoistable():
+        if not self._shredded():
             return string_of(self.col, self.dtype)
-        k, s, d, b = self.v_kind(), self.v_string(), self.v_double(), self.v_bool()
-        as_long = d.cast("long")
-        num_s = F.when(d == as_long.cast("double"), as_long.cast("string")).otherwise(
-            d.cast("string")
-        )
-        return (
-            F.when(self.col.isNull() | F.is_variant_null(self.col), F.lit(""))
-            .when(k == KIND_STRING, s)
-            .when(k == KIND_BOOL, F.when(b, "true").otherwise("false"))
-            .when(k == KIND_NUMBER, num_s)
-            .otherwise(F.coalesce(F.to_json(self.col), F.lit("")))
-        )
+        return self.shred.view(self.spath, "str_of")
 
     def num_of(self) -> Column:
         """NumberOf coercion (common.go:93-112) over this ref."""
         from .coerce import number_of
-        from .variant import KIND_BOOL, KIND_NUMBER, KIND_STRING
 
-        if not self._hoistable():
+        if not self._shredded():
             return number_of(self.col, self.dtype)
-        k, s, d, b = self.v_kind(), self.v_string(), self.v_double(), self.v_bool()
-        return F.coalesce(
-            F.when(k == KIND_NUMBER, d)
-            .when(k == KIND_BOOL, F.when(b, 1.0).otherwise(0.0))
-            .when(
-                k == KIND_STRING,
-                F.coalesce(
-                    s.try_cast("double"),
-                    F.when(s == "true", F.lit(1.0)).otherwise(F.lit(0.0)),
-                ),
-            ),
-            F.lit(0.0),
-        )
+        return self.shred.view(self.spath, "num_of")
 
     def bool_of(self) -> Column:
         """BoolOf coercion (common.go:114-129) over this ref."""
         from .coerce import bool_of
-        from .variant import KIND_BOOL, KIND_NUMBER, KIND_STRING
 
-        if not self._hoistable():
+        if not self._shredded():
             return bool_of(self.col, self.dtype)
-        k, s, d, b = self.v_kind(), self.v_string(), self.v_double(), self.v_bool()
-        return F.coalesce(
-            F.when(k == KIND_BOOL, b)
-            .when(k == KIND_NUMBER, d > 0)
-            .when(k == KIND_STRING, s == "true"),
-            F.lit(False),
-        )
+        return self.shred.view(self.spath, "bool_of")
 
 
 def equal_refs(lhs: ValueRef, rhs: ValueRef) -> Column:
     """Coercing Equal (common.go:142-154) over refs: identical
     semantics to core.coerce.coercing_equal, but routed through the
-    refs' hoisted views when available."""
+    refs' shredded views when available."""
     from .coerce import _is_numeric
     from .variant import KIND_BOOL, KIND_NUMBER
 

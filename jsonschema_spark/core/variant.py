@@ -21,6 +21,8 @@ O(1) per scalar leaf.
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -204,3 +206,213 @@ def variant_child(col: Column, name: str) -> Column:
     if path is not None:
         return F.try_variant_get(col, path, "variant")
     return F.try_element_at(variant_object(col), F.lit(name))
+
+
+def variant_is_object(col: Column) -> Column:
+    """Whether the value is a JSON object, in O(1): the cast to an
+    empty struct checks the value's type and reads no field, where the
+    ``map<string,variant>`` view copies every entry."""
+    return F.try_variant_get(col, "$", "struct<>").isNotNull()
+
+
+def variant_path(segs: tuple) -> str | None:
+    """The variant-get path of a key/index path from the document root,
+    or None when a key has no path form (see variant_path_key) or would
+    need escaping inside a SQL string literal."""
+    out = "$"
+    for seg in segs:
+        if isinstance(seg, int):
+            out += f"[{seg}]"
+            continue
+        key = variant_path_key(seg)
+        if key is None or "\\" in seg:
+            return None
+        out += key[1:]
+    return out
+
+
+class Shred:
+    """One parsed variant document, shredded once into typed per-path
+    columns.
+
+    Keywords ask a shred-wired ``ValueRef`` for what they need at a path
+    — the value itself, its kind, a strict typed view, a coercion — and
+    each request registers that (path, view) pair here and returns a
+    column reference.  ``apply`` then adds the registered columns below
+    the rules, one projection per step:
+
+    - *extract*: each referenced path straight from the root document,
+      one ``try_variant_get`` whatever its depth;
+    - *kind*: each value classified once.  Containers are recognised
+      without being materialised (an empty-struct cast for objects, the
+      first element for arrays), so ``schema_of_variant`` only ever
+      sees scalars and empty arrays;
+    - *views*: the strict typed views, each one typed get guarded by the
+      kind;
+    - *coercions*: StringOf/NumberOf/BoolOf over the strict views.
+
+    The rules then read plain typed columns, as they do in static mode,
+    and each primitive is evaluated once per row however many keywords
+    read it.  Stage boundaries (``end_stage``) after the kinds and after
+    the coercions keep each generated method small enough for the JIT.
+    Each column is one SQL text: built from Column calls, every call is
+    a round trip to the JVM."""
+
+    def __init__(self, doc: str, prefix: str = "__jsonschema_shred_"):
+        self.doc = doc  # name of the parsed-document column
+        self._prefix = prefix
+        self._paths: dict[tuple, tuple[int, set]] = {}
+        self._cols: dict[str, Column] = {}
+
+    @staticmethod
+    def addressable(segs: tuple) -> bool:
+        return variant_path(segs) is not None
+
+    def _entry(self, segs: tuple) -> tuple[int, set]:
+        if segs not in self._paths:
+            self._paths[segs] = (len(self._paths), set())
+        return self._paths[segs]
+
+    def _name(self, view: str, segs: tuple) -> str:
+        if view == "value" and not segs:
+            return self.doc
+        return f"{self._prefix}{view}_{self._entry(segs)[0]}"
+
+    def _col(self, name: str, sql=None) -> Column:
+        if name not in self._cols:
+            self._cols[name] = F.col(name) if sql is None else F.expr(sql)
+        return self._cols[name]
+
+    def value(self, segs: tuple) -> Column:
+        """The variant at ``segs`` (SQL NULL when absent)."""
+        return self._col(self._name("value", segs))
+
+    def view(self, segs: tuple, name: str) -> Column:
+        """One view of the value at ``segs``: its ``kind`` (NULL when
+        absent), a strict view (``str``, ``num`` — valueOfFloat,
+        validator_base.go:405-425 —, ``bool``, ``obj``, ``arr``: NULL
+        unless the value is of that kind) or a coercion (``str_of``,
+        ``num_of``, ``bool_of``: StringOf/NumberOf/BoolOf,
+        common.go:71-129, defined for every value, absent included)."""
+        views = self._entry(segs)[1]
+        views.update(("kind", name, *_NEEDS.get(name, ())))
+        return self._col(self._name(name, segs))
+
+    def test(self, segs: tuple, name: str, sql: str) -> Column:
+        """A predicate over the kind ``{k}`` of the value at ``segs``,
+        built once per path and name."""
+        k = self._q(self._name("kind", segs))
+        self.view(segs, "kind")
+        return self._col(f"{name}:{k}", sql.format(k=k))
+
+    @staticmethod
+    def _q(name: str) -> str:
+        return "`" + name.replace("`", "``") + "`"
+
+    def names(self) -> list[str]:
+        """The scratch columns ``apply`` adds (drop them after the rules)."""
+        return [
+            self._name(n, segs)
+            for segs, (_, views) in self._paths.items()
+            for n in (["value"] if segs else []) + sorted(views)
+        ]
+
+    def apply(self, df):
+        """``df`` + the extract, kind, view and coercion projections,
+        with a code-generation stage boundary after the kinds and after
+        the coercions (see ``end_stage``)."""
+        if not self._paths:
+            return df
+        doc = F.col(self.doc)
+        extract = {
+            self._name("value", segs): F.try_variant_get(doc, variant_path(segs), "variant")
+            for segs in self._paths
+            if segs
+        }
+        if extract:
+            df = df.withColumns(extract)
+        for step in (("kind",), _STRICT, _COERCIONS):
+            cols = {
+                self._name(n, segs): F.expr(self._sql(n, segs))
+                for segs, (_, views) in self._paths.items()
+                for n in step
+                if n in views
+            }
+            if cols:
+                df = df.withColumns(cols)
+            if step != _STRICT:
+                df = end_stage(df)
+        return df
+
+    def _sql(self, name: str, segs: tuple) -> str:
+        v = self._q(self._name("value", segs))
+        k = self._q(self._name("kind", segs))
+
+        def view(n):
+            return self._q(self._name(n, segs))
+
+        if name == "kind":
+            return (
+                f"CASE WHEN {v} IS NULL THEN NULL"
+                f" WHEN is_variant_null({v}) THEN '{KIND_NULL}'"
+                f" WHEN try_variant_get({v}, '$', 'struct<>') IS NOT NULL THEN '{KIND_OBJECT}'"
+                f" WHEN try_variant_get({v}, '$[0]', 'variant') IS NOT NULL THEN '{KIND_ARRAY}'"
+                f" ELSE coalesce(element_at(map('STRING', '{KIND_STRING}',"
+                f" 'BOOLEAN', '{KIND_BOOL}', 'ARRAY<VOID>', '{KIND_ARRAY}'),"
+                f" schema_of_variant({v})), '{KIND_NUMBER}') END"
+            )
+        if name in _STRICT:
+            kind, sql_type = _STRICT[name]
+            return f"IF({k} = '{kind}', try_variant_get({v}, '$', '{sql_type}'), NULL)"
+        json = f"coalesce(to_json({v}), '')"
+        s, d, b = view("str"), view("num"), view("bool")
+        if name == "str_of":
+            return (
+                f"CASE {k} WHEN '{KIND_STRING}' THEN {s}"
+                f" WHEN '{KIND_BOOL}' THEN IF({b}, 'true', 'false')"
+                # shortest fixed form: integral doubles without a fraction
+                f" WHEN '{KIND_NUMBER}' THEN IF({d} = CAST(CAST({d} AS bigint) AS double),"
+                f" CAST(CAST({d} AS bigint) AS string), CAST({d} AS string))"
+                f" WHEN '{KIND_OBJECT}' THEN {json} WHEN '{KIND_ARRAY}' THEN {json}"
+                f" ELSE '' END"
+            )
+        if name == "num_of":
+            return (
+                f"CASE {k} WHEN '{KIND_NUMBER}' THEN {d}"
+                f" WHEN '{KIND_BOOL}' THEN IF({b}, 1.0D, 0.0D)"
+                f" WHEN '{KIND_STRING}' THEN coalesce(try_cast({s} AS double),"
+                f" IF({s} = 'true', 1.0D, 0.0D))"
+                f" ELSE 0.0D END"
+            )
+        return (
+            f"CASE {k} WHEN '{KIND_BOOL}' THEN {b} WHEN '{KIND_NUMBER}' THEN {d} > 0"
+            f" WHEN '{KIND_STRING}' THEN {s} = 'true' ELSE false END"
+        )
+
+
+_STAGE_SEQ = itertools.count()
+
+
+def end_stage(df):
+    """End a whole-stage-codegen stage here.  Spark generates one
+    method per stage, with every projection of the stage inlined into
+    it; HotSpot never compiles a method over 8000 bytecodes, so a stage
+    holding the parse, the shred and the rules would run in the
+    bytecode interpreter (measured: about twice the CPU time of the
+    same work in three stages).  A CollectMetrics node is not
+    code-generated, so it closes the stage below it; its row count is a
+    cheap side output."""
+    return df.observe(f"jsonschema_stage_{next(_STAGE_SEQ)}", F.count(F.lit(1)).alias("rows"))
+
+
+# strict view -> (the kind it holds, its SQL type)
+_STRICT = {
+    "str": (KIND_STRING, "string"),
+    "num": (KIND_NUMBER, "double"),
+    "bool": (KIND_BOOL, "boolean"),
+    "obj": (KIND_OBJECT, "map<string,variant>"),
+    "arr": (KIND_ARRAY, "array<variant>"),
+}
+_COERCIONS = ("str_of", "num_of", "bool_of")
+# the strict views each coercion reads
+_NEEDS = {n: ("str", "num", "bool") for n in _COERCIONS}

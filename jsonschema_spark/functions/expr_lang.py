@@ -979,6 +979,10 @@ def _fn_set_expr(env, a, b=None, *rest):
             ),
             v.dtype,
         )
+    if isinstance(_v(env, a).dtype, (T.MapType, T.ArrayType)):
+        raise ExprError(
+            "set(m, k) on a collection: set a map entry with the 3-arg form set(m, k, v)"
+        )
     return CVal(_v(env, b).num(), T.DoubleType())
 
 

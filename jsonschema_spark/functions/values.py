@@ -42,7 +42,7 @@ class Bound:
     dtype: Optional[T.DataType]
     static: object = NOT_STATIC  # python literal when compile-time constant
     # the originating document ref, when the value IS a document path —
-    # lets coercions reuse the ref's hoisted variant views
+    # lets coercions reuse the ref's shredded variant views
     ref: Optional[ValueRef] = None
 
     def str_of(self) -> Column:

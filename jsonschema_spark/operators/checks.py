@@ -252,10 +252,12 @@ class Uniqueness(Check):
             hashed.groupBy("partition_id", "__h")
             .agg(F.count(F.lit(1)).alias("__hc"))
             .filter(F.col("__hc") > 1)
-            .select("__h")
+            .select("partition_id", "__h")
         )
+        # join on the whole group key: one __h can stand for groups in
+        # several partitions, and a join on __h alone would repeat rows
         return (
-            hashed.join(cand, "__h")
+            hashed.join(cand, ["partition_id", "__h"])
             .groupBy("partition_id", *self.keys)
             .agg(F.count(F.lit(1)).alias("dup_count"))
             .filter(F.col("dup_count") > 1)
@@ -298,9 +300,9 @@ class Uniqueness(Check):
         ph1 = hashed.groupBy("partition_id", "__h").agg(
             F.count(F.lit(1)).alias("__hc")
         )
-        cand = ph1.filter(F.col("__hc") > 1).select("__h")
+        cand = ph1.filter(F.col("__hc") > 1).select("partition_id", "__h")
         exact = (
-            hashed.join(cand, "__h")
+            hashed.join(cand, ["partition_id", "__h"])
             .groupBy("partition_id", *self.keys)
             .agg(F.count(F.lit(1)).alias("c"))
         )
@@ -728,10 +730,10 @@ class SchemaCheck(Check):
         # construction (~2.4x) — falls back to the array path when the
         # document uses keywords outside the predicate subset.  The
         # json_col predicate is a single Column in both parse modes
-        # (fused-suite compatible); variant mode prices the violations
-        # array in — standalone verdict counting should prefer
-        # plan.fail_verdicts (hoisted), but fusion with the other
-        # checks' single scan dominates that here.
+        # (fused-suite compatible); variant mode dispatches inline
+        # without the shred — standalone verdict counting should prefer
+        # plan.fail_verdicts, but fusion with the other checks' single
+        # scan dominates that here.
         pred = self.plan.fail_predicate(
             df, json_col=self.json_col, json_types=self.json_types
         ) if self.json_col is not None else self.plan.fail_predicate(df)

@@ -38,18 +38,100 @@ class SchemaError(ValueError):
 
 
 class Rule:
-    """A compiled keyword: emits array<struct<path,info>> for a value."""
+    """A compiled keyword with two outputs for a value: ``violations``,
+    its array<struct<path,info>>, and ``fails``, the boolean
+    ``size(violations) > 0`` (never NULL).  Keywords override ``fails``
+    with a direct predicate where building the array only to test its
+    size would be the cost (verdict counting, if/anyOf/not conditions)."""
 
     def violations(self, ref: ValueRef) -> Column:  # pragma: no cover
         raise NotImplementedError
 
+    def fails(self, ref: ValueRef) -> Column:
+        return F.coalesce(F.size(self.violations(ref)) > 0, F.lit(False))
+
 
 class FnRule(Rule):
-    def __init__(self, fn: Callable[[ValueRef], Column]):
+    def __init__(
+        self,
+        fn: Callable[[ValueRef], Column],
+        fails: Callable[[ValueRef], Column] | None = None,
+    ):
         self.fn = fn
+        self._fails = fails
 
     def violations(self, ref: ValueRef) -> Column:
         return self.fn(ref)
+
+    def fails(self, ref: ValueRef) -> Column:
+        if self._fails is None:
+            return super().fails(ref)
+        return self._fails(ref)
+
+
+class CondRule(Rule):
+    """A keyword that fails on one condition at the value's own path —
+    one definition, both outputs.  ``build(ref)`` returns None when the
+    keyword cannot fail on this ref's static type, else
+    ``(fail, info)`` or ``(fail, info, unless)``: the failure condition
+    (NULL counts as passing), a thunk for the message (built only for
+    the violations output) and a condition under which the keyword
+    passes outright.  With ``skip_null`` a missing value passes (the
+    reference's null-skip fast paths, validator_base.go:180-183,
+    461-463)."""
+
+    def __init__(self, build, skip_null: bool = True):
+        self.build = build
+        self.skip_null = skip_null
+
+    def _built(self, ref: ValueRef):
+        if self.skip_null and not ref.exists:
+            return None
+        return self.build(ref)
+
+    def violations(self, ref: ValueRef) -> Column:
+        from ..core.errors import viol_when
+
+        built = self._built(ref)
+        if built is None:
+            return empty_violations()
+        v = viol_when(built[0], ref.path, built[1]())
+        if len(built) > 2:
+            v = F.when(built[2], empty_violations()).otherwise(v)
+        if self.skip_null:
+            v = F.when(ref.null(), empty_violations()).otherwise(v)
+        return v
+
+    def fails(self, ref: ValueRef) -> Column:
+        built = self._built(ref)
+        if built is None:
+            return F.lit(False)
+        fail = F.coalesce(built[0], F.lit(False))
+        if len(built) > 2:
+            fail = ~F.coalesce(built[2], F.lit(False)) & fail
+        return ~ref.null() & fail if self.skip_null else fail
+
+
+def passes(rule: Rule, ref: ValueRef, violations: Column | None = None) -> Column:
+    """Whether ``ref`` passes ``rule``, for conditions inside a
+    violations output (if, anyOf, not): the ``fails`` predicate on
+    variant values; fixed and static-JSON columns keep the array-size
+    form (over ``violations`` when the caller built them already), whose
+    plans stay as they were until plans/predicate.py folds into
+    ``fails``."""
+    if isinstance(ref.dtype, T.VariantType):
+        return ~rule.fails(ref)
+    return F.size(rule.violations(ref) if violations is None else violations) == 0
+
+
+def or_all(conds: list[Column]) -> Column:
+    """OR of non-NULL booleans (False for none)."""
+    if not conds:
+        return F.lit(False)
+    out = conds[0]
+    for c in conds[1:]:
+        out = out | c
+    return out
 
 
 class TransformOp:
@@ -161,8 +243,8 @@ class Node(Rule):
             return empty_violations()
         return concat_violations(*[r.violations(ref) for _, r in self.rules])
 
-    def ok(self, ref: ValueRef) -> Column:
-        return F.size(self.violations(ref)) == 0
+    def fails(self, ref: ValueRef) -> Column:
+        return or_all([r.fails(ref) for _, r in self.rules])
 
 
 def compile_node(doc, path: str, ctx: CompileCtx) -> Node:
@@ -237,33 +319,33 @@ class CompiledSchema:
         json_types: str | None = None,
     ) -> Column | None:
         """Boolean ``row fails`` Column WITHOUT violation-array
-        construction — ~2.4x faster for verdict counting (the 10^12-row
-        hot path).  None when the document uses keywords outside the
-        predicate subset; callers fall back to ``annotate`` (equality
-        of the two paths is tested across the fixture schemas).
+        construction, for verdict counting (the 10^12-row hot path).
 
-        With ``json_col`` the predicate runs over the parsed JSON
-        document column (same parse as annotate_json, fused into the
-        same codegen projection); a malformed document counts as a
-        failing row, matching the array path's single '$' violation."""
+        Fixed columns and static JSON compile through the predicate
+        compiler (plans/predicate.py); None when the document uses
+        keywords outside its subset, and callers fall back to
+        ``annotate``.  Variant JSON compiles each keyword's ``fails``
+        output over the parsed document; as one Column it cannot carry
+        the shred projections, so every keyword dispatches inline —
+        ``fail_verdicts`` is the fast form there.
+
+        With ``json_col`` a malformed document counts as a failing row,
+        matching the array path's single '$' violation."""
         from .predicate import compile_fail_predicate
 
+        if json_col is not None and self._json_mode(json_types) == "variant":
+            parsed, malformed_of = self._json_parse_expr(json_col, "variant")
+            root = ValueRef(col=parsed, dtype=T.VariantType(), path="$")
+            return self.node.fails(root) | malformed_of(parsed)
         if not hasattr(self, "_pred_build"):
             self._pred_build = compile_fail_predicate(self)
         if self._pred_build is None:
             return None
         if json_col is None:
             return self._pred_build(df)
-        mode = self._json_mode(json_types)
-        parsed, malformed_of = self._json_parse_expr(json_col, mode)
-        if mode == "variant":
-            # the predicate compiler's static dispatch can't see runtime
-            # kinds; the faithful path prices the violations array in
-            # (the parse — the dominant cost — is identical)
-            root = ValueRef(col=parsed, dtype=T.VariantType(), path="$")
-            return (F.size(self.node.violations(root)) > 0) | malformed_of(parsed)
         from .predicate import compile_fail
 
+        parsed, malformed_of = self._json_parse_expr(json_col, "static")
         root = ValueRef(col=parsed, dtype=self.json_root_type(), path="$")
         return compile_fail(self.doc, root, self.ctx) | malformed_of(parsed)
 
@@ -276,22 +358,19 @@ class CompiledSchema:
     ) -> DataFrame:
         """``df`` + boolean ``col``: whether each row fails validation
         — the DataFrame form of ``fail_predicate`` for verdict
-        counting.
+        counting; no violation array is built on any route.
 
-        For fixed columns and static JSON this delegates to the
-        predicate compiler (no violation-array construction).  For
-        variant-mode JSON it routes through ``annotate_json`` instead:
-        the single-Column contract of ``fail_predicate`` cannot carry
-        the hoisted-projection CSE, so the inline predicate re-evaluates
-        every variant primitive per keyword — measured ~1.8x slower
-        than hoisted-annotate + ``size() > 0`` at 1M docs."""
+        Fixed columns and static JSON take ``fail_predicate``'s
+        Column.  Variant JSON parses the document once, shreds it once
+        into per-path typed columns (core.variant.Shred) and evaluates
+        the keywords' ``fails`` predicates over those columns."""
         if json_col is not None and self._json_mode(json_types) == "variant":
-            tmp = "__jsonschema_viol__"
-            ann = self.annotate_json(df, json_col, col=tmp, json_types=json_types)
-            out = ann.withColumn(col, F.size(tmp) > 0).drop(tmp)
+            out = self._over_shred(
+                df, json_col, lambda root, malformed: [{col: self.node.fails(root) | malformed}]
+            )
             # same optimizer fence as ValidationResult: a caller filter
             # on the verdict column must not push the (parse-bearing)
-            # violations expression into a scan-level Filter
+            # predicate into a scan-level Filter
             return out.observe(
                 f"jsonschema_parse_gate_{next(_BARRIER_SEQ)}",
                 F.count(F.lit(1)).alias("rows_validated"),
@@ -300,8 +379,33 @@ class CompiledSchema:
         if pred is not None:
             return df.withColumn(col, pred)
         tmp = "__jsonschema_viol__"
-        ann = self.annotate(df, col=tmp)
+        ann = (
+            self.annotate(df, col=tmp)
+            if json_col is None
+            else self.annotate_json(df, json_col, col=tmp, json_types=json_types)
+        )
         return ann.withColumn(col, F.size(tmp) > 0).drop(tmp)
+
+    def _over_shred(self, df: DataFrame, json_col: str, outputs, keep_parsed: str | None = None):
+        """Variant JSON: parse ``json_col`` once, shred it once, then add
+        the columns ``outputs(root, malformed)`` returns — built over a
+        shred-wired root ref — and drop the scratch columns.
+
+        ``outputs`` returns a list of column dicts, added in that order
+        with a code-generation stage boundary between them; columns
+        named ``__jsonschema_*`` are scratch."""
+        from ..core.variant import Shred, end_stage
+
+        parsed, malformed_of = self._json_parse_expr(json_col, "variant")
+        tmp = keep_parsed or "__jsonschema_parsed__"
+        shred = Shred(tmp)
+        root = ValueRef(col=F.col(tmp), dtype=T.VariantType(), path="$", shred=shred, spath=())
+        steps = outputs(root, malformed_of(F.col(tmp)))
+        out = shred.apply(df.withColumn(tmp, parsed))
+        for i, cols in enumerate(steps):
+            out = (end_stage(out) if i else out).withColumns(cols)
+        scratch = shred.names() + [c for cols in steps for c in cols if c.startswith("__jsonschema_")]
+        return out.drop(*scratch, *([] if keep_parsed else [tmp]))
 
     def transform(self, df: DataFrame) -> DataFrame:
         """Apply mutation keywords (constVal/defaultVal/replaceKey/
@@ -395,8 +499,10 @@ class CompiledSchema:
         json_types: str | None = None,
     ) -> DataFrame:
         """Validate a dynamic JSON *string* column: parse ONCE (JVM-
-        side, fused into the same codegen projection as the rules),
-        then run the compiled plan against the parsed value.  The
+        side), then run the compiled plan against the parsed value —
+        in variant mode over one shred of it (core.variant.Shred), with
+        the violation arrays built only for rows whose ``fails``
+        predicate holds.  The
         reference's actual input domain — an arbitrary JSON document
         (schema.go:121-138) — lands here.
 
@@ -415,40 +521,31 @@ class CompiledSchema:
         from ..core.errors import violation
 
         mode = self._json_mode(json_types)
-        dt = T.VariantType() if mode == "variant" else self.json_root_type()
+
+        def with_decode_error(v: Column, malformed: Column) -> Column:
+            return F.when(malformed, violation("$", "invalid json document")).otherwise(v)
+
+        if mode == "variant":
+            # the violations array only for the rows that fail: the
+            # verdict first (the cheap predicate), then the array in a
+            # stage of its own, evaluated on failing rows alone
+            fails = "__jsonschema_fails__"
+            return self._over_shred(
+                df,
+                json_col,
+                lambda root, malformed: [
+                    {fails: self.node.fails(root) | malformed},
+                    {col: F.when(~F.col(fails), empty_violations()).otherwise(
+                        with_decode_error(self.node.violations(root), malformed)
+                    )},
+                ],
+                keep_parsed,
+            )
         parsed, malformed_of = self._json_parse_expr(json_col, mode)
         tmp = keep_parsed or "__jsonschema_parsed__"
-        df2 = df.withColumn(tmp, parsed)
-        if mode == "variant":
-            # CSE the per-path variant primitives (child gets, container
-            # casts, scalar schemas) into projection levels below the
-            # violations projection: each is evaluated ONCE per row
-            # instead of once per keyword occurrence (CASE WHEN branches
-            # defeat codegen-level subexpression elimination; measured
-            # 2-3x on repeated gets).  CollapseProject keeps the levels
-            # because the hoisted expressions are non-cheap and multiply
-            # referenced; whole-stage codegen fuses them into one stage.
-            from ..core.refs import Hoist
-
-            hoist = Hoist()
-            root = ValueRef(
-                col=F.col(tmp), dtype=dt, path="$",
-                hoist=hoist, hkey=("$",), hlevel=0,
-            )
-            v = self.node.violations(root)
-            v = F.when(
-                malformed_of(F.col(tmp)), violation("$", "invalid json document")
-            ).otherwise(v)
-            out = hoist.apply(df2).withColumn(col, v)
-            if hoist.names():
-                out = out.drop(*hoist.names())
-            return out if keep_parsed else out.drop(tmp)
-        root = ValueRef(col=F.col(tmp), dtype=dt, path="$")
-        v = self.node.violations(root)
-        v = F.when(
-            malformed_of(F.col(tmp)), violation("$", "invalid json document")
-        ).otherwise(v)
-        out = df2.withColumn(col, v)
+        root = ValueRef(col=F.col(tmp), dtype=self.json_root_type(), path="$")
+        v = with_decode_error(self.node.violations(root), malformed_of(F.col(tmp)))
+        out = df.withColumn(tmp, parsed).withColumn(col, v)
         return out if keep_parsed else out.drop(tmp)
 
     def validate(

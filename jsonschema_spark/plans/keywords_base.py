@@ -29,7 +29,7 @@ from ..core.errors import (
 )
 from ..core.refs import ValueRef, resolve
 from ..functions.values import parse_value
-from .compiler import FnRule, Rule, SchemaError, register_keyword
+from .compiler import CondRule, FnRule, Rule, SchemaError, or_all, register_keyword
 from .formats import compile_format
 
 
@@ -77,9 +77,9 @@ def kw_type(operand, path, siblings, ctx) -> Rule:
     wanted = [t.strip() for t in operand.split("|")]
     union = len(wanted) > 1
 
-    def fn(ref: ValueRef) -> Column:
+    def build(ref: ValueRef):
         if "any" in wanted:
-            return empty_violations()
+            return None
         dt = ref.dtype
         if isinstance(dt, T.VariantType):
             return _type_variant(ref, wanted, union, operand)
@@ -95,24 +95,26 @@ def kw_type(operand, path, siblings, ctx) -> Rule:
         ok = checks[0]
         for c in checks[1:]:
             ok = ok | c
-        if union:
-            info = F.lit(f"type should be one of {operand}")
-        elif wanted[0] == "integer" and _is_numeric(dt) and not _is_integral(dt):
-            info = F.concat(
-                F.lit("type should be integer, but float:"), string_of(ref.col, dt)
-            )
-        else:
+
+        def info():
+            if union:
+                return F.lit(f"type should be one of {operand}")
+            if wanted[0] == "integer" and _is_numeric(dt) and not _is_integral(dt):
+                return F.concat(
+                    F.lit("type should be integer, but float:"), string_of(ref.col, dt)
+                )
             given = dt.simpleString() if dt is not None else "null"
-            info = F.lit(f"Invalid type, expected: {wanted[0]} , given: {given}")
-        return _skip_null(ref, viol_when(~ok, ref.path, info))
+            return F.lit(f"Invalid type, expected: {wanted[0]} , given: {given}")
 
-    return FnRule(fn)
+        return ~ok, info
+
+    return CondRule(build)
 
 
-def _type_variant(ref: ValueRef, wanted, union, operand) -> Column:
+def _type_variant(ref: ValueRef, wanted, union, operand):
     """Runtime type dispatch on a Variant value — the exact typeOf
     switch (type.go:3-20) with reflect.TypeOf 'given:' labels
-    (validator_base.go:44-160)."""
+    (validator_base.go:44-160); a CondRule build result."""
     from ..core.variant import (
         KIND_ARRAY,
         KIND_BOOL,
@@ -122,7 +124,6 @@ def _type_variant(ref: ValueRef, wanted, union, operand) -> Column:
     )
 
     kind = ref.v_kind()
-    d = ref.v_double()
 
     def ok_of(w: str) -> Column:
         if w == "string":
@@ -133,6 +134,7 @@ def _type_variant(ref: ValueRef, wanted, union, operand) -> Column:
             return kind == KIND_NUMBER
         if w == "integer":
             # float64 with zero fraction passes (validator_base.go:95-101)
+            d = ref.v_double()
             return (kind == KIND_NUMBER) & (d == F.floor(d))
         if w == "object":
             return kind == KIND_OBJECT
@@ -143,27 +145,29 @@ def _type_variant(ref: ValueRef, wanted, union, operand) -> Column:
     ok = ok_of(wanted[0])
     for w in wanted[1:]:
         ok = ok | ok_of(w)
-    if union:
-        info = F.lit(f"type should be one of {operand}")
-    elif wanted[0] == "integer":
-        info = F.when(
-            kind == KIND_NUMBER,
-            F.concat(
-                F.lit("type should be integer, but float:"),
-                ref.str_of(),
-            ),
-        ).otherwise(
-            F.concat(
-                F.lit("Invalid type, expected: integer , given: "),
-                ref.go_label(),
+
+    def info():
+        if union:
+            return F.lit(f"type should be one of {operand}")
+        if wanted[0] == "integer":
+            return F.when(
+                kind == KIND_NUMBER,
+                F.concat(
+                    F.lit("type should be integer, but float:"),
+                    ref.str_of(),
+                ),
+            ).otherwise(
+                F.concat(
+                    F.lit("Invalid type, expected: integer , given: "),
+                    ref.go_label(),
+                )
             )
-        )
-    else:
-        info = F.concat(
+        return F.concat(
             F.lit(f"Invalid type, expected: {wanted[0]} , given: "),
             ref.go_label(),
         )
-    return _skip_null(ref, viol_when(~ok, ref.path, info))
+
+    return ~ok, info
 
 
 # ------------------------------------------------------- length bounds
@@ -191,30 +195,26 @@ def _length_of(ref: ValueRef) -> Column | None:
 def kw_max_length(operand, path, siblings, ctx) -> Rule:
     n = _int_operand(operand, "maxLength", path)
 
-    def fn(ref: ValueRef) -> Column:
+    def build(ref: ValueRef):
         ln = _length_of(ref)
         if ln is None:
-            return empty_violations()
-        return _skip_null(
-            ref, viol_when(ln > n, ref.path, f"length must be less or equal than {n}")
-        )
+            return None
+        return ln > n, lambda: f"length must be less or equal than {n}"
 
-    return FnRule(fn)
+    return CondRule(build)
 
 
 @register_keyword("minLength")
 def kw_min_length(operand, path, siblings, ctx) -> Rule:
     n = _int_operand(operand, "minLength", path)
 
-    def fn(ref: ValueRef) -> Column:
+    def build(ref: ValueRef):
         ln = _length_of(ref)
         if ln is None:
-            return empty_violations()
-        return _skip_null(
-            ref, viol_when(ln < n, ref.path, f"length must be larger or equal than {n}")
-        )
+            return None
+        return ln < n, lambda: f"length must be larger or equal than {n}"
 
-    return FnRule(fn)
+    return CondRule(build)
 
 
 def _int_operand(operand, kw, path) -> int:
@@ -257,19 +257,15 @@ def kw_maximum(operand, path, siblings, ctx) -> Rule:
     # (validator_base.go:365-375)
     exclusive = siblings.get("exclusiveMaximum") is True
 
-    def fn(ref: ValueRef) -> Column:
+    def build(ref: ValueRef):
         c = _numeric_value(ref)
         if c is None:
-            return empty_violations()
+            return None
         if exclusive:
-            fail = ~(c < v)
-            info = f"value must be  < {go_num(v)}"
-        else:
-            fail = ~(c <= v)
-            info = f"value must be <= than {go_num(v)}"
-        return _skip_null(ref, F.when(c.isNull(), empty_violations()).otherwise(viol_when(fail, ref.path, info)))
+            return ~(c < v), lambda: f"value must be  < {go_num(v)}", c.isNull()
+        return ~(c <= v), lambda: f"value must be <= than {go_num(v)}", c.isNull()
 
-    return FnRule(fn)
+    return CondRule(build)
 
 
 @register_keyword("minimum")
@@ -277,19 +273,15 @@ def kw_minimum(operand, path, siblings, ctx) -> Rule:
     v = _num_operand(operand, "minimum", path)
     exclusive = siblings.get("exclusiveMinimum") is True
 
-    def fn(ref: ValueRef) -> Column:
+    def build(ref: ValueRef):
         c = _numeric_value(ref)
         if c is None:
-            return empty_violations()
+            return None
         if exclusive:
-            fail = ~(c > v)
-            info = f"value must be larger than {go_num(v)}"
-        else:
-            fail = ~(c >= v)
-            info = f"value must be larger or equal than {go_num(v)}"
-        return _skip_null(ref, F.when(c.isNull(), empty_violations()).otherwise(viol_when(fail, ref.path, info)))
+            return ~(c > v), lambda: f"value must be larger than {go_num(v)}", c.isNull()
+        return ~(c >= v), lambda: f"value must be larger or equal than {go_num(v)}", c.isNull()
 
-    return FnRule(fn)
+    return CondRule(build)
 
 
 @register_keyword("exclusiveMaximum")
@@ -367,7 +359,7 @@ def _enum_rule(operand, path, keyword) -> Rule:
         raise SchemaError(f"value of '{keyword}' must be non-empty array, path:{path}")
     msg = f"value is invalid , shoule be one of {go_v(operand)}"  # sic (validator_base.go:477)
 
-    def fn(ref: ValueRef) -> Column:
+    def build(ref: ValueRef):
         dt = ref.dtype
         # coercing Equal keyed on LHS type (common.go:142-154)
         if isinstance(dt, T.VariantType):
@@ -383,7 +375,7 @@ def _enum_rule(operand, path, keyword) -> Rule:
                 .when(k == KIND_BOOL, ref.bool_of().isin(bools))
                 .otherwise(ref.str_of().isin(strs))
             )
-            return _skip_null(ref, viol_when(~ok, ref.path, msg))
+            return ~ok, lambda: msg
         lits = [coerce_literal_for(dt, v) for v in operand]
         if dt is not None and _is_numeric(dt):
             ok = number_of(ref.col, dt).isin([float(x) for x in lits])
@@ -391,9 +383,9 @@ def _enum_rule(operand, path, keyword) -> Rule:
             ok = bool_of(ref.col, dt).isin([bool(x) for x in lits])
         else:
             ok = string_of(ref.col, dt).isin([str(x) for x in lits])
-        return _skip_null(ref, viol_when(~ok, ref.path, msg))
+        return ~ok, lambda: msg
 
-    return FnRule(fn)
+    return CondRule(build)
 
 
 @register_keyword("enum")
@@ -411,11 +403,10 @@ def kw_const(operand, path, siblings, ctx) -> Rule:
     # const compares stringified (validator_base.go:762-782)
     sv = coerce_literal_for(T.StringType(), operand)
 
-    def fn(ref: ValueRef) -> Column:
-        ok = ref.str_of() == F.lit(sv)
-        return _skip_null(ref, viol_when(~ok, ref.path, f"value is invalid , expected: {sv}"))
+    def build(ref: ValueRef):
+        return ~(ref.str_of() == F.lit(sv)), lambda: f"value is invalid , expected: {sv}"
 
-    return FnRule(fn)
+    return CondRule(build)
 
 
 # ------------------------------------------------------------ required
@@ -440,30 +431,42 @@ def kw_required(operand, path, siblings, ctx) -> Rule:
                     f"additionalProperties is not enabled! path:{path}"
                 )
 
-    def fn(ref: ValueRef) -> Column:
-        parts = []
+    def absent(ref: ValueRef):
+        """(child ref, absence condition) per required key."""
+        out = []
         for k in keys:
             child = ref.child(k)
             if not child.exists:
-                parts.append(violation(child.path, "field is required"))
+                out.append((child, F.lit(True)))
             elif isinstance(child.dtype, T.VariantType):
                 # exact m[key] presence (validator_base.go:500-512):
                 # a present key holding JSON null is NOT missing
-                parts.append(viol_when(child.missing(), child.path, "field is required"))
+                out.append((child, child.missing()))
             else:
-                parts.append(viol_when(child.null(), child.path, "field is required"))
+                out.append((child, child.null()))
+        return out
+
+    def fn(ref: ValueRef) -> Column:
         from ..core.errors import concat_violations
 
-        out = concat_violations(*parts)
+        out = concat_violations(*[
+            violation(child.path, "field is required") if not child.exists
+            else viol_when(cond, child.path, "field is required")
+            for child, cond in absent(ref)
+        ])
         if isinstance(ref.dtype, T.VariantType):
             # non-object value: reference skips entirely
             # (value.(map[string]interface{}) guard)
-            out = F.when(
-                ref.v_object().isNull(), empty_violations()
-            ).otherwise(out)
+            out = F.when(~ref.is_object(), empty_violations()).otherwise(out)
         return out
 
-    return FnRule(fn)
+    def fails(ref: ValueRef) -> Column:
+        out = or_all([cond for _, cond in absent(ref)])
+        if isinstance(ref.dtype, T.VariantType):
+            out = ref.is_object() & out
+        return out
+
+    return FnRule(fn, fails)
 
 
 # ------------------------------------------------------------- pattern
@@ -479,20 +482,21 @@ def kw_pattern(operand, path, siblings, ctx) -> Rule:
     except _re.error as e:
         raise SchemaError(f"invalid pattern at {path}: {e}") from e
 
-    def fn(ref: ValueRef) -> Column:
+    def build(ref: ValueRef):
         dt = ref.dtype
         if isinstance(dt, T.VariantType):
             # strict view: non-strings are NULL -> check skips, exactly
             # the value.(string) guard (validator_strings.go:14-18)
             s = ref.v_string()
         elif dt is not None and not isinstance(dt, T.StringType):
-            return empty_violations()
+            return None
         else:
             s = ref.col.cast("string")
-        info = F.concat(s, F.lit(" ,value does not match pattern: "), F.lit(operand))
-        return _skip_null(ref, viol_when(~s.rlike(operand), ref.path, info))
+        return ~s.rlike(operand), lambda: F.concat(
+            s, F.lit(" ,value does not match pattern: "), F.lit(operand)
+        )
 
-    return FnRule(fn)
+    return CondRule(build)
 
 
 # --------------------------------------------------------------- items
@@ -512,22 +516,21 @@ def kw_items(operand, path, siblings, ctx) -> Rule:
         per_elem = F.transform(ref.col, lambda x: sub.violations(ref.element(x)))
         return _skip_null(ref, F.flatten(per_elem))
 
-    return FnRule(fn)
+    def fails(ref: ValueRef) -> Column:
+        aref = _variant_array_ref(ref) if isinstance(ref.dtype, T.VariantType) else ref
+        if not ref.exists or not isinstance(aref.dtype, T.ArrayType):
+            return F.lit(False)
+        some = F.exists(aref.col, lambda x: sub.fails(aref.element(x)))
+        return ~ref.null() & F.coalesce(some, F.lit(False))
+
+    return FnRule(fn, fails)
 
 
 def _variant_array_ref(ref: ValueRef) -> ValueRef:
-    """array<variant> view of a variant ref (NULL when not an array).
-    The copy keeps the parent's hoist registry under a view-scoped key
-    so element descents stay correctly namespaced."""
+    """array<variant> view of a variant ref (NULL when not an array)."""
     from dataclasses import replace as _replace
 
-    return _replace(
-        ref,
-        col=ref.v_array(),
-        dtype=T.ArrayType(T.VariantType()),
-        hkey=(ref.hkey + ("arrv",)) if ref.hkey is not None else None,
-        hlevel=ref.hlevel + 1,
-    )
+    return _replace(ref.with_col(ref.v_array()), dtype=T.ArrayType(T.VariantType()))
 
 
 @register_keyword("uniqueItems")

@@ -25,7 +25,7 @@ from ..core.errors import (
 )
 from ..core.refs import ValueRef, equal_refs, resolve
 from ..functions.values import parse_value
-from .compiler import FnRule, Rule, SchemaError, register_keyword
+from .compiler import FnRule, Rule, SchemaError, or_all, passes, register_keyword
 
 
 @contextlib.contextmanager
@@ -75,8 +75,9 @@ def _properties(operand, path, siblings, ctx) -> Rule:
         add_node = ctx.compile_node(additional, f"{path}.*")
     declared = list(operand.keys())
 
-    def fn(ref: ValueRef) -> Column:
-        parts = []
+    def child_refs(ref: ValueRef):
+        """(node, child ref) per declared property, defaults filled."""
+        out = []
         for k, node, sub in children:
             child = ref.child(k)
             # defaultVal fills the missing value, which is then
@@ -90,13 +91,12 @@ def _properties(operand, path, siblings, ctx) -> Rule:
                     # m[key] returns nil for both, validator_core.go:
                     # 443-453)
                     import json as _json
-                    from dataclasses import replace as _replace
 
                     if not (isinstance(dv, str) and "${" in dv):
                         filled = F.when(
                             child.null(), F.parse_json(F.lit(_json.dumps(dv)))
                         ).otherwise(child.col)
-                        child = _replace(child, col=filled)
+                        child = child.with_col(filled)
                     # dynamic ${...} template defaults on a variant
                     # child: no columnar JSON-encode of an arbitrary
                     # typed value — left unfilled
@@ -110,15 +110,18 @@ def _properties(operand, path, siblings, ctx) -> Rule:
                     # "default": {})
                     pass
                 else:
-                    from dataclasses import replace as _replace
-
                     b = parse_value(dv).bind(ref)
                     filled = F.coalesce(
                         child.col,
                         b.col.cast(child.dtype) if child.dtype else b.col,
                     )
-                    child = _replace(child, col=filled)
-            parts.append(node.violations(child))
+                    child = child.with_col(filled)
+            out.append((node, child))
+        return out
+
+    def extra(ref: ValueRef) -> list[Column]:
+        """Violations of the undeclared fields."""
+        parts = []
         # unknown fields (validator_core.go:419): only meaningful when
         # additionalProperties present and not True
         if additional is False:
@@ -162,9 +165,20 @@ def _properties(operand, path, siblings, ctx) -> Rule:
                 for f_ in dt.fields:
                     if f_.name not in declared:
                         parts.append(add_node.violations(ref.child(f_.name)))
-        return concat_violations(*parts)
+        return parts
 
-    return FnRule(fn)
+    def fn(ref: ValueRef) -> Column:
+        return concat_violations(
+            *[node.violations(child) for node, child in child_refs(ref)], *extra(ref)
+        )
+
+    def fails(ref: ValueRef) -> Column:
+        return or_all(
+            [node.fails(child) for node, child in child_refs(ref)]
+            + [F.coalesce(F.size(v) > 0, F.lit(False)) for v in extra(ref)]
+        )
+
+    return FnRule(fn, fails)
 
 
 @register_keyword("additionalProperties")
@@ -193,7 +207,7 @@ def _all_of(operand, path, ctx) -> Rule:
     def fn(ref: ValueRef) -> Column:
         return concat_violations(*[n.violations(ref) for n in nodes])
 
-    return FnRule(fn)
+    return FnRule(fn, lambda ref: or_all([n.fails(ref) for n in nodes]))
 
 
 def _any_of(operand, path, ctx) -> Rule:
@@ -206,13 +220,23 @@ def _any_of(operand, path, ctx) -> Rule:
         # (validator_logic.go:12-43)
         branch_viols = [n.violations(ref) for n in nodes]
         ok = F.lit(False)
-        for bv in branch_viols:
-            ok = ok | (F.size(bv) == 0)
+        for n, bv in zip(nodes, branch_viols):
+            ok = ok | passes(n, ref, bv)
         return F.when(ok, empty_violations()).otherwise(
             concat_violations(*branch_viols)
         )
 
-    return FnRule(fn)
+    def fails(ref: ValueRef) -> Column:
+        # fails iff every branch fails; with no branches the violations
+        # above are an empty concat, so nothing fails
+        if not nodes:
+            return F.lit(False)
+        out = nodes[0].fails(ref)
+        for n in nodes[1:]:
+            out = out & n.fails(ref)
+        return out
+
+    return FnRule(fn, fails)
 
 
 @register_keyword("anyOf")
@@ -237,10 +261,9 @@ def kw_not(operand, path, siblings, ctx) -> Rule:
     node = ctx.compile_node(operand, path)
 
     def fn(ref: ValueRef) -> Column:
-        inner_ok = F.size(node.violations(ref)) == 0
-        return viol_when(inner_ok, ref.path, "is not valid")
+        return viol_when(passes(node, ref), ref.path, "is not valid")
 
-    return FnRule(fn)
+    return FnRule(fn, lambda ref: ~node.fails(ref))
 
 
 # ------------------------------------------------------- if/then/else
@@ -251,7 +274,7 @@ def kw_if(operand, path, siblings, ctx) -> Rule:
         cond = ctx.compile_node(operand, path)
 
     def cond_ok(ref: ValueRef) -> Column:
-        return F.size(cond.violations(ref)) == 0
+        return passes(cond, ref)
 
     then_node = else_node = None
     if isinstance(siblings.get("then"), dict):
@@ -267,7 +290,12 @@ def kw_if(operand, path, siblings, ctx) -> Rule:
         else_v = else_node.violations(ref) if else_node else empty_violations()
         return F.when(ok, then_v).otherwise(else_v)
 
-    return FnRule(fn)
+    def fails(ref: ValueRef) -> Column:
+        then_f = then_node.fails(ref) if then_node else F.lit(False)
+        else_f = else_node.fails(ref) if else_node else F.lit(False)
+        return F.when(~cond.fails(ref), then_f).otherwise(else_f)
+
+    return FnRule(fn, fails)
 
 
 @register_keyword("then")
@@ -349,12 +377,14 @@ def _key_match(operand, path, ctx) -> Rule:
     compiled = [(jp, parse_value(v), v) for jp, v in operand.items()]
     silent = ctx.in_if
 
-    def fn(ref: ValueRef) -> Column:
-        parts = []
+    def matches(ref: ValueRef):
         for jp, val, raw in compiled:
             target = resolve(ref, jp)
-            b = val.bind(ref)
-            eq = F.coalesce(equal_refs(target, b), F.lit(False))
+            yield jp, raw, F.coalesce(equal_refs(target, val.bind(ref)), F.lit(False))
+
+    def fn(ref: ValueRef) -> Column:
+        parts = []
+        for jp, raw, eq in matches(ref):
             if silent:
                 parts.append(viol_when(~eq, "", ""))
             else:
@@ -363,7 +393,7 @@ def _key_match(operand, path, ctx) -> Rule:
                 )
         return concat_violations(*parts)
 
-    return FnRule(fn)
+    return FnRule(fn, lambda ref: or_all([~eq for _, _, eq in matches(ref)]))
 
 
 @register_keyword("keyMatch")
@@ -393,7 +423,7 @@ def kw_error(operand, path, siblings, ctx) -> Rule:
         b = val.bind(ref)
         return violation(ref.path, b.str_of())
 
-    return FnRule(fn)
+    return FnRule(fn, lambda ref: F.lit(True))
 
 
 # ----------------------------------------------------------------- $ref
@@ -405,14 +435,14 @@ def kw_ref(operand, path, siblings, ctx) -> Rule:
     if not isinstance(operand, str):
         raise SchemaError(f"$ref must be string, path:{path}")
     if ctx.ref_depth >= ctx.max_ref_depth:
-        return FnRule(lambda ref: empty_violations())
+        return FnRule(lambda ref: empty_violations(), lambda ref: F.lit(False))
     target = ctx.resolve_ref(operand)
     ctx.ref_depth += 1
     try:
         node = ctx.compile_node(target, path)
     finally:
         ctx.ref_depth -= 1
-    return FnRule(lambda ref: node.violations(ref))
+    return FnRule(node.violations, node.fails)
 
 
 # ------------------------------------------------------------- foreach

@@ -665,7 +665,8 @@ def kw_script(operand, path, siblings, ctx) -> Rule:
 
         def _exec_mutation_call(st, guard, env):
             """set_to/seto (funcs.go:1510-1525), set (funcs.go:696),
-            set_index (funcs.go:704), delete (funcs.go:713): in-place
+            set_index (funcs.go:704), delete (funcs.go:713), write and
+            counter add (funcs_obj.go:322-324, 869-871): in-place
             context/collection mutation.  Columns are immutable, so the
             columnar form REBINDS the named script variable to the
             rewritten value — sequential visibility is the compile-time
@@ -704,8 +705,24 @@ def kw_script(operand, path, siblings, ctx) -> Rule:
             if st.fn == "set" and len(st.args) == 2:
                 # counter.set(n) statement (funcs_obj.go:864-867):
                 # rebind to the stored numeric value
+                if isinstance(cur.dtype, (T.MapType, T.ArrayType)):
+                    raise SchemaError(
+                        f"set({name}, k) on a collection: set a map entry "
+                        f"with the 3-arg form set({name}, k, v), path:{path}"
+                    )
                 v = compile_expr(st.args[1], env)
                 bind_var(name, CVal(v.num(), T.DoubleType()), guard)
+                return
+            if st.fn == "add":
+                # counter.add(n) statement (atomic.Int64 Add,
+                # funcs_obj.go:869-871): rebind to the new count
+                if len(st.args) != 2 or not isinstance(cur.dtype, T.NumericType):
+                    raise SchemaError(
+                        f"a bare add() statement must be counter.add(n) on an "
+                        f"atomic_int variable, path:{path}"
+                    )
+                v = compile_expr(st.args[1], env)
+                bind_var(name, CVal(cur.num() + v.num(), T.DoubleType()), guard)
                 return
             if st.fn == "set":
                 if not isinstance(cur.dtype, T.MapType):
@@ -875,7 +892,7 @@ def kw_script(operand, path, siblings, ctx) -> Rule:
                             f"script if() effect must be return(...) or $.path = ... at {path}"
                         )
                 elif isinstance(st, Call) and st.fn in (
-                    "set_to", "seto", "set", "set_index", "delete", "write"
+                    "set_to", "seto", "set", "set_index", "delete", "write", "add"
                 ):
                     _exec_mutation_call(st, guard, env)
                 elif _is_break_stmt(st):

@@ -25,7 +25,6 @@ import itertools
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .compiler import CompiledSchema, SchemaError, compile_schema
 
@@ -86,9 +85,9 @@ def migration_impact_json(
     reference's actual input domain (schema.go:121-138), migrated at
     corpus scale: the document is parsed ONCE into a ``VariantType``
     value and BOTH compiled rule sets evaluate against that single
-    parse, sharing one CSE hoist — primitives the two schemas touch in
-    common (the same field's ``try_variant_get``, its casts) are
-    evaluated once per row for both, not once per plan.
+    parse, sharing one shred (core.variant.Shred) — a path both schemas
+    reference is extracted and classified once per row for both, not
+    once per plan.
 
     Variant mode only: the static path infers a per-document struct
     from each schema, so two documents would mean two different
@@ -99,13 +98,12 @@ def migration_impact_json(
     violating" and are correctly excluded from the migration's newly
     violating rows.
 
-    Scale shape: scan → parse → hoist levels → one fused violations
-    projection → CollectMetrics gate (pushdown barrier: a predicate
+    Scale shape: scan → parse → shred (extract, classify) → one fused
+    violations projection → CollectMetrics gate (pushdown barrier: a predicate
     crossing it would re-evaluate the parse per keyword branch) →
     filter → explode.  One scan, one parse, no shuffle.
     """
     from ..core.errors import violation
-    from ..core.refs import Hoist, ValueRef
 
     old, new = _plans(old_doc, new_doc)
     for plan in (old, new):
@@ -115,26 +113,18 @@ def migration_impact_json(
                 "(static mode would parse twice)"
             )
     key_cols = keys or []
-    parsed, malformed_of = new._json_parse_expr(json_col, "variant")
-    tmp = "__jsonschema_parsed__"
-    df2 = df.withColumn(tmp, parsed)
 
-    hoist = Hoist()
-    vs: dict[str, Column] = {}
-    for name, plan in (("__old_v", old), ("__new_v", new)):
-        root = ValueRef(
-            col=F.col(tmp), dtype=T.VariantType(), path="$",
-            hoist=hoist, hkey=("$",), hlevel=0,
-        )
-        v = plan.node.violations(root)
-        vs[name] = F.when(
-            malformed_of(F.col(tmp)), violation("$", "invalid json document")
-        ).otherwise(v)
+    def both(root, malformed) -> list[dict[str, Column]]:
+        return [{
+            name: F.when(malformed, violation("$", "invalid json document")).otherwise(
+                plan.node.violations(root)
+            )
+            for name, plan in (("__old_v", old), ("__new_v", new))
+        }]
 
     ann = (
-        hoist.apply(df2)
-        .select(*key_cols, vs["__old_v"].alias("__old_v"),
-                vs["__new_v"].alias("__new_v"))
+        new._over_shred(df, json_col, both)
+        .select(*key_cols, "__old_v", "__new_v")
         # same pushdown barrier as ValidationResult._gate: without it
         # the size() filter is substituted below the projection and
         # the parse re-evaluates once per keyword branch

@@ -39,8 +39,8 @@ def annotate_stream(
     ``json_col`` validates a JSON *string* column instead of fixed
     columns — the Kafka-shaped input (``value`` holding a JSON
     document).  Both parse modes work on streams: the parse, the
-    hoisted variant projection levels and the violations expression
-    are all stateless deterministic projections."""
+    variant shred and the violations expression are all stateless
+    deterministic projections."""
     if json_col is not None:
         return plan.annotate_json(stream_df, json_col, json_types=json_types)
     return plan.annotate(stream_df)

@@ -494,8 +494,8 @@ def test_sideoutput_metadata_route_and_transitions(spark, tmp_path):
 def test_windowed_verdicts_json_stream(spark, tmp_path):
     """Streaming JSON-string-column validation (the Kafka shape: a
     `value` column holding a JSON document) — both parse modes; the
-    hoisted variant projection chain must be streaming-legal
-    (stateless projections only)."""
+    variant shred must be streaming-legal (stateless projections
+    only)."""
     from jsonschema_spark.streaming.validate import windowed_verdicts
 
     rows = [

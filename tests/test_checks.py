@@ -69,6 +69,40 @@ def test_uniqueness_pass_verdict(spark):
         assert v["pass"] is True and v["violation_count"] == 0
 
 
+class _CollidingUniqueness(checks.Uniqueness):
+    """Every row hashes alike: each group collides with every other."""
+
+    def _hashed(self, df):
+        return super()._hashed(df).withColumn("__h", F.lit(7).cast("long"))
+
+
+def test_uniqueness_hash_first_exact_under_collisions(spark):
+    """A hash shared by groups of several partitions must not repeat
+    rows in the recount: dup_count and extra_rows stay exact."""
+    df = spark.createDataFrame(
+        [("d1", "c1", 0), ("d1", "c1", 1), ("d1", "c1", 1), ("d1", "c2", 0),
+         ("d2", "c1", 0), ("d2", "c1", 0), ("d2", "c1", 0), ("d2", "c3", 5),
+         ("d3", "c9", 1)],
+        "day string, conv_id string, turn_idx int",
+    )
+    plain = checks.Uniqueness(keys=["conv_id", "turn_idx"], partition_by=["day"])
+    colliding = _CollidingUniqueness(
+        keys=["conv_id", "turn_idx"], partition_by=["day"], hash_first=True
+    )
+
+    def dups(chk):
+        return {(r["partition_id"], r["conv_id"], r["turn_idx"]): r["dup_count"]
+                for r in chk.duplicates(df).collect()}
+
+    def extra(chk):
+        return {r["partition_id"]: r["violation_count"] for r in chk.verdicts(df).collect()}
+
+    assert dups(colliding) == dups(plain) == {
+        ("day=d1", "c1", 1): 2, ("day=d2", "c1", 0): 3,
+    }
+    assert extra(colliding) == extra(plain) == {"day=d1": 1, "day=d2": 2, "day=d3": 0}
+
+
 def test_referential_integrity(spark):
     dim = spark.createDataFrame([("user",), ("tool",)], "role string")
     df = spark.createDataFrame(

@@ -124,6 +124,47 @@ def test_cli_violations_crash_window(spark, data_dir, tmp_path):
     assert spark.read.parquet(str(tmp_path / "violations")).count() == n
 
 
+def test_cli_verdicts_crash_window(spark, data_dir, tmp_path, monkeypatch):
+    """A run that crashes writing the verdict sink must not leave the
+    manifest marking those partitions done: the next run re-runs them,
+    and the sink ends with every partition's verdicts exactly once."""
+    from jsonschema_spark.cli import main
+    from jsonschema_spark.sources import tables
+
+    cfg = {
+        "source": str(data_dir / "transcripts"),
+        "schema": {"required": ["conv_id", "role"]},
+        "partition_by": ["role"],
+        "checks": {"uniqueness": {"keys": ["conv_id", "turn_idx"]}},
+        "output": {
+            "verdicts": str(tmp_path / "verdicts"),
+            "manifest": str(tmp_path / "manifest"),
+        },
+    }
+    cfg_path = tmp_path / "cfg.json"
+    cfg_path.write_text(json.dumps(cfg))
+
+    real = tables.write_output
+    crashes = []
+
+    def crash_once(df, path, *a, **kw):
+        if path == cfg["output"]["verdicts"] and not crashes:
+            crashes.append(path)
+            raise RuntimeError("crash writing the verdict sink")
+        return real(df, path, *a, **kw)
+
+    monkeypatch.setattr(tables, "write_output", crash_once)
+    with pytest.raises(RuntimeError, match="crash writing"):
+        main(["run", str(cfg_path)])
+    assert main(["run", str(cfg_path)]) == 0
+
+    n_roles = read_table(spark, cfg["source"]).select("role").distinct().count()
+    keys = [(r["partition_id"], r["check"])
+            for r in spark.read.parquet(cfg["output"]["verdicts"]).collect()]
+    assert len(keys) == len(set(keys)) == 2 * n_roles
+    assert {c for _, c in keys} == {"schema", "uniqueness"}
+
+
 def test_read_table_pushdown(spark, data_dir):
     df = read_table(
         spark, str(data_dir / "transcripts"),

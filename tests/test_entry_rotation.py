@@ -1,0 +1,32 @@
+"""The query registry's rotation file: a missing file keeps the
+registry order, a corrupt one must fail loudly."""
+
+from __future__ import annotations
+
+import json
+import sys
+from pathlib import Path
+
+import pytest
+
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+import __spark_entry__ as E  # noqa: E402
+
+QS = {"a": 1, "b": 2, "c": 3}
+
+
+def test_rotation_file_orders_registry(tmp_path):
+    path = tmp_path / "rotation_order.json"
+    path.write_text(json.dumps({"order": ["c", "a"]}))
+    assert list(E._rotate(QS, str(path))) == ["c", "a", "b"]
+
+
+def test_missing_rotation_file_keeps_order(tmp_path):
+    assert list(E._rotate(QS, str(tmp_path / "absent.json"))) == ["a", "b", "c"]
+
+
+def test_truncated_rotation_file_raises(tmp_path):
+    path = tmp_path / "rotation_order.json"
+    path.write_text(json.dumps({"order": ["c", "a"]})[:-5])
+    with pytest.raises(RuntimeError, match="corrupt rotation order file"):
+        E._rotate(QS, str(path))

@@ -988,6 +988,31 @@ class TestStatefulHelpers:
         row = plan.transform(docs).collect()[0]
         assert row["hd"] == "8" and row["sms"] == "10"
 
+    def test_atomic_int_bare_add_statement_rebinds(self, spark, docs):
+        plan = js.compile_schema(
+            {"script": [
+                "c = atomic_int(5)",
+                "c.add(2)",
+                "add(c, 3)",
+                "$.hd = string(c.get())",
+            ]}
+        )
+        assert plan.transform(docs).collect()[0]["hd"] == "10"
+
+    def test_statement_set_two_args_on_map_rejected(self, spark, docs):
+        plan = js.compile_schema(
+            {"script": ["v = url_new_values()", "set(v, 'q')", "$.hd = v.encode()"]}
+        )
+        with pytest.raises(Exception, match=r"3-arg form set\(v, k, v\)"):
+            plan.transform(docs).collect()
+
+    def test_expr_set_two_args_on_map_rejected(self, spark, docs):
+        plan = js.compile_schema(
+            {"script": ["$.hd = url_new_values().set('q').encode()"]}
+        )
+        with pytest.raises(Exception, match="3-arg form"):
+            plan.transform(docs).collect()
+
     def test_operator_text_string_literals_parse(self, spark, docs):
         # r5 parser fix: a STRING token whose text is an operator
         # ('!', '-', 'in', ...) must stay a literal — previously the

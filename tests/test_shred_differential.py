@@ -1,0 +1,182 @@
+"""Differential checks of the shredded variant route (core.variant.Shred
++ Rule.fails): over generated schemas and documents, the variant verdict
+predicate, the violation arrays and the single-Column predicate agree
+row by row, and variant verdicts equal static verdicts on well-typed
+documents.  Hypothesis generates the cases; one Spark job evaluates a
+whole batch of documents per output."""
+
+from __future__ import annotations
+
+import json
+
+from hypothesis import HealthCheck, given, settings, strategies as st
+from pyspark.sql import functions as F
+
+import jsonschema_spark as js
+
+KEYS = ["a", "b", "c"]
+TYPES = ["string", "integer", "number", "boolean", "object", "array", "string|integer"]
+
+# ---------------------------------------------------------- documents
+
+short_text = st.text(alphabet="xy09", max_size=3)
+json_scalars = st.one_of(
+    st.none(),
+    st.booleans(),
+    st.integers(-5, 5),
+    st.floats(-5, 5, allow_nan=False).map(lambda f: round(f, 2)),
+    short_text,
+)
+json_values = st.recursive(
+    json_scalars,
+    lambda inner: st.one_of(
+        st.lists(inner, max_size=3),
+        st.dictionaries(st.sampled_from(KEYS), inner, max_size=3),
+    ),
+    max_leaves=6,
+)
+documents = st.one_of(
+    # mostly objects over the schema's keys, absent keys included
+    st.dictionaries(st.sampled_from(KEYS), json_values, max_size=3).map(json.dumps),
+    json_values.map(json.dumps),  # a scalar, array or null document
+    st.sampled_from(['{"a": ', "[1,", "nope", ""]),  # malformed
+    st.none(),  # SQL NULL
+)
+
+# ------------------------------------------------------------ schemas
+
+literals = st.one_of(short_text, st.integers(-2, 2), st.booleans())
+leaf_keywords = st.one_of(
+    st.fixed_dictionaries({"type": st.sampled_from(TYPES)}),
+    st.fixed_dictionaries({"pattern": st.sampled_from(["^x", "[0-9]$", "^$"])}),
+    st.fixed_dictionaries({"minimum": st.integers(-3, 3)}),
+    st.fixed_dictionaries({"maximum": st.integers(-3, 3)}),
+    st.fixed_dictionaries({"minLength": st.integers(0, 3)}),
+    st.fixed_dictionaries({"maxLength": st.integers(0, 3)}),
+    st.fixed_dictionaries({"enum": st.lists(literals, min_size=1, max_size=3)}),
+    st.fixed_dictionaries({"required": st.lists(st.sampled_from(KEYS), max_size=2, unique=True)}),
+)
+
+
+def _merge(parts: list[dict]) -> dict:
+    out: dict = {}
+    for p in parts:
+        out.update(p)
+    return out
+
+
+def schemas(depth: int):
+    node = st.lists(leaf_keywords, max_size=3).map(_merge)
+    if depth == 0:
+        return node
+    sub = schemas(depth - 1)
+    composite = st.one_of(
+        st.fixed_dictionaries({"properties": st.dictionaries(st.sampled_from(KEYS), sub, max_size=3)}),
+        st.fixed_dictionaries({"anyOf": st.lists(sub, min_size=1, max_size=2)}),
+        st.fixed_dictionaries({"allOf": st.lists(sub, min_size=1, max_size=2)}),
+        st.fixed_dictionaries({"items": sub}),
+        st.fixed_dictionaries({
+            "if": st.one_of(
+                st.fixed_dictionaries({"keyMatch": st.dictionaries(
+                    st.sampled_from(KEYS), literals, min_size=1, max_size=1)}),
+                sub,
+            ),
+            "then": sub,
+            "else": sub,
+        }),
+    )
+    return st.tuples(node, st.lists(composite, max_size=2)).map(lambda t: _merge([t[0], *t[1]]))
+
+
+# -------------------------------------------------------------- checks
+
+def _verdict_routes(spark, doc, docs):
+    df = spark.createDataFrame(list(enumerate(docs)), "id int, doc string")
+    plan = js.compile_schema(doc)
+    verdicts = {
+        r["id"]: r["__fails__"]
+        for r in plan.fail_verdicts(df, json_col="doc").collect()
+    }
+    arrays = {
+        r["id"]: bool(r["n"] > 0)
+        for r in plan.annotate_json(df, "doc")
+        .select("id", F.size("violations").alias("n")).collect()
+    }
+    pred = plan.fail_predicate(df, json_col="doc")
+    single = {r["id"]: r["p"] for r in df.select("id", pred.alias("p")).collect()}
+    return verdicts, arrays, single
+
+
+@settings(max_examples=12, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large])
+@given(schema=schemas(2), docs=st.lists(documents, min_size=20, max_size=40))
+def test_variant_fails_equals_violations(spark, schema, docs):
+    verdicts, arrays, single = _verdict_routes(spark, schema, docs)
+    assert verdicts == arrays == single, (schema, docs)
+
+
+# static vs variant: flat, well-typed documents --------------------
+
+SCALAR = {
+    "string": short_text,
+    "integer": st.integers(-5, 5),
+    "number": st.one_of(st.integers(-5, 5), st.floats(-5, 5, allow_nan=False).map(lambda f: round(f, 2))),
+    "boolean": st.booleans(),
+}
+
+
+@st.composite
+def typed_cases(draw):
+    types = {k: draw(st.sampled_from(sorted(SCALAR))) for k in KEYS}
+    props = {}
+    for k, t in types.items():
+        kw = {"type": t}
+        if t == "string":
+            kw.update(draw(st.one_of(
+                st.just({}),
+                st.fixed_dictionaries({"pattern": st.sampled_from(["^x", "[0-9]$"])}),
+                st.fixed_dictionaries({"minLength": st.integers(0, 2), "maxLength": st.integers(1, 3)}),
+                st.fixed_dictionaries({"enum": st.lists(short_text, min_size=1, max_size=3)}),
+            )))
+        elif t in ("integer", "number"):
+            kw.update(draw(st.one_of(
+                st.just({}),
+                st.fixed_dictionaries({"minimum": st.integers(-3, 0), "maximum": st.integers(0, 3)}),
+                st.fixed_dictionaries({"enum": st.lists(st.integers(-2, 2), min_size=1, max_size=3)}),
+            )))
+        props[k] = kw
+    schema = {
+        "type": "object",
+        "properties": props,
+        "required": draw(st.lists(st.sampled_from(KEYS), max_size=2, unique=True)),
+    }
+    present = {}
+    if draw(st.booleans()):
+        k = draw(st.sampled_from(KEYS))
+        schema["if"] = {"keyMatch": {k: draw(SCALAR[types[k]])}}
+        schema["then"] = {"required": [draw(st.sampled_from(KEYS))]}
+        # the keyMatch target is always present: against an absent
+        # field, static mode compares the declared type's zero value
+        # (bool_of(nil) = false) where variant mode, like the
+        # reference, compares StringOf(nil) = ""
+        present[k] = SCALAR[types[k]]
+    doc = st.fixed_dictionaries(
+        present, optional={k: SCALAR[t] for k, t in types.items() if k not in present}
+    )
+    docs = draw(st.lists(doc.map(json.dumps), min_size=20, max_size=40))
+    return schema, docs
+
+
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large])
+@given(case=typed_cases())
+def test_variant_equals_static_on_well_typed(spark, case):
+    schema, docs = case
+    df = spark.createDataFrame(list(enumerate(docs)), "id int, doc string")
+    plan = js.compile_schema(schema)
+
+    def verdicts(mode):
+        out = plan.fail_verdicts(df, json_col="doc", json_types=mode)
+        return {r["id"]: r["__fails__"] for r in out.collect()}
+
+    assert verdicts("variant") == verdicts("static"), (schema, docs)
