@@ -1174,7 +1174,6 @@ def q_verdict_counts_json(spark, sf_dir):
     plan = js.compile_schema(JSON_EVENTS_SCHEMA)
     # static pin: like-for-like with r2 (see q_validate_json_events)
     pred = plan.fail_predicate(doc_df, json_col="payload", json_types="static")
-    assert pred is not None
     return doc_df.agg(
         F.count(F.lit(1)).alias("rows"),
         F.sum(pred.cast("long")).alias("bad_rows"),
@@ -1540,13 +1539,12 @@ def q_events_user_sequence(spark, sf_dir):
 
 
 def q_verdict_counts_orders(spark, sf_dir):
-    """The predicate-only hot path (plans/predicate.py) under the
-    oracle: per-status row/bad-row counts from the compiled boolean,
-    no violation arrays."""
+    """The verdict hot path (fail_predicate, the keywords' Rule.fails)
+    under the oracle: per-status row/bad-row counts from the compiled
+    boolean, no violation arrays."""
     orders = _t(spark, sf_dir, "orders")
     plan = js.compile_schema(ORDERS_SCHEMA)
     pred = plan.fail_predicate(orders)
-    assert pred is not None
     return (
         orders.groupBy("o_orderstatus")
         .agg(

@@ -270,9 +270,10 @@ class ValueRef:
 
 
 def equal_refs(lhs: ValueRef, rhs: ValueRef) -> Column:
-    """Coercing Equal (common.go:142-154) over refs: identical
-    semantics to core.coerce.coercing_equal, but routed through the
-    refs' shredded views when available."""
+    """Coercing Equal (common.go:142-154) over refs: the table of
+    core.coerce.coercing_equal, routed through the refs' shredded views
+    when available, with a NULL fixed-type left-hand side compared as
+    the reference's nil."""
     from .coerce import _is_numeric
     from .variant import KIND_BOOL, KIND_NUMBER
 
@@ -284,10 +285,15 @@ def equal_refs(lhs: ValueRef, rhs: ValueRef) -> Column:
             .otherwise(lhs.str_of() == rhs.str_of())
         )
     if lhs.dtype is not None and _is_numeric(lhs.dtype):
-        return lhs.num_of() == rhs.num_of()
-    if isinstance(lhs.dtype, T.BooleanType):
-        return lhs.bool_of() == rhs.bool_of()
-    return lhs.str_of() == rhs.str_of()
+        eq = lhs.num_of() == rhs.num_of()
+    elif isinstance(lhs.dtype, T.BooleanType):
+        eq = lhs.bool_of() == rhs.bool_of()
+    else:
+        return lhs.str_of() == rhs.str_of()
+    # a NULL typed value is the reference's nil, whose Equal falls to
+    # StringOf(nil) = "" (as the variant branch does), not the type's
+    # zero value
+    return F.when(lhs.col.isNull(), rhs.str_of() == F.lit("")).otherwise(eq)
 
 
 _SEG = re.compile(r"\.|\[(\d+)\]")

@@ -1,5 +1,5 @@
 """Session tuning that must hold on ANY SparkSession the engine runs
-under (the driver harness, bench.py, tests, user sessions) — runtime
+under (the driver harness, perfbench, tests, user sessions) — runtime
 SQL confs only, applied idempotently.
 
 Why ``spark.sql.codegen.hugeMethodLimit=8000``: HotSpot never

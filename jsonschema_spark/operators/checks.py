@@ -224,8 +224,8 @@ class Uniqueness(Check):
     composite keys (long URLs, text fingerprints) where the
     hash-vs-key byte ratio genuinely inverts.  The structural answer
     for the transcript workload is bucketed layout — a table bucketed
-    by conv_id runs this check with NO exchange at all (see
-    tools/profile_8to32.py uniqueness_bucketed).
+    by conv_id runs this check with NO exchange at all (measured in
+    the same BENCH/profile_8to32_r5.json record).
     """
 
     keys: Sequence[str]
@@ -725,60 +725,42 @@ class SchemaCheck(Check):
     json_col: str | None = None
     json_types: str | None = None
 
-    def _agg_exprs(self, df: DataFrame, p: str = ""):
-        # hot path: predicate-only compilation skips violation-array
-        # construction (~2.4x) — falls back to the array path when the
-        # document uses keywords outside the predicate subset.  The
-        # json_col predicate is a single Column in both parse modes
-        # (fused-suite compatible); variant mode dispatches inline
-        # without the shred — standalone verdict counting should prefer
-        # plan.fail_verdicts, but fusion with the other checks' single
-        # scan dominates that here.
+    def _agg_exprs(self, df: DataFrame, p: str = "") -> list[Column]:
+        # verdict counting compiles the plan's fail_predicate (Rule.fails,
+        # no violation arrays).  The json_col predicate is a single
+        # Column in both parse modes (fused-suite compatible); variant
+        # mode dispatches inline without the shred — standalone verdict
+        # counting should prefer plan.fail_verdicts, but fusion with the
+        # other checks' single scan dominates that here.
         pred = self.plan.fail_predicate(
             df, json_col=self.json_col, json_types=self.json_types
-        ) if self.json_col is not None else self.plan.fail_predicate(df)
-        if pred is not None:
-            return [
-                F.count(F.lit(1)).alias(f"{p}rows"),
-                F.sum(pred.cast("long")).alias(f"{p}bad_rows"),
-            ], False
-        viol_size = F.size(self.plan.violations_col(df))
+        )
         return [
             F.count(F.lit(1)).alias(f"{p}rows"),
-            F.sum((viol_size > 0).cast("long")).alias(f"{p}bad_rows"),
-            F.sum(viol_size).alias(f"{p}violation_total"),
-        ], True
+            F.sum(pred.cast("long")).alias(f"{p}bad_rows"),
+        ]
 
-    def _verdict_parts(self, p: str, with_total: bool) -> tuple[Column, Column]:
-        pairs = [
+    def _verdict_parts(self, p: str) -> tuple[Column, Column]:
+        return F.col(f"{p}bad_rows"), F.create_map(
             F.lit("rows"), F.col(f"{p}rows").cast("string"),
             F.lit("bad_rows"), F.col(f"{p}bad_rows").cast("string"),
-        ]
-        if with_total:
-            pairs += [
-                F.lit("violation_total"),
-                F.col(f"{p}violation_total").cast("string"),
-            ]
-        return F.col(f"{p}bad_rows"), F.create_map(*pairs)
+        )
 
     def verdicts(self, df: DataFrame) -> DataFrame:
-        aggs, with_total = self._agg_exprs(df)
         agg = df.groupBy(
             _partition_id(self.partition_by).alias("partition_id")
-        ).agg(*aggs)
-        fail, metrics = self._verdict_parts("", with_total)
+        ).agg(*self._agg_exprs(df))
+        fail, metrics = self._verdict_parts("")
         return agg.select(*_verdict_select(self.name, fail, metrics))
 
     def fused_aggs(self, df: DataFrame, prefix: str | None = None):
         """(agg exprs, verdict-struct builder) for single-pass fusion."""
         p = prefix or f"__{self.name}__"
-        aggs, with_total = self._agg_exprs(df, p)
 
         def build() -> Column:
-            fail, metrics = self._verdict_parts(p, with_total)
-            return _verdict_struct(self.name, fail, metrics)
+            return _verdict_struct(self.name, *self._verdict_parts(p))
 
-        return aggs, build
+        return self._agg_exprs(df, p), build
 
     def violations(self, df: DataFrame) -> DataFrame:
         keys = list(self.keys) if self.keys else [

@@ -40,9 +40,11 @@ class SchemaError(ValueError):
 class Rule:
     """A compiled keyword with two outputs for a value: ``violations``,
     its array<struct<path,info>>, and ``fails``, the boolean
-    ``size(violations) > 0`` (never NULL).  Keywords override ``fails``
-    with a direct predicate where building the array only to test its
-    size would be the cost (verdict counting, if/anyOf/not conditions)."""
+    ``size(violations) > 0`` (never NULL).  ``fails`` is the engine's
+    only answer to "does this value fail" — verdict counting on every
+    route and the if/anyOf/not conditions inside ``violations``.
+    Keywords override it with a direct predicate where building the
+    array only to test its size would be the cost."""
 
     def violations(self, ref: ValueRef) -> Column:  # pragma: no cover
         raise NotImplementedError
@@ -110,18 +112,6 @@ class CondRule(Rule):
         if len(built) > 2:
             fail = ~F.coalesce(built[2], F.lit(False)) & fail
         return ~ref.null() & fail if self.skip_null else fail
-
-
-def passes(rule: Rule, ref: ValueRef, violations: Column | None = None) -> Column:
-    """Whether ``ref`` passes ``rule``, for conditions inside a
-    violations output (if, anyOf, not): the ``fails`` predicate on
-    variant values; fixed and static-JSON columns keep the array-size
-    form (over ``violations`` when the caller built them already), whose
-    plans stay as they were until plans/predicate.py folds into
-    ``fails``."""
-    if isinstance(ref.dtype, T.VariantType):
-        return ~rule.fails(ref)
-    return F.size(rule.violations(ref) if violations is None else violations) == 0
 
 
 def or_all(conds: list[Column]) -> Column:
@@ -317,37 +307,23 @@ class CompiledSchema:
         df: DataFrame,
         json_col: str | None = None,
         json_types: str | None = None,
-    ) -> Column | None:
+    ) -> Column:
         """Boolean ``row fails`` Column WITHOUT violation-array
-        construction, for verdict counting (the 10^12-row hot path).
-
-        Fixed columns and static JSON compile through the predicate
-        compiler (plans/predicate.py); None when the document uses
-        keywords outside its subset, and callers fall back to
-        ``annotate``.  Variant JSON compiles each keyword's ``fails``
-        output over the parsed document; as one Column it cannot carry
-        the shred projections, so every keyword dispatches inline —
-        ``fail_verdicts`` is the fast form there.
+        construction, for verdict counting (the 10^12-row hot path):
+        the root node's ``fails`` over fixed columns, over the static
+        JSON parse, or over the variant parse.  As one Column the
+        variant route cannot carry the shred projections, so every
+        keyword dispatches inline there — ``fail_verdicts`` is the fast
+        form for variant JSON.
 
         With ``json_col`` a malformed document counts as a failing row,
         matching the array path's single '$' violation."""
-        from .predicate import compile_fail_predicate
-
-        if json_col is not None and self._json_mode(json_types) == "variant":
-            parsed, malformed_of = self._json_parse_expr(json_col, "variant")
-            root = ValueRef(col=parsed, dtype=T.VariantType(), path="$")
-            return self.node.fails(root) | malformed_of(parsed)
-        if not hasattr(self, "_pred_build"):
-            self._pred_build = compile_fail_predicate(self)
-        if self._pred_build is None:
-            return None
         if json_col is None:
-            return self._pred_build(df)
-        from .predicate import compile_fail
-
-        parsed, malformed_of = self._json_parse_expr(json_col, "static")
-        root = ValueRef(col=parsed, dtype=self.json_root_type(), path="$")
-        return compile_fail(self.doc, root, self.ctx) | malformed_of(parsed)
+            return self.node.fails(self.root_ref(df))
+        mode = self._json_mode(json_types)
+        parsed, malformed_of = self._json_parse_expr(json_col, mode)
+        dtype = T.VariantType() if mode == "variant" else self.json_root_type()
+        return self.node.fails(ValueRef(col=parsed, dtype=dtype, path="$")) | malformed_of(parsed)
 
     def fail_verdicts(
         self,
@@ -375,16 +351,7 @@ class CompiledSchema:
                 f"jsonschema_parse_gate_{next(_BARRIER_SEQ)}",
                 F.count(F.lit(1)).alias("rows_validated"),
             )
-        pred = self.fail_predicate(df, json_col=json_col, json_types=json_types)
-        if pred is not None:
-            return df.withColumn(col, pred)
-        tmp = "__jsonschema_viol__"
-        ann = (
-            self.annotate(df, col=tmp)
-            if json_col is None
-            else self.annotate_json(df, json_col, col=tmp, json_types=json_types)
-        )
-        return ann.withColumn(col, F.size(tmp) > 0).drop(tmp)
+        return df.withColumn(col, self.fail_predicate(df, json_col=json_col, json_types=json_types))
 
     def _over_shred(self, df: DataFrame, json_col: str, outputs, keep_parsed: str | None = None):
         """Variant JSON: parse ``json_col`` once, shred it once, then add

@@ -25,7 +25,7 @@ from ..core.errors import (
 )
 from ..core.refs import ValueRef, equal_refs, resolve
 from ..functions.values import parse_value
-from .compiler import FnRule, Rule, SchemaError, or_all, passes, register_keyword
+from .compiler import FnRule, Rule, SchemaError, or_all, register_keyword
 
 
 @contextlib.contextmanager
@@ -218,12 +218,11 @@ def _any_of(operand, path, ctx) -> Rule:
     def fn(ref: ValueRef) -> Column:
         # first passing branch wins; else all errors emitted
         # (validator_logic.go:12-43)
-        branch_viols = [n.violations(ref) for n in nodes]
         ok = F.lit(False)
-        for n, bv in zip(nodes, branch_viols):
-            ok = ok | passes(n, ref, bv)
+        for n in nodes:
+            ok = ok | ~n.fails(ref)
         return F.when(ok, empty_violations()).otherwise(
-            concat_violations(*branch_viols)
+            concat_violations(*[n.violations(ref) for n in nodes])
         )
 
     def fails(ref: ValueRef) -> Column:
@@ -261,7 +260,7 @@ def kw_not(operand, path, siblings, ctx) -> Rule:
     node = ctx.compile_node(operand, path)
 
     def fn(ref: ValueRef) -> Column:
-        return viol_when(passes(node, ref), ref.path, "is not valid")
+        return viol_when(~node.fails(ref), ref.path, "is not valid")
 
     return FnRule(fn, lambda ref: ~node.fails(ref))
 
@@ -274,7 +273,7 @@ def kw_if(operand, path, siblings, ctx) -> Rule:
         cond = ctx.compile_node(operand, path)
 
     def cond_ok(ref: ValueRef) -> Column:
-        return passes(cond, ref)
+        return ~cond.fails(ref)
 
     then_node = else_node = None
     if isinstance(siblings.get("then"), dict):

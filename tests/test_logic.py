@@ -140,6 +140,23 @@ def test_key_match_and_eq_with_interpolation(spark):
     assert out[2] == [("$.a", "value must be ${b}")]
 
 
+def test_key_match_null_typed_column_is_nil(spark):
+    """A NULL boolean or numeric column is the reference's nil: Equal
+    compares StringOf(nil) = "" with the operand's string form, not the
+    type's zero value, so keyMatch false/0 fails on it — as it does on an
+    absent field of a variant JSON document."""
+    schema = {"keyMatch": {"flag": False, "n": 0}}
+    data = [(1, None, None), (2, False, 0)]
+    ddl = "id int, flag boolean, n int"
+    out = viols(spark, schema, data, ddl)
+    assert out[1] == [("$.flag", "value must be false"), ("$.n", "value must be 0")]
+    assert out[2] == []
+    df = spark.createDataFrame(data, ddl)
+    plan = compile_schema(schema)
+    got = {r["id"]: r["f"] for r in df.select("id", plan.fail_predicate(df).alias("f")).collect()}
+    assert got == {1: True, 2: False}
+
+
 def test_error_keyword_interpolated(spark):
     out = viols(
         spark,

@@ -1,7 +1,7 @@
 """Plan pins for the fixed-column routes: the optimized plans of the
 gateway rule's ``fail_predicate`` and of the transcript rule's
-``SchemaCheck`` (verdicts and violation rows) must stay exactly as they
-are while the variant-JSON route changes around them.  A change here
+``SchemaCheck`` (verdicts and violation rows) must not move unnoticed:
+all three compile through the keywords' ``Rule.fails``.  A change here
 moves the gateway and resume benchmarks; update the pins only together
 with a measurement of both."""
 
@@ -56,11 +56,11 @@ GATEWAY_SCHEMA = {
 # (length, sha256) of each normalized optimized plan
 PINNED = {
     "gateway.fail_predicate": (
-        970, "0a13f629cc2f15b4b38075c4a58f842aaf665bb1716e1559cb0481490571803d"),
+        1034, "eedb53ca4973b5191fb27ecf8b246490cce984c827a2dd2a63f2a1f02fa7c011"),
     "transcripts.schema_check.verdicts": (
-        1325, "230632275b063a4aa1575ee67b0ba93fdbfac8004a2dada3abd58fa6b92cef8b"),
+        1109, "e8cdb51fed9719ce875be8bcfd860fdf918c53dacdaa71d2460f45be0777430e"),
     "transcripts.schema_check.violations": (
-        2579, "dd52ff819c7b2dd255f4170a2a9ac2a44f7d674e68116fecd1688271fbf1b8f9"),
+        2523, "e61ee2de097d9b94bb62303a795d6d00da4aeeb44cf3cbbd7aa74e6b2d6b42ca"),
 }
 
 

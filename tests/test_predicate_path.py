@@ -1,6 +1,7 @@
-"""Predicate-only compilation (plans/predicate.py): the fast verdict
-path must agree exactly with the violation-array path on every fixture
-schema, and fall back (return None) for out-of-subset keywords."""
+"""Verdict compilation (``Rule.fails`` via ``fail_predicate``): the
+boolean verdict path must agree exactly with the violation-array path
+on every fixture schema and every keyword, including keywords that keep
+the default ``size(violations) > 0`` form."""
 
 from __future__ import annotations
 
@@ -65,8 +66,9 @@ def test_predicate_equals_arrays_combinators(spark):
 def test_predicate_falls_back_for_exotic_keywords(spark):
     df = spark.createDataFrame([(1, "x")], "id int, s string")
     plan = js.compile_schema({"script": ["if($.id > 5, return('big'))"]})
-    assert plan.fail_predicate(df) is None  # script is out of subset
-    # the SchemaCheck still works via the array path
+    # script keeps the default fails (size of its violations)
+    both = spark.createDataFrame([(1, "x"), (9, "y")], "id int, s string")
+    assert _bad_counts(plan, both) == (1, 1)
     from jsonschema_spark.operators import checks
 
     v = checks.SchemaCheck(plan=plan).verdicts(df).collect()

@@ -1,9 +1,10 @@
-"""Differential checks of the shredded variant route (core.variant.Shred
-+ Rule.fails): over generated schemas and documents, the variant verdict
-predicate, the violation arrays and the single-Column predicate agree
-row by row, and variant verdicts equal static verdicts on well-typed
-documents.  Hypothesis generates the cases; one Spark job evaluates a
-whole batch of documents per output."""
+"""Differential checks of the verdict compiler (Rule.fails): over
+generated schemas and documents, on every route — variant JSON (the
+shredded verdicts and the single-Column predicate), static JSON and
+fixed typed columns — ``fail_predicate`` agrees row by row with
+``size(violations) > 0``, and variant verdicts equal static verdicts on
+well-typed documents.  Hypothesis generates the cases; one Spark job
+evaluates a whole batch of documents per output."""
 
 from __future__ import annotations
 
@@ -107,12 +108,37 @@ def _verdict_routes(spark, doc, docs):
     return verdicts, arrays, single
 
 
+def _predicate_vs_arrays(plan, df, json_types=None):
+    """{id: (fail_predicate, size(violations) > 0)} over fixed columns,
+    or over the ``doc`` JSON column parsed as ``json_types``."""
+    if json_types is None:
+        pred, ann = plan.fail_predicate(df), plan.annotate(df)
+    else:
+        pred = plan.fail_predicate(df, json_col="doc", json_types=json_types)
+        ann = plan.annotate_json(df, "doc", json_types=json_types)
+    rows = ann.select("id", pred.alias("p"), (F.size("violations") > 0).alias("a")).collect()
+    return {r["id"]: (r["p"], r["a"]) for r in rows}
+
+
+def _disagreements(pairs: dict) -> dict:
+    return {i: pa for i, pa in pairs.items() if pa[0] != pa[1]}
+
+
 @settings(max_examples=12, deadline=None,
           suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large])
 @given(schema=schemas(2), docs=st.lists(documents, min_size=20, max_size=40))
 def test_variant_fails_equals_violations(spark, schema, docs):
     verdicts, arrays, single = _verdict_routes(spark, schema, docs)
     assert verdicts == arrays == single, (schema, docs)
+
+
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large])
+@given(schema=schemas(2), docs=st.lists(documents, min_size=20, max_size=40))
+def test_static_fails_equals_violations(spark, schema, docs):
+    df = spark.createDataFrame(list(enumerate(docs)), "id int, doc string")
+    pairs = _predicate_vs_arrays(js.compile_schema(schema), df, "static")
+    assert not _disagreements(pairs), (schema, docs)
 
 
 # static vs variant: flat, well-typed documents --------------------
@@ -123,6 +149,8 @@ SCALAR = {
     "number": st.one_of(st.integers(-5, 5), st.floats(-5, 5, allow_nan=False).map(lambda f: round(f, 2))),
     "boolean": st.booleans(),
 }
+
+ZERO = {"string": "", "integer": 0, "number": 0, "boolean": False}
 
 
 @st.composite
@@ -150,28 +178,24 @@ def typed_cases(draw):
         "properties": props,
         "required": draw(st.lists(st.sampled_from(KEYS), max_size=2, unique=True)),
     }
-    present = {}
     if draw(st.booleans()):
         k = draw(st.sampled_from(KEYS))
-        schema["if"] = {"keyMatch": {k: draw(SCALAR[types[k]])}}
-        schema["then"] = {"required": [draw(st.sampled_from(KEYS))]}
-        # the keyMatch target is always present: against an absent
-        # field, static mode compares the declared type's zero value
-        # (bool_of(nil) = false) where variant mode, like the
-        # reference, compares StringOf(nil) = ""
-        present[k] = SCALAR[types[k]]
-    doc = st.fixed_dictionaries(
-        present, optional={k: SCALAR[t] for k, t in types.items() if k not in present}
-    )
+        # the target may be absent: every route compares it as the
+        # reference's nil, StringOf(nil) = "", never as the declared
+        # type's zero value (drawn often, to tell the two apart)
+        lit = draw(st.one_of(st.just(ZERO[types[k]]), SCALAR[types[k]]))
+        schema["if"] = {"keyMatch": {k: lit}}
+        schema["then"] = {"required": [draw(st.sampled_from([k, *KEYS]))]}
+    doc = st.fixed_dictionaries({}, optional={k: SCALAR[t] for k, t in types.items()})
     docs = draw(st.lists(doc.map(json.dumps), min_size=20, max_size=40))
-    return schema, docs
+    return schema, docs, types
 
 
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large])
 @given(case=typed_cases())
 def test_variant_equals_static_on_well_typed(spark, case):
-    schema, docs = case
+    schema, docs, _ = case
     df = spark.createDataFrame(list(enumerate(docs)), "id int, doc string")
     plan = js.compile_schema(schema)
 
@@ -180,3 +204,26 @@ def test_variant_equals_static_on_well_typed(spark, case):
         return {r["id"]: r["__fails__"] for r in out.collect()}
 
     assert verdicts("variant") == verdicts("static"), (schema, docs)
+
+
+DDL = {"string": "string", "integer": "bigint", "number": "double", "boolean": "boolean"}
+PY = {"string": str, "integer": int, "number": float, "boolean": bool}
+
+
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large])
+@given(case=typed_cases())
+def test_typed_routes_fails_equal_violations(spark, case):
+    """The well-typed cases as static JSON and as typed columns (absent
+    fields as NULLs): fail_predicate == size(violations) > 0."""
+    schema, docs, types = case
+    plan = js.compile_schema(schema)
+    df = spark.createDataFrame(list(enumerate(docs)), "id int, doc string")
+    assert not _disagreements(_predicate_vs_arrays(plan, df, "static")), (schema, docs)
+
+    rows = []
+    for i, d in enumerate(docs):
+        d = json.loads(d)
+        rows.append((i, *[None if k not in d else PY[types[k]](d[k]) for k in KEYS]))
+    fixed = spark.createDataFrame(rows, ", ".join(["id int"] + [f"{k} {DDL[types[k]]}" for k in KEYS]))
+    assert not _disagreements(_predicate_vs_arrays(plan, fixed)), (schema, rows)

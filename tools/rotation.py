@@ -129,7 +129,6 @@ _ENGINE_ROOTS = [
     "jsonschema_spark/plans/keywords_magic.py",
     "jsonschema_spark/plans/keywords_script.py",
     "jsonschema_spark/plans/formats.py",
-    "jsonschema_spark/plans/predicate.py",
     "jsonschema_spark/functions/expr_lang.py",
     "jsonschema_spark/functions/values.py",
 ]
