@@ -21,12 +21,8 @@ import jsonschema_spark as js
 from jsonschema_spark.core import session
 from jsonschema_spark.operators import (
     checks,
-    curate,
-    decontam,
     dedup,
-    report,
     sampling,
-    similarity,
     temporal,
     text,
     transcripts,
@@ -548,31 +544,6 @@ def q_embedding_neardup(spark, sf_dir):
     ).select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
 
 
-def q_ann_topk(spark, sf_dir):
-    """Brute-force cosine top-k (k=10) for query vectors vec_id<5."""
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 5)
-    out = similarity.brute_force_topk(emb, q, k=10, dims=64)
-    return out.select(
-        "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank"
-    )
-
-
-def q_ann_topk_int8(spark, sf_dir):
-    """Two-stage quantized ANN (similarity.ann_topk_int8): coarse scan
-    over the per-vector symmetric int8 table (exact integer dot
-    products; 1/4 the float32 footprint at 100 TB), then exact-cosine
-    re-rank of the k*rerank survivors via an equality join back to the
-    full-precision corpus.  The oracle replays the identical
-    quantize -> coarse-rank -> re-rank recipe."""
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 5)
-    out = similarity.ann_topk_int8(emb, q, k=10, rerank=4)
-    return out.select(
-        "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank"
-    )
-
-
 def q_text_tokens(spark, sf_dir):
     """Token counting: whitespace + BPE-ish regex pre-tokens."""
     docs = _docs(spark, sf_dir)
@@ -666,20 +637,6 @@ def q_mixture(spark, sf_dir):
     )
 
 
-def q_semantic_decontam(spark, sf_dir):
-    """Embedding-level benchmark decontamination (paraphrase leakage
-    the n-gram filter misses): corpus vectors whose cosine against ANY
-    benchmark vector clears the threshold.  Benchmark broadcast,
-    corpus streams; one contamination-sized aggregation.
-    operators/decontam.semantic_decontaminate."""
-    emb = _t(spark, sf_dir, "embeddings")
-    bench = emb.filter(F.col("vec_id") % 40 == 0)
-    corpus = emb.filter(F.col("vec_id") % 40 != 0)
-    return decontam.semantic_decontaminate(
-        corpus, bench, threshold=0.5, dims=64
-    )
-
-
 def q_top_values(spark, sf_dir):
     """Per-column top-k categorical value histogram (Deequ-histogram
     shape): one explode-to-(column,value) pass, one hash aggregation,
@@ -719,40 +676,6 @@ def q_outliers(spark, sf_dir):
 
     ev = _t(spark, sf_dir, "events")
     return outlier_stats(ev, "value", by="event_type", z=2.0)
-
-
-def q_stream_dedup(spark, sf_dir):
-    """Streaming ingest dedup: first occurrence of each distinct
-    normalized text passes, later duplicates are dropped in-stream
-    (streaming/dedup.py; dropDuplicates state = one row per distinct
-    doc).  Drained with availableNow; the emitted (hash, norm) SET is
-    deterministic and the oracle is a plain SELECT DISTINCT."""
-    from jsonschema_spark.streaming.dedup import stream_exact_dedup
-
-    stream = (
-        spark.readStream.schema(
-            "doc_id bigint, text string, lang string, source string, "
-            "n_chars bigint"
-        )
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    out = stream_exact_dedup(stream, text_col="text").select(
-        F.col("__h").alias("content_hash"), F.col("__norm").alias("norm_text")
-    )
-    global _STREAM_SINK_N
-    _STREAM_SINK_N += 1
-    name = f"stream_dedup_sink_{_STREAM_SINK_N}"
-    from jsonschema_spark.streaming import bounded_state_partitions
-
-    with bounded_state_partitions(spark):
-        q = (
-            out.writeStream.format("memory").queryName(name)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.processAllAvailable()
-    q.stop()
-    return spark.table(name)
 
 
 def q_validate_part(spark, sf_dir):
@@ -897,71 +820,6 @@ def q_rolling_user_activity(spark, sf_dir):
         },
     )
     return out.select("event_id", "user_id", "n_7d", "cents_7d")
-
-
-def q_snapshot_diff_docs(spark, sf_dir):
-    """Corpus snapshot diff (diff.snapshot_diff): classify every
-    doc_id across two snapshot versions as added / removed / changed.
-    The "new" snapshot is derived deterministically from the old one
-    (md5-bucket 0 of 17 removed, bucket 1 text-edited, bucket 2
-    duplicated under a new key) so the whole pipeline sits under the
-    value-hash oracle.  Scale shape: each side reduces to
-    (key, 32-byte digest) BEFORE the full-outer join — shuffle payload
-    is independent of row width, output is proportional to the drift."""
-    from jsonschema_spark.operators import diff as diffmod
-
-    old = _t(spark, sf_dir, "documents").withColumn(
-        "doc_id", F.col("doc_id").cast("string")
-    )
-    r = dedup.md5_long(F.col("doc_id")) % 17
-    base = old.withColumn("__r", r)
-    new = (
-        base.filter(F.col("__r") != 0)
-        .withColumn(
-            "text",
-            F.when(
-                F.col("__r") == 1, F.concat(F.col("text"), F.lit(" [v2]"))
-            ).otherwise(F.col("text")),
-        )
-        .drop("__r")
-        .unionByName(
-            base.filter(F.col("__r") == 2)
-            .withColumn("doc_id", F.concat(F.lit("added_"), F.col("doc_id")))
-            .drop("__r")
-        )
-    )
-    return diffmod.snapshot_diff(
-        old, new, keys=["doc_id"],
-        compare_cols=["text", "lang", "source", "n_chars"],
-    )
-
-
-def q_purge_audit(spark, sf_dir):
-    """Cascading right-to-be-forgotten purge (diff.purge_cascade):
-    forget a deterministic set of custkeys (md5 bucket 0 of 31) and
-    propagate the delete down the FK chain customer → orders →
-    lineitem, returning the exact per-table audit counts.  Scale
-    shape: the root forget-list is broadcast (zero shuffle on
-    customer/orders); the DERIVED orderkey set joins under AQE (it can
-    outgrow the broadcast threshold at 100 TB); each table is scanned
-    exactly once — the audit row rides the same scan's partial agg."""
-    from jsonschema_spark.operators.diff import PurgeStep, purge_cascade
-
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    root = cust.filter(
-        dedup.md5_long(F.col("c_custkey").cast("string")) % 31 == 0
-    ).select("c_custkey")
-    audit, _kept = purge_cascade(
-        [
-            PurgeStep("customer", cust, "c_custkey", "c_custkey"),
-            PurgeStep("orders", orders, "o_custkey", "o_orderkey"),
-            PurgeStep("lineitem", li, "l_orderkey", None),
-        ],
-        root,
-    )
-    return audit
 
 
 def q_stream_windowed_verdicts(spark, sf_dir):
@@ -1435,45 +1293,6 @@ def q_validate_customer_combinators(spark, sf_dir):
     return plan.validate(cust, keys=["c_custkey"]).violations
 
 
-def q_ann_ivf_topk(spark, sf_dir):
-    """IVF ANN (scale path): deterministic md5-strided centroid sample,
-    nprobe cells, exact re-rank inside probed cells.  The full pipeline
-    (centroid choice, argmax cell assignment, probe ranking, top-k) is
-    replayed by the DuckDB oracle; recall vs brute force additionally
-    asserted in tests."""
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 5)
-    out = similarity.ivf_topk(emb, q, k=10, n_cells=16, nprobe=4)
-    return out.select(
-        "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank"
-    )
-
-
-def q_cluster_embeddings(spark, sf_dir):
-    """Deterministic Lloyd's k-means over the embedding column
-    (operators/similarity.kmeans_embeddings) — topic clustering for
-    diversity-aware curation.  Vectors are fixed-point-quantized so
-    centroid sums are EXACT integers (order-independent under Spark's
-    partial aggregation); every derived double uses a fixed fold order,
-    so the DuckDB oracle replays the full iteration history (init →
-    assign → mean → assign → ...) bit-for-bit."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return similarity.kmeans_embeddings(emb, n_clusters=8, iters=2)
-
-
-def q_semantic_dedup(spark, sf_dir):
-    """SemDeDup-style semantic dedup (similarity.semantic_dedup):
-    k-means topic assignment → WITHIN-CLUSTER cosine pairs (equality
-    join on cluster, never all-pairs) → connected components → keep
-    the minimum reachable id.  Oracle replays the k-means iteration
-    history, the same within-cluster pair predicate, and a recursive
-    label closure."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return similarity.semantic_dedup(
-        emb, threshold=0.4, n_clusters=8, iters=2, dims=64
-    )
-
-
 def q_embedding_neardup_lsh(spark, sf_dir):
     """Random-hyperplane LSH near-dup (scale path; bucket-local join).
     dims=64 pins the md5-derived hyperplane matrix driver-side
@@ -1483,38 +1302,6 @@ def q_embedding_neardup_lsh(spark, sf_dir):
     return dedup.embedding_neardup_pairs(
         emb, threshold=0.4, planes=6, dims=64
     ).select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-
-
-def q_multimodal_metadata(spark, sf_dir):
-    """Multimodal binary-column plumbing: deterministic synthetic media
-    payloads (binary) -> typed metadata, all columnar (no Python)."""
-    from jsonschema_spark.operators import multimodal
-
-    m = multimodal.synth_media(spark, n=64, seed=42)
-    return multimodal.media_metadata(m)
-
-
-def q_multimodal_image_features(spark, sf_dir):
-    """mapInPandas (Arrow-batched) image feature extraction with the
-    deterministic stub decoder — the UDF path itself is under the
-    oracle (the fake decode is md5-derived, reproducible in SQL)."""
-    from jsonschema_spark.operators import multimodal
-
-    m = multimodal.synth_media(spark, n=64, seed=42)
-    feats = multimodal.extract_image_features(m, fake=True)
-    return feats.select(
-        "media_id", "width", "height", "channels",
-        F.round("mean_intensity", 6).alias("mean_intensity"), "phash",
-    )
-
-
-def q_multimodal_frame_samples(spark, sf_dir):
-    """UDTF-shaped mapInPandas: one output row per sampled video frame
-    (rows out > rows in); stub decode is md5-derived, oracle-checked."""
-    from jsonschema_spark.operators import multimodal
-
-    m = multimodal.synth_media(spark, n=64, seed=42)
-    return multimodal.sample_frames(m, every_n=4, fake=True)
 
 
 def q_events_user_sequence(spark, sf_dir):
@@ -1676,22 +1463,6 @@ def q_dedup_conversations(spark, sf_dir):
     )
     return transcripts.conversation_dedup_pairs(
         turns, n=5, k=16, bands=4, threshold=0.5
-    )
-
-
-def q_decontaminate_docs(spark, sf_dir):
-    """Benchmark decontamination (operators/decontam.py): documents
-    with doc_id%40==0 stand in for the held-out eval set; the rest are
-    the training corpus.  Word-3-gram overlap via a BROADCAST of the
-    benchmark n-gram set — the corpus is never shuffled for the join;
-    the only shuffle carries matched pairs (contamination-sized)."""
-    docs = _docs(spark, sf_dir)
-    bench = docs.filter(F.col("doc_id") % 40 == 0)
-    corpus = docs.filter(F.col("doc_id") % 40 != 0)
-    pairs = decontam.decontaminate(corpus, bench, n=3, min_overlap=2)
-    return pairs.select(
-        "doc_id", "bench_id", "overlap", "doc_ngrams",
-        F.round("contamination", 6).alias("contamination"),
     )
 
 
@@ -1900,25 +1671,6 @@ def q_volume_anomalies_events(spark, sf_dir):
     return volume_anomalies(hist)
 
 
-def q_transcript_report(spark, sf_dir):
-    """Transcript data card (operators/report.transcript_report): the
-    north-rule table's total / per-role / per-tool summary — turn and
-    DISTINCT-conversation counts, char totals, null-text rate — from
-    ONE scan via GROUPING SETS."""
-    tdf = _transcripts_from_events(_t(spark, sf_dir, "events"))
-    return report.transcript_report(tdf)
-
-
-def q_corpus_report(spark, sf_dir):
-    """Corpus data card (operators/report.corpus_report): total +
-    per-source + per-language grains from ONE scan via GROUPING SETS —
-    doc/token/char counts, exact-dup accounting (count distinct md5),
-    short-doc fraction.  The shuffle carries group partials plus the
-    hashed two-phase distinct, never row text."""
-    docs = _docs(spark, sf_dir)
-    return report.corpus_report(docs)
-
-
 def _accent_suffix():
     return (
         F.when(F.col("doc_id") % 7 == 0, F.lit(" café"))
@@ -2000,24 +1752,6 @@ def q_pack_sequences_docs(spark, sf_dir):
         "doc_id", text.token_count(F.col("text")).alias("n_tokens")
     )
     return sampling.pack_sequences(with_tokens, seq_len=256)
-
-
-def q_curate_docs(spark, sf_dir):
-    """The composed curation pipeline (operators/curate.py): exact-dup
-    flag (min-id per normalized-text hash), benchmark-contamination
-    flag (broadcast n-gram probe), quality flag, keep verdict, and the
-    deterministic split — ONE row per corpus document with every drop
-    reason auditable."""
-    docs = _docs(spark, sf_dir)
-    bench = docs.filter(F.col("doc_id") % 40 == 0)
-    corpus = docs.filter(F.col("doc_id") % 40 != 0)
-    flagged = curate.curate_flags(
-        corpus, bench, quality_min=0.5, span_dup_max=0.95
-    )
-    return sampling.hash_split(flagged).select(
-        "doc_id", "is_exact_dup", "contaminated", "low_quality",
-        "boilerplate", "keep", "split",
-    )
 
 
 def q_bpe_train_docs(spark, sf_dir):
@@ -2122,14 +1856,6 @@ def q_tool_latency(spark, sf_dir):
     return transcripts.tool_latency(planted, order_by=["turn_idx", "seq"])
 
 
-def q_source_overlap(spark, sf_dir):
-    """Cross-source contamination matrix (decontam.source_overlap):
-    distinct word-3-gram overlap between every pair of ingest sources
-    — the corpus reduces to the distinct (source, n-gram) set before
-    any join, and n-gram fanout is bounded by the source count."""
-    return decontam.source_overlap(_docs(spark, sf_dir), n=3)
-
-
 def q_transcript_skew_report(spark, sf_dir):
     """Key-skew concentration report (skew.skew_report) over the
     transcript conv_id — the quantitative decision input for the north
@@ -2158,14 +1884,6 @@ def q_fd_part_supplier(spark, sf_dir):
         determinant=["l_partkey"], dependent="l_suppkey", max_examples=3
     )
     return fd.violating_keys(_t(spark, sf_dir, "lineitem"))
-
-
-def q_embedding_profile(spark, sf_dir):
-    """Per-label embedding data card (similarity.embedding_profile):
-    cluster sizes, centroid norms, within-label dispersion — exact
-    scaled-long sums with one fixed-order double derivation, same
-    contract as the k-means oracle."""
-    return similarity.embedding_profile(_t(spark, sf_dir, "embeddings"))
 
 
 def q_lm_bigram_docs(spark, sf_dir):
@@ -2247,9 +1965,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return _rotate({
         "dedup_minhash_incremental": q_dedup_minhash_incremental,
         "dedup_clusters": q_dedup_clusters,
-        "ann_topk_int8": q_ann_topk_int8,
-        "cluster_embeddings": q_cluster_embeddings,
-        "semantic_dedup": q_semantic_dedup,
         "lm_score_docs": q_lm_score_docs,
         "quality_classifier_docs": q_quality_classifier_docs,
         "span_dup_docs": q_span_dup_stats,
@@ -2257,7 +1972,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "transcript_integrity": q_transcript_integrity,
         "transcript_rollup": q_transcript_rollup,
         "dedup_conversations": q_dedup_conversations,
-        "decontaminate_docs": q_decontaminate_docs,
         "pii_scan_docs": q_pii_scan_docs,
         "text_repetition": q_text_repetition,
         "transcript_tool_pairing": q_transcript_tool_pairing,
@@ -2268,8 +1982,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "render_chat": q_render_chat,
         "sft_mask_spans": q_sft_mask_spans,
         "migration_impact_orders": q_migration_impact_orders,
-        "corpus_report": q_corpus_report,
-        "transcript_report": q_transcript_report,
         "volume_anomalies_events": q_volume_anomalies_events,
         "clean_text_docs": q_clean_text_docs,
         "conversation_verdicts": q_conversation_verdicts,
@@ -2278,7 +1990,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stratified_sample_docs": q_stratified_sample_docs,
         "token_budget_docs": q_token_budget_docs,
         "pack_sequences_docs": q_pack_sequences_docs,
-        "curate_docs": q_curate_docs,
         "bpe_train_docs": q_bpe_train_docs,
         "bpe_segment_docs": q_bpe_segment_docs,
         "collocations_docs": q_collocations_docs,
@@ -2286,10 +1997,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "blocklist_docs": q_blocklist_docs,
         "tool_loops": q_tool_loops,
         "tool_latency": q_tool_latency,
-        "source_overlap": q_source_overlap,
         "transcript_skew_report": q_transcript_skew_report,
         "fd_part_supplier": q_fd_part_supplier,
-        "embedding_profile": q_embedding_profile,
         "lm_bigram_docs": q_lm_bigram_docs,
         "token_entropy_docs": q_token_entropy_docs,
         "script_builders_docs": q_script_builders_docs,
@@ -2314,15 +2023,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "asof_purchase_attribution": q_asof_purchase_attribution,
         "range_join_error_windows": q_range_join_error_windows,
         "rolling_user_activity": q_rolling_user_activity,
-        "snapshot_diff_docs": q_snapshot_diff_docs,
-        "purge_audit": q_purge_audit,
         "stream_windowed_verdicts": q_stream_windowed_verdicts,
-        "stream_dedup_docs": q_stream_dedup,
         "outliers_events": q_outliers,
         "funnel_events": q_funnel,
         "drift_timeline_events": q_drift_timeline,
         "top_values_events": q_top_values,
-        "semantic_decontam": q_semantic_decontam,
         "mixture_docs": q_mixture,
         "stream_windowed_verdicts_json": q_stream_windowed_verdicts_json,
         "transform_events": q_transform_events,
@@ -2349,12 +2054,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_minhash_lsh": q_dedup_minhash_lsh,
         "dedup_simhash": q_dedup_simhash,
         "embedding_neardup": q_embedding_neardup,
-        "ann_topk": q_ann_topk,
-        "ann_ivf_topk": q_ann_ivf_topk,
         "embedding_neardup_lsh": q_embedding_neardup_lsh,
-        "multimodal_metadata": q_multimodal_metadata,
-        "multimodal_image_features": q_multimodal_image_features,
-        "multimodal_frame_samples": q_multimodal_frame_samples,
         "text_tokens": q_text_tokens,
         "text_langid": q_text_langid,
         "text_quality": q_text_quality,
@@ -2657,95 +2357,6 @@ def _oracle_ngram_jaccard() -> str:
     """
 
 
-def _oracle_ann_topk() -> str:
-    cos = _sql_cosine("c.embedding", "q.embedding")
-    return f"""
-    WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5),
-    scored AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             {cos} AS cosine
-      FROM embeddings c CROSS JOIN q
-      WHERE q.vec_id <> c.vec_id
-    ),
-    ranked AS (
-      SELECT query_id, neighbor_id, round(cosine, 6) AS cosine,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cosine DESC, neighbor_id) AS rank
-      FROM scored
-    )
-    SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= 10
-    """
-
-
-def _oracle_ann_int8() -> str:
-    """Replay of similarity.ann_topk_int8: symmetric int8 quantization
-    (scale = max|x|/127 per vector, round half-away-from-zero — both
-    engines' round()), coarse rank by quantized cosine (EXACT integer
-    dot products, so no float-fold concerns), exact-cosine re-rank of
-    the top k*rerank candidates."""
-    dims = 64
-    gm = "GREATEST(" + ", ".join(
-        f"abs(CAST(embedding[{i}] AS DOUBLE))" for i in range(1, dims + 1)
-    ) + ")"
-    qterms = ", ".join(
-        f"CAST(round(CAST(embedding[{i}] AS DOUBLE) / scale) AS BIGINT)"
-        for i in range(1, dims + 1)
-    )
-
-    # numerator dot(q, c); denominator sqrt(dot(q,q)) * sqrt(dot(c,c))
-    num = "(" + " + ".join(
-        f"q.qv[{i}] * c.qv[{i}]" for i in range(1, dims + 1)
-    ) + ")"
-    dq = "(" + " + ".join(
-        f"q.qv[{i}] * q.qv[{i}]" for i in range(1, dims + 1)
-    ) + ")"
-    dc = "(" + " + ".join(
-        f"c.qv[{i}] * c.qv[{i}]" for i in range(1, dims + 1)
-    ) + ")"
-    qcos = (
-        f"(CAST({num} AS DOUBLE) / "
-        f"(sqrt(CAST({dq} AS DOUBLE)) * sqrt(CAST({dc} AS DOUBLE))))"
-    )
-    cos = _sql_cosine("qq.embedding", "cc.embedding")
-    return f"""
-    WITH s AS (
-      SELECT vec_id, embedding,
-             CASE WHEN {gm} > 0 THEN {gm} / 127.0 ELSE 1.0 END AS scale
-      FROM embeddings
-    ),
-    qz AS (
-      SELECT vec_id, [{qterms}] AS qv FROM s
-    ),
-    q AS (SELECT * FROM qz WHERE vec_id < 5),
-    coarse AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {qcos} AS qcos
-      FROM qz c CROSS JOIN q
-      WHERE q.vec_id <> c.vec_id
-    ),
-    cand AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY qcos DESC, neighbor_id) AS crank
-        FROM coarse
-      ) WHERE crank <= 40
-    ),
-    exact AS (
-      SELECT cand.query_id, cand.neighbor_id, {cos} AS cosine
-      FROM cand
-      JOIN embeddings cc ON cc.vec_id = cand.neighbor_id
-      JOIN embeddings qq ON qq.vec_id = cand.query_id
-    ),
-    ranked AS (
-      SELECT query_id, neighbor_id, round(cosine, 6) AS cosine,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cosine DESC, neighbor_id) AS rank
-      FROM exact
-    )
-    SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= 10
-    """
-
-
 def _oracle_lm_score(alpha: float = 0.5) -> str:
     """Replay of text.lm_counts + lm_score: identical tokenization
     (normalized whitespace split, empties dropped), identical add-alpha
@@ -2821,45 +2432,6 @@ def _oracle_quality_classifier(dim: int = 1024, seed: str = "qc-v1") -> str:
     """
 
 
-def _oracle_semantic_dedup(
-    threshold: float = 0.4, n_clusters: int = 8
-) -> str:
-    """Replay of similarity.semantic_dedup: k-means assignment (the
-    full _oracle_kmeans iteration replay), within-cluster cosine pairs
-    with the identical threshold predicate on identical doubles, then
-    a recursive min-label closure (same shape as
-    _oracle_dedup_clusters)."""
-    km = _oracle_kmeans(n_clusters=n_clusters)
-    cos = _sql_cosine("a.embedding", "b.embedding")
-    return f"""
-    WITH RECURSIVE asg AS MATERIALIZED (
-      SELECT vec_id, cluster FROM ({km}) t
-    ),
-    wc AS MATERIALIZED (
-      SELECT e.vec_id, e.embedding, a.cluster
-      FROM embeddings e JOIN asg a ON a.vec_id = e.vec_id
-    ),
-    pairs AS MATERIALIZED (
-      SELECT a.vec_id AS id_a, b.vec_id AS id_b
-      FROM wc a JOIN wc b
-        ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-      WHERE {cos} >= {threshold}
-    ),
-    e AS (SELECT id_a AS u, id_b AS v FROM pairs
-          UNION SELECT id_b, id_a FROM pairs),
-    r AS (
-      SELECT u AS id, u AS lab FROM e
-      UNION
-      SELECT e.u AS id, r.lab FROM e JOIN r ON r.id = e.v
-    ),
-    comp AS (SELECT id, min(lab) AS canonical FROM r GROUP BY id)
-    SELECT v.vec_id,
-           COALESCE(c.canonical, v.vec_id) AS canonical_id,
-           (COALESCE(c.canonical, v.vec_id) <> v.vec_id) AS is_duplicate
-    FROM embeddings v LEFT JOIN comp c ON c.id = v.vec_id
-    """
-
-
 def _oracle_embedding_lsh() -> str:
     """Rebuild the hyperplane sign matrix with the SAME driver-side
     function the engine uses, project (sequential fold order matches
@@ -2884,133 +2456,6 @@ def _oracle_embedding_lsh() -> str:
     SELECT a.vec_id AS id_a, b.vec_id AS id_b, round({cos}, 6) AS cosine
     FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
     WHERE {cos} >= 0.4
-    """
-
-
-def _oracle_ann_ivf() -> str:
-    """Full IVF replay: md5-strided centroid sample (row_number over the
-    same 60-bit md5 hash), argmax cell assignment with first-index
-    tie-break (ORDER BY s DESC, cell), nprobe probe cells per query,
-    exact top-k inside probed cells."""
-    h = _sql_md5_long("CAST(vec_id AS VARCHAR)", seed=42)
-    dot_ac = _sql_dot("c.embedding", "ct.cv")
-    dot_qc = _sql_dot("q.qv", "ct.cv")
-    cos = _sql_cosine("p.qv", "a.cv")
-    return f"""
-    WITH hsh AS (SELECT vec_id, embedding, {h} AS hh FROM embeddings),
-    cents AS (
-      SELECT embedding AS cv, row_number() OVER (ORDER BY hh) - 1 AS cell
-      FROM hsh QUALIFY row_number() OVER (ORDER BY hh) <= 16
-    ),
-    ascore AS (
-      SELECT c.vec_id AS nid, c.embedding AS cve, ct.cell, {dot_ac} AS s
-      FROM embeddings c CROSS JOIN cents ct
-    ),
-    assign AS (
-      SELECT nid, cve AS cv, cell FROM (
-        SELECT nid, cve, cell,
-               row_number() OVER (PARTITION BY nid ORDER BY s DESC, cell) AS rn
-        FROM ascore
-      ) WHERE rn = 1
-    ),
-    q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 5),
-    qscore AS (
-      SELECT q.qid, q.qv AS qve, ct.cell, {dot_qc} AS s
-      FROM q CROSS JOIN cents ct
-    ),
-    probe AS (
-      SELECT qid, qve AS qv, cell FROM (
-        SELECT qid, qve, cell,
-               row_number() OVER (PARTITION BY qid ORDER BY s DESC, cell) AS rn
-        FROM qscore
-      ) WHERE rn <= 4
-    ),
-    scored AS (
-      SELECT p.qid AS query_id, a.nid AS neighbor_id, {cos} AS cosine
-      FROM probe p JOIN assign a ON a.cell = p.cell
-      WHERE p.qid <> a.nid
-    )
-    SELECT query_id, neighbor_id, round(cosine, 6) AS cosine, rank FROM (
-      SELECT query_id, neighbor_id, cosine,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cosine DESC, neighbor_id) AS rank
-      FROM scored
-    ) WHERE rank <= 10
-    """
-
-
-def _oracle_kmeans(n_clusters: int = 8, iters: int = 2, dims: int = 64) -> str:
-    """Full Lloyd's replay: fixed-point quantization, md5-ordered init,
-    then per iteration the SAME argmin score chain (c_d^2 - 2 v_d c_d,
-    left-assoc in dim order) and exact-integer mean update the engine
-    computes — centroid sums are LONG sums, so the two engines cannot
-    drift; ties break to the lowest cluster index on both sides."""
-    h = _sql_md5_long("CAST(vec_id AS VARCHAR)", seed=42)
-
-    def score(v: str, c: str) -> str:
-        terms = " + ".join(
-            f"({c}[{i}] * {c}[{i}] - 2.0 * {c}[{i}] * CAST({v}[{i}] AS DOUBLE))"
-            for i in range(1, dims + 1)
-        )
-        return f"(0.0 + {terms})"
-
-    def dist2(v: str, c: str) -> str:
-        terms = " + ".join(
-            f"((CAST({v}[{i}] AS DOUBLE) - {c}[{i}])"
-            f" * (CAST({v}[{i}] AS DOUBLE) - {c}[{i}]))"
-            for i in range(1, dims + 1)
-        )
-        return f"(0.0 + {terms})"
-
-    ctes = [
-        f"""vecs AS (
-      SELECT vec_id AS id,
-             list_transform(embedding,
-                 x -> CAST(round(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))
-               AS vq,
-             {h} AS hh
-      FROM embeddings
-    )""",
-        f"""cents0 AS (
-      SELECT row_number() OVER (ORDER BY hh) - 1 AS cluster,
-             list_transform(vq, x -> CAST(x AS DOUBLE)) AS cent
-      FROM vecs QUALIFY row_number() OVER (ORDER BY hh) <= {n_clusters}
-    )""",
-    ]
-    for k in range(iters):
-        ctes.append(f"""a{k} AS (
-      SELECT id, vq, cluster FROM (
-        SELECT v.id, v.vq, c.cluster,
-               row_number() OVER (PARTITION BY v.id
-                   ORDER BY {score('v.vq', 'c.cent')} ASC, c.cluster ASC) AS rn
-        FROM vecs v CROSS JOIN cents{k} c
-      ) WHERE rn = 1
-    )""")
-        ctes.append(f"""s{k} AS (
-      SELECT cluster, pos, SUM(x) AS s, COUNT(*) AS n
-      FROM (SELECT cluster, generate_subscripts(vq, 1) AS pos,
-                   unnest(vq) AS x FROM a{k})
-      GROUP BY cluster, pos
-    )""")
-        ctes.append(f"""m{k} AS (
-      SELECT cluster, list(CAST(s AS DOUBLE) / CAST(n AS DOUBLE)
-                           ORDER BY pos) AS cent
-      FROM s{k} GROUP BY cluster
-    )""")
-        ctes.append(f"""cents{k + 1} AS (
-      SELECT o.cluster, COALESCE(nn.cent, o.cent) AS cent
-      FROM cents{k} o LEFT JOIN m{k} nn ON nn.cluster = o.cluster
-    )""")
-    return f"""
-    WITH {','.join(ctes)}
-    SELECT id AS vec_id, CAST(cluster AS INTEGER) AS cluster,
-           round(sqrt({dist2('vq', 'cent')}) / 1000000.0, 6) AS dist
-    FROM (
-      SELECT v.id, v.vq, c.cluster, c.cent,
-             row_number() OVER (PARTITION BY v.id
-                 ORDER BY {score('v.vq', 'c.cent')} ASC, c.cluster ASC) AS rn
-      FROM vecs v CROSS JOIN cents{iters} c
-    ) WHERE rn = 1
     """
 
 
@@ -3600,18 +3045,6 @@ def oracle_sql() -> dict[str, str]:
                   THEN 1 ELSE 0 END) AS n_reps
         FROM documents d JOIN factors USING (source)
         """,
-        "semantic_decontam": f"""
-        WITH c AS (SELECT vec_id, embedding AS cv FROM embeddings
-                   WHERE vec_id % 40 <> 0),
-        b AS (SELECT embedding AS bv FROM embeddings WHERE vec_id % 40 = 0),
-        p AS (SELECT vec_id,
-                     {_sql_dot('cv', 'bv')}
-                       / (sqrt({_sql_dot('cv', 'cv')})
-                          * sqrt({_sql_dot('bv', 'bv')})) AS cos
-              FROM c, b)
-        SELECT vec_id, round(max(cos), 6) AS max_cosine
-        FROM p WHERE cos >= 0.5 GROUP BY vec_id
-        """,
         "top_values_events": """
         WITH pairs AS (
           SELECT 'event_type' AS "column",
@@ -3726,12 +3159,6 @@ def oracle_sql() -> dict[str, str]:
                round(lo_raw, 6) AS lo, round(hi_raw, 6) AS hi,
                coalesce(r.n_outliers, 0) AS n_outliers
         FROM c LEFT JOIN r USING (grp)
-        """,
-        "stream_dedup_docs": f"""
-        SELECT DISTINCT
-          {_sql_md5_long(_SQL_NORM.format(col='text'))} AS content_hash,
-          {_SQL_NORM.format(col='text')} AS norm_text
-        FROM documents
         """,
         "stream_windowed_verdicts": """
             WITH v AS (
@@ -3863,89 +3290,6 @@ def oracle_sql() -> dict[str, str]:
             )
         """,
 
-        "snapshot_diff_docs": f"""
-            WITH m AS (
-              SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     text, lang, source, n_chars,
-                     ({_sql_md5_long('CAST(doc_id AS VARCHAR)')}) % 17 AS r
-              FROM documents
-            ),
-            newsnap AS (
-              SELECT doc_id,
-                     CASE WHEN r = 1 THEN text || ' [v2]' ELSE text END
-                       AS text,
-                     lang, source, n_chars
-              FROM m WHERE r <> 0
-              UNION ALL
-              SELECT 'added_' || doc_id, text, lang, source, n_chars
-              FROM m WHERE r = 2
-            ),
-            o AS (
-              SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     md5(concat_ws(chr(31),
-                       coalesce(CAST(text AS VARCHAR), chr(0) || 'N'),
-                       coalesce(CAST(lang AS VARCHAR), chr(0) || 'N'),
-                       coalesce(CAST(source AS VARCHAR), chr(0) || 'N'),
-                       coalesce(CAST(n_chars AS VARCHAR), chr(0) || 'N')
-                     )) AS h
-              FROM documents
-            ),
-            n AS (
-              SELECT doc_id, md5(concat_ws(chr(31),
-                       coalesce(CAST(text AS VARCHAR), chr(0) || 'N'),
-                       coalesce(CAST(lang AS VARCHAR), chr(0) || 'N'),
-                       coalesce(CAST(source AS VARCHAR), chr(0) || 'N'),
-                       coalesce(CAST(n_chars AS VARCHAR), chr(0) || 'N')
-                     )) AS h
-              FROM newsnap
-            ),
-            j AS (
-              SELECT COALESCE(o.doc_id, n.doc_id) AS doc_id,
-                     CASE WHEN o.h IS NULL THEN 'added'
-                          WHEN n.h IS NULL THEN 'removed'
-                          WHEN o.h <> n.h THEN 'changed' END AS status
-              FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id
-            )
-            SELECT doc_id, status FROM j WHERE status IS NOT NULL
-        """,
-
-        "purge_audit": f"""
-            WITH root AS (
-              SELECT c_custkey FROM customer
-              WHERE ({_sql_md5_long('CAST(c_custkey AS VARCHAR)')}) % 31 = 0
-            ),
-            po AS (
-              SELECT o_orderkey FROM orders
-              WHERE o_custkey IN (SELECT c_custkey FROM root)
-            ),
-            c AS (
-              SELECT count(*) AS b,
-                     CAST(sum(CASE WHEN c_custkey IN
-                       (SELECT c_custkey FROM root) THEN 1 ELSE 0 END)
-                       AS BIGINT) AS p
-              FROM customer
-            ),
-            o AS (
-              SELECT count(*) AS b,
-                     CAST(sum(CASE WHEN o_custkey IN
-                       (SELECT c_custkey FROM root) THEN 1 ELSE 0 END)
-                       AS BIGINT) AS p
-              FROM orders
-            ),
-            l AS (
-              SELECT count(*) AS b,
-                     CAST(sum(CASE WHEN l_orderkey IN
-                       (SELECT o_orderkey FROM po) THEN 1 ELSE 0 END)
-                       AS BIGINT) AS p
-              FROM lineitem
-            )
-            SELECT 'customer' AS "table", b AS rows_before,
-                   p AS rows_purged, b - p AS rows_after FROM c
-            UNION ALL
-            SELECT 'orders', b, p, b - p FROM o
-            UNION ALL
-            SELECT 'lineitem', b, p, b - p FROM l
-        """,
 
         "transform_events": """
             SELECT event_id,
@@ -4135,56 +3479,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT event_id, CAST(json_extract_string(props, '$.k') AS INT) AS k
             FROM events
         """,
-        "multimodal_metadata": """
-            WITH g AS (SELECT unnest(range(64)) AS id),
-            m AS (
-              SELECT g.id AS media_id,
-                     (['image','audio','video'])[CAST(g.id % 3 AS INT) + 1] AS kind,
-                     ('blob:' || sha256(CAST(g.id AS VARCHAR) || ':42') || repeat('x', CAST((g.id * 37) % 256 AS INT))) AS p
-              FROM g
-            )
-            SELECT media_id, kind,
-                   CAST(length(p) AS INT) AS n_bytes,
-                   md5(p) AS checksum
-            FROM m
-        """,
-        "multimodal_image_features": """
-            WITH g AS (SELECT unnest(range(64)) AS id),
-            m AS (
-              SELECT g.id AS media_id,
-                     (['image','audio','video'])[CAST(g.id % 3 AS INT) + 1] AS kind,
-                     md5(('blob:' || sha256(CAST(g.id AS VARCHAR) || ':42') || repeat('x', CAST((g.id * 37) % 256 AS INT)))) AS h
-              FROM g
-            )
-            SELECT media_id,
-                   CAST(16 + ((strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1)) % 64 AS INT) AS width,
-                   CAST(16 + ((strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1)) % 64 AS INT) AS height,
-                   CAST(1 + ((strpos('0123456789abcdef', substr(h, 5, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 6, 1)) - 1)) % 3 AS INT) AS channels,
-                   round(CAST((((strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1)) + ((strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1)) + ((strpos('0123456789abcdef', substr(h, 5, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 6, 1)) - 1)) + ((strpos('0123456789abcdef', substr(h, 7, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 8, 1)) - 1)) + ((strpos('0123456789abcdef', substr(h, 9, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 10, 1)) - 1)) + ((strpos('0123456789abcdef', substr(h, 11, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 12, 1)) - 1)) + ((strpos('0123456789abcdef', substr(h, 13, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 14, 1)) - 1)) + ((strpos('0123456789abcdef', substr(h, 15, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 16, 1)) - 1)) + ((strpos('0123456789abcdef', substr(h, 17, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 18, 1)) - 1)) + ((strpos('0123456789abcdef', substr(h, 19, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 20, 1)) - 1)) + ((strpos('0123456789abcdef', substr(h, 21, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 22, 1)) - 1)) + ((strpos('0123456789abcdef', substr(h, 23, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 24, 1)) - 1)) + ((strpos('0123456789abcdef', substr(h, 25, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 26, 1)) - 1)) + ((strpos('0123456789abcdef', substr(h, 27, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 28, 1)) - 1)) + ((strpos('0123456789abcdef', substr(h, 29, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 30, 1)) - 1)) + ((strpos('0123456789abcdef', substr(h, 31, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 32, 1)) - 1))) AS DOUBLE) / (16 * 255.0), 6) AS mean_intensity,
-                   CAST((CAST(((strpos('0123456789abcdef', substr(h, 17, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 18, 1)) - 1)) AS HUGEINT) * CAST(72057594037927936 AS HUGEINT) + CAST(((strpos('0123456789abcdef', substr(h, 19, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 20, 1)) - 1)) AS HUGEINT) * CAST(281474976710656 AS HUGEINT) + CAST(((strpos('0123456789abcdef', substr(h, 21, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 22, 1)) - 1)) AS HUGEINT) * CAST(1099511627776 AS HUGEINT) + CAST(((strpos('0123456789abcdef', substr(h, 23, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 24, 1)) - 1)) AS HUGEINT) * CAST(4294967296 AS HUGEINT) + CAST(((strpos('0123456789abcdef', substr(h, 25, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 26, 1)) - 1)) AS HUGEINT) * CAST(16777216 AS HUGEINT) + CAST(((strpos('0123456789abcdef', substr(h, 27, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 28, 1)) - 1)) AS HUGEINT) * CAST(65536 AS HUGEINT) + CAST(((strpos('0123456789abcdef', substr(h, 29, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 30, 1)) - 1)) AS HUGEINT) * CAST(256 AS HUGEINT) + CAST(((strpos('0123456789abcdef', substr(h, 31, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 32, 1)) - 1)) AS HUGEINT) * CAST(1 AS HUGEINT))
-                        - CASE WHEN (CAST(((strpos('0123456789abcdef', substr(h, 17, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 18, 1)) - 1)) AS HUGEINT) * CAST(72057594037927936 AS HUGEINT) + CAST(((strpos('0123456789abcdef', substr(h, 19, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 20, 1)) - 1)) AS HUGEINT) * CAST(281474976710656 AS HUGEINT) + CAST(((strpos('0123456789abcdef', substr(h, 21, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 22, 1)) - 1)) AS HUGEINT) * CAST(1099511627776 AS HUGEINT) + CAST(((strpos('0123456789abcdef', substr(h, 23, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 24, 1)) - 1)) AS HUGEINT) * CAST(4294967296 AS HUGEINT) + CAST(((strpos('0123456789abcdef', substr(h, 25, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 26, 1)) - 1)) AS HUGEINT) * CAST(16777216 AS HUGEINT) + CAST(((strpos('0123456789abcdef', substr(h, 27, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 28, 1)) - 1)) AS HUGEINT) * CAST(65536 AS HUGEINT) + CAST(((strpos('0123456789abcdef', substr(h, 29, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 30, 1)) - 1)) AS HUGEINT) * CAST(256 AS HUGEINT) + CAST(((strpos('0123456789abcdef', substr(h, 31, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(h, 32, 1)) - 1)) AS HUGEINT) * CAST(1 AS HUGEINT)) >= CAST(9223372036854775808 AS HUGEINT)
-                               THEN CAST(18446744073709551616 AS HUGEINT)
-                               ELSE 0 END AS BIGINT) AS phash
-            FROM m WHERE kind = 'image'
-        """,
-        "multimodal_frame_samples": """
-            WITH g AS (SELECT unnest(range(64)) AS id),
-            m AS (
-              SELECT g.id AS media_id, (['image','audio','video'])[CAST(g.id % 3 AS INT) + 1] AS kind, ('blob:' || sha256(CAST(g.id AS VARCHAR) || ':42') || repeat('x', CAST((g.id * 37) % 256 AS INT))) AS p
-              FROM g
-            ),
-            v AS (
-              SELECT media_id, p,
-                     8 + (ascii(substr(p, length(p), 1)) % 24) AS n_frames
-              FROM m WHERE kind = 'video'
-            )
-            SELECT media_id,
-                   CAST(f.fi AS INT) AS frame_idx,
-                   md5(p || ':' || CAST(f.fi AS VARCHAR)) AS frame_checksum
-            FROM v, LATERAL (
-              SELECT unnest(range(0, n_frames, 4)) AS fi
-            ) f
-        """,
         "dedup_exact": f"""
             SELECT md5({norm}) AS text_hash,
                    min(doc_id) AS keep_id,
@@ -4199,11 +3493,6 @@ def oracle_sql() -> dict[str, str]:
         "dedup_simhash": _oracle_simhash(),
         "embedding_neardup": _oracle_embedding_neardup(),
         "embedding_neardup_lsh": _oracle_embedding_lsh(),
-        "ann_topk": _oracle_ann_topk(),
-        "ann_ivf_topk": _oracle_ann_ivf(),
-        "ann_topk_int8": _oracle_ann_int8(),
-        "cluster_embeddings": _oracle_kmeans(),
-        "semantic_dedup": _oracle_semantic_dedup(),
         "text_tokens": f"""
             SELECT doc_id,
                    CASE WHEN length({norm}) = 0 THEN 0
@@ -4224,7 +3513,6 @@ def oracle_sql() -> dict[str, str]:
         "dedup_conversations": _oracle_minhash(docs_sql=_SQL_CONV_DOCS),
         "dedup_clusters": _oracle_dedup_clusters(),
         "stats_incremental": _oracle_stats_incremental(),
-        "decontaminate_docs": _oracle_decontaminate(),
         "pii_scan_docs": _oracle_pii_scan(),
         "text_repetition": _oracle_text_repetition(),
         "transcript_tool_pairing": _oracle_tool_pairing(),
@@ -4235,8 +3523,6 @@ def oracle_sql() -> dict[str, str]:
         "render_chat": _oracle_render_chat(),
         "sft_mask_spans": _oracle_sft_mask_spans(),
         "migration_impact_orders": _oracle_migration_impact_orders(),
-        "corpus_report": _oracle_corpus_report(),
-        "transcript_report": _oracle_transcript_report(),
         "volume_anomalies_events": _oracle_volume_anomalies(),
         "clean_text_docs": _oracle_clean_text(),
         "conversation_verdicts": _oracle_conversation_verdicts(),
@@ -4245,7 +3531,6 @@ def oracle_sql() -> dict[str, str]:
         "stratified_sample_docs": _oracle_stratified_sample(),
         "token_budget_docs": _oracle_token_budget(),
         "pack_sequences_docs": _oracle_pack_sequences(),
-        "curate_docs": _oracle_curate(),
         "bpe_train_docs": _oracle_bpe_train(batch=4),
         "bpe_segment_docs": _oracle_bpe_segment(batch=4),
         "collocations_docs": _oracle_collocations(),
@@ -4253,10 +3538,8 @@ def oracle_sql() -> dict[str, str]:
         "blocklist_docs": _oracle_blocklist(),
         "tool_loops": _oracle_tool_loops(),
         "tool_latency": _oracle_tool_latency(),
-        "source_overlap": _oracle_source_overlap(),
         "transcript_skew_report": _oracle_transcript_skew_report(),
         "fd_part_supplier": _oracle_fd_part_supplier(),
-        "embedding_profile": _oracle_embedding_profile(),
         "lm_bigram_docs": _oracle_lm_bigram(),
         "token_entropy_docs": _oracle_token_entropy(),
         "script_builders_docs": """
@@ -4374,50 +3657,6 @@ def _oracle_lm_bigram(alpha: float = 0.5, backoff: float = 0.4) -> str:
     """
 
 
-def _oracle_embedding_profile(dims: int = 64) -> str:
-    """Same fixed-point recipe as the k-means oracle: quantize to
-    scaled longs, EXACT per-dimension and per-row-squared sums, then
-    the identical left-associative double derivation for centroid
-    norm and E[|x|^2] - |c|^2 dispersion."""
-    t = (
-        "(CAST(c.sv[{d}] AS DOUBLE) / CAST(r.n AS DOUBLE) / 1000000.0)"
-    )
-    normsq = " + ".join(
-        f"({t.format(d=d)} * {t.format(d=d)})" for d in range(1, dims + 1)
-    )
-    return f"""
-    WITH v AS (
-      SELECT label,
-             list_transform(embedding,
-                 x -> CAST(round(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))
-               AS vq
-      FROM embeddings
-    ),
-    cs AS (
-      SELECT label, pos, SUM(x) AS s FROM (
-        SELECT label, generate_subscripts(vq, 1) AS pos, unnest(vq) AS x
-        FROM v
-      ) GROUP BY label, pos
-    ),
-    cent AS (
-      SELECT label, list(CAST(s AS BIGINT) ORDER BY pos) AS sv
-      FROM cs GROUP BY label
-    ),
-    r AS (
-      SELECT label, CAST(COUNT(*) AS BIGINT) AS n,
-             SUM(list_aggregate(list_transform(vq, x -> x * x), 'sum'))
-               AS sumsq
-      FROM v GROUP BY label
-    )
-    SELECT c.label, r.n,
-           round(sqrt(0.0 + {normsq}), 6) AS centroid_norm,
-           round(CAST(r.sumsq AS DOUBLE) / CAST(r.n AS DOUBLE)
-                 / 1000000.0 / 1000000.0 - (0.0 + {normsq}), 6)
-             AS mean_sq_dist
-    FROM cent c JOIN r ON r.label = c.label
-    """
-
-
 def _oracle_fd_part_supplier() -> str:
     """Exact per-determinant counts + slice-of-sorted distinct
     dependents (== the engine's row_number-capped example list)."""
@@ -4487,39 +3726,6 @@ def _oracle_transcript_skew_report(top: int = 10) -> str:
                                             / CAST(n_keys AS DOUBLE))))
                 AS BIGINT) AS suggested_salt
     FROM g CROSS JOIN tk
-    """
-
-
-def _oracle_source_overlap() -> str:
-    norm = _SQL_NORM.format(col="text")
-    tg = (
-        "list_transform(range(1, len(t) - 1), "
-        "i -> t[CAST(i AS INT)] || ' ' || t[CAST(i AS INT) + 1]"
-        " || ' ' || t[CAST(i AS INT) + 2])"
-    )
-    return f"""
-    WITH toks AS (
-      SELECT source AS src, string_split({norm}, ' ') AS t FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT src, D.ng FROM toks,
-        LATERAL (SELECT DISTINCT unnest(
-            CASE WHEN len(t) >= 3 THEN {tg}
-                 ELSE CAST([] AS VARCHAR[]) END) AS ng) D
-    ),
-    per AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS ng_cnt FROM sh GROUP BY src),
-    pr AS (
-      SELECT a.src AS src_a, b.src AS src_b, CAST(COUNT(*) AS BIGINT) AS shared
-      FROM sh a JOIN sh b ON a.ng = b.ng AND a.src < b.src
-      GROUP BY a.src, b.src
-    )
-    SELECT pr.src_a, pr.src_b, pr.shared,
-           pa.ng_cnt AS n_a, pb.ng_cnt AS n_b,
-           round(CAST(pr.shared AS DOUBLE) / least(pa.ng_cnt, pb.ng_cnt), 6)
-             AS overlap
-    FROM pr
-    JOIN per pa ON pa.src = pr.src_a
-    JOIN per pb ON pb.src = pr.src_b
     """
 
 
@@ -4865,102 +4071,6 @@ def _oracle_blocklist() -> str:
     """
 
 
-def _oracle_curate() -> str:
-    norm = _SQL_NORM.format(col="text")
-    u = _sql_unit_hash("CAST(doc_id AS VARCHAR)")
-    mdl = _sql_md5_long(
-        "array_to_string(t[CAST(i AS INT):CAST(i AS INT)+7], ' ')"
-    )
-    tg = (
-        "list_transform(range(1, len(t) - 1), "
-        "i -> t[CAST(i AS INT)] || ' ' || t[CAST(i AS INT) + 1]"
-        " || ' ' || t[CAST(i AS INT) + 2])"
-    )
-    return f"""
-    WITH corpus0 AS (SELECT * FROM documents WHERE doc_id % 40 <> 0),
-    toks AS (SELECT doc_id, string_split({norm}, ' ') AS t FROM corpus0),
-    ng AS (
-      SELECT doc_id AS id, D.ng FROM toks,
-        LATERAL (SELECT DISTINCT unnest(
-            CASE WHEN len(t) >= 3 THEN {tg}
-                 ELSE CAST([] AS VARCHAR[]) END) AS ng) D
-    ),
-    bng AS (
-      SELECT b.bench_id, D.ng FROM (
-        SELECT doc_id AS bench_id, string_split({norm}, ' ') AS t
-        FROM documents WHERE doc_id % 40 = 0
-      ) b,
-      LATERAL (SELECT DISTINCT unnest(
-          CASE WHEN len(t) >= 3 THEN {tg}
-               ELSE CAST([] AS VARCHAR[]) END) AS ng) D
-    ),
-    cont AS (
-      SELECT DISTINCT doc_id FROM (
-        SELECT id AS doc_id, bench_id FROM ng JOIN bng USING (ng)
-        GROUP BY id, bench_id HAVING count(*) >= 2
-      )
-    ),
-    q AS (
-      SELECT doc_id,
-        CASE WHEN length({norm}) = 0 THEN 0
-             ELSE len(string_split({norm}, ' ')) END AS n_tokens,
-        length(regexp_replace(text, '[^.,;:!?''"()\\[\\]{{}}-]', '', 'g'))
-          / greatest(CAST(length(text) AS DOUBLE), 1.0) AS punct_ratio,
-        length(regexp_replace(text, '[^0-9]', '', 'g'))
-          / greatest(CAST(length(text) AS DOUBLE), 1.0) AS digit_ratio,
-        CASE WHEN length({norm}) = 0 THEN 0.0
-             WHEN len(string_split({norm}, ' ')) = 0 THEN 0.0
-             ELSE 1.0 - CAST(len(list_distinct(string_split({norm}, ' ')))
-                             AS DOUBLE) / len(string_split({norm}, ' '))
-        END AS repetition_ratio
-      FROM corpus0
-    ),
-    score AS (
-      SELECT doc_id,
-        greatest(1.0 - least(punct_ratio * 2.0, 0.3)
-                     - least(digit_ratio * 2.0, 0.2)
-                     - least(repetition_ratio, 0.3)
-                     - CASE WHEN n_tokens < 5 THEN 0.2 ELSE 0.0 END,
-                 0.0) AS quality_score
-      FROM q
-    ),
-    w AS (SELECT doc_id,
-                 list_transform(
-                   range(1, greatest(len(t) - 7, 1) + 1),
-                   i -> {mdl}) AS hs
-          FROM toks),
-    s0 AS (SELECT doc_id, hs, unnest(range(1, len(hs) + 1)) AS p FROM w),
-    sel AS (SELECT doc_id, hs[CAST(p AS INT)] AS h
-            FROM s0
-            WHERE hs[CAST(p AS INT)]
-                  = list_min(hs[CAST(p AS INT):CAST(p AS INT)+3])),
-    hot AS (SELECT h FROM sel GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
-    bp AS (SELECT sel.doc_id,
-                  round(CAST(CAST(sum(CASE WHEN hot.h IS NOT NULL THEN 1
-                                      ELSE 0 END) AS BIGINT) AS DOUBLE)
-                        / CAST(count(*) AS DOUBLE), 6) > 0.95 AS boilerplate
-           FROM sel LEFT JOIN hot ON sel.h = hot.h
-           GROUP BY sel.doc_id),
-    flags AS (
-      SELECT c.doc_id,
-             c.doc_id <> min(c.doc_id) OVER (PARTITION BY {norm})
-               AS is_exact_dup,
-             c.doc_id IN (SELECT doc_id FROM cont) AS contaminated,
-             s.quality_score < 0.5 AS low_quality,
-             coalesce(bp.boilerplate, FALSE) AS boilerplate
-      FROM corpus0 c JOIN score s USING (doc_id)
-      LEFT JOIN bp USING (doc_id)
-    )
-    SELECT doc_id, is_exact_dup, contaminated, low_quality, boilerplate,
-           NOT (is_exact_dup OR contaminated OR low_quality OR boilerplate)
-             AS keep,
-           CASE WHEN {u} < 900000000 THEN 'train'
-                WHEN {u} < 950000000 THEN 'val'
-                ELSE 'test' END AS split
-    FROM flags
-    """
-
-
 def _sql_unit_hash(expr: str, seed: int = 0) -> str:
     """DuckDB replica of sampling._unit_hash: md5-derived integer in
     [0, 1e9)."""
@@ -5039,37 +4149,6 @@ def _oracle_pack_sequences() -> str:
            CAST((cum - n_tokens) % 256 AS BIGINT) AS begin_offset,
            CAST(floor((cum - 1) / 256.0) AS BIGINT) AS end_seq
     FROM c
-    """
-
-
-def _oracle_decontaminate() -> str:
-    norm = _SQL_NORM.format(col="text")
-    tg = (
-        "list_transform(range(1, len(t) - 1), "
-        "i -> t[CAST(i AS INT)] || ' ' || t[CAST(i AS INT) + 1]"
-        " || ' ' || t[CAST(i AS INT) + 2])"
-    )
-    return f"""
-    WITH docs AS (SELECT doc_id AS id, string_split({norm}, ' ') AS t
-                  FROM documents),
-    ng AS (
-      SELECT id, D.ng FROM docs,
-        LATERAL (SELECT DISTINCT unnest(
-            CASE WHEN len(t) >= 3 THEN {tg}
-                 ELSE CAST([] AS VARCHAR[]) END) AS ng) D
-    ),
-    bench AS (SELECT id AS bench_id, ng FROM ng WHERE id % 40 = 0),
-    corpus AS (SELECT id AS doc_id, ng FROM ng WHERE id % 40 <> 0),
-    szs AS (SELECT doc_id, count(*) AS doc_ngrams FROM corpus
-            GROUP BY doc_id),
-    ov AS (
-      SELECT doc_id, bench_id, count(*) AS overlap
-      FROM corpus JOIN bench USING (ng)
-      GROUP BY doc_id, bench_id HAVING count(*) >= 2
-    )
-    SELECT doc_id, bench_id, overlap, doc_ngrams,
-           round(overlap / CAST(doc_ngrams AS DOUBLE), 6) AS contamination
-    FROM ov JOIN szs USING (doc_id)
     """
 
 
@@ -5233,41 +4312,6 @@ def _oracle_render_chat(eot: str = "<|eot|>") -> str:
     """
 
 
-def _oracle_corpus_report(short_tokens: int = 5) -> str:
-    # the three grains replayed as three unioned aggregates over the
-    # same per-row features (token count under the shared
-    # normalization, md5 digest of the raw text with null -> '')
-    norm = _SQL_NORM.format(col="text")
-    base = f"""
-      SELECT CAST(source AS VARCHAR) AS source,
-             CAST(lang AS VARCHAR) AS lang,
-             CASE WHEN text IS NULL OR length(trim(text)) = 0 THEN 0
-                  ELSE len(string_split({norm}, ' ')) END AS nt,
-             length(COALESCE(text, '')) AS nc,
-             md5(COALESCE(text, '')) AS h
-      FROM documents
-    """
-    metric = f"""
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(nt) AS BIGINT) AS n_tokens,
-           CAST(SUM(nc) AS BIGINT) AS n_chars,
-           CAST(COUNT(DISTINCT h) AS BIGINT) AS distinct_texts,
-           CAST(COUNT(*) - COUNT(DISTINCT h) AS BIGINT) AS dup_docs,
-           round(AVG(CASE WHEN nt < {short_tokens} THEN 1.0 ELSE 0.0 END), 6)
-             AS pct_short
-    """
-    return f"""
-    WITH d AS ({base})
-    SELECT 'total' AS section, '*' AS key, {metric} FROM d
-    UNION ALL
-    SELECT 'source', COALESCE(source, '(null)'), {metric}
-      FROM d GROUP BY source
-    UNION ALL
-    SELECT 'lang', COALESCE(lang, '(null)'), {metric}
-      FROM d GROUP BY lang
-    """
-
-
 def _oracle_conversation_verdicts() -> str:
     # per-turn violation count replayed (required text / octet-length
     # budget / turn budget; the always-passing sites contribute 0),
@@ -5360,26 +4404,6 @@ def _oracle_volume_anomalies(
                     AND abs(metric - med) > {min_rel} * med,
                     FALSE) AS anomaly
     FROM mm
-    """
-
-
-def _oracle_transcript_report() -> str:
-    metric = """
-           CAST(COUNT(*) AS BIGINT) AS n_turns,
-           CAST(COUNT(DISTINCT conv_id) AS BIGINT) AS n_convs,
-           CAST(SUM(COALESCE(length(text), 0)) AS BIGINT) AS n_chars,
-           CAST(SUM(CASE WHEN text IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-             AS null_text_turns,
-           round(CAST(SUM(COALESCE(length(text), 0)) AS DOUBLE)
-                 / COUNT(*), 6) AS avg_chars
-    """
-    return f"""
-    WITH t AS ({_SQL_TRANSCRIPTS})
-    SELECT 'total' AS section, '*' AS key, {metric} FROM t
-    UNION ALL
-    SELECT 'role', COALESCE(role, '(null)'), {metric} FROM t GROUP BY role
-    UNION ALL
-    SELECT 'tool', COALESCE(tool, '(null)'), {metric} FROM t GROUP BY tool
     """
 
 

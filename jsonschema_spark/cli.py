@@ -12,6 +12,9 @@ sources.tables.read_table)::
       "source": "/data/transcripts.parquet",
       "where": "ts >= '2025-01-01'",            // optional pushdown
       "schema": { ...schema document... },       // row-level rules
+      "json_col": "payload",                     // optional: validate this
+                                                 // JSON-string column
+      "json_types": "variant",                   // "variant" | "static"
       "keys": ["conv_id", "turn_idx"],           // violation row keys
       "partition_by": ["day"],                   // verdict granularity
       "checks": {
@@ -22,6 +25,11 @@ sources.tables.read_table)::
         ],
         "stats": {"columns": ["role", "text"], "approx": true,
                    "expectations": {"role": {"max_null_rate": 0.01}}},
+        "sequence": {"conv_col": "conv_id", "turn_col": "turn_idx",
+                      "ts_col": "ts", "role_col": "role",
+                      "order_by": ["turn_idx", "ts"], "first_index": 0,
+                      "transitions": [["user", "assistant"], ...],
+                      "first_roles": ["system", "user"]},
         "functional": [
           {"name": "fd_locale", "determinant": ["conv_id"],
            "dependent": "locale", "max_examples": 3}
@@ -32,12 +40,14 @@ sources.tables.read_table)::
       "output": {
         "verdicts": "/out/verdicts",
         "violations": "/out/violations",
-        "manifest": "/out/manifest"              // enables resume
+        "manifest": "/out/manifest",             // enables resume
+        "violations_backfill": false             // see cmd_run
       }
     }
 
 A second run with the same config + manifest skips every
-(partition, check) already recorded (checkpoint.ResumableRun).
+(partition, check) already recorded (checkpoint.ResumableRun).  Any
+other key under ``checks`` is rejected (``build_suite``).
 """
 
 from __future__ import annotations
@@ -47,6 +57,8 @@ import json
 import sys
 
 from pyspark.sql import SparkSession
+
+CHECK_KEYS = ("uniqueness", "referential", "stats", "sequence", "functional", "drift")
 
 
 def build_suite(spark: SparkSession, cfg: dict):
@@ -69,6 +81,12 @@ def build_suite(spark: SparkSession, cfg: dict):
             )
         )
     c = cfg.get("checks", {})
+    unknown = sorted(set(c) - set(CHECK_KEYS))
+    if unknown:
+        raise ValueError(
+            f"unknown check(s) {unknown} in config 'checks'; "
+            f"accepted: {list(CHECK_KEYS)}"
+        )
     if "uniqueness" in c:
         u = c["uniqueness"]
         suite.append(
@@ -312,68 +330,6 @@ def cmd_exp(args) -> int:
     return 0
 
 
-def cmd_curate(args) -> int:
-    """Run the composed curation pipeline from a JSON config::
-
-        {
-          "source": "/data/documents.parquet",
-          "text_col": "text", "id_col": "doc_id",
-          "benchmark": "/data/eval_set.parquet",   // optional
-          "quality_min": 0.5,                       // optional
-          "ngram": 3, "min_overlap": 2,
-          "drop_ids": "/data/blocklist.parquet",    // optional
-          "split": {"train": 0.9, "val": 0.05, "test": 0.05},
-          "redact": true,
-          "output": {"curated": "/out/curated",     // split-partitioned
-                      "report": "/out/report"}
-        }
-    """
-    from jsonschema_spark.operators import curate as cur
-    from jsonschema_spark.sources.tables import read_table, write_output
-
-    cfg = json.load(open(args.config))
-    spark = (
-        SparkSession.builder.appName("jsonschema_spark-curate")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
-    docs = read_table(spark, cfg["source"], where=cfg.get("where"))
-    bench = (
-        read_table(spark, cfg["benchmark"], where=cfg.get("benchmark_where"))
-        if cfg.get("benchmark")
-        else None
-    )
-    drop = read_table(spark, cfg["drop_ids"]) if cfg.get("drop_ids") else None
-    kw = dict(
-        quality_min=cfg.get("quality_min", 0.5),
-        ngram=int(cfg.get("ngram", 3)),
-        min_overlap=int(cfg.get("min_overlap", 2)),
-        drop_ids=drop,
-        text_col=cfg.get("text_col", "text"),
-        id_col=cfg.get("id_col", "doc_id"),
-    )
-    flagged = cur.curate_flags(docs, bench, **kw).persist()
-    report = cur.curation_report(flagged).first().asDict()
-    curated = cur.curate(
-        docs, bench, split_weights=cfg.get("split"),
-        redact=bool(cfg.get("redact", True)), flagged=flagged, **kw,
-    )
-    out = cfg.get("output", {})
-    if out.get("curated"):
-        # split-partitioned layout: training readers prune to their
-        # split at the scan, no full-table filter
-        curated.write.mode("overwrite").partitionBy("split").parquet(
-            out["curated"]
-        )
-    if out.get("report"):
-        write_output(
-            spark.createDataFrame([report]).select(*sorted(report)),
-            out["report"],
-        )
-    print(json.dumps(report))
-    return 0
-
-
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(prog="jsonschema_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -382,12 +338,6 @@ def main(argv=None) -> int:
     r.add_argument("config")
     r.add_argument("--fail-on-violation", action="store_true")
     r.set_defaults(fn=cmd_run)
-
-    c = sub.add_parser(
-        "curate", help="run the corpus-curation pipeline from a JSON config"
-    )
-    c.add_argument("config")
-    c.set_defaults(fn=cmd_curate)
 
     v = sub.add_parser("validate", help="ad-hoc schema validation of a table")
     v.add_argument("schema")

@@ -6,16 +6,15 @@ Why ``spark.sql.codegen.hugeMethodLimit=8000``: HotSpot never
 JIT-compiles a method larger than 8000 bytecodes
 (-XX:DontCompileHugeMethods, on by default), so a whole-stage-codegen
 method between 8000 and Spark's 65535 default limit runs in the
-BYTECODE INTERPRETER forever.  The engine's unrolled arithmetic
-(dedup.dot_unrolled, the k-means score arrays, wide violation
-projections) routinely lands in that dead zone: measured on the
-64-dim unrolled dot over 250k pairs, the default setting runs 5.6s
+BYTECODE INTERPRETER forever.  Wide violation projections and
+unrolled arithmetic routinely land in that dead zone: measured on a
+64-dim unrolled dot product over 250k pairs, the default setting runs 5.6s
 steady-state vs 1.2s with the limit at 8000 — because the fallback
 path (Volcano iterator + per-expression codegen, which splits into
 JIT-able sub-methods) is strictly faster than interpreted bytecode.
 8000 aligns Spark's own fallback decision with what the JVM will
 actually compile.  See SPARK-21871 (the conf exists precisely for
-this) and similarity.semantic_dedup for the operator that exposed it.
+this).
 """
 
 from __future__ import annotations

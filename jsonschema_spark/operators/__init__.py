@@ -1,5 +1,8 @@
-"""Table-level operators: checks (stats/uniqueness/RI/drift), dedup,
-similarity search, text analysis, multimodal plumbing."""
+"""Table-level operators: the checks (schema, stats, uniqueness, RI,
+drift), conversation-transcript checks, skew salting, stable turn
+ordering, incremental stats and mergeable sketches, plus the
+training-data operators still to be cut (dedup, text, kernels, vocab,
+sampling, temporal)."""
 
 from .checks import (
     Check,
@@ -11,8 +14,6 @@ from .checks import (
     Uniqueness,
 )
 
-from . import dedup, multimodal, order, similarity, sketches, skew, text  # noqa: E402,F401
-
 __all__ = [
     "Check",
     "CheckSuite",
@@ -21,11 +22,4 @@ __all__ = [
     "ReferentialIntegrity",
     "SchemaCheck",
     "Uniqueness",
-    "dedup",
-    "multimodal",
-    "order",
-    "similarity",
-    "sketches",
-    "skew",
-    "text",
 ]

@@ -61,16 +61,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 
-def _mat(s: pd.Series) -> np.ndarray:
-    """(n, dims) float64 matrix from an Arrow array-column batch.
-    float32/int64 → float64 is exact (same as SQL cast to double).
-    Assumes every row is non-null and same-length (use ``_mat_masked``
-    when the input can be dirty)."""
-    if len(s) == 0:
-        return np.zeros((0, 0), dtype=np.float64)
-    return np.vstack(s.to_numpy()).astype(np.float64, copy=False)
-
-
 def _mat_masked(s: pd.Series, dims: int) -> tuple[np.ndarray, np.ndarray]:
     """(A, mask): (n, dims) float64 matrix with INVALID rows zero-filled,
     plus the per-row validity mask.
@@ -219,30 +209,6 @@ def ivf_assign(v: Column | str, cents: list[list[float]]) -> Column:
     return _k(F.col(v) if isinstance(v, str) else v)
 
 
-def ivf_probe(v: Column | str, cents: list[list[float]], nprobe: int) -> Column:
-    """struct<cells:array<int>, norm:double>: the nprobe best cells per
-    query by (dot desc, index asc) — same order as the previous
-    array_sort(struct(-score, i)) ranking — plus the hoisted norm."""
-    nprobe = min(nprobe, len(cents))
-
-    @pandas_udf("struct<cells:array<int>, norm:double>")
-    def _k(x: pd.Series) -> pd.DataFrame:
-        A, mask = _mat_masked(x, dims=len(cents[0]))
-        if len(A) == 0:
-            return pd.DataFrame({"cells": pd.Series([], dtype=object),
-                                 "norm": pd.Series([], dtype="float64")})
-        S = _dot_matrix(A, cents)
-        # stable argsort of -score ⇒ score desc, index asc on ties
-        order = np.argsort(-S, axis=1, kind="stable")[:, :nprobe]
-        return pd.DataFrame({
-            "cells": [row.astype(np.int32) if ok else None
-                      for row, ok in zip(order, mask)],
-            "norm": _null_double(np.sqrt(_ordered_dot(A, A)), mask),
-        })
-
-    return _k(F.col(v) if isinstance(v, str) else v)
-
-
 def km_assign(vq: Column | str, cents: list[list[float]],
               with_d2: bool = False) -> Column:
     """k-means assignment over the fixed-point-quantized vector.
@@ -356,38 +322,6 @@ def ngram_distinct(toks: Column | str, n: int) -> Column:
                              "grams": grams})
 
     return _k(F.col(toks) if isinstance(toks, str) else toks)
-
-
-def int8_pair_cosine(a: Column | str, b: Column | str) -> Column:
-    """double: cosine over two int8-quantized vectors.  All three dots
-    are EXACT int64 sums (order-free — integer addition is associative,
-    so np.sum is safe here and the value-hash oracle is, too); the one
-    division and the sqrts match the SQL expression bit-for-bit."""
-
-    @pandas_udf("double")
-    def _k(x: pd.Series, y: pd.Series) -> pd.Series:
-        if len(x) == 0:
-            return pd.Series([], dtype="float64")
-        xv, lx = _lengths(x)
-        yv, ly = _lengths(y)
-        mask = (lx >= 0) & (lx == ly)
-        out = np.zeros(len(xv), dtype=np.float64)
-        for L in np.unique(lx[mask]):
-            idx = np.where(mask & (lx == L))[0]
-            if L == 0:
-                out[idx] = np.nan  # 0/0: same as the zero-norm case
-                continue
-            A = np.vstack(xv[idx]).astype(np.int64, copy=False)
-            B = np.vstack(yv[idx]).astype(np.int64, copy=False)
-            ab = np.sum(A * B, axis=1).astype(np.float64)
-            aa = np.sum(A * A, axis=1).astype(np.float64)
-            bb = np.sum(B * B, axis=1).astype(np.float64)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                out[idx] = ab / (np.sqrt(aa) * np.sqrt(bb))
-        return _null_double(out, mask)
-
-    return _k(F.col(a) if isinstance(a, str) else a,
-              F.col(b) if isinstance(b, str) else b)
 
 
 def chunk_tokens(toks: Column | str, size: int, stride: int) -> Column:

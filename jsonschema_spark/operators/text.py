@@ -202,9 +202,9 @@ def _ngram_join(toks: Column, i: Column, n: int) -> Column:
 
 def _word_ngrams_all(toks: Column, n: int) -> Column:
     """ALL word n-grams (with duplicates — repetition needs the
-    multiset, unlike decontam's distinct set) from a MATERIALIZED
-    token-array column (see decontam.ngrams_from_tokens for why the
-    tokenizer must not be inlined into the HOF lambda)."""
+    multiset) from a MATERIALIZED token-array column: higher-order
+    function lambdas inline their argument into every ``element_at``,
+    so an inline tokenizer would re-run ~3n times per row."""
     cnt = F.size(toks) - F.lit(n - 1)
     return F.when(
         cnt >= 1,

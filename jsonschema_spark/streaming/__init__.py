@@ -1,6 +1,6 @@
 """Structured Streaming validation: stateless plan annotation,
-watermarked windowed verdicts, bounded-state dedup, and
-applyInPandasWithState conversation tracking."""
+watermarked windowed verdicts, bounded-state uniqueness and
+violation-rate alerts."""
 
 from .validate import (
     annotate_stream,

@@ -12,6 +12,10 @@ table-level verdicts become watermarked windowed aggregations:
     counts with a watermark bounding late-data state.
   * ``stateful_dedup_stream`` — dropDuplicatesWithinWatermark on
     (conv_id, turn_idx): streaming uniqueness with bounded state.
+  * ``violation_rate_alert`` — windows whose bad-row ratio exceeds a
+    threshold.
+  * ``bounded_state_partitions`` — bounds the shuffle-partition count a
+    streaming query fixes for its state store at start.
 
 Scale notes: stateless projection shards perfectly; the windowed agg
 shuffles on (window) only; watermark eviction keeps state O(windows in

@@ -148,37 +148,6 @@ def test_ks_grouped_udaf(spark):
     assert out["part=shift"]["ks"] > 0.5
 
 
-def test_stateful_conversation_progress(spark, tmp_path):
-    import jsonschema_spark as js
-    from jsonschema_spark.streaming.stateful import conversation_progress
-
-    rows = [
-        ("c1", 0, "user"), ("c1", 1, "assistant"), ("c1", 2, None),
-        ("c2", 0, "narrator"),
-    ]
-    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, role string")
-    src = str(tmp_path / "state_src")
-    df.coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(
-        "conv_id string, turn_idx int, role string"
-    ).parquet(src)
-    plan = js.compile_schema(
-        {"required": ["role"], "properties": {"role": {"enum": ["user", "assistant"]}}}
-    )
-    out = conversation_progress(plan.annotate(stream), timeout_ms=0)
-    q = (
-        out.writeStream.format("memory").queryName("conv_state_t")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {r["conv_id"]: r for r in spark.sql("select * from conv_state_t").collect()}
-    assert got["c1"]["n_turns"] == 3 and got["c1"]["max_turn"] == 2
-    assert got["c1"]["bad"] == 1      # null role
-    assert got["c2"]["bad"] == 1      # enum violation
-    assert got["c1"]["complete"] is False
-
-
 def test_resume_prunes_partition_files(spark, tmp_path):
     """The resume filter must reach the scan as a partition filter —
     completed partitions' files are never read."""
@@ -584,99 +553,6 @@ def test_schema_check_json_col(spark):
     assert v == {"part=p1": ("2", "1"), "part=p2": ("2", "2")}
     viols = {(r["k"], r["path"]) for r in chk.violations(df).collect()}
     assert viols == {(2, "$.id"), (3, "$"), (4, "$.id")}
-
-
-def test_stateful_sequence_state_matches_batch_operator(spark, tmp_path):
-    """Streaming sequence integrity (conversation_sequence_state): a
-    single availableNow drain over the planted corpus must count the
-    SAME violations as the batch conversation_integrity operator."""
-    import datetime as dt
-
-    from jsonschema_spark.operators.transcripts import conversation_integrity
-    from jsonschema_spark.streaming.stateful import (
-        conversation_sequence_state,
-    )
-
-    def ts(m):
-        return dt.datetime(2026, 1, 1, 12, m, 0)
-
-    rows = [
-        ("c1", 0, "user", ts(0)), ("c1", 1, "assistant", ts(1)),
-        ("c2", 1, "assistant", ts(0)),        # bad first index + role
-        ("c2", 3, "user", ts(2)),             # gap
-        ("c2", 4, "user", ts(1)),             # ts regress + user>user
-    ]
-    schema = "conv_id string, turn_idx int, role string, ts timestamp"
-    df = spark.createDataFrame(rows, schema)
-    src = str(tmp_path / "seq_src")
-    df.coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    out = conversation_sequence_state(stream)
-    q = (
-        out.writeStream.format("memory").queryName("seq_state_t")
-        .outputMode("update").trigger(availableNow=True).start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        r["conv_id"]: r
-        for r in spark.sql("select * from seq_state_t").collect()
-    }
-    batch = {
-        r["conv_id"]: r["n"]
-        for r in conversation_integrity(df, order_by=("turn_idx", "ts"))
-        .groupBy("conv_id").count().withColumnRenamed("count", "n").collect()
-    }
-    assert got["c1"]["viol"] == batch.get("c1", 0) == 0
-    assert got["c2"]["viol"] == batch["c2"] == 5
-    assert got["c2"]["n_turns"] == 3
-
-
-def test_stateful_sequence_state_across_batches(spark, tmp_path):
-    """State carries the last (turn, ts, role) across micro-batches: a
-    gap between the last turn of batch 1 and the first of batch 2 is a
-    violation only the carried state can see."""
-    import datetime as dt
-
-    from jsonschema_spark.streaming.stateful import (
-        conversation_sequence_state,
-    )
-
-    def ts(m):
-        return dt.datetime(2026, 1, 1, 12, m, 0)
-
-    schema = "conv_id string, turn_idx int, role string, ts timestamp"
-    src = str(tmp_path / "seq_src2")
-    ckpt = str(tmp_path / "seq_ck2")
-    spark.createDataFrame(
-        [("c1", 0, "user", ts(0)), ("c1", 1, "assistant", ts(1))], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    def drain(_qn):
-        # memory sink cannot recover from a checkpoint; foreachBatch can
-        rows = []
-        stream = spark.readStream.schema(schema).parquet(src)
-        q = (
-            conversation_sequence_state(stream)
-            .writeStream.foreachBatch(
-                lambda bdf, _e: rows.extend(bdf.collect())
-            )
-            .option("checkpointLocation", ckpt)
-            .outputMode("update").trigger(availableNow=True).start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        return {r["conv_id"]: r for r in rows}
-
-    got1 = drain("seq_b1")
-    assert got1["c1"]["viol"] == 0 and got1["c1"]["n_turns"] == 2
-    # batch 2: turn 5 follows turn 1 -> ONE violation, visible only via state
-    spark.createDataFrame(
-        [("c1", 5, "user", ts(2))], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    got2 = drain("seq_b2")
-    assert got2["c1"]["n_turns"] == 3
-    assert got2["c1"]["viol"] == 1
 
 
 def test_bounded_state_partitions_caps_and_restores(spark):

@@ -360,3 +360,16 @@ def test_cli_functional_dependency_config(spark, data_dir):
     df = read_table(spark, cfg["source"])
     v = CheckSuite(fds).run(df)
     assert {r["check"] for r in v.collect()} == {"fd_tool"}
+
+
+def test_build_suite_rejects_unknown_check():
+    """A misspelled check key raises instead of running a suite that
+    silently lacks the check (and reporting checks_failed=0)."""
+    from jsonschema_spark.cli import build_suite
+
+    cfg = {"checks": {"uniquness": {"keys": ["conv_id"]}, "referntial": []}}
+    with pytest.raises(ValueError, match="referntial.*uniquness") as e:
+        build_suite(None, cfg)
+    for key in ("uniqueness", "referential", "stats", "sequence",
+                "functional", "drift"):
+        assert key in str(e.value)

@@ -1,12 +1,11 @@
-"""Training-data pipeline operators: dedup, similarity, text analysis,
-multimodal plumbing."""
+"""Training-data pipeline operators: dedup and text analysis."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from jsonschema_spark.operators import dedup, multimodal, similarity, text
+from jsonschema_spark.operators import dedup, text
 
 
 @pytest.fixture(scope="module")
@@ -102,84 +101,6 @@ def test_embedding_neardup_lsh_subset_of_bruteforce(spark, vectors):
     assert (0, 100) in lsh  # identical vectors always share every bucket
 
 
-def test_brute_force_topk(spark, vectors):
-    q = vectors.filter(F.col("vec_id") == 0)
-    out = sorted(similarity.brute_force_topk(vectors, q, k=3).collect(),
-                 key=lambda r: r["rank"])
-    assert len(out) == 3
-    assert out[0]["neighbor_id"] == 100  # the exact dup ranks first
-    assert [r["rank"] for r in out] == [1, 2, 3]
-
-
-def test_ivf_topk_recall(spark, vectors):
-    q = vectors.filter(F.col("vec_id") < 2)
-    exact = similarity.brute_force_topk(vectors, q, k=3)
-    approx = similarity.ivf_topk(vectors, q, k=3, n_cells=4, nprobe=4)
-    # nprobe == n_cells ⇒ full scan ⇒ identical to exact
-    e = sorted((r["query_id"], r["rank"], r["neighbor_id"]) for r in exact.collect())
-    a = sorted((r["query_id"], r["rank"], r["neighbor_id"]) for r in approx.collect())
-    assert e == a
-
-
-def test_quantize_embeddings_bounds_and_direction(spark, vectors):
-    qz = similarity.quantize_embeddings(vectors)
-    rows = {r["vec_id"]: r for r in qz.collect()}
-    orig = {r["vec_id"]: list(r["embedding"]) for r in vectors.collect()}
-    for vid, r in rows.items():
-        qv = list(r["qv"])
-        assert all(-127 <= x <= 127 for x in qv)
-        # the max-|x| element always quantizes to +/-127 (full range used)
-        assert max(abs(x) for x in qv) == 127
-        # dequantized vector approximates the original within half a step
-        for x, qx in zip(orig[vid], qv):
-            assert abs(x - qx * r["scale"]) <= r["scale"] / 2 + 1e-9
-
-
-def test_ann_topk_int8_matches_exact_on_separated_corpus(spark, vectors):
-    # with rerank*k covering enough candidates the int8 path returns
-    # the exact top-k (re-rank is full precision; coarse only prunes)
-    q = vectors.filter(F.col("vec_id") < 2)
-    exact = similarity.brute_force_topk(vectors, q, k=3)
-    quant = similarity.ann_topk_int8(vectors, q, k=3, rerank=8)
-    e = sorted((r["query_id"], r["rank"], r["neighbor_id"]) for r in exact.collect())
-    a = sorted((r["query_id"], r["rank"], r["neighbor_id"]) for r in quant.collect())
-    assert e == a
-    # exact cosines, not quantized ones, are reported
-    ec = {(r["query_id"], r["neighbor_id"]): r["cosine"] for r in exact.collect()}
-    for r in quant.collect():
-        assert abs(r["cosine"] - ec[(r["query_id"], r["neighbor_id"])]) < 1e-12
-
-
-def test_ann_topk_int8_coarse_stage_is_arrow_batched(spark, vectors):
-    """The coarse |corpus|×|queries| cosine is an Arrow-batched kernel
-    (kernels.int8_pair_cosine) — never row-at-a-time Python."""
-    q = vectors.filter(F.col("vec_id") < 2)
-    plan = similarity.ann_topk_int8(vectors, q, k=3)._jdf.queryExecution(
-    ).executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" in plan
-
-
-def test_semantic_dedup_collapses_near_identical(spark, vectors):
-    out = {r["vec_id"]: r for r in similarity.semantic_dedup(
-        vectors, threshold=0.999, n_clusters=4, iters=1
-    ).collect()}
-    assert len(out) == vectors.count()
-    # the exact dup (0, 100) collapses to canonical min id 0
-    assert out[100]["canonical_id"] == 0 and out[100]["is_duplicate"]
-    assert out[0]["canonical_id"] == 0 and not out[0]["is_duplicate"]
-    # canonical ids are themselves kept rows (never duplicates)
-    for r in out.values():
-        assert not out[r["canonical_id"]]["is_duplicate"]
-
-
-def test_semantic_dedup_no_cartesian_product(spark, vectors):
-    plan = similarity.semantic_dedup(
-        vectors, threshold=0.9, n_clusters=4, iters=1
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-
-
 def test_dot_unrolled_bit_identical_to_hof(spark, vectors):
     # the codegen fast path must reproduce the HOF fold EXACTLY —
     # threshold comparisons sit on raw (unrounded) cosines
@@ -252,17 +173,6 @@ def test_arrow_kernels_null_and_ragged_rows(spark):
     assert run(df.repartition(1)) == run(df.repartition(4))
 
 
-def test_semantic_dedup_dims_fast_path_identical(spark, vectors):
-    slow = similarity.semantic_dedup(
-        vectors, threshold=0.9, n_clusters=4, iters=1
-    ).collect()
-    fast = similarity.semantic_dedup(
-        vectors, threshold=0.9, n_clusters=4, iters=1, dims=8
-    ).collect()
-    key = lambda r: (r["vec_id"], r["canonical_id"], r["is_duplicate"])
-    assert sorted(map(key, slow)) == sorted(map(key, fast))
-
-
 def test_text_token_counts(spark):
     df = spark.createDataFrame(
         [(0, "Hello, world! 42 times"), (1, ""), (2, "   "), (3, "one")],
@@ -318,21 +228,6 @@ def test_fingerprint_stability(spark):
     out = {r["doc_id"]: r["fp"] for r in df.select(
         "doc_id", text.fingerprint(F.col("text")).alias("fp")).collect()}
     assert out[0] == out[1] and out[0] != out[2]
-
-
-def test_multimodal_plumbing(spark):
-    m = multimodal.synth_media(spark, 24)
-    meta = multimodal.media_metadata(m)
-    assert meta.count() == 24
-    feats = multimodal.extract_image_features(m, fake=True)
-    rows = feats.collect()
-    assert len(rows) == 8  # every 3rd is an image
-    assert all(16 <= r["width"] <= 80 for r in rows)
-    frames = multimodal.sample_frames(m, fake=True, every_n=4)
-    assert frames.count() > 0
-    # stub decode raises without fake mode
-    with pytest.raises(Exception):
-        multimodal.extract_image_features(m, fake=False).collect()
 
 
 def test_hash_mode_xxhash64(spark, docs):
@@ -469,63 +364,6 @@ def test_duplicate_clusters_empty_pairs(spark):
     assert duplicate_clusters(pairs).count() == 0
 
 
-@pytest.fixture(scope="module")
-def vecs(spark):
-    # three well-separated blobs in 4-d so k-means has an obvious
-    # answer; ids chosen arbitrarily (init is md5-ordered, not id-ordered)
-    # ids 1..12: the three md5-smallest ids (7, 12, 11 — seed order of
-    # kmeans init) fall in three DIFFERENT blobs, so Lloyd's converges
-    # to the ground truth instead of a two-seeds-in-one-blob local
-    # minimum (which is valid k-means behavior but untestable)
-    rows = []
-    for i in range(1, 13):
-        blob = i % 3
-        base = {0: [1.0, 0.0, 0.0, 0.0],
-                1: [0.0, 1.0, 0.0, 0.0],
-                2: [0.0, 0.0, 1.0, 1.0]}[blob]
-        jitter = [((i * 7 + d * 13) % 5 - 2) * 0.01 for d in range(4)]
-        rows.append((i, [float(b + j) for b, j in zip(base, jitter)]))
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-def test_kmeans_recovers_blobs(spark, vecs):
-    out = similarity.kmeans_embeddings(
-        vecs, n_clusters=3, iters=3, vec_col="embedding"
-    ).collect()
-    assert len(out) == 12  # ids 1..12
-    by_blob = {}
-    for r in out:
-        by_blob.setdefault(r["vec_id"] % 3, set()).add(r["cluster"])
-        assert r["dist"] >= 0.0
-    # each ground-truth blob lands in exactly one cluster, and the
-    # three blobs get three different clusters
-    assert all(len(s) == 1 for s in by_blob.values())
-    assert len(set.union(*by_blob.values())) == 3
-    # converged: every point sits near its centroid
-    assert max(r["dist"] for r in out) < 0.1
-
-
-def test_kmeans_deterministic(spark, vecs):
-    a = sorted(map(tuple, similarity.kmeans_embeddings(
-        vecs, n_clusters=3, iters=2).collect()))
-    b = sorted(map(tuple, similarity.kmeans_embeddings(
-        vecs.repartition(7), n_clusters=3, iters=2).collect()))
-    # bit-identical across runs AND across physical partitionings —
-    # the exact-integer centroid-sum contract
-    assert a == b
-
-
-def test_kmeans_plan_arrow_kernel_no_cartesian(spark, vecs):
-    """Assignment is ONE Arrow-batched kernel pass (kernels.km_assign);
-    never row-at-a-time Python, never a join against the centroids."""
-    df = similarity.kmeans_embeddings(vecs, n_clusters=3, iters=1)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-    assert plan.count("ArrowEvalPython") == 1
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoop" not in plan
-
-
 def test_classifier_score_matches_python_replay(spark):
     import hashlib
     import math
@@ -634,28 +472,6 @@ def test_normalize_text_unicode_kernel(spark):
     assert got[0][1] == got[1][1] == "cafe"
     assert got[2][2] == "abc"                      # tab and BEL are controls
     assert got[3] == (None, None, None)
-
-
-class TestEmbeddingProfile:
-    def test_known_geometry(self, spark):
-        from jsonschema_spark.operators.similarity import embedding_profile
-
-        # label 0: two opposite unit vectors -> centroid 0, msd 1
-        # label 1: two identical vectors -> centroid = vector, msd 0
-        d = 4
-        e1 = [1.0, 0.0, 0.0, 0.0]
-        e1n = [-1.0, 0.0, 0.0, 0.0]
-        e2 = [0.0, 3.0, 4.0, 0.0]  # norm 5
-        rows = [(1, e1, 0), (2, e1n, 0), (3, e2, 1), (4, e2, 1)]
-        df = spark.createDataFrame(
-            rows, "vec_id long, embedding array<float>, label int"
-        )
-        got = {r["label"]: r for r in embedding_profile(df, dims=d).collect()}
-        assert got[0]["n"] == 2
-        assert got[0]["centroid_norm"] == 0.0
-        assert got[0]["mean_sq_dist"] == 1.0
-        assert got[1]["centroid_norm"] == 5.0
-        assert got[1]["mean_sq_dist"] == 0.0
 
 
 class TestBigramLm:

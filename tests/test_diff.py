@@ -1,5 +1,4 @@
-"""Snapshot diff, cascading purge, and rolling interval windows
-(operators/diff.py, temporal.rolling_window)."""
+"""Rolling interval windows (temporal.rolling_window)."""
 
 from __future__ import annotations
 
@@ -8,114 +7,12 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from jsonschema_spark.operators import temporal
-from jsonschema_spark.operators.diff import (
-    PurgeStep,
-    purge_cascade,
-    snapshot_diff,
-)
+
 
 def rows(df, *order):
     if order:
         df = df.orderBy(*order)
     return [tuple(r) for r in df.collect()]
-
-
-def test_snapshot_diff_classifies(spark):
-    old = spark.createDataFrame(
-        [("a", "x", 1), ("b", "y", 2), ("c", "z", 3), ("d", None, 4)],
-        "id string, v string, n int",
-    )
-    new = spark.createDataFrame(
-        [("a", "x", 1), ("b", "Y", 2), ("d", "", 4), ("e", "w", 5)],
-        "id string, v string, n int",
-    )
-    got = rows(
-        snapshot_diff(old, new, ["id"], ["v", "n"]), "id"
-    )
-    # a unchanged (absent); b changed; c removed; d NULL->'' must be
-    # CHANGED (the null sentinel never collides with empty string);
-    # e added.
-    assert got == [
-        ("b", "changed"),
-        ("c", "removed"),
-        ("d", "changed"),
-        ("e", "added"),
-    ]
-
-
-def test_snapshot_diff_prunes_scan_to_keys_plus_compared(spark, tmp_path):
-    path = str(tmp_path / "snap.parquet")
-    spark.createDataFrame(
-        [("a", "x", 1, 9.9)], "id string, v string, n int, unused double"
-    ).write.parquet(path)
-    df = spark.read.parquet(path)
-    plan = (
-        snapshot_diff(df, df, ["id"], ["v"])
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # column pruning: neither n nor unused reaches the scan
-    assert "ReadSchema" in plan
-    assert "unused" not in plan.split("ReadSchema", 1)[1].split("\n")[0]
-
-
-def test_purge_cascade_counts_and_kept(spark):
-    cust = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "ck long, name string"
-    )
-    orders = spark.createDataFrame(
-        [(10, 1), (11, 1), (12, 2), (13, 3)], "ok long, ck long"
-    )
-    items = spark.createDataFrame(
-        [(10, 1), (10, 2), (11, 1), (13, 1)], "ok long, ln long"
-    )
-    root = spark.createDataFrame([(1,)], "ck long")
-    audit, kept = purge_cascade(
-        [
-            PurgeStep("cust", cust, "ck", "ck"),
-            PurgeStep("orders", orders, "ck", "ok"),
-            PurgeStep("items", items, "ok", None),
-        ],
-        root,
-    )
-    assert rows(audit, "table") == [
-        ("cust", 3, 1, 2),
-        ("items", 4, 3, 1),
-        ("orders", 4, 2, 2),
-    ]
-    assert rows(kept["cust"], "ck") == [(2, "b"), (3, "c")]
-    assert rows(kept["orders"], "ok") == [(12, 2), (13, 3)]
-    assert rows(kept["items"], "ok") == [(13, 1)]
-    # kept frames carry no helper columns
-    assert kept["items"].columns == ["ok", "ln"]
-
-
-def test_purge_cascade_root_key_missing_from_first_table(spark):
-    # a forgotten key with no row anywhere must not crash or purge
-    cust = spark.createDataFrame([(1, "a")], "ck long, name string")
-    orders = spark.createDataFrame([(10, 1)], "ok long, ck long")
-    root = spark.createDataFrame([(99,)], "ck long")
-    audit, kept = purge_cascade(
-        [
-            PurgeStep("cust", cust, "ck", "ck"),
-            PurgeStep("orders", orders, "ck", "ok"),
-        ],
-        root,
-    )
-    assert rows(audit, "table") == [("cust", 1, 0, 1), ("orders", 1, 0, 1)]
-    assert kept["orders"].count() == 1
-
-
-def test_purge_root_is_broadcast(spark):
-    cust = spark.createDataFrame(
-        [(i, str(i)) for i in range(100)], "ck long, name string"
-    )
-    root = spark.createDataFrame([(1,)], "ck long")
-    audit, _ = purge_cascade([PurgeStep("cust", cust, "ck", None)], root)
-    plan = audit._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
 
 
 def _ts(day: int, hour: int = 0) -> dt.datetime:

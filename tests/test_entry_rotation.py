@@ -1,5 +1,6 @@
 """The query registry's rotation file: a missing file keeps the
-registry order, a corrupt one must fail loudly."""
+registry order, a corrupt one must fail loudly; the registry, its
+oracle SQL and the committed rotation order name the same queries."""
 
 from __future__ import annotations
 
@@ -30,3 +31,11 @@ def test_truncated_rotation_file_raises(tmp_path):
     path.write_text(json.dumps({"order": ["c", "a"]})[:-5])
     with pytest.raises(RuntimeError, match="corrupt rotation order file"):
         E._rotate(QS, str(path))
+
+
+def test_registry_oracle_and_rotation_agree():
+    names = set(E.queries())
+    assert names == set(E.oracle_sql())
+    path = Path(E.__file__).with_name("rotation_order.json")
+    order = json.loads(path.read_text())["order"]
+    assert sorted(order) == sorted(names)

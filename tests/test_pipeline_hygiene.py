@@ -1,5 +1,5 @@
-"""Training-data hygiene operators: decontamination, PII
-scan/redaction, repetition features, transcript tool pairing."""
+"""Training-data hygiene operators: PII scan/redaction, repetition
+features, unigram LM scoring, transcript tool pairing."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from jsonschema_spark.operators import decontam, text, transcripts
+from jsonschema_spark.operators import text, transcripts
 
 
 @pytest.fixture(scope="module")
@@ -20,53 +20,6 @@ def corpus(spark):
         (3, "quantum physics lectures for curious graduate students"),
     ]
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-@pytest.fixture(scope="module")
-def bench_set(spark):
-    rows = [
-        # shares 'the quick brown fox jumps over the lazy dog' with doc 0
-        (100, "watch the quick brown fox jumps over the lazy dog"),
-        (101, "held out benchmark question nobody trained on"),
-    ]
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-class TestDecontaminate:
-    def test_overlap_pairs(self, spark, corpus, bench_set):
-        pairs = {
-            (r["doc_id"], r["bench_id"]): (r["overlap"], r["contamination"])
-            for r in decontam.decontaminate(
-                corpus, bench_set, n=3, min_overlap=2
-            ).collect()
-        }
-        assert set(pairs) == {(0, 100)}
-        overlap, contamination = pairs[(0, 100)]
-        # shared window has 9 tokens -> 7 shared 3-grams; doc 0 has 10
-        # tokens -> 8 distinct 3-grams
-        assert overlap == 7
-        assert contamination == pytest.approx(7 / 8)
-
-    def test_short_docs_yield_no_ngrams(self, spark):
-        df = spark.createDataFrame([(0, "two words"), (1, "")],
-                                   "doc_id long, text string")
-        out = df.select(decontam.word_ngrams(F.col("text"), 3).alias("g")).collect()
-        assert [r["g"] for r in out] == [[], []]
-
-    def test_contaminated_ids(self, spark, corpus, bench_set):
-        ids = decontam.contaminated_ids(
-            decontam.decontaminate(corpus, bench_set, n=3, min_overlap=2)
-        )
-        assert [r["doc_id"] for r in ids.collect()] == [0]
-
-    def test_benchmark_side_is_broadcast(self, spark, corpus, bench_set):
-        plan = decontam.decontaminate(corpus, bench_set)._jdf.queryExecution(
-        ).executedPlan().toString()
-        assert "BroadcastHashJoin" in plan
-        assert "SortMergeJoin" not in plan
-        # the 100x-scale shape: the corpus shuffles exactly ONCE, on the
-        # contamination-sized matched stream (no totals join back)
-        assert plan.count("Exchange hashpartitioning") == 1
 
 
 class TestPII:
@@ -200,31 +153,3 @@ class TestLMScore:
         for r in out.values():
             assert r["n_tokens"] == 0
             assert r["avg_logp"] is None and r["ppl"] is None
-
-
-class TestSourceOverlap:
-    def test_known_matrix(self, spark):
-        from jsonschema_spark.operators.decontam import source_overlap
-
-        rows = [
-            (1, "alpha beta gamma delta", "s1"),   # grams: abg, bgd
-            (2, "alpha beta gamma", "s2"),          # abg  (shared with s1)
-            (3, "epsilon zeta eta", "s2"),          # eze
-            (4, "unrelated words here", "s3"),
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-        got = {
-            (r["src_a"], r["src_b"]): (r["shared"], r["n_a"], r["n_b"], r["overlap"])
-            for r in source_overlap(df, n=3).collect()
-        }
-        # s1 has 2 distinct 3-grams, s2 has 2, they share 1
-        assert got == {("s1", "s2"): (1, 2, 2, 0.5)}
-
-    def test_short_docs_no_grams(self, spark):
-        from jsonschema_spark.operators.decontam import source_overlap
-
-        df = spark.createDataFrame(
-            [(1, "one two", "a"), (2, "one two", "b")],
-            "doc_id long, text string, source string",
-        )
-        assert source_overlap(df, n=3).count() == 0

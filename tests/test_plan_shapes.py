@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import jsonschema_spark as js
-from jsonschema_spark.operators import checks, dedup, similarity
+from jsonschema_spark.operators import checks, dedup
 from jsonschema_spark.sources.fixtures import dim_roles, transcripts
 
 
@@ -152,16 +152,6 @@ def test_minhash_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in p
 
 
-def test_topk_query_side_broadcast(spark):
-    emb = spark.createDataFrame(
-        [(i, [float(i % 3), 1.0, 0.5]) for i in range(30)],
-        "vec_id long, embedding array<float>",
-    )
-    q = emb.filter(F.col("vec_id") < 2)
-    p = plan_of(similarity.brute_force_topk(emb, q, k=3))
-    assert "BroadcastNestedLoopJoin" in p  # queries broadcast, corpus streams
-
-
 def test_transform_pipeline_stays_narrow(tdf):
     plan = js.compile_schema(
         {
@@ -266,48 +256,6 @@ def test_mixture_single_tiny_agg_broadcast_back(spark):
     assert p.count("Exchange hashpartitioning") <= 2
 
 
-def test_kmeans_assignment_is_one_arrow_kernel_pass(spark):
-    """kmeans_embeddings: the assignment+distance path must be exactly
-    ONE Arrow-batched kernel evaluation over the scan (kernels.km_assign
-    — see kernels.py for why codegen chains and HOF lambdas were both
-    rejected at k×dims width), never row-at-a-time Python, and no
-    interpreted HOF fold."""
-    emb = spark.createDataFrame(
-        [(i, [float(i % 5), float(i % 3)]) for i in range(40)],
-        "vec_id long, embedding array<float>",
-    )
-    out = similarity.kmeans_embeddings(emb, n_clusters=2, iters=1)
-    p = plan_of(out)
-    assert "BatchEvalPython" not in p, "row-at-a-time Python is banned"
-    assert p.count("ArrowEvalPython") == 1
-    # the assignment must not fall back to an interpreted HOF fold
-    assert "aggregate(sequence" not in p.lower()
-    # no shuffle: assignment + chosen-centroid distance is scan-local
-    assert "Exchange" not in p
-
-
-def test_brute_force_dims_known_stays_jvm(spark):
-    """brute_force_topk with a statically-known width: the whole plan —
-    the |corpus|x|queries| pair dot especially — must stay JVM-side
-    (r3 regression class: routing the pair cosine through an Arrow
-    pandas kernel under the BroadcastNestedLoopJoin cost 4x).  The
-    pair dot must be the unrolled element_at chain, not a pythonUDF
-    and not an interpreted aggregate-over-zip_with fold."""
-    emb = spark.createDataFrame(
-        [(i, [float(i % 7) + 0.25, 1.0, 0.5, float(i % 3)]) for i in range(30)],
-        "vec_id long, embedding array<float>",
-    )
-    q = emb.filter(F.col("vec_id") < 2)
-    p = plan_of(similarity.brute_force_topk(emb, q, k=3, dims=4))
-    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
-    assert "pythonUDF" not in p
-    assert "element_at" in p  # the unrolled pair-dot chain
-    # the compact HOF fold is allowed ONLY in the two per-row norm
-    # projections (one per side); a third occurrence means the PAIR
-    # dot regressed to an interpreted fold
-    assert p.lower().count("zip_with") <= 2
-
-
 def test_neardup_pair_dot_is_unrolled_not_python(spark):
     """embedding_neardup_pairs (planes>0, dims known): the bucket
     projection is legitimately ONE Arrow kernel pass per side, but the
@@ -326,19 +274,3 @@ def test_neardup_pair_dot_is_unrolled_not_python(spark):
     assert "BatchEvalPython" not in p
     assert "element_at" in p  # unrolled pair dot above the join
     assert "CartesianProduct" not in p
-
-
-def test_ivf_rerank_dot_is_unrolled_not_python(spark):
-    """ivf_topk: assign/probe are Arrow kernels by design (k x dims
-    folds overflow codegen), but the per-candidate re-rank dot after
-    the cell equality join must be the unrolled JVM chain."""
-    emb = spark.createDataFrame(
-        [(i, [float(i % 7) + 0.25, 1.0, 0.5, float(i % 3)]) for i in range(40)],
-        "vec_id long, embedding array<float>",
-    )
-    q = emb.filter(F.col("vec_id") < 2)
-    p = plan_of(similarity.ivf_topk(emb, q, k=3, n_cells=4, nprobe=2))
-    # exactly the two design kernels: corpus assign + query probe
-    assert p.count("ArrowEvalPython") == 2
-    assert "BatchEvalPython" not in p
-    assert "element_at" in p  # unrolled re-rank dot

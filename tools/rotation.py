@@ -1,8 +1,8 @@
 """Standing correctness-window rotation (r4 judge #2).
 
 The driver's oracle gate checks the FIRST 50 entries of
-``__spark_entry__.queries()``.  With 113 registered queries, anything
-outside the window drifts unverified as code evolves (that is exactly
+``__spark_entry__.queries()``.  With more registered queries than the
+window holds, anything outside it drifts unverified as code evolves (that is exactly
 how the r3 gap formed, and the r4 ADVICE found tandem engine+oracle
 edits sitting beyond position 50).  This tool computes the window
 from evidence instead of by hand:
@@ -147,9 +147,8 @@ def query_deps(graph: dict[str, set[str]]) -> dict[str, set[str]]:
         "session": ["jsonschema_spark/core/session.py"],
     }
     for name in (
-        "checks curate decontam dedup diff incremental kernels multimodal "
-        "order report sampling similarity sketches skew temporal text "
-        "transcripts vocab"
+        "checks dedup incremental kernels order sampling sketches skew "
+        "temporal text transcripts vocab"
     ).split():
         alias_to_files[name] = [f"jsonschema_spark/operators/{name}.py"]
     for name in ("streaming", "sources", "plans", "functions", "core"):
