@@ -22,11 +22,9 @@ from jsonschema_spark.core import session
 from jsonschema_spark.operators import (
     checks,
     dedup,
-    sampling,
     temporal,
     text,
     transcripts,
-    vocab,
 )
 
 # --------------------------------------------------------------------
@@ -625,16 +623,6 @@ def q_bm25_topk(spark, sf_dir):
     row).  operators/text.py bm25_topk."""
     docs = _docs(spark, sf_dir)
     return text.bm25_topk(docs, BM25_QUERY, k=20)
-
-
-def q_mixture(spark, sf_dir):
-    """Temperature-based mixture resampling (tau=2 upweights small
-    sources): per-doc repetition counts whose expectation hits the
-    p^(1/tau) targets exactly.  operators/sampling.temperature_mixture."""
-    docs = _docs(spark, sf_dir)
-    return sampling.temperature_mixture(
-        docs, group_col="source", id_col="doc_id", tau=2.0
-    )
 
 
 def q_top_values(spark, sf_dir):
@@ -1442,30 +1430,6 @@ def q_transcript_rollup(spark, sf_dir):
     return transcripts.conversation_rollup(tdf)
 
 
-def q_dedup_conversations(spark, sf_dir):
-    """Conversation-LEVEL near-dup pairs: documents split into 8-word
-    turns, skew-safe ordered re-concatenation
-    (transcripts.conversation_text → salted two-phase collect), then
-    MinHash-LSH over the conversation document.  Dedup at the
-    granularity a training pipeline drops — whole conversations."""
-    docs = _docs(spark, sf_dir)
-    words = F.split(F.col("text"), " ")
-    n_turns = F.ceil(F.size(words) / F.lit(8)).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(0), n_turns - 1),
-        lambda i: F.array_join(F.slice(words, i * 8 + 1, 8), " "),
-    )
-    turns = docs.select(
-        F.format_string("v%08d", F.col("doc_id").cast("bigint")).alias(
-            "conv_id"
-        ),
-        F.posexplode(chunks).alias("turn_idx", "text"),
-    )
-    return transcripts.conversation_dedup_pairs(
-        turns, n=5, k=16, bands=4, threshold=0.5
-    )
-
-
 def _pii_planted(docs: DataFrame) -> DataFrame:
     """The fixture corpus carries no PII, so the query plants
     deterministic doc_id-derived PII (email / ipv4 / phone / ssn
@@ -1530,51 +1494,6 @@ def q_transcript_tool_pairing(spark, sf_dir):
     return transcripts.tool_call_pairing(tdf, order_by=("turn_idx", "seq"))
 
 
-def _response_candidates(spark, sf_dir):
-    """Assistant turns as scored response candidates: one group per
-    conversation, score = octet length of the response text (a
-    deterministic stand-in for a reward/quality model's output — the
-    operator under test is the grouped selection, not the scorer).
-    Null-text turns are dropped so both engines rank the same rows."""
-    tdf = _transcripts_from_events(_t(spark, sf_dir, "events"))
-    return tdf.filter(
-        (F.col("role") == "assistant") & F.col("text").isNotNull()
-    ).select(
-        "conv_id",
-        "turn_idx",
-        "seq",
-        "text",
-        F.octet_length("text").cast("double").alias("score"),
-    )
-
-
-def q_best_of_n_responses(spark, sf_dir):
-    """Best-of-n response selection (operators/sampling.best_of_n):
-    the highest-scoring assistant turn per conversation by
-    (score DESC, seq ASC) row_number ranking — rejection sampling's
-    keep step.  ONE hash shuffle on conv_id; deterministic ties."""
-    cands = _response_candidates(spark, sf_dir)
-    return sampling.best_of_n(
-        cands, ["conv_id"], score_col="score", tiebreak_cols=["seq"]
-    )
-
-
-def q_preference_pairs_transcripts(spark, sf_dir):
-    """Preference-pair mining (operators/sampling.preference_pairs):
-    (chosen, rejected) = (best, worst) assistant response per
-    conversation with margin >= 1 — the DPO/reward-model row shape.
-    The window's one conv_id shuffle is reused by the groupBy."""
-    cands = _response_candidates(spark, sf_dir)
-    return sampling.preference_pairs(
-        cands,
-        ["conv_id"],
-        score_col="score",
-        tiebreak_cols=["seq"],
-        text_col="text",
-        min_margin=1.0,
-    )
-
-
 def q_transcript_merge_runs(spark, sf_dir):
     """Transcript repair (operators/transcripts.merge_consecutive_turns):
     runs of consecutive same-role turns (chunked streaming output /
@@ -1584,31 +1503,6 @@ def q_transcript_merge_runs(spark, sf_dir):
     aggregation — no self-join, no re-index pass."""
     tdf = _transcripts_from_events(_t(spark, sf_dir, "events"))
     return transcripts.merge_consecutive_turns(tdf, order_by=("turn_idx", "seq"))
-
-
-def q_context_windows(spark, sf_dir):
-    """Token-budgeted SFT example assembly
-    (operators/transcripts.context_windows): for every assistant turn,
-    the longest affordable suffix of prior turns under a 24-token
-    budget.  ONE shuffle on conv_id (ordered array collect); prefix
-    sums + per-target suffix selection are higher-order array
-    functions in codegen — the relational equivalent is a quadratic
-    per-conversation self-join (the oracle does exactly that)."""
-    tdf = _transcripts_from_events(_t(spark, sf_dir, "events"))
-    return transcripts.context_windows(
-        tdf, budget=24, target_role="assistant", order_by=("turn_idx", "seq")
-    )
-
-
-def q_render_chat(spark, sf_dir):
-    """Chat-template rendering (operators/transcripts.render_chat):
-    each conversation serialized to ONE SFT training string —
-    <|role|>text<|eot|> (<|role:tool|> on tool turns) in stable
-    (turn_idx, seq) order.  The per-turn tag renders in the per-row
-    codegen projection BEFORE the aggregation; the ordered concat is
-    the skew-safe salted two-phase collect."""
-    tdf = _transcripts_from_events(_t(spark, sf_dir, "events"))
-    return transcripts.render_chat(tdf, order_by=("turn_idx", "seq"))
 
 
 ORDERS_SCHEMA_V2 = {
@@ -1632,16 +1526,6 @@ def q_migration_impact_orders(spark, sf_dir):
     return js.migration_impact(
         orders, ORDERS_SCHEMA, ORDERS_SCHEMA_V2, keys=["o_orderkey"]
     )
-
-
-def q_sft_mask_spans(spark, sf_dir):
-    """SFT loss-mask spans (operators/transcripts.sft_mask_spans):
-    [start_char, end_char) of each assistant turn inside the
-    render_chat string — the character-level loss mask.  Offsets are a
-    ROWS-frame running sum over the codegen'd part length: ONE conv_id
-    shuffle, no collected arrays, no fold."""
-    tdf = _transcripts_from_events(_t(spark, sf_dir, "events"))
-    return transcripts.sft_mask_spans(tdf, order_by=("turn_idx", "seq"))
 
 
 def q_chunk_docs(spark, sf_dir):
@@ -1699,111 +1583,6 @@ def q_clean_text_docs(spark, sf_dir):
         (cleaned != F.col("t")).alias("changed"),
         cleaned.alias("text_clean"),
     )
-
-
-def q_hash_split_docs(spark, sf_dir):
-    """Deterministic train/val/test split (operators/sampling.py):
-    per-row md5-derived label, map-only, stable under corpus growth —
-    unlike randomSplit, adding rows never reassigns old rows."""
-    docs = _docs(spark, sf_dir)
-    return sampling.hash_split(docs).select("doc_id", "split")
-
-
-def q_stratified_sample_docs(spark, sf_dir):
-    """Exact deterministic stratified sample: 20% per lang stratum,
-    lowest md5 unit-hash first (one window shuffle on the stratum)."""
-    docs = _docs(spark, sf_dir)
-    return sampling.stratified_sample(docs, 0.2, strata=("lang",)).select(
-        "doc_id", "lang"
-    )
-
-
-def q_token_budget_docs(spark, sf_dir):
-    """Per-source token-budget selection: order by lexical diversity
-    (distinct/total tokens) descending, take until each source has
-    spent its 800-token quota — the mixture-weights stage."""
-    docs = _docs(spark, sf_dir)
-    toks = text.tokens(F.col("text"))
-    feat = docs.select(
-        "doc_id",
-        "source",
-        text.token_count(F.col("text")).cast("long").alias("n_tokens"),
-        (
-            F.size(F.array_distinct(toks)).cast("double")
-            / F.greatest(F.size(toks), F.lit(1))
-        ).alias("diversity"),
-    )
-    out = sampling.token_budget_take(
-        feat, budget=800, group_col="source",
-        quality_col="diversity", token_col="n_tokens",
-    )
-    return out.select(
-        "doc_id", "source", "n_tokens", F.round("diversity", 6).alias("diversity")
-    )
-
-
-def q_pack_sequences_docs(spark, sf_dir):
-    """Concat-and-chunk sequence packing into 256-token training
-    sequences over the md5-shuffled token stream — GLOBAL running sum
-    via the two-phase distributed prefix-sum (range exchange + a
-    num_partitions-row driver collect), never a single-task window."""
-    docs = _docs(spark, sf_dir)
-    with_tokens = docs.select(
-        "doc_id", text.token_count(F.col("text")).alias("n_tokens")
-    )
-    return sampling.pack_sequences(with_tokens, seq_len=256)
-
-
-def q_bpe_train_docs(spark, sf_dir):
-    """BPE merge training (operators/vocab.bpe_train): 12 merge rules
-    over the corpus word-frequency vocabulary.  ONE corpus scan builds
-    the vocab; every iteration is a vocab-table pair count (map-side
-    combinable) + one collected argmax row — the corpus is never
-    rescanned, so merge cost is independent of corpus size (Heaps'
-    law keeps the vocab table tiny relative to 100 TB of text).
-    batch=4 (r5): up to four symbol-disjoint merges accepted per
-    corpus-vocab aggregation — 3 expensive rounds instead of 12; the
-    oracle replays the identical slot grid."""
-    return vocab.bpe_train(_docs(spark, sf_dir), merges=12, batch=4)
-
-
-def q_bpe_segment_docs(spark, sf_dir):
-    """BPE segmentation under the trained rules (vocab.bpe_segment):
-    per document, whitespace-word count and subword count after the 12
-    trained merges.  The rule table is driver-small and burns into the
-    plan as literal replaces — encoding is a map-only codegen pass."""
-    docs = _docs(spark, sf_dir)
-    rules = [
-        (r["left"], r["right"])
-        for r in vocab.bpe_train(docs, merges=12, batch=4).collect()
-    ]
-    valid = F.filter(
-        dedup.tokens(F.col("text")),
-        lambda w: (w != "") & (~w.contains(vocab.SEP)),
-    )
-    return docs.select(
-        "doc_id",
-        F.size(valid).cast("long").alias("n_words"),
-        F.size(vocab.bpe_segment(F.col("text"), rules)).cast("long").alias(
-            "n_subwords"
-        ),
-    )
-
-
-def q_collocations_docs(spark, sf_dir):
-    """PMI collocation mining (vocab.collocations): top-40 adjacent
-    word pairs by pointwise mutual information, min-count 5.  One scan
-    feeds both the unigram and bigram aggregations; the unigram joins
-    are vocabulary-sized; corpus rows never shuffle."""
-    return vocab.collocations(_docs(spark, sf_dir), min_count=5, top_k=40)
-
-
-def q_vocab_growth_docs(spark, sf_dir):
-    """Heaps-curve data card (vocab.vocab_growth): per md5-derived
-    corpus decile, first-seen token count + running vocabulary size.
-    One explode + one (token -> min bucket) aggregation; the window
-    runs over the 10-row bucket frame."""
-    return vocab.vocab_growth(_docs(spark, sf_dir), buckets=10)
 
 
 def q_blocklist_docs(spark, sf_dir):
@@ -1971,29 +1750,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bm25_topk_docs": q_bm25_topk,
         "transcript_integrity": q_transcript_integrity,
         "transcript_rollup": q_transcript_rollup,
-        "dedup_conversations": q_dedup_conversations,
         "pii_scan_docs": q_pii_scan_docs,
         "text_repetition": q_text_repetition,
         "transcript_tool_pairing": q_transcript_tool_pairing,
-        "best_of_n_responses": q_best_of_n_responses,
-        "preference_pairs_transcripts": q_preference_pairs_transcripts,
         "transcript_merge_runs": q_transcript_merge_runs,
-        "context_windows": q_context_windows,
-        "render_chat": q_render_chat,
-        "sft_mask_spans": q_sft_mask_spans,
         "migration_impact_orders": q_migration_impact_orders,
         "volume_anomalies_events": q_volume_anomalies_events,
         "clean_text_docs": q_clean_text_docs,
         "conversation_verdicts": q_conversation_verdicts,
         "chunk_docs": q_chunk_docs,
-        "hash_split_docs": q_hash_split_docs,
-        "stratified_sample_docs": q_stratified_sample_docs,
-        "token_budget_docs": q_token_budget_docs,
-        "pack_sequences_docs": q_pack_sequences_docs,
-        "bpe_train_docs": q_bpe_train_docs,
-        "bpe_segment_docs": q_bpe_segment_docs,
-        "collocations_docs": q_collocations_docs,
-        "vocab_growth_docs": q_vocab_growth_docs,
         "blocklist_docs": q_blocklist_docs,
         "tool_loops": q_tool_loops,
         "tool_latency": q_tool_latency,
@@ -2028,7 +1793,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "funnel_events": q_funnel,
         "drift_timeline_events": q_drift_timeline,
         "top_values_events": q_top_values,
-        "mixture_docs": q_mixture,
         "stream_windowed_verdicts_json": q_stream_windowed_verdicts_json,
         "transform_events": q_transform_events,
         "stats_lineitem": q_stats_lineitem,
@@ -2551,55 +2315,6 @@ def _oracle_transcript_rollup() -> str:
     """
 
 
-_SQL_RESPONSE_CANDS = f"""
-      SELECT conv_id, turn_idx, seq, text,
-             CAST(strlen(text) AS DOUBLE) AS score
-      FROM ({_SQL_TRANSCRIPTS}) t
-      WHERE role = 'assistant' AND text IS NOT NULL
-"""
-
-
-def _oracle_best_of_n() -> str:
-    return f"""
-    WITH c AS ({_SQL_RESPONSE_CANDS}),
-    r AS (
-      SELECT conv_id, turn_idx, seq, text, score,
-             row_number() OVER (PARTITION BY conv_id
-                                ORDER BY score DESC, seq ASC) AS rn,
-             CAST(count(*) OVER (PARTITION BY conv_id) AS BIGINT)
-               AS n_candidates
-      FROM c
-    )
-    SELECT conv_id, turn_idx, seq, text, score, n_candidates
-    FROM r WHERE rn = 1
-    """
-
-
-def _oracle_preference_pairs() -> str:
-    return f"""
-    WITH c AS ({_SQL_RESPONSE_CANDS}),
-    r AS (
-      SELECT conv_id, text, score,
-             row_number() OVER (PARTITION BY conv_id
-                                ORDER BY score DESC, seq ASC) AS rn,
-             count(*) OVER (PARTITION BY conv_id) AS n
-      FROM c
-    ),
-    p AS (
-      SELECT conv_id,
-             max(CASE WHEN rn = 1 THEN text END) AS chosen_text,
-             max(CASE WHEN rn = 1 THEN score END) AS chosen_score,
-             max(CASE WHEN rn = n THEN text END) AS rejected_text,
-             max(CASE WHEN rn = n THEN score END) AS rejected_score
-      FROM r WHERE n >= 2 GROUP BY conv_id
-    )
-    SELECT conv_id, chosen_text, chosen_score, rejected_text,
-           rejected_score,
-           (chosen_score - rejected_score) AS margin
-    FROM p WHERE (chosen_score - rejected_score) >= 1.0
-    """
-
-
 def _oracle_stats_incremental() -> str:
     # single-pass per-column stats over the FULL table — equality with
     # the engine's two-batch partial merge is the incremental-stats
@@ -2646,19 +2361,6 @@ def _oracle_dedup_clusters() -> str:
     )
     SELECT id, min(lab) AS cluster_id FROM r GROUP BY id
     """
-
-
-# split into 8-word turns, then rebuild the conversation document by
-# re-joining the ordered chunks — mirrors q_dedup_conversations
-_SQL_CONV_DOCS = """
-    SELECT printf('v%08d', CAST(doc_id AS BIGINT)) AS doc_id,
-           array_to_string(
-             list_transform(
-               range(0, CAST(ceil(len(string_split(text, ' ')) / 8.0) AS BIGINT)),
-               i -> array_to_string(string_split(text, ' ')[CAST(i*8+1 AS BIGINT):CAST(i*8+8 AS BIGINT)], ' ')
-             ), ' ') AS text
-    FROM documents
-"""
 
 
 def oracle_sql() -> dict[str, str]:
@@ -3023,27 +2725,6 @@ def oracle_sql() -> dict[str, str]:
                    max(value) AS max_value,
                    count(DISTINCT user_id) AS users
             FROM events GROUP BY event_type
-        """,
-        "mixture_docs": f"""
-        WITH counts AS (
-          SELECT source, count(*) AS gn FROM documents GROUP BY source),
-        powed AS (
-          SELECT source, gn, pow(CAST(gn AS DOUBLE), 1.0 / 2.0) AS w
-          FROM counts),
-        norm AS (
-          SELECT sum(w) AS z, CAST(sum(gn) AS BIGINT) AS nt FROM powed),
-        factors AS (
-          SELECT source,
-                 least(CAST(nt AS DOUBLE) * (w / z) / CAST(gn AS DOUBLE),
-                       16.0) AS r
-          FROM powed, norm)
-        SELECT d.doc_id, d.source,
-               CAST(floor(r) AS INT)
-               + (CASE WHEN ({_sql_md5_long('CAST(doc_id AS VARCHAR)', seed=7)}
-                            % 1000000000)
-                       < CAST(round((r - floor(r)) * 1000000000, 0) AS BIGINT)
-                  THEN 1 ELSE 0 END) AS n_reps
-        FROM documents d JOIN factors USING (source)
         """,
         "top_values_events": """
         WITH pairs AS (
@@ -3510,31 +3191,17 @@ def oracle_sql() -> dict[str, str]:
         "bm25_topk_docs": _oracle_bm25_topk(),
         "transcript_integrity": _oracle_transcript_integrity(),
         "transcript_rollup": _oracle_transcript_rollup(),
-        "dedup_conversations": _oracle_minhash(docs_sql=_SQL_CONV_DOCS),
         "dedup_clusters": _oracle_dedup_clusters(),
         "stats_incremental": _oracle_stats_incremental(),
         "pii_scan_docs": _oracle_pii_scan(),
         "text_repetition": _oracle_text_repetition(),
         "transcript_tool_pairing": _oracle_tool_pairing(),
-        "best_of_n_responses": _oracle_best_of_n(),
-        "preference_pairs_transcripts": _oracle_preference_pairs(),
         "transcript_merge_runs": _oracle_transcript_merge_runs(),
-        "context_windows": _oracle_context_windows(),
-        "render_chat": _oracle_render_chat(),
-        "sft_mask_spans": _oracle_sft_mask_spans(),
         "migration_impact_orders": _oracle_migration_impact_orders(),
         "volume_anomalies_events": _oracle_volume_anomalies(),
         "clean_text_docs": _oracle_clean_text(),
         "conversation_verdicts": _oracle_conversation_verdicts(),
         "chunk_docs": _oracle_chunk_docs(),
-        "hash_split_docs": _oracle_hash_split(),
-        "stratified_sample_docs": _oracle_stratified_sample(),
-        "token_budget_docs": _oracle_token_budget(),
-        "pack_sequences_docs": _oracle_pack_sequences(),
-        "bpe_train_docs": _oracle_bpe_train(batch=4),
-        "bpe_segment_docs": _oracle_bpe_segment(batch=4),
-        "collocations_docs": _oracle_collocations(),
-        "vocab_growth_docs": _oracle_vocab_growth(),
         "blocklist_docs": _oracle_blocklist(),
         "tool_loops": _oracle_tool_loops(),
         "tool_latency": _oracle_tool_latency(),
@@ -3798,244 +3465,6 @@ def _oracle_tool_latency() -> str:
     """
 
 
-def _oracle_bpe_ctes(merges: int = 12, batch: int = 1) -> str:
-    """Chained-CTE replay of vocab.bpe_train: w0 is the bar-wrapped
-    word-frequency vocab; per round, p{r} counts adjacent symbol pairs
-    (weighted by word count), s{r}_i take up to ``batch`` per-slot
-    argmaxes under the same (count desc, left, right) tie-break with
-    the same symbol-disjointness exclusion, and w{r} applies the
-    round's literal replaces — `replace` is left-to-right
-    non-overlapping in both engines, so the merge semantics are
-    identical.  The chain is a static worst-case grid (``merges``
-    rounds × ``batch`` slots) with per-slot cumulative budget gates,
-    replaying the engine's dynamic rounds exactly: once ``merges``
-    slots have accepted, every later slot is gated empty and its
-    round's replaces become sentinel no-ops.
-
-    Every CTE is MATERIALIZED: DuckDB inlines plain CTEs, and the
-    merge chain references each w{r-1} several times — inlined, the
-    expansion is exponential in the merge count (it exhausted file
-    handles at 12 merges); materialized, it is one linear pipeline."""
-    norm = _SQL_NORM.format(col="text")
-    ctes = [
-        f"""wc AS MATERIALIZED (
-      SELECT word, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-        SELECT unnest(string_split({norm}, ' ')) AS word FROM documents
-      ) WHERE word <> '' AND NOT contains(word, '|')
-      GROUP BY word
-    )""",
-        """w0 AS MATERIALIZED (
-      SELECT regexp_replace(word, '(.)', '|\\1|', 'g') AS sym, cnt FROM wc
-    )""",
-    ]
-    n_rounds = merges
-    done_slots: list[tuple[int, int]] = []  # accepted-so-far gate inputs
-    for r in range(1, n_rounds + 1):
-        prev = f"w{r - 1}"
-        k = min(batch, merges)
-        ctes.append(f"""p{r} AS MATERIALIZED (
-      SELECT l, r2, CAST(SUM(cnt) AS BIGINT) AS pc FROM (
-        SELECT cnt, t[i] AS l, t[i + 1] AS r2 FROM (
-          SELECT cnt, t, generate_subscripts(t, 1) AS i FROM (
-            SELECT cnt, string_split(trim(sym, '|'), '||') AS t
-            FROM {prev} WHERE sym IS NOT NULL
-          ) WHERE len(t) >= 2
-        ) WHERE i < len(t)
-      ) GROUP BY l, r2
-    )""")
-        # per-slot exact argmax with (a) symbol-disjointness vs every
-        # earlier slot of the SAME round (vocab.bpe_train batch
-        # selection: a pair is excluded when its left/right/merged
-        # spelling collides with an accepted slot's) and (b) a budget
-        # gate — total slots accepted before this one must be under
-        # ``merges`` — replaying the engine's dynamic rounds on a
-        # static worst-case chain: a conflict-starved round rolls its
-        # budget forward instead of dropping it.
-        for i in range(1, k + 1):
-            preds = []
-            if i > 1:
-                union = " UNION ALL ".join(
-                    f"SELECT l, r2 FROM s{r}_{j}" for j in range(1, i)
-                )
-                preds.append(f"""NOT EXISTS (
-        SELECT 1 FROM ({union}) s
-        WHERE p.l IN (s.l, s.r2, s.l || s.r2)
-           OR p.r2 IN (s.l, s.r2, s.l || s.r2)
-           OR (p.l || p.r2) IN (s.l, s.r2, s.l || s.r2)
-      )""")
-            if batch > 1 and done_slots:
-                gate_union = " UNION ALL ".join(
-                    f"SELECT 1 AS x FROM s{rr}_{ii}" for rr, ii in done_slots
-                )
-                preds.append(
-                    f"(SELECT COUNT(*) FROM ({gate_union})) < {merges}"
-                )
-            where = ("WHERE " + "\n        AND ".join(preds)) if preds else ""
-            ctes.append(f"""s{r}_{i} AS MATERIALIZED (
-      SELECT p.l, p.r2, p.pc FROM p{r} p
-      {where}
-      ORDER BY p.pc DESC, p.l ASC, p.r2 ASC LIMIT 1
-    )""")
-            done_slots.append((r, i))
-        slot_union = " UNION ALL ".join(
-            f"SELECT {i} AS slot, l, r2, pc FROM s{r}_{i}"
-            for i in range(1, k + 1)
-        )
-        ctes.append(f"""m{r} AS MATERIALIZED (
-      SELECT slot, l, r2, pc FROM ({slot_union})
-    )""")
-        # apply the round's replaces slot-innermost-first; slots are
-        # symbol-disjoint so the order is immaterial, and an empty
-        # slot degrades to a sentinel no-op replace
-        expr = "sym"
-        for i in range(1, k + 1):
-            pat = (
-                f"COALESCE('|' || (SELECT l FROM s{r}_{i}) || '||'"
-                f" || (SELECT r2 FROM s{r}_{i}) || '|', '|\x01|')"
-            )
-            rep = (
-                f"COALESCE('|' || (SELECT l FROM s{r}_{i})"
-                f" || (SELECT r2 FROM s{r}_{i}) || '|', '|\x01|')"
-            )
-            expr = f"replace({expr}, {pat}, {rep})"
-        ctes.append(f"""w{r} AS MATERIALIZED (
-      SELECT {expr} AS sym, cnt FROM {prev}
-    )""")
-    return ",\n    ".join(ctes)
-
-
-def _oracle_bpe_train(merges: int = 12, batch: int = 1) -> str:
-    n_rounds = merges
-    union = "\n    UNION ALL ".join(
-        f"SELECT {r} AS rnd, slot, l, r2, pc FROM m{r}"
-        for r in range(1, n_rounds + 1)
-    )
-    return f"""
-    WITH {_oracle_bpe_ctes(merges, batch)}
-    SELECT CAST(ROW_NUMBER() OVER (ORDER BY rnd, slot) AS INT) AS rank,
-           l AS "left", r2 AS "right", l || r2 AS merged,
-           pc AS pair_count
-    FROM ({union})
-    """
-
-
-def _oracle_bpe_segment(merges: int = 12, batch: int = 1) -> str:
-    """Training replay (same CTEs) + encode: per word the nested
-    literal-replace chain in (round, slot) rank order, subword count
-    from the inter-symbol '||' separator count; COALESCE sentinels
-    keep an exhausted slot (empty s{{r}}_{{i}}) a no-op, mirroring
-    the engine's early break."""
-    norm = _SQL_NORM.format(col="text")
-    n_rounds = merges
-    expr = "sym0"
-    for r in range(1, n_rounds + 1):
-        k = min(batch, merges)
-        for i in range(1, k + 1):
-            pat = (
-                f"COALESCE('|' || (SELECT l FROM s{r}_{i}) || '||'"
-                f" || (SELECT r2 FROM s{r}_{i}) || '|', '|\x01|')"
-            )
-            rep = (
-                f"COALESCE('|' || (SELECT l FROM s{r}_{i})"
-                f" || (SELECT r2 FROM s{r}_{i}) || '|', '|\x01|')"
-            )
-            expr = f"replace({expr}, {pat}, {rep})"
-    return f"""
-    WITH {_oracle_bpe_ctes(merges, batch)},
-    words AS (
-      SELECT doc_id, word FROM (
-        SELECT doc_id, unnest(string_split({norm}, ' ')) AS word
-        FROM documents
-      ) WHERE word <> '' AND NOT contains(word, '|')
-    ),
-    enc AS (
-      SELECT doc_id,
-             (SELECT {expr} FROM (SELECT regexp_replace(word, '(.)', '|\\1|', 'g') AS sym0)) AS sym
-      FROM words
-    ),
-    agg AS (
-      SELECT doc_id,
-             CAST(COUNT(*) AS BIGINT) AS n_words,
-             CAST(SUM((length(sym) - length(replace(sym, '||', ''))) // 2 + 1)
-                  AS BIGINT) AS n_subwords
-      FROM enc GROUP BY doc_id
-    )
-    SELECT d.doc_id,
-           COALESCE(a.n_words, 0) AS n_words,
-           COALESCE(a.n_subwords, 0) AS n_subwords
-    FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
-    """
-
-
-def _oracle_collocations(min_count: int = 5, top_k: int = 40) -> str:
-    """Exact unigram/bigram counts + the engine's PMI expression in the
-    same left-associative operand order, rounded to 6 dp before the
-    (pmi desc, left, right) top-k cut."""
-    norm = _SQL_NORM.format(col="text")
-    return f"""
-    WITH dt AS (
-      SELECT string_split({norm}, ' ') AS t FROM documents
-      WHERE len(string_split({norm}, ' ')) > 0
-    ),
-    uni AS (
-      SELECT w, CAST(COUNT(*) AS BIGINT) AS c1 FROM (
-        SELECT unnest(t) AS w FROM dt
-      ) WHERE w <> '' GROUP BY w
-    ),
-    bi AS (
-      SELECT l, r2, CAST(COUNT(*) AS BIGINT) AS c_ab FROM (
-        SELECT t[i] AS l, t[i + 1] AS r2 FROM (
-          SELECT t, generate_subscripts(t, 1) AS i FROM dt
-          WHERE len(t) >= 2
-        ) WHERE i < len(t)
-      ) WHERE l <> '' AND r2 <> '' GROUP BY l, r2
-    ),
-    n AS (SELECT CAST(SUM(c1) AS DOUBLE) AS n_tot FROM uni),
-    m AS (SELECT CAST(SUM(c_ab) AS DOUBLE) AS m_tot FROM bi)
-    SELECT l AS "left", r2 AS "right", c_ab,
-           round(ln((CAST(c_ab AS DOUBLE) * n.n_tot * n.n_tot)
-                    / (m.m_tot * CAST(ua.c1 AS DOUBLE)
-                       * CAST(ub.c1 AS DOUBLE))), 6) AS pmi
-    FROM bi
-    JOIN uni ua ON ua.w = bi.l
-    JOIN uni ub ON ub.w = bi.r2
-    CROSS JOIN n CROSS JOIN m
-    WHERE c_ab >= {min_count}
-    ORDER BY pmi DESC, "left" ASC, "right" ASC
-    LIMIT {top_k}
-    """
-
-
-def _oracle_vocab_growth(buckets: int = 10) -> str:
-    norm = _SQL_NORM.format(col="text")
-    b = _sql_md5_long("CAST(doc_id AS VARCHAR)")
-    return f"""
-    WITH tok AS (
-      SELECT bucket, w FROM (
-        SELECT ({b}) % {buckets} AS bucket,
-               unnest(string_split({norm}, ' ')) AS w
-        FROM documents
-      ) WHERE w <> ''
-    ),
-    pt AS (SELECT w, MIN(bucket) AS fb FROM tok GROUP BY w),
-    nb AS (
-      SELECT fb AS bucket, CAST(COUNT(*) AS BIGINT) AS new_tokens
-      FROM pt GROUP BY fb
-    ),
-    vb AS (
-      SELECT bucket, CAST(COUNT(*) AS BIGINT) AS bucket_tokens
-      FROM tok GROUP BY bucket
-    )
-    SELECT v.bucket, v.bucket_tokens,
-           COALESCE(n.new_tokens, 0) AS new_tokens,
-           CAST(SUM(COALESCE(n.new_tokens, 0))
-                OVER (ORDER BY v.bucket) AS BIGINT) AS vocab_size,
-           CAST(SUM(v.bucket_tokens)
-                OVER (ORDER BY v.bucket) AS BIGINT) AS cum_tokens
-    FROM vb v LEFT JOIN nb n ON n.bucket = v.bucket
-    """
-
-
 def _oracle_blocklist() -> str:
     """Cross-join replay of the inverted-index blocklist matcher:
     every start position checked (overlap-counting, same as the
@@ -4068,87 +3497,6 @@ def _oracle_blocklist() -> str:
     WHERE p.i + x.plen - 1 <= len(p.t)
       AND list_slice(p.t, p.i, p.i + x.plen - 1) = x.p
     GROUP BY p.doc_id, x.phrase
-    """
-
-
-def _sql_unit_hash(expr: str, seed: int = 0) -> str:
-    """DuckDB replica of sampling._unit_hash: md5-derived integer in
-    [0, 1e9)."""
-    return f"(({_sql_md5_long(expr, seed)}) % 1000000000)"
-
-
-def _oracle_hash_split() -> str:
-    u = _sql_unit_hash("CAST(doc_id AS VARCHAR)")
-    return f"""
-    SELECT doc_id,
-           CASE WHEN {u} < 900000000 THEN 'train'
-                WHEN {u} < 950000000 THEN 'val'
-                ELSE 'test' END AS split
-    FROM documents
-    """
-
-
-def _oracle_stratified_sample() -> str:
-    u = _sql_unit_hash("CAST(doc_id AS VARCHAR)")
-    return f"""
-    WITH r AS (
-      SELECT doc_id, lang,
-             count(*) OVER (PARTITION BY lang) AS n,
-             row_number() OVER (PARTITION BY lang
-                                ORDER BY {u}, doc_id) AS rk
-      FROM documents
-    )
-    SELECT doc_id, lang FROM r WHERE rk <= round(0.2 * n)
-    """
-
-
-def _oracle_token_budget() -> str:
-    norm = _SQL_NORM.format(col="text")
-    return f"""
-    WITH f AS (
-      SELECT doc_id, source,
-             CASE WHEN length({norm}) = 0 THEN 0
-                  ELSE len(string_split({norm}, ' ')) END AS n_tokens,
-             CAST(len(list_distinct(string_split({norm}, ' '))) AS DOUBLE)
-               / greatest(len(string_split({norm}, ' ')), 1) AS diversity
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id, source, CAST(n_tokens AS BIGINT) AS n_tokens,
-             diversity,
-             sum(n_tokens) OVER (PARTITION BY source
-                                 ORDER BY diversity DESC, doc_id
-                                 ROWS UNBOUNDED PRECEDING) AS cum
-      FROM f
-    )
-    SELECT doc_id, source, n_tokens, round(diversity, 6) AS diversity
-    FROM c WHERE (cum - n_tokens) < 800
-    """
-
-
-def _oracle_pack_sequences() -> str:
-    norm = _SQL_NORM.format(col="text")
-    u = _sql_unit_hash("CAST(doc_id AS VARCHAR)")
-    return f"""
-    WITH f AS (
-      SELECT doc_id,
-             CAST(CASE WHEN length({norm}) = 0 THEN 0
-                  ELSE len(string_split({norm}, ' ')) END AS BIGINT)
-               AS n_tokens,
-             {u} AS u
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id, n_tokens,
-             sum(n_tokens) OVER (ORDER BY u, doc_id
-                                 ROWS UNBOUNDED PRECEDING) AS cum
-      FROM f
-    )
-    SELECT doc_id, n_tokens,
-           CAST(floor((cum - n_tokens) / 256.0) AS BIGINT) AS begin_seq,
-           CAST((cum - n_tokens) % 256 AS BIGINT) AS begin_offset,
-           CAST(floor((cum - 1) / 256.0) AS BIGINT) AS end_seq
-    FROM c
     """
 
 
@@ -4253,62 +3601,6 @@ def _oracle_transcript_merge_runs() -> str:
            first(ts ORDER BY turn_idx, seq) AS ts,
            CAST(count(*) AS BIGINT) AS n_merged
     FROM s GROUP BY conv_id, seg
-    """
-
-
-def _oracle_context_windows(budget: int = 24) -> str:
-    # relational formulation of the suffix-under-budget selection: a
-    # per-conversation self-join (quadratic — oracle-only; the engine
-    # keeps the quadratic term inside a task as array ops).
-    norm = _SQL_NORM.format(col="text")
-    return f"""
-    WITH t AS ({_SQL_TRANSCRIPTS}),
-    tok AS (
-      SELECT conv_id, turn_idx, seq, role, text,
-             CAST(CASE WHEN length({norm}) = 0 THEN 0
-                  ELSE len(string_split({norm}, ' ')) END AS BIGINT) AS tok
-      FROM t
-    ),
-    c AS (
-      SELECT *,
-             SUM(tok) OVER w AS cum,
-             row_number() OVER w AS pos
-      FROM tok
-      WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx, seq)
-    )
-    SELECT tr.conv_id,
-           CAST(tr.turn_idx AS INTEGER) AS turn_idx,
-           CAST(count(h.pos) AS INTEGER) AS n_ctx_turns,
-           CAST(coalesce(SUM(h.tok), 0) AS BIGINT) AS ctx_tokens,
-           coalesce(string_agg(h.role || ': ' || h.text, chr(10)
-                               ORDER BY h.pos), '') AS context,
-           tr.text AS target_text
-    FROM c tr LEFT JOIN c h
-      ON h.conv_id = tr.conv_id AND h.pos < tr.pos
-     AND (tr.cum - tr.tok) - (h.cum - h.tok) <= {budget}
-    WHERE tr.role = 'assistant'
-    GROUP BY tr.conv_id, tr.turn_idx, tr.text, tr.pos
-    """
-
-
-def _oracle_render_chat(eot: str = "<|eot|>") -> str:
-    # the per-turn tag render + ordered '' -separated concat, replayed
-    # relationally: string_agg with the same (turn_idx, seq) order key.
-    return f"""
-    WITH t AS ({_SQL_TRANSCRIPTS}),
-    p AS (
-      SELECT conv_id, turn_idx, seq,
-             '<|' || role ||
-             CASE WHEN tool IS NOT NULL THEN ':' || tool ELSE '' END ||
-             '|>' || COALESCE(text, '') || '{eot}' AS part
-      FROM t
-    )
-    SELECT conv_id,
-           CAST(COUNT(*) AS BIGINT) AS n_turns,
-           CAST(length(string_agg(part, '' ORDER BY turn_idx, seq))
-                AS BIGINT) AS n_chars,
-           string_agg(part, '' ORDER BY turn_idx, seq) AS text
-    FROM p GROUP BY conv_id
     """
 
 
@@ -4435,40 +3727,6 @@ def _oracle_migration_impact_orders() -> str:
            o_orderpriority || ' ,value does not match pattern: ^[1-3]-[A-Z ]+$'
       FROM clean WHERE o_orderpriority IS NOT NULL
                AND NOT regexp_matches(o_orderpriority, '^[1-3]-[A-Z ]+$')
-    """
-
-
-def _oracle_sft_mask_spans(eot: str = "<|eot|>") -> str:
-    # replay: same part render, ROWS-frame running length sum for the
-    # end offset, span_idx = rank among the conversation's assistant
-    # turns in the same (turn_idx, seq) order.
-    return f"""
-    WITH t AS ({_SQL_TRANSCRIPTS}),
-    p AS (
-      SELECT conv_id, turn_idx, role, seq,
-             '<|' || role ||
-             CASE WHEN tool IS NOT NULL THEN ':' || tool ELSE '' END ||
-             '|>' || COALESCE(text, '') || '{eot}' AS part
-      FROM t
-    ),
-    o AS (
-      SELECT conv_id, turn_idx, role, seq,
-             length(part) AS lp,
-             SUM(length(part)) OVER (
-               PARTITION BY conv_id ORDER BY turn_idx, seq
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-             ) AS end_char
-      FROM p
-    )
-    SELECT conv_id,
-           CAST(row_number() OVER (
-                  PARTITION BY conv_id ORDER BY turn_idx, seq
-                ) - 1 AS INTEGER) AS span_idx,
-           CAST(turn_idx AS INTEGER) AS turn_idx,
-           role,
-           CAST(end_char - lp AS BIGINT) AS start_char,
-           CAST(end_char AS BIGINT) AS end_char
-    FROM o WHERE role = 'assistant'
     """
 
 

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.checks import Check, CheckSuite, _partition_id
+from .sources.tables import read_store
 
 CHECKPOINT_SCHEMA = (
     "partition_id string, check string, completed_at timestamp, "
@@ -94,10 +95,7 @@ class CheckpointManifest:
     path: str
 
     def read(self, spark: SparkSession) -> DataFrame:
-        try:
-            return spark.read.parquet(self.path)
-        except Exception:
-            return spark.createDataFrame([], CHECKPOINT_SCHEMA)
+        return read_store(spark, self.path, CHECKPOINT_SCHEMA)
 
     def completed(self, spark: SparkSession, lineages: dict[str, str]) -> set[tuple[str, str]]:
         """(partition_id, check) pairs already recorded with a matching

@@ -174,7 +174,7 @@ def build_suite(spark: SparkSession, cfg: dict):
 
 def cmd_run(args) -> int:
     from jsonschema_spark.checkpoint import CheckpointManifest, ResumableRun
-    from jsonschema_spark.operators.checks import CheckSuite
+    from jsonschema_spark.operators.checks import CheckSuite, SchemaCheck
     from jsonschema_spark.sources.tables import read_table, write_output
 
     cfg = json.load(open(args.config))
@@ -212,8 +212,6 @@ def cmd_run(args) -> int:
         verdicts.show(100, truncate=False)
 
     if out.get("violations") and cfg.get("schema"):
-        from jsonschema_spark import compile_schema
-
         # On a resumed run, scope the violations pass to the partitions
         # whose sink write is CONFIRMED in the manifest — a completion
         # row written strictly after the sink write, independent of the
@@ -259,7 +257,7 @@ def cmd_run(args) -> int:
                 just_ran=ran if out.get("violations_backfill") else None,
             )
         if viol_df is not None:
-            plan = compile_schema(cfg["schema"])
+            plan = next(c.plan for c in suite.checks if isinstance(c, SchemaCheck))
             viols = plan.validate(
                 viol_df,
                 keys=cfg.get("keys", []),

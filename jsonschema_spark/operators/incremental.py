@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 
+from ..sources.tables import read_store
 from .checks import _partition_id
 
 PARTIAL_COLS = (
@@ -36,6 +37,7 @@ PARTIAL_COLS = (
     "n_nulls long, min_num double, max_num double, min_str string, "
     "max_str string, hll binary"
 )
+HIST_COLS = "partition_id string, column string, bin int, n long"
 
 
 def stats_partials(
@@ -241,16 +243,13 @@ class HistStore:
     ) -> int:
         spark = df.sparkSession
         partials = hist_partials(df, self.column, self.edges, partition_by)
-        try:
-            seen = {
-                r["partition_id"]
-                for r in spark.read.parquet(self.path)
-                .select("partition_id")
-                .distinct()
-                .collect()
-            }
-        except Exception:
-            seen = set()
+        seen = {
+            r["partition_id"]
+            for r in read_store(spark, self.path, HIST_COLS)
+            .select("partition_id")
+            .distinct()
+            .collect()
+        }
         if seen:
             partials = partials.filter(
                 ~F.col("partition_id").isin(sorted(seen))
@@ -298,16 +297,13 @@ class StatsStore:
     ) -> int:
         spark = df.sparkSession
         partials = stats_partials(df, columns, partition_by, lg_k)
-        try:
-            seen = {
-                r["partition_id"]
-                for r in spark.read.parquet(self.path)
-                .select("partition_id")
-                .distinct()
-                .collect()
-            }
-        except Exception:
-            seen = set()
+        seen = {
+            r["partition_id"]
+            for r in read_store(spark, self.path, PARTIAL_COLS)
+            .select("partition_id")
+            .distinct()
+            .collect()
+        }
         if seen:
             partials = partials.filter(
                 ~F.col("partition_id").isin(sorted(seen))

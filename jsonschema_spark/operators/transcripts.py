@@ -25,19 +25,12 @@ provides those conversation-level operators as first-class checks:
   conversation-LEVEL dedup.
 * ``conversation_rollup`` — per-conversation metrics in one
   map-side-combinable aggregation.
-* ``conversation_dedup_pairs`` — MinHash-LSH near-duplicate
-  CONVERSATION pairs (dedup.minhash_lsh_pairs over the ordered
-  concatenation): dedup at the granularity a training pipeline
-  actually drops — whole conversations, not single turns.
 * ``merge_consecutive_turns`` — transcript repair: same-role runs
   merged to one turn per run (gaps-and-islands segmenter; run id IS
   the new turn index).
-* ``context_windows`` — token-budgeted (history, target) SFT example
-  assembly; the quadratic suffix selection stays inside a task as
-  array higher-order functions.
 
 Scale notes (100 TB): every operator here shuffles exactly once on
-``conv_id`` (the window / the dedup groupBy); conversations are
+``conv_id`` (the window / the groupBy); conversations are
 bounded-length so the per-key payload is small even for hot keys, and
 ``conversation_text`` still routes through ``skew.salted_agg`` so a
 pathological million-turn conversation cannot OOM a single task.
@@ -45,7 +38,7 @@ pathological million-turn conversation cannot OOM a single task.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -369,41 +362,6 @@ def conversation_rollup(
     return out.select("*", contiguous)
 
 
-def conversation_dedup_pairs(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    turn_col: str = "turn_idx",
-    text_col: str = "text",
-    order_by: Sequence[str] | None = None,
-    n: int = 5,
-    k: int = 32,
-    bands: int = 8,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Near-duplicate CONVERSATION pairs: ordered per-conversation
-    concatenation (``conversation_text``) → MinHash-LSH
-    (``dedup.minhash_lsh_pairs``).  Two shuffles total: conv_id for the
-    concat, band-bucket for the candidate join — never all-pairs."""
-    from .dedup import minhash_lsh_pairs
-
-    texts = conversation_text(
-        df,
-        conv_col=conv_col,
-        turn_col=turn_col,
-        text_col=text_col,
-        order_by=order_by,
-    )
-    return minhash_lsh_pairs(
-        texts,
-        text_col="text",
-        id_col="conv_id",
-        n=n,
-        k=k,
-        bands=bands,
-        threshold=threshold,
-    )
-
-
 def tool_call_pairing(
     df: DataFrame,
     conv_col: str = "conv_id",
@@ -567,294 +525,6 @@ def merge_consecutive_turns(
         cols.append(F.element_at(F.col("__items"), 1)["ts"].alias("ts"))
     cols.append(F.col("n_merged"))
     return out.select(*cols)
-
-
-def context_windows(
-    df: DataFrame,
-    budget: int = 256,
-    target_role: str = "assistant",
-    conv_col: str = "conv_id",
-    turn_col: str = "turn_idx",
-    role_col: str = "role",
-    text_col: str = "text",
-    order_by: Sequence[str] | None = None,
-    token_col: str | None = None,
-    line_sep: str = "\n",
-) -> DataFrame:
-    """Token-budgeted training-example assembly: for every turn whose
-    role is ``target_role``, emit (history-within-budget, target) —
-    the row shape an SFT pipeline feeds a tokenizer.
-
-    History = the longest suffix of the turns STRICTLY BEFORE the
-    target whose summed token counts fit ``budget`` (truncate from the
-    oldest side, never mid-turn).  Token counts default to the engine's
-    whitespace ``text.token_count``; pass ``token_col`` to use
-    pre-computed counts instead.
-
-    Plan shape (100 TB): per-turn token counts are a plain projection;
-    ONE hash shuffle on ``conv_col`` collects each conversation into an
-    ordered array (conversations are bounded-length — same contract as
-    ``conversation_text``); prefix sums + per-target suffix selection
-    are higher-order array functions (pure codegen, no Python); targets
-    come back out through one ``posexplode``.  The naive relational
-    formulation is a per-conversation self-join (quadratic rows through
-    the shuffle); here the quadratic term stays inside a task as
-    column ops on an in-memory array, and output volume is bounded by
-    ``budget`` per target rather than by conversation length.
-
-    Output: ``(conv_id, turn_idx, n_ctx_turns, ctx_tokens, context,
-    target_text)`` — ``context`` is "role: text" lines joined by
-    ``line_sep``, oldest first; targets with no affordable history
-    (budget smaller than the previous turn) emit an empty context.
-    """
-    from .text import token_count
-
-    order_cols = list(order_by) if order_by else [turn_col]
-    tok = (
-        F.col(token_col)
-        if token_col is not None
-        else token_count(F.col(text_col))
-    ).cast("long")
-    item = F.struct(
-        *[F.col(c).alias(f"o{i}") for i, c in enumerate(order_cols)],
-        F.col(turn_col).alias("turn"),
-        F.col(role_col).alias("role"),
-        F.col(text_col).alias("v"),
-        tok.alias("tok"),
-    )
-    per_conv = (
-        df.select(F.col(conv_col).alias("conv_id"), item.alias("__item"))
-        .groupBy("conv_id")
-        .agg(F.array_sort(F.collect_list("__item")).alias("arr"))
-    )
-    arr = F.col("arr")
-    # prefix sums of token counts: cums[i] = sum(tok[0..i]) — built with
-    # one fold (array-of-longs accumulator; cheap int append per step).
-    cums = F.aggregate(
-        arr,
-        F.array().cast("array<long>"),
-        lambda acc, x: F.concat(
-            acc,
-            F.array(
-                F.coalesce(
-                    F.try_element_at(acc, F.lit(-1)),
-                    F.lit(0).cast("long"),
-                )
-                + x["tok"]
-            ),
-        ),
-    )
-    with_cums = per_conv.select("conv_id", "arr", cums.alias("cums"))
-    # per-target history: elements i (1-based) with i < p and
-    # cums[p-1] - (cums[i] - tok[i]) <= budget  — i.e. tokens of the
-    # suffix i..p-1 fit the budget.  cums is monotone so the filter
-    # selects exactly a suffix.
-    tgt = F.col("t")  # posexplode'd target struct
-    p = F.col("p")  # 0-based target position
-    exploded = (
-        with_cums.select(
-            "conv_id",
-            "arr",
-            "cums",
-            F.posexplode("arr").alias("p", "t"),
-        )
-        .where(tgt["role"] == F.lit(target_role))
-    )
-    # tokens up to and including position p-1 (1-based element_at):
-    before = F.coalesce(
-        F.try_element_at(F.col("cums"), F.nullif(p, F.lit(0))),
-        F.lit(0).cast("long"),
-    )
-    hist = F.filter(
-        F.slice(F.col("arr"), 1, p),
-        lambda x, i: (
-            before
-            - (F.try_element_at(F.col("cums"), i + 1) - x["tok"])
-        )
-        <= F.lit(budget),
-    )
-    ctx_tokens = F.aggregate(
-        hist, F.lit(0).cast("long"), lambda a, x: a + x["tok"]
-    )
-    context = F.array_join(
-        F.transform(hist, lambda x: F.concat_ws(": ", x["role"], x["v"])),
-        line_sep,
-    )
-    return exploded.select(
-        F.col("conv_id"),
-        tgt["turn"].alias("turn_idx"),
-        F.size(hist).alias("n_ctx_turns"),
-        ctx_tokens.alias("ctx_tokens"),
-        context.alias("context"),
-        tgt["v"].alias("target_text"),
-    )
-
-
-def _render_part(
-    role_col: str,
-    text_col: str,
-    tool_col: str | None,
-    eot: str,
-) -> tuple[Column, Column]:
-    """(tag, part) Column pair for one rendered chat turn —
-    ``<|role|>`` / ``<|role:tool|>`` and the full
-    ``tag + coalesce(text,'') + eot`` string.  Shared by
-    ``render_chat`` and ``sft_mask_spans`` so the mask offsets are
-    definitionally aligned with the rendered string."""
-    tag = F.concat(
-        F.lit("<|"),
-        F.col(role_col),
-        (
-            F.when(
-                F.col(tool_col).isNotNull(),
-                F.concat(F.lit(":"), F.col(tool_col)),
-            ).otherwise(F.lit(""))
-            if tool_col is not None
-            else F.lit("")
-        ),
-        F.lit("|>"),
-    )
-    part = F.concat(tag, F.coalesce(F.col(text_col), F.lit("")), F.lit(eot))
-    return tag, part
-
-
-def render_chat(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    turn_col: str = "turn_idx",
-    role_col: str = "role",
-    text_col: str = "text",
-    tool_col: str | None = "tool",
-    order_by: Sequence[str] | None = None,
-    eot: str = "<|eot|>",
-    buckets: int = 8,
-) -> DataFrame:
-    """Chat-template rendering — the SFT-export serialization step:
-    each conversation becomes ONE training string
-    ``(conv_id, n_turns, n_chars, text)`` with
-
-        <|role|>text<|eot|>            (plain turn)
-        <|role:tool|>text<|eot|>       (tool-bearing turn)
-
-    concatenated in stable turn order (the north rule's "per-turn text
-    equality under stable turn ordering" invariant: ``order_by``
-    defaults to (turn_idx,), pass a unique tiebreak column for corpora
-    with duplicate turn indexes).
-
-    Scale shape: the per-turn tag string is rendered in the per-row
-    codegen projection BEFORE the aggregation (never inside a
-    per-element HOF lambda — pathology #3, BENCH/BASELINE.md), then the
-    ordered concat reuses ``conversation_text``'s skew-safe salted
-    two-phase collect: one hot conversation never lands on one task.
-    Null text renders as the empty string (the tags still mark the
-    turn), so one dirty row cannot null a whole conversation's render.
-    """
-    order_cols = list(order_by) if order_by else [turn_col]
-    _, part = _render_part(role_col, text_col, tool_col, eot)
-    item = F.struct(
-        *[F.col(c).alias(f"o{i}") for i, c in enumerate(order_cols)],
-        part.alias("v"),
-    )
-    out = salted_agg(
-        df,
-        [conv_col],
-        aggs={"part": F.collect_list(item), "n": F.count(F.lit(1))},
-        merges={
-            "part": F.flatten(F.collect_list("part")),
-            "n": F.sum("n").cast("long"),
-        },
-        buckets=buckets,
-    )
-    joined = F.array_join(
-        F.transform(F.array_sort("part"), lambda s: s["v"]), ""
-    )
-    return out.select(
-        F.col(conv_col).alias("conv_id"),
-        F.col("n").alias("n_turns"),
-        F.length(joined).cast("long").alias("n_chars"),
-        joined.alias("text"),
-    )
-
-
-def sft_mask_spans(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    turn_col: str = "turn_idx",
-    role_col: str = "role",
-    text_col: str = "text",
-    tool_col: str | None = "tool",
-    order_by: Sequence[str] | None = None,
-    eot: str = "<|eot|>",
-    train_roles: Iterable[str] = ("assistant",),
-    include_tags: bool = True,
-) -> DataFrame:
-    """SFT loss-mask spans — for each trainable turn (role in
-    ``train_roles``), the [start_char, end_char) span it occupies inside
-    the ``render_chat`` string of its conversation:
-    ``(conv_id, span_idx, turn_idx, role, start_char, end_char)``.
-
-    A training pipeline computes loss only on assistant tokens; these
-    spans are the character-level mask the tokenizer maps onto token
-    ids.  Offsets are definitionally aligned with ``render_chat`` —
-    both render the per-turn part via the same ``_render_part``
-    expression, under the same ``(order_by)`` turn ordering (the north
-    rule's stable-turn-ordering invariant; pass the same tiebreak).
-
-    ``include_tags=False`` narrows each span to the text payload —
-    excluding the leading ``<|role|>`` tag and trailing ``eot`` — for
-    pipelines that train on message content only.
-
-    Scale shape: offsets are a running SUM window over the per-row
-    codegen'd part length — ONE conv_id shuffle, no collected arrays,
-    no per-element HOF fold; hot conversations cost a sort, never a
-    single-task concat.  Empty trainable text still yields a span
-    (zero-width under ``include_tags=False``) so the example count
-    matches the turn count downstream.
-    """
-    order_cols = list(order_by) if order_by else [turn_col]
-    tag, part = _render_part(role_col, text_col, tool_col, eot)
-    # order by (order_cols..., part): render_chat's array_sort compares
-    # the whole struct, so the rendered part string is its implicit
-    # final tiebreak — mirror it here for byte-exact alignment even
-    # under duplicate order keys.  ROWS frame, not the default RANGE:
-    # RANGE groups tied keys and would give tied turns the same end.
-    w = Window.partitionBy(conv_col).orderBy(
-        *[F.col(c) for c in order_cols], part
-    )
-    end = (
-        F.sum(F.length(part))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .cast("long")
-    )
-    start = (end - F.length(part)).cast("long")
-    if not include_tags:
-        start = (start + F.length(tag)).cast("long")
-        end = (end - F.lit(len(eot))).cast("long")
-    roles = [str(r) for r in train_roles]
-    return (
-        df.select(
-            F.col(conv_col).alias("conv_id"),
-            F.col(turn_col).alias("turn_idx"),
-            F.col(role_col).alias("role"),
-            (F.row_number().over(w) - 1).alias("__ord"),
-            start.alias("start_char"),
-            end.alias("end_char"),
-        )
-        .where(F.col("role").isin(roles))
-        .select(
-            "conv_id",
-            (
-                F.row_number().over(
-                    Window.partitionBy("conv_id").orderBy("__ord")
-                )
-                - 1
-            ).alias("span_idx"),
-            "turn_idx",
-            "role",
-            "start_char",
-            "end_char",
-        )
-    )
 
 
 def tool_loops(

@@ -23,6 +23,7 @@ Sink-side:
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 _ICEBERG_HELP = (
@@ -205,6 +206,26 @@ def write_output(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(sink)
+
+
+# The only read failures that mean "nothing written yet": the directory
+# is missing, or holds no data file (empty, or only the _temporary/ of
+# a crash during the first append).
+_EMPTY_STORE = frozenset({"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"})
+
+
+def read_store(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """An append-only parquet state store (checkpoint manifest, stats or
+    histogram partials); one nothing was written to yet reads as empty.
+    Any other failure (a corrupt part file, a permission error) raises:
+    reading it as empty would redo, and append again, everything the
+    store already records."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() not in _EMPTY_STORE:
+            raise
+        return spark.createDataFrame([], schema)
 
 
 def sink_exists(spark, sink: str) -> bool:

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 import jsonschema_spark as js
@@ -50,6 +51,29 @@ def test_resumable_run_skips_completed(spark, part_df, tmp_path):
     assert m.count() == 3
     cols = set(m.columns)
     assert {"partition_id", "check", "completed_at", "lineage", "metrics"} <= cols
+
+
+def test_manifest_corrupt_part_raises(spark, part_df, tmp_path):
+    """Only a manifest nothing was written to reads as empty; a corrupt
+    part file raises instead of reading as "nothing done", which would
+    re-run every partition and append its rows a second time."""
+    crashed = tmp_path / "crashed"  # a crash during the first append
+    (crashed / "_temporary" / "0").mkdir(parents=True)
+    assert CheckpointManifest(str(crashed)).read(spark).count() == 0
+
+    bad = tmp_path / "bad"
+    bad.mkdir()
+    (bad / "part-00000.parquet").write_bytes(b"not a parquet file" * 8)
+    run = ResumableRun(
+        suite=checks.CheckSuite(
+            [checks.Uniqueness(keys=["conv_id", "turn_idx"], partition_by=["day"])]
+        ),
+        manifest=CheckpointManifest(str(bad)),
+        partition_by=["day"],
+        source_id="test",
+    )
+    with pytest.raises(Py4JJavaError, match="not a Parquet file"):
+        run.run(part_df)
 
 
 def test_resume_invalidated_by_config_change(spark, part_df, tmp_path):

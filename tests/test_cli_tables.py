@@ -18,8 +18,20 @@ def data_dir(spark, tmp_path):
     return d
 
 
-def test_cli_run_with_manifest_resume(spark, data_dir, tmp_path, capsys):
+def test_cli_run_with_manifest_resume(
+    spark, data_dir, tmp_path, capsys, monkeypatch
+):
+    import jsonschema_spark
     from jsonschema_spark.cli import main
+
+    compiled = []
+    compile_schema = jsonschema_spark.compile_schema
+
+    def counting_compile(doc, *a, **kw):
+        compiled.append(doc)
+        return compile_schema(doc, *a, **kw)
+
+    monkeypatch.setattr(jsonschema_spark, "compile_schema", counting_compile)
 
     cfg = {
         "source": str(data_dir / "transcripts"),
@@ -47,6 +59,8 @@ def test_cli_run_with_manifest_resume(spark, data_dir, tmp_path, capsys):
 
     rc = main(["run", str(cfg_path)])
     assert rc == 0
+    # the violations pass reuses the schema check's compiled plan
+    assert len(compiled) == 1
     verdicts = spark.read.parquet(str(tmp_path / "verdicts"))
     assert {r["check"] for r in verdicts.collect()} == {
         "schema", "uniqueness", "ri_role", "column_stats",

@@ -6,6 +6,7 @@ idempotent StatsStore ingest."""
 from __future__ import annotations
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from jsonschema_spark.operators.incremental import (
@@ -176,6 +177,25 @@ def test_hist_store_edge_mismatch_rejected(spark, events, tmp_path):
         a.psi_vs(spark, b)
     with pytest.raises(ValueError, match="sorted"):
         hist_partials(events, "value", [100.0, 50.0])
+
+
+def _corrupt_store(path) -> str:
+    path.mkdir()
+    (path / "part-00000.parquet").write_bytes(b"not a parquet file" * 8)
+    return str(path)
+
+
+def test_stats_store_corrupt_part_raises(spark, events, tmp_path):
+    # reading a damaged store as empty would re-ingest every partition
+    store = StatsStore(_corrupt_store(tmp_path / "bad"))
+    with pytest.raises(Py4JJavaError, match="not a Parquet file"):
+        store.ingest(events, COLS)
+
+
+def test_hist_store_corrupt_part_raises(spark, events, tmp_path):
+    store = HistStore(_corrupt_store(tmp_path / "bad"), "value", EDGES)
+    with pytest.raises(Py4JJavaError, match="not a Parquet file"):
+        store.ingest(events)
 
 
 def test_store_new_partition_appends_only_batch_partials(spark, events, tmp_path):

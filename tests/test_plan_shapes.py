@@ -125,23 +125,6 @@ def test_bucketed_layout_removes_corpus_exchange(spark, tmp_path):
     spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
-def test_collocations_reuses_agg_exchanges(spark, tdf):
-    """r5 (judge #7): collocations reads the unigram/bigram exchanges
-    from 2-3 consumers each (totals + PMI joins).  The persist
-    alternative was MEASURED 1.98× slower (the bigram cache is
-    distinct-pair-sized; BENCH/ab_query_bpe_train_docs_collocations_
-    docs.json), so the operator relies on ReusedExchange — and this
-    test pins that reuse in the executed AQE plan so a regression
-    into extra corpus scans cannot land silently."""
-    from jsonschema_spark.operators import vocab
-
-    d = vocab.collocations(tdf, min_count=2, top_k=5)
-    d.collect()  # AQE finalizes reuse decisions at runtime
-    p = plan_of(d)
-    assert "InMemoryTableScan" not in p  # the no-persist decision
-    assert p.count("ReusedExchange") >= 2, p
-
-
 def test_minhash_no_cartesian(spark):
     docs = spark.createDataFrame(
         [(i, f"text number {i} with words") for i in range(20)],
@@ -237,23 +220,6 @@ def test_bm25_topk_take_ordered_no_shuffle_scoring(spark):
     assert "BroadcastNestedLoopJoin" in p or "BroadcastExchange" in p
     assert "CartesianProduct" not in p
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-
-
-def test_mixture_single_tiny_agg_broadcast_back(spark):
-    """temperature_mixture: ONE group count (map-side partial), factors
-    broadcast back; the per-row decision adds no extra Exchange."""
-    from jsonschema_spark.operators.sampling import temperature_mixture
-
-    df = spark.createDataFrame(
-        [(i, "s%d" % (i % 3)) for i in range(30)],
-        "doc_id long, source string",
-    )
-    p = plan_of(temperature_mixture(df))
-    assert "BroadcastExchange" in p  # factors ride in broadcast
-    assert "CartesianProduct" not in p
-    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-    # exactly one shuffle (the group count); AQE may reuse it
-    assert p.count("Exchange hashpartitioning") <= 2
 
 
 def test_neardup_pair_dot_is_unrolled_not_python(spark):

@@ -1,7 +1,6 @@
 """Conversation-transcript sequence operators
 (jsonschema_spark/operators/transcripts.py): integrity FSM, rollup,
-skew-safe conversation text, conversation-level dedup, and the
-SequenceIntegrity Check surface."""
+skew-safe conversation text, and the SequenceIntegrity Check surface."""
 
 from __future__ import annotations
 
@@ -12,7 +11,6 @@ from pyspark.sql import functions as F
 from jsonschema_spark.operators import transcripts
 from jsonschema_spark.operators.transcripts import (
     SequenceIntegrity,
-    conversation_dedup_pairs,
     conversation_integrity,
     conversation_rollup,
     conversation_text,
@@ -129,23 +127,6 @@ def test_conversation_rollup(spark):
     assert c2g[8] is False  # turns {1,3}: span 3 != count 2
 
 
-def test_conversation_dedup_finds_near_dup_conversations(spark):
-    base = "the quick brown fox jumps over the lazy dog. " * 4
-    rows_in = []
-    for conv, text in (
-        ("a", base + "tail one."),
-        ("b", base + "tail two."),
-        ("c", "completely different content about spark plans. " * 5),
-    ):
-        for i, part in enumerate(text.split(". ")):
-            rows_in.append((conv, i, part))
-    df = spark.createDataFrame(
-        rows_in, "conv_id string, turn_idx int, text string"
-    )
-    pairs = rows(conversation_dedup_pairs(df, k=16, bands=4, threshold=0.5))
-    assert [(p[0], p[1]) for p in pairs] == [("a", "b")]
-
-
 def test_default_transitions_frozen():
     assert ("user", "assistant") in transcripts.DEFAULT_TRANSITIONS
     assert ("user", "user") not in transcripts.DEFAULT_TRANSITIONS
@@ -200,89 +181,6 @@ def test_merge_consecutive_turns_no_tool_no_ts(spark):
     assert out.count() == 5
 
 
-def test_context_windows_budget_suffix(spark):
-    out = transcripts.context_windows(
-        _runs_corpus(spark), budget=6, target_role="assistant"
-    )
-    got = {
-        (r.conv_id, r.turn_idx): (
-            r.n_ctx_turns, r.ctx_tokens, r.context, r.target_text
-        )
-        for r in out.collect()
-    }
-    # history is the longest affordable suffix of prior turns
-    assert got[("c1", 2)] == (
-        2, 4, "user: hi\nuser: are you there", "yes"
-    )
-    assert got[("c1", 3)] == (
-        3, 5, "user: hi\nuser: are you there\nassistant: yes",
-        "how can I help",
-    )
-    # budget 6 cannot afford "how can I help" (4 tokens) plus older
-    assert got[("c1", 4)] == (
-        2, 5, "assistant: yes\nassistant: how can I help", "today"
-    )
-    assert got[("c1", 6)] == (
-        2, 3, "assistant: today\ntool: result 42", "answer is 42"
-    )
-    # no user/tool targets, and no zero-history first-turn targets here
-    assert set(got) == {("c1", 2), ("c1", 3), ("c1", 4), ("c1", 6)}
-
-
-def test_context_windows_zero_budget_and_first_turn(spark):
-    data = [
-        ("c3", 0, "assistant", "opening", None, _ts(0)),
-        ("c3", 1, "user", "q", None, _ts(1)),
-        ("c3", 2, "assistant", "a b c", None, _ts(2)),
-    ]
-    df = spark.createDataFrame(
-        data, "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp"
-    )
-    out = transcripts.context_windows(df, budget=0, target_role="assistant")
-    got = {
-        (r.conv_id, r.turn_idx): (r.n_ctx_turns, r.ctx_tokens, r.context)
-        for r in out.collect()
-    }
-    # first-turn target exists with empty history; zero budget affords
-    # no history anywhere
-    assert got[("c3", 0)] == (0, 0, "")
-    assert got[("c3", 2)] == (0, 0, "")
-
-
-def test_render_chat_tagged_ordered(spark):
-    from jsonschema_spark.operators.transcripts import render_chat
-
-    out = {
-        r["conv_id"]: r
-        for r in render_chat(_corpus(spark), order_by=("turn_idx", "text")).collect()
-    }
-    c1 = out["c1"]
-    assert c1["text"] == (
-        "<|user|>hi<|eot|><|assistant|>hello<|eot|>"
-        "<|tool:search|>result<|eot|><|assistant|>done<|eot|>"
-    )
-    assert c1["n_turns"] == 4
-    assert c1["n_chars"] == len(c1["text"])
-    # c2: duplicate turn 3 tie-broken by text ('b' before 'c')
-    assert out["c2"]["text"] == (
-        "<|assistant|>a<|eot|><|user|>b<|eot|><|user|>c<|eot|>"
-    )
-
-
-def test_render_chat_null_text_renders_empty(spark):
-    from jsonschema_spark.operators.transcripts import render_chat
-
-    df = spark.createDataFrame(
-        [("c1", 0, "user", None, None, _ts(0))],
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp",
-    )
-    [r] = render_chat(df).collect()
-    assert r["text"] == "<|user|><|eot|>"
-    assert r["n_chars"] == len("<|user|><|eot|>")
-
-
 def test_chunk_documents_overlap_and_tail(spark):
     from jsonschema_spark.operators.text import chunk_documents
 
@@ -311,73 +209,6 @@ def test_chunk_documents_plan_map_only(spark):
     )
     assert "Exchange" not in plan
     assert plan.count("ArrowEvalPython") == 1
-
-
-def test_sft_mask_spans_align_with_render(spark):
-    from jsonschema_spark.operators.transcripts import (
-        render_chat,
-        sft_mask_spans,
-    )
-
-    corpus = _corpus(spark)
-    rendered = {
-        r["conv_id"]: r["text"]
-        for r in render_chat(corpus, order_by=("turn_idx", "text")).collect()
-    }
-    spans = sft_mask_spans(corpus, order_by=("turn_idx", "text")).collect()
-    # every span slices exactly one rendered assistant part
-    for s in spans:
-        piece = rendered[s["conv_id"]][s["start_char"]:s["end_char"]]
-        assert piece.startswith("<|assistant|>") and piece.endswith("<|eot|>")
-    c1 = sorted(
-        [s for s in spans if s["conv_id"] == "c1"], key=lambda s: s["span_idx"]
-    )
-    assert [(s["span_idx"], s["turn_idx"]) for s in c1] == [(0, 1), (1, 3)]
-    assert rendered["c1"][c1[0]["start_char"]:c1[0]["end_char"]] == (
-        "<|assistant|>hello<|eot|>"
-    )
-    assert rendered["c1"][c1[1]["start_char"]:c1[1]["end_char"]] == (
-        "<|assistant|>done<|eot|>"
-    )
-
-
-def test_sft_mask_spans_text_only_and_empty(spark):
-    from jsonschema_spark.operators.transcripts import (
-        render_chat,
-        sft_mask_spans,
-    )
-
-    df = spark.createDataFrame(
-        [
-            ("c1", 0, "user", "hi", None, _ts(0)),
-            ("c1", 1, "assistant", "yes", None, _ts(1)),
-            ("c1", 2, "assistant", None, None, _ts(2)),  # empty payload
-        ],
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp",
-    )
-    text = render_chat(df).collect()[0]["text"]
-    got = rows(sft_mask_spans(df, include_tags=False), "span_idx")
-    # payload-only spans: exactly the message text; empty turn -> zero-width
-    assert [
-        (s, text[st:en]) for (_c, s, _t, _r, st, en) in got
-    ] == [(0, "yes"), (1, "")]
-
-
-def test_sft_mask_spans_plan_single_exchange(spark):
-    from jsonschema_spark.operators.transcripts import sft_mask_spans
-
-    df = spark.createDataFrame(
-        [("c1", 0, "assistant", "x", None, _ts(0))],
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp",
-    )
-    plan = (
-        sft_mask_spans(df)._jdf.queryExecution().executedPlan().toString()
-    )
-    # one conv_id shuffle feeds both windows; no Python, no fold
-    assert plan.count("Exchange") == 1
-    assert "Python" not in plan
 
 
 class TestToolLoops:

@@ -147,8 +147,8 @@ def query_deps(graph: dict[str, set[str]]) -> dict[str, set[str]]:
         "session": ["jsonschema_spark/core/session.py"],
     }
     for name in (
-        "checks dedup incremental kernels order sampling sketches skew "
-        "temporal text transcripts vocab"
+        "checks dedup incremental kernels order sketches skew "
+        "temporal text transcripts"
     ).split():
         alias_to_files[name] = [f"jsonschema_spark/operators/{name}.py"]
     for name in ("streaming", "sources", "plans", "functions", "core"):
