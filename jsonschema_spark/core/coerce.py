@@ -39,8 +39,10 @@ def string_of(col: Column, dtype: T.DataType | None) -> Column:
     if _is_integral(dtype):
         return F.coalesce(col.cast("string"), F.lit(""))
     if _is_numeric(dtype):
-        # shortest form: integral doubles print without ".0"
-        as_long = col.cast("long")
+        # shortest form: integral doubles print without ".0"; NaN, the
+        # infinities and magnitudes past a long do not fit one (try_cast:
+        # an ANSI cast would raise)
+        as_long = col.try_cast("long")
         return F.coalesce(
             F.when(col == as_long.cast("double"), as_long.cast("string")).otherwise(
                 col.cast("string")

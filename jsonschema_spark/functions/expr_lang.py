@@ -1531,7 +1531,8 @@ def _fn_regfind(env, pat, s):
 # --- higher-order functions taking lambda literals -------------------
 # filter/map/all/any over arrays; the lambda body compiles against a
 # child Env binding the params to the HOF's element variables, so the
-# whole thing stays a codegen'd Spark higher-order expression
+# whole thing stays one Spark higher-order expression — JVM-side and
+# Python-free, though interpreted (CodegenFallback), not code-generated
 # (reference `all`/`for` funcs.go:108-121, lambdas lambda.go:10-56).
 
 def _hof_lambda(env: Env, lam, dtypes):

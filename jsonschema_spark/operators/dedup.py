@@ -120,7 +120,8 @@ def normalize_text(col: Column) -> Column:
 
 def char_shingles(col: Column, n: int = 5) -> Column:
     """Distinct character n-grams of the normalized text as an array.
-    Pure higher-order functions — stays in whole-stage codegen."""
+    Pure higher-order functions — JVM-side, no Python (interpreted:
+    Spark does not code-generate higher-order functions)."""
     norm = normalize_text(col)
     count = F.greatest(F.length(norm) - F.lit(n - 1), F.lit(1))
     return F.array_distinct(
@@ -218,7 +219,7 @@ def minhash_coeffs(k: int) -> list[tuple[int, int]]:
 def minhash_signature(shingles: Column, k: int = 32) -> Column:
     """k-component minhash signature over a *pre-hashed* or raw shingle
     array.  array<long> of length k, built entirely with higher-order
-    functions (codegen'd, no UDF)."""
+    functions (interpreted JVM expressions, no UDF)."""
     hs = F.transform(shingles, lambda sh: F.pmod(hash_long(sh), F.lit(MINHASH_P)))
     return minhash_from_hashes(hs, k)
 

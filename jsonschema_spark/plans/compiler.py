@@ -5,8 +5,13 @@ The Spark-native analog of the reference's compile step
 document (a plain python dict, same JSON shape the reference accepts)
 is compiled ONCE on the driver into a tree of ``Rule`` objects, each of
 which knows how to emit a typed violations Column for a ``ValueRef``.
-Catalyst then optimizes the resulting expression DAG — whole-stage
-codegen, constant folding, predicate reordering come free.
+Catalyst then optimizes the resulting expression DAG (constant folding,
+predicate reordering).  Whole-stage codegen is not free: Spark
+interprets higher-order functions (``exists``, ``transform``,
+``aggregate``, ...) as ``CodegenFallback`` expressions, and one of them
+takes the whole operator that holds it out of the generated code.  So
+``Rule.fails`` over typed arrays tests elements without a lambda where a
+keyword has a whole-array form (``Rule.any_fails``).
 
 Keyword factories are registered by name, mirroring
 ``RegisterValidator`` (validator_core.go:224-229), and are sorted by
@@ -19,6 +24,7 @@ accumulation order matches ``ArrProp.Validate``
 
 from __future__ import annotations
 
+import functools
 import itertools
 
 from dataclasses import dataclass, field
@@ -44,13 +50,38 @@ class Rule:
     only answer to "does this value fail" — verdict counting on every
     route and the if/anyOf/not conditions inside ``violations``.
     Keywords override it with a direct predicate where building the
-    array only to test its size would be the cost."""
+    array only to test its size would be the cost.
+
+    ``any_fails`` is the optional whole-array form that ``items`` uses
+    over a typed (non-variant) array ref: whether ``fails`` holds for
+    some element, as an expression without a lambda, or None when the
+    keyword has none — ``items`` then tests that keyword per element
+    with ``exists``, which is correct but interpreted
+    (``CodegenFallback``)."""
 
     def violations(self, ref: ValueRef) -> Column:  # pragma: no cover
         raise NotImplementedError
 
     def fails(self, ref: ValueRef) -> Column:
-        return F.coalesce(F.size(self.violations(ref)) > 0, F.lit(False))
+        return F.coalesce(F.size(self.violations(ref)) > 0, _never())
+
+    def any_fails(self, ref: ValueRef) -> Column | None:
+        return None
+
+
+def _never() -> Column:
+    """``lit(False)`` as one shared Column per SparkContext: the verdict
+    of a check that cannot fail on the value's static type.  ``or_all``
+    and the combinators drop it by identity, so a statically dead check
+    costs no further Column calls on the driver."""
+    from pyspark import SparkContext
+
+    return _false_of(SparkContext._active_spark_context)
+
+
+@functools.lru_cache(maxsize=1)
+def _false_of(sc) -> Column:
+    return F.lit(False)
 
 
 class FnRule(Rule):
@@ -80,11 +111,14 @@ class CondRule(Rule):
     the violations output) and a condition under which the keyword
     passes outright.  With ``skip_null`` a missing value passes (the
     reference's null-skip fast paths, validator_base.go:180-183,
-    461-463)."""
+    461-463).  ``over_array(rule, array_ref)`` gives the rule's
+    whole-array form (``Rule.any_fails``), built from ``rule.fails``
+    itself so the keyword's meaning stays in ``build``."""
 
-    def __init__(self, build, skip_null: bool = True):
+    def __init__(self, build, skip_null: bool = True, over_array=None):
         self.build = build
         self.skip_null = skip_null
+        self.over_array = over_array
 
     def _built(self, ref: ValueRef):
         if self.skip_null and not ref.exists:
@@ -107,17 +141,47 @@ class CondRule(Rule):
     def fails(self, ref: ValueRef) -> Column:
         built = self._built(ref)
         if built is None:
-            return F.lit(False)
-        fail = F.coalesce(built[0], F.lit(False))
+            return _never()
+        fail = F.coalesce(built[0], _never())
         if len(built) > 2:
-            fail = ~F.coalesce(built[2], F.lit(False)) & fail
+            fail = ~F.coalesce(built[2], _never()) & fail
         return ~ref.null() & fail if self.skip_null else fail
+
+    def any_fails(self, ref: ValueRef) -> Column | None:
+        if self.over_array is None:
+            return None
+        return self.over_array(self, ref)
+
+
+class TargetsRule(Rule):
+    """A keyword that checks one condition per jsonpath target (the map
+    forms: gt/lt/..., patterns, neq, in/notin, keyMatch, ipIn) — one
+    definition, both outputs.  ``build(ref)`` yields ``(fail, path,
+    info)`` per target: the failure condition (NULL counts as passing),
+    the violation's path and its message."""
+
+    def __init__(self, build):
+        self.build = build
+
+    def violations(self, ref: ValueRef) -> Column:
+        from ..core.errors import viol_when
+
+        return concat_violations(
+            *[viol_when(fail, path, info) for fail, path, info in self.build(ref)]
+        )
+
+    def fails(self, ref: ValueRef) -> Column:
+        never = _never()
+        return or_all([F.coalesce(fail, never) for fail, _, _ in self.build(ref)])
 
 
 def or_all(conds: list[Column]) -> Column:
-    """OR of non-NULL booleans (False for none)."""
+    """OR of non-NULL booleans (False for none); terms that cannot fail
+    statically (``_never``) are dropped."""
+    never = _never()
+    conds = [c for c in conds if c is not never]
     if not conds:
-        return F.lit(False)
+        return never
     out = conds[0]
     for c in conds[1:]:
         out = out | c

@@ -14,12 +14,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..core.coerce import (
-    bool_of,
-    coerce_literal_for,
-    number_of,
-    string_of,
-)
+from ..core.coerce import coerce_literal_for, string_of
 from ..core.errors import (
     empty_violations,
     go_num,
@@ -29,7 +24,16 @@ from ..core.errors import (
 )
 from ..core.refs import ValueRef, resolve
 from ..functions.values import parse_value
-from .compiler import CondRule, FnRule, Rule, SchemaError, or_all, register_keyword
+from .compiler import (
+    CondRule,
+    FnRule,
+    Rule,
+    SchemaError,
+    TargetsRule,
+    _never,
+    or_all,
+    register_keyword,
+)
 from .formats import compile_format
 
 
@@ -77,24 +81,21 @@ def kw_type(operand, path, siblings, ctx) -> Rule:
     wanted = [t.strip() for t in operand.split("|")]
     union = len(wanted) > 1
 
+    def satisfied(dt) -> bool:
+        """Whether every value of static type ``dt`` has a wanted type."""
+        return "any" in wanted or any(w in _type_names(dt) for w in wanted)
+
     def build(ref: ValueRef):
-        if "any" in wanted:
-            return None
         dt = ref.dtype
+        if satisfied(dt):
+            return None
         if isinstance(dt, T.VariantType):
             return _type_variant(ref, wanted, union, operand)
-        have = _type_names(dt) if dt is not None else set()
-        checks: list[Column] = []
-        for w in wanted:
-            if w in have:
-                checks.append(F.lit(True))
-            elif w == "integer" and _is_numeric(dt) and not _is_integral(dt):
-                checks.append(ref.col == F.floor(ref.col))
-            else:
-                checks.append(F.lit(False))
-        ok = checks[0]
-        for c in checks[1:]:
-            ok = ok | c
+        if "integer" in wanted and _is_numeric(dt):
+            # the only wanted type a non-integral number can have
+            ok = ref.col == F.floor(ref.col)
+        else:
+            ok = F.lit(False)
 
         def info():
             if union:
@@ -108,7 +109,10 @@ def kw_type(operand, path, siblings, ctx) -> Rule:
 
         return ~ok, info
 
-    return CondRule(build)
+    def over_array(rule, ref: ValueRef):
+        return _never() if satisfied(ref.dtype.elementType) else None
+
+    return CondRule(build, over_array=over_array)
 
 
 def _type_variant(ref: ValueRef, wanted, union, operand):
@@ -250,6 +254,22 @@ def _numeric_value(ref: ValueRef) -> Column | None:
     return None
 
 
+def _extreme(pick):
+    """Whole-array form of a numeric bound: the rule's own ``fails`` on
+    the one element that fails if any does — ``pick`` is
+    ``array_max`` for an upper bound, ``array_min`` for a lower one.
+    Both skip NULL elements, as the element rule does, and order NaN
+    above every number, as the comparison does."""
+
+    def over_array(rule, ref: ValueRef):
+        dt = ref.dtype.elementType
+        if not _is_numeric(dt):
+            return None
+        return rule.fails(ValueRef(pick(ref.col), dt, f"{ref.path}[*]"))
+
+    return over_array
+
+
 @register_keyword("maximum")
 def kw_maximum(operand, path, siblings, ctx) -> Rule:
     v = _num_operand(operand, "maximum", path)
@@ -265,7 +285,7 @@ def kw_maximum(operand, path, siblings, ctx) -> Rule:
             return ~(c < v), lambda: f"value must be  < {go_num(v)}", c.isNull()
         return ~(c <= v), lambda: f"value must be <= than {go_num(v)}", c.isNull()
 
-    return CondRule(build)
+    return CondRule(build, over_array=_extreme(F.array_max))
 
 
 @register_keyword("minimum")
@@ -281,7 +301,7 @@ def kw_minimum(operand, path, siblings, ctx) -> Rule:
             return ~(c > v), lambda: f"value must be larger than {go_num(v)}", c.isNull()
         return ~(c >= v), lambda: f"value must be larger or equal than {go_num(v)}", c.isNull()
 
-    return CondRule(build)
+    return CondRule(build, over_array=_extreme(F.array_min))
 
 
 @register_keyword("exclusiveMaximum")
@@ -354,38 +374,92 @@ def kw_multiple_of(operand, path, siblings, ctx) -> Rule:
 
 # -------------------------------------------------------- enum / const
 
+# arrays up to this length are tested element by element
+# (try_element_at) by the value-set forms of ``_unrolled``
+UNROLL = 4
+
+
+def _unrolled(rule: Rule, ref: ValueRef, longer: Column) -> Column:
+    """Whether ``rule`` fails on some element of the typed array
+    ``ref``, without a lambda: arrays of up to UNROLL elements test each
+    element with ``rule.fails`` itself (an index past the end reads
+    NULL, which passes every null-skipping rule), longer ones take
+    ``longer``, the caller's whole-array form of the same test."""
+    n = F.size(ref.col)
+    each = or_all([rule.fails(ref.index(i)) for i in range(UNROLL)])
+    return F.coalesce(F.when(n <= UNROLL, each).otherwise(longer), _never())
+
+
+def _member_rule(members, msg: str, variant=None) -> Rule:
+    """enum/const: a value passes iff its coerced view is one of a
+    literal set.  ``members(dt)`` gives, for a static dtype, the
+    ``ValueRef`` view method the literals compare on (``num_of``,
+    ``bool_of`` or ``str_of``) and the literals coerced to it;
+    ``variant(ref)``, when given, is the runtime-kind form for variant
+    refs.
+
+    The whole-array form, over string, integral or boolean elements, is
+    a value-set test: short arrays unrolled (``_unrolled``), longer ones
+    by ``array_except`` of the literal set (and NULL, as NULL elements
+    pass) from the array cast to the view's type — for these element
+    types that cast is exactly the view."""
+
+    def build(ref: ValueRef):
+        if variant is not None and isinstance(ref.dtype, T.VariantType):
+            return ~variant(ref), lambda: msg
+        view, lits = members(ref.dtype)
+        return ~getattr(ref, view)().isin(lits), lambda: msg
+
+    def over_array(rule, ref: ValueRef):
+        dt = ref.dtype.elementType
+        if not (isinstance(dt, (T.StringType, T.BooleanType)) or _is_integral(dt)):
+            return None
+        view, lits = members(dt)
+        if any(x != x for x in lits):  # NaN: array_except and IN disagree
+            return None
+        # -0.0 + 0.0 is 0.0: the set holds one zero, as IN compares
+        vals = [x + 0.0 if isinstance(x, float) else x for x in lits]
+        vdt = _VIEW_TYPES[view]
+        arr = ref.col if dt == vdt else ref.col.cast(T.ArrayType(vdt))
+        rest = F.array_except(arr, F.array(*[F.lit(x) for x in vals], F.lit(None)))
+        return _unrolled(rule, ref, F.size(rest) > 0)
+
+    return CondRule(build, over_array=over_array)
+
+
+_VIEW_TYPES = {"num_of": T.DoubleType(), "bool_of": T.BooleanType(), "str_of": T.StringType()}
+
+
 def _enum_rule(operand, path, keyword) -> Rule:
     if not isinstance(operand, list) or not operand:
         raise SchemaError(f"value of '{keyword}' must be non-empty array, path:{path}")
     msg = f"value is invalid , shoule be one of {go_v(operand)}"  # sic (validator_base.go:477)
 
-    def build(ref: ValueRef):
-        dt = ref.dtype
-        # coercing Equal keyed on LHS type (common.go:142-154)
-        if isinstance(dt, T.VariantType):
-            # runtime LHS kind picks the comparison family per row
-            from ..core.variant import KIND_BOOL, KIND_NUMBER
-
-            k = ref.v_kind()
-            nums = [float(coerce_literal_for(T.DoubleType(), v)) for v in operand]
-            bools = [bool(coerce_literal_for(T.BooleanType(), v)) for v in operand]
-            strs = [str(coerce_literal_for(T.StringType(), v)) for v in operand]
-            ok = (
-                F.when(k == KIND_NUMBER, ref.num_of().isin(nums))
-                .when(k == KIND_BOOL, ref.bool_of().isin(bools))
-                .otherwise(ref.str_of().isin(strs))
-            )
-            return ~ok, lambda: msg
+    # coercing Equal keyed on LHS type (common.go:142-154)
+    def members(dt):
         lits = [coerce_literal_for(dt, v) for v in operand]
         if dt is not None and _is_numeric(dt):
-            ok = number_of(ref.col, dt).isin([float(x) for x in lits])
-        elif isinstance(dt, T.BooleanType):
-            ok = bool_of(ref.col, dt).isin([bool(x) for x in lits])
-        else:
-            ok = string_of(ref.col, dt).isin([str(x) for x in lits])
-        return ~ok, lambda: msg
+            return "num_of", [float(x) for x in lits]
+        if isinstance(dt, T.BooleanType):
+            return "bool_of", [bool(x) for x in lits]
+        return "str_of", [str(x) for x in lits]
 
-    return CondRule(build)
+    nums = [float(coerce_literal_for(T.DoubleType(), v)) for v in operand]
+    bools = [bool(coerce_literal_for(T.BooleanType(), v)) for v in operand]
+    strs = [str(coerce_literal_for(T.StringType(), v)) for v in operand]
+
+    def variant(ref: ValueRef) -> Column:
+        # runtime LHS kind picks the comparison family per row
+        from ..core.variant import KIND_BOOL, KIND_NUMBER
+
+        k = ref.v_kind()
+        return (
+            F.when(k == KIND_NUMBER, ref.num_of().isin(nums))
+            .when(k == KIND_BOOL, ref.bool_of().isin(bools))
+            .otherwise(ref.str_of().isin(strs))
+        )
+
+    return _member_rule(members, msg, variant)
 
 
 @register_keyword("enum")
@@ -402,11 +476,7 @@ def kw_enums(operand, path, siblings, ctx) -> Rule:
 def kw_const(operand, path, siblings, ctx) -> Rule:
     # const compares stringified (validator_base.go:762-782)
     sv = coerce_literal_for(T.StringType(), operand)
-
-    def build(ref: ValueRef):
-        return ~(ref.str_of() == F.lit(sv)), lambda: f"value is invalid , expected: {sv}"
-
-    return CondRule(build)
+    return _member_rule(lambda dt: ("str_of", [sv]), f"value is invalid , expected: {sv}")
 
 
 # ------------------------------------------------------------ required
@@ -517,11 +587,30 @@ def kw_items(operand, path, siblings, ctx) -> Rule:
         return _skip_null(ref, F.flatten(per_elem))
 
     def fails(ref: ValueRef) -> Column:
-        aref = _variant_array_ref(ref) if isinstance(ref.dtype, T.VariantType) else ref
-        if not ref.exists or not isinstance(aref.dtype, T.ArrayType):
-            return F.lit(False)
-        some = F.exists(aref.col, lambda x: sub.fails(aref.element(x)))
-        return ~ref.null() & F.coalesce(some, F.lit(False))
+        never = _never()
+        if not ref.exists:
+            return never
+        if isinstance(ref.dtype, T.VariantType):
+            aref = _variant_array_ref(ref)
+            some = F.exists(aref.col, lambda x: sub.fails(aref.element(x)))
+            return ~ref.null() & F.coalesce(some, never)
+        if not isinstance(ref.dtype, T.ArrayType):
+            return never
+        # exists distributes over the item node's OR of keywords: each
+        # keyword's whole-array form where it has one, one exists over
+        # the keywords that have none
+        forms, per_elem = [], []
+        for _, rule in sub.rules:
+            form = rule.any_fails(ref)
+            if form is None:
+                per_elem.append(rule)
+            else:
+                forms.append(form)
+        if per_elem:
+            some = F.exists(ref.col, lambda x: or_all([r.fails(ref.element(x)) for r in per_elem]))
+            forms.append(F.coalesce(some, never))
+        some = or_all(forms)
+        return never if some is never else ~ref.null() & some
 
     return FnRule(fn, fails)
 
@@ -838,15 +927,13 @@ def _compare_single(keyword: str, info: str, build_ok):
         if not isinstance(operand, str):
             raise SchemaError(f"{path} is not string")
 
-        def fn(ref: ValueRef) -> Column:
+        def build(ref: ValueRef):
             s = _string_view(ref)
             if s is None:
-                return empty_violations()
-            return _skip_null(
-                ref, viol_when(~_build(s, operand), ref.path, _info + operand)
-            )
+                return None
+            return ~_build(s, operand), lambda: _info + operand
 
-        return FnRule(fn)
+        return CondRule(build)
 
     return kw
 
@@ -869,27 +956,16 @@ def _compare_map(keyword: str, info: str, build_ok, numeric_rhs=False):
         compiled = [(jp, parse_value(v), v) for jp, v in operand.items()]
         silent = ctx.in_if
 
-        def fn(ref: ValueRef) -> Column:
-            from ..core.errors import concat_violations
-
-            parts = []
+        def build(ref: ValueRef):
             for jp, val, raw in compiled:
-                target = resolve(ref, jp)
-                bound = val.bind(ref)
-                ok = _build(target, bound)
+                fail = ~_build(resolve(ref, jp), val.bind(ref))
                 if silent:
-                    parts.append(viol_when(~ok, "", ""))
+                    yield fail, "", ""
                 else:
-                    parts.append(
-                        viol_when(
-                            ~ok,
-                            f"{ref.path}.{jp}" if not ref.is_root else f"$.{jp}",
-                            _info + _static_str(raw),
-                        )
-                    )
-            return concat_violations(*parts)
+                    path = f"{ref.path}.{jp}" if not ref.is_root else f"$.{jp}"
+                    yield fail, path, _info + _static_str(raw)
 
-        return FnRule(fn)
+        return TargetsRule(build)
 
     return kw
 
@@ -937,19 +1013,12 @@ def kw_patterns(operand, path, siblings, ctx) -> Rule:
         _re.compile(pat)
         compiled.append((jp, pat))
 
-    def fn(ref: ValueRef) -> Column:
-        from ..core.errors import concat_violations
-
-        parts = []
+    def build(ref: ValueRef):
         for jp, pat in compiled:
-            target = resolve(ref, jp)
-            ok = _zs(target).rlike(pat)
-            parts.append(
-                viol_when(~ok, f"$.{jp}", "should match regular expression" + pat)
-            )
-        return concat_violations(*parts)
+            fail = ~_zs(resolve(ref, jp)).rlike(pat)
+            yield fail, f"$.{jp}", "should match regular expression" + pat
 
-    return FnRule(fn)
+    return TargetsRule(build)
 
 
 @register_keyword("neq")
@@ -958,25 +1027,14 @@ def kw_neq(operand, path, siblings, ctx) -> Rule:
         raise SchemaError(f"{path} is not a map")
     compiled = [(jp, parse_value(v), v) for jp, v in operand.items()]
 
-    def fn(ref: ValueRef) -> Column:
-        from ..core.errors import concat_violations
+    def build(ref: ValueRef):
         from ..core.refs import equal_refs
 
-        parts = []
         for jp, val, raw in compiled:
-            target = resolve(ref, jp)
-            bound = val.bind(ref)
-            eq = equal_refs(target, bound)
-            parts.append(
-                viol_when(
-                    F.coalesce(eq, F.lit(False)),
-                    f"$.{jp}",
-                    "should not equal with " + _static_str(raw),
-                )
-            )
-        return concat_violations(*parts)
+            eq = equal_refs(resolve(ref, jp), val.bind(ref))
+            yield eq, f"$.{jp}", "should not equal with " + _static_str(raw)
 
-    return FnRule(fn)
+    return TargetsRule(build)
 
 
 # ------------------------------------------------------------ in/notin
@@ -990,25 +1048,20 @@ def _in_rule(operand, path, ctx, negate: bool) -> Rule:
             raise SchemaError("'in' or 'notin' opt right value expect slice")
         compiled.append((jp, [parse_value(v) for v in lst], lst))
 
-    def fn(ref: ValueRef) -> Column:
-        from ..core.errors import concat_violations
+    def build(ref: ValueRef):
         from ..core.refs import equal_refs
 
-        parts = []
+        never = _never()
         for jp, vals, raw in compiled:
             target = resolve(ref, jp)
-            ok = F.lit(False)
-            for v in vals:
-                b = v.bind(ref)
-                ok = ok | F.coalesce(equal_refs(target, b), F.lit(False))
+            ok = or_all([F.coalesce(equal_refs(target, v.bind(ref)), never) for v in vals])
             if negate:
                 # notin wraps in a Not -> "is not valid" (validator_logic.go:151)
-                parts.append(viol_when(ok, f"$.{jp}", "is not valid"))
+                yield ok, f"$.{jp}", "is not valid"
             else:
-                parts.append(viol_when(~ok, f"$.{jp}", "should be one of  " + go_v(raw)))
-        return concat_violations(*parts)
+                yield ~ok, f"$.{jp}", "should be one of  " + go_v(raw)
 
-    return FnRule(fn)
+    return TargetsRule(build)
 
 
 @register_keyword("in")
@@ -1055,18 +1108,11 @@ def kw_ip_in(operand, path, siblings, ctx) -> Rule:
         num = octets[0] * 16777216 + octets[1] * 65536 + octets[2] * 256 + octets[3]
         return F.when(valid & in_range, num)
 
-    def fn(ref: ValueRef) -> Column:
-        from ..core.errors import concat_violations
-
-        parts = []
+    def build(ref: ValueRef):
         for jp, ranges, raw in compiled:
-            target = resolve(ref, jp)
-            num = ip_to_long(target.str_of())
-            ok = F.lit(False)
-            for lo, hi in ranges:
-                ok = ok | ((num >= lo) & (num <= hi))
-            ok = F.coalesce(ok, F.lit(False))  # unparseable ip fails
-            parts.append(viol_when(~ok, f"$.{jp}", " ip should be within " + go_v(raw)))
-        return concat_violations(*parts)
+            num = ip_to_long(resolve(ref, jp).str_of())
+            ok = or_all([(num >= lo) & (num <= hi) for lo, hi in ranges])
+            ok = F.coalesce(ok, _never())  # unparseable ip fails
+            yield ~ok, f"$.{jp}", " ip should be within " + go_v(raw)
 
-    return FnRule(fn)
+    return TargetsRule(build)

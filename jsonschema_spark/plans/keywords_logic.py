@@ -25,7 +25,7 @@ from ..core.errors import (
 )
 from ..core.refs import ValueRef, equal_refs, resolve
 from ..functions.values import parse_value
-from .compiler import FnRule, Rule, SchemaError, or_all, register_keyword
+from .compiler import FnRule, Rule, SchemaError, TargetsRule, _never, or_all, register_keyword
 
 
 @contextlib.contextmanager
@@ -228,11 +228,13 @@ def _any_of(operand, path, ctx) -> Rule:
     def fails(ref: ValueRef) -> Column:
         # fails iff every branch fails; with no branches the violations
         # above are an empty concat, so nothing fails
-        if not nodes:
-            return F.lit(False)
-        out = nodes[0].fails(ref)
-        for n in nodes[1:]:
-            out = out & n.fails(ref)
+        never = _never()
+        branches = [n.fails(ref) for n in nodes]
+        if not branches or any(b is never for b in branches):
+            return never
+        out = branches[0]
+        for b in branches[1:]:
+            out = out & b
         return out
 
     return FnRule(fn, fails)
@@ -290,9 +292,15 @@ def kw_if(operand, path, siblings, ctx) -> Rule:
         return F.when(ok, then_v).otherwise(else_v)
 
     def fails(ref: ValueRef) -> Column:
-        then_f = then_node.fails(ref) if then_node else F.lit(False)
-        else_f = else_node.fails(ref) if else_node else F.lit(False)
-        return F.when(~cond.fails(ref), then_f).otherwise(else_f)
+        never = _never()
+        then_f = then_node.fails(ref) if then_node else never
+        else_f = else_node.fails(ref) if else_node else never
+        if then_f is never and else_f is never:
+            return never
+        cond_f = cond.fails(ref)
+        if cond_f is never:
+            return then_f
+        return F.when(~cond_f, then_f).otherwise(else_f)
 
     return FnRule(fn, fails)
 
@@ -376,23 +384,14 @@ def _key_match(operand, path, ctx) -> Rule:
     compiled = [(jp, parse_value(v), v) for jp, v in operand.items()]
     silent = ctx.in_if
 
-    def matches(ref: ValueRef):
+    def build(ref: ValueRef):
+        never = _never()
         for jp, val, raw in compiled:
-            target = resolve(ref, jp)
-            yield jp, raw, F.coalesce(equal_refs(target, val.bind(ref)), F.lit(False))
+            # a NULL comparison is a mismatch
+            fail = ~F.coalesce(equal_refs(resolve(ref, jp), val.bind(ref)), never)
+            yield (fail, "", "") if silent else (fail, f"$.{jp}", f"value must be {go_v(raw)}")
 
-    def fn(ref: ValueRef) -> Column:
-        parts = []
-        for jp, raw, eq in matches(ref):
-            if silent:
-                parts.append(viol_when(~eq, "", ""))
-            else:
-                parts.append(
-                    viol_when(~eq, f"$.{jp}", f"value must be {go_v(raw)}")
-                )
-        return concat_violations(*parts)
-
-    return FnRule(fn, lambda ref: or_all([~eq for _, _, eq in matches(ref)]))
+    return TargetsRule(build)
 
 
 @register_keyword("keyMatch")

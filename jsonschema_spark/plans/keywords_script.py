@@ -304,7 +304,8 @@ def kw_script(operand, path, siblings, ctx) -> Rule:
 
         def _exec_for(st, guard):
             """{"for": "k,v in expr", "do": [name = expr, ...]} as ONE
-            codegen'd F.aggregate fold (script.go:426-484 forRange):
+            F.aggregate fold (script.go:426-484 forRange; interpreted, as
+            Spark runs every higher-order function, but a single pass):
             arrays bind k=index/v=element, maps k=key/v=value; body
             statements update accumulator variables sequentially (later
             statements see earlier updates, same as the reference's

@@ -4,6 +4,8 @@ partial aggregation, no cartesian, no Python in the hot path)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -177,7 +179,7 @@ def test_json_column_validation_single_projection(spark):
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
 
-def test_script_for_fold_stays_codegen(spark):
+def test_script_for_fold_stays_narrow(spark):
     """The for-statement fold is a higher-order aggregate inside the
     projection: no shuffle, no Python."""
     df = spark.createDataFrame([(1, [1.0, 2.0])], "id int, xs array<double>")
@@ -188,6 +190,58 @@ def test_script_for_fold_stays_codegen(spark):
     p = plan_of(plan.transform(df))
     assert "Exchange" not in p
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
+
+
+# higher-order functions are CodegenFallback: any of them in an operator
+# takes that operator out of whole-stage codegen
+HIGHER_ORDER = ("lambdafunction", "exists(", "forall(", "transform(", "filter(",
+                "aggregate(", "zip_with(", "map_filter(", "transform_values(")
+
+
+def _final_plan(q) -> str:
+    """The adaptive plan's final form, with its whole-stage-codegen
+    markers, after the query ran."""
+    q.collect()
+    return plan_of(q).split("== Initial Plan ==")[0]
+
+
+def test_gateway_verdicts_stay_in_codegen(spark, tmp_path):
+    """The gateway rule's verdict count is one code-generated
+    aggregate: both HashAggregates under a ``*(n)`` marker, and no
+    higher-order expression anywhere (``items`` over array<string>
+    with type + enum compiles to its whole-array form)."""
+    from jsonschema_spark.sources.fixtures import GATEWAY_SCHEMA, gateway_requests
+
+    path = str(tmp_path / "gw")
+    gateway_requests(spark, n_rows=2000, partitions=2).write.parquet(path)
+    df = spark.read.parquet(path)
+    plan = js.compile_schema(GATEWAY_SCHEMA)
+    q = df.agg(F.sum(plan.fail_predicate(df).cast("long")).alias("n"))
+    p = _final_plan(q)
+    aggs = [line for line in p.splitlines() if "HashAggregate(" in line]
+    assert len(aggs) == 2, p
+    assert all(re.search(r"\*\(\d+\) HashAggregate", line) for line in aggs), p
+    assert not [h for h in HIGHER_ORDER if h in p], p
+    slow = plan.annotate(df).agg(F.sum((F.size("violations") > 0).cast("long"))).collect()[0][0]
+    assert q.collect()[0]["n"] == slow > 0
+
+
+def test_items_without_whole_array_form_keeps_exists(spark, tmp_path):
+    """Negative control: ``maxLength`` has no whole-array form, so
+    ``items`` still tests it per element with ``exists`` (the type check
+    is statically satisfied and drops out) — and the verdicts stay
+    exact."""
+    rows = [(["ab", "abcd"],), (["ab"],), ([],), (None,), ([None, "x"],), (["abcde"] * 9,)]
+    path = str(tmp_path / "ml")
+    spark.createDataFrame(rows, "xs array<string>").write.parquet(path)
+    df = spark.read.parquet(path)
+    plan = js.compile_schema(
+        {"properties": {"xs": {"items": {"type": "string", "maxLength": 3}}}})
+    q = df.agg(F.sum(plan.fail_predicate(df).cast("long")).alias("n"))
+    p = _final_plan(q)
+    slow = plan.annotate(df).agg(F.sum((F.size("violations") > 0).cast("long"))).collect()[0][0]
+    assert "exists(" in p and "lambdafunction" in p, p
+    assert q.collect()[0]["n"] == slow == 2
 
 
 def test_span_dedup_no_cartesian_and_single_hash_pass(spark):

@@ -56,7 +56,7 @@ GATEWAY_SCHEMA = {
 # (length, sha256) of each normalized optimized plan
 PINNED = {
     "gateway.fail_predicate": (
-        1034, "eedb53ca4973b5191fb27ecf8b246490cce984c827a2dd2a63f2a1f02fa7c011"),
+        1246, "e621954a2628131ba08799321b158f8a803e62e193fc770a0e02bb9ec2ad2983"),
     "transcripts.schema_check.verdicts": (
         1109, "e8cdb51fed9719ce875be8bcfd860fdf918c53dacdaa71d2460f45be0777430e"),
     "transcripts.schema_check.violations": (

@@ -130,3 +130,35 @@ def test_predicate_eq_missing_target_matches_array_path(spark):
     ):
         fast, slow = _bad_counts(js.compile_schema(doc), df)
         assert fast == slow == expect_bad, (doc, fast, slow)
+
+
+# py4j commands one bind of the gateway rule's fail_predicate may send
+# (calls, reflection and constructors; GC/detach messages excluded, as
+# they follow the Python collector, not the bind).  Measured: 1867 before
+# the whole-array items form and the direct comparison fails, 1619 after.
+GATEWAY_BIND_COMMANDS = 1700
+
+
+def test_gateway_bind_round_trips(spark, tmp_path, monkeypatch):
+    """Each Column operation on the driver is several py4j round trips
+    (PySpark captures a call site per operation), so the bind of the
+    gateway rule's verdict predicate is bounded by the commands it
+    sends to the JVM."""
+    path = str(tmp_path / "gw")
+    gateway_requests(spark, n_rows=10, partitions=1).write.parquet(path)
+    df = spark.read.parquet(path)
+    plan = js.compile_schema(GATEWAY_SCHEMA)
+    plan.fail_predicate(df)  # warm: the first bind also resolves JVM classes
+
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent = client.send_command, []
+
+    def counting(command, *args, **kwargs):
+        sent.append(command[:1])
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    plan.fail_predicate(df)
+    monkeypatch.undo()
+    n = sum(1 for kind in sent if kind != "m")  # "m": memory (GC) messages
+    assert 0 < n <= GATEWAY_BIND_COMMANDS, n

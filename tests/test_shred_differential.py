@@ -3,8 +3,11 @@ generated schemas and documents, on every route — variant JSON (the
 shredded verdicts and the single-Column predicate), static JSON and
 fixed typed columns — ``fail_predicate`` agrees row by row with
 ``size(violations) > 0``, and variant verdicts equal static verdicts on
-well-typed documents.  Hypothesis generates the cases; one Spark job
-evaluates a whole batch of documents per output."""
+well-typed documents.  Typed array columns under ``items`` check the
+lambda-free whole-array forms on both sides of their unroll guard, and
+the comparison keywords' direct predicates meet missing and NULL
+targets.  Hypothesis generates the cases; one Spark job evaluates a
+whole batch of documents per output."""
 
 from __future__ import annotations
 
@@ -14,6 +17,7 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 import jsonschema_spark as js
+from jsonschema_spark.plans.keywords_base import UNROLL
 
 KEYS = ["a", "b", "c"]
 TYPES = ["string", "integer", "number", "boolean", "object", "array", "string|integer"]
@@ -227,3 +231,103 @@ def test_typed_routes_fails_equal_violations(spark, case):
         rows.append((i, *[None if k not in d else PY[types[k]](d[k]) for k in KEYS]))
     fixed = spark.createDataFrame(rows, ", ".join(["id int"] + [f"{k} {DDL[types[k]]}" for k in KEYS]))
     assert not _disagreements(_predicate_vs_arrays(plan, fixed)), (schema, rows)
+
+
+# typed arrays under items: the whole-array forms ----------------------
+#
+# ``items`` over a typed array compiles each keyword of the item rule
+# to a lambda-free whole-array form where it has one (type: nothing
+# when the element type satisfies it; minimum/maximum: array_min/
+# array_max; enum/const on string, integral or boolean elements: the
+# element rule unrolled up to UNROLL elements, array_except beyond).
+# Lengths straddle the unroll guard, elements include NULLs, and
+# doubles include -0.0 and NaN.
+
+ELEMENTS = {
+    "string": st.sampled_from(["ball", "game", "x", "", "1", "true", "2.5"]),
+    "bigint": st.integers(-3, 3),
+    "double": st.sampled_from([0.0, -0.0, 1.0, 2.5, -3.0, float("nan"), 1e300]),
+}
+ITEM_LITERALS = st.one_of(
+    st.sampled_from(["ball", "game", "x", "", "1", "true", "2.5"]),
+    st.integers(-3, 3),
+    st.sampled_from([0.0, -0.0, 2.5]),
+    st.booleans(),
+)
+LENGTHS = [0, 1, UNROLL - 1, UNROLL, UNROLL + 1, 2 * UNROLL]
+
+
+def typed_arrays(dtype: str):
+    elem = st.one_of(st.none(), ELEMENTS[dtype])
+    sized = st.sampled_from(LENGTHS).flatmap(
+        lambda n: st.lists(elem, min_size=n, max_size=n))
+    return st.one_of(st.none(), sized)
+
+
+item_keywords = st.one_of(
+    st.fixed_dictionaries({"type": st.sampled_from(["string", "integer", "number", "boolean"])}),
+    st.fixed_dictionaries({"enum": st.lists(ITEM_LITERALS, min_size=1, max_size=4)}),
+    st.fixed_dictionaries({"const": ITEM_LITERALS}),
+    st.fixed_dictionaries({"minimum": st.sampled_from([-1, 0, 1.5]),
+                           "exclusiveMinimum": st.booleans()}),
+    st.fixed_dictionaries({"maximum": st.sampled_from([-1, 0, 1.5]),
+                           "exclusiveMaximum": st.booleans()}),
+)
+
+
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large])
+@given(data=st.data())
+def test_typed_items_fails_equals_violations(spark, data):
+    for dtype in ELEMENTS:
+        items = data.draw(st.lists(item_keywords, min_size=1, max_size=3).map(_merge))
+        arrays = data.draw(st.lists(typed_arrays(dtype), min_size=15, max_size=30))
+        # both sides of the unroll guard, every time: one odd element,
+        # last, in arrays of UNROLL, UNROLL + 1 and 2 * UNROLL elements
+        same, odd = {"string": ("ball", "zz"), "bigint": (0, 7), "double": (0.0, 9.5)}[dtype]
+        arrays += [[same] * (n - 1) + [odd] for n in (UNROLL, UNROLL + 1, 2 * UNROLL)]
+        schema = {"properties": {"xs": {"items": items}}}
+        df = spark.createDataFrame(list(enumerate(arrays)), f"id int, xs array<{dtype}>")
+        pairs = _predicate_vs_arrays(js.compile_schema(schema), df)
+        assert not _disagreements(pairs), (dtype, schema, arrays)
+
+
+# the comparison keywords' direct fails: missing and NULL targets -------
+
+TARGETS = ["a", "n", "zz"]  # string, bigint, absent from the table
+map_keywords = st.one_of(
+    st.tuples(st.sampled_from(["gt", "lt", "gte", "lte", "maxLengths", "minLengths"]),
+              st.sampled_from([-1, 0, 2])),
+    st.tuples(st.sampled_from(["startWiths", "endWiths", "containss", "neq"]),
+              st.sampled_from(["", "x", "0", "1"])),
+    st.tuples(st.just("patterns"), st.sampled_from(["^x", "^$", "[0-9]"])),
+    st.tuples(st.sampled_from(["in", "notin"]),
+              st.lists(st.sampled_from(["", "x", 0, 1, "1"]), max_size=3)),
+    st.tuples(st.just("keyMatch"), st.sampled_from(["", "x", 0, 1])),
+)
+
+
+@st.composite
+def comparison_schemas(draw):
+    kw, operand = draw(map_keywords)
+    targets = draw(st.lists(st.sampled_from(TARGETS), min_size=1, max_size=3, unique=True))
+    node = {kw: {t: operand for t in targets}}
+    single = draw(st.sampled_from(["startWith", "endWith", "contains"]))
+    props = {"a": {single: draw(st.sampled_from(["", "x", "0"]))}}
+    # in an if-condition the map forms are silent (no path, no info)
+    if draw(st.booleans()):
+        return {"if": node, "then": {"properties": props}, "else": {"required": ["a"]}}
+    return {**node, "properties": props}
+
+
+@settings(max_examples=12, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large])
+@given(schema=comparison_schemas(),
+       rows=st.lists(st.tuples(st.one_of(st.none(), st.sampled_from(["", "x", "x1", "0", "1"])),
+                               st.one_of(st.none(), st.integers(-2, 3))),
+                     min_size=10, max_size=25))
+def test_comparison_keywords_fails_equal_violations(spark, schema, rows):
+    df = spark.createDataFrame([(i, a, n) for i, (a, n) in enumerate(rows)],
+                               "id int, a string, n bigint")
+    pairs = _predicate_vs_arrays(js.compile_schema(schema), df)
+    assert not _disagreements(pairs), (schema, rows)
