@@ -2,7 +2,7 @@
 
 ``entry(spark)`` runs the flagship schema-validation query on sf0.001;
 ``queries()`` exposes one DataFrame-builder per implemented operator
-from SURVEY.md §2 (+ the table-level / training-data operators the
+from SURVEY.md §2 (+ the table-level and transcript operators the
 north star adds); ``oracle_sql()`` gives the DuckDB-equivalent ANSI SQL
 for each.  Column names are aliased identically on both sides; float
 results are either bit-deterministic (sequential folds, identical
@@ -19,13 +19,7 @@ from pyspark.sql import functions as F
 
 import jsonschema_spark as js
 from jsonschema_spark.core import session
-from jsonschema_spark.operators import (
-    checks,
-    dedup,
-    temporal,
-    text,
-    transcripts,
-)
+from jsonschema_spark.operators import checks, temporal, transcripts
 
 # --------------------------------------------------------------------
 # helpers
@@ -38,49 +32,11 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents, spread across cores: the testdata parquet is a single
-    file (one scan partition), but the shingle/hash operators are
-    CPU-bound — at corpus scale the scan already yields thousands of
+    file (one scan partition), but the per-document script queries
+    are CPU-bound — at corpus scale the scan already yields thousands of
     partitions; locally an explicit repartition stands in for that."""
     return _t(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
-    )
-
-
-# DuckDB-side md5→bigint: identical value to Spark's
-# conv(substr(md5(x),1,15),16,10)::long  (15 hex chars = 60 bits).
-_HEX = "0123456789abcdef"
-
-
-def _sql_md5_long(expr: str, seed: int = 0, start: int = 1) -> str:
-    """DuckDB replay of dedup.md5_long / hash_long_pair: 15 hex chars
-    of md5(salted) beginning at 1-based ``start`` (1 = h1, 16 = the
-    second slice of the same digest, i.e. hash_long_pair's h2)."""
-    salted = f"({expr}) || '#{seed}'" if seed else f"({expr})"
-    h = f"md5({salted})"
-    terms = " + ".join(
-        f"(strpos('{_HEX}', substr({h}, {start + i}, 1)) - 1) * {16 ** (14 - i)}"
-        for i in range(15)
-    )
-    return f"CAST({terms} AS BIGINT)"
-
-
-_SQL_NORM = "trim(regexp_replace(lower({col}), '\\s+', ' ', 'g'))"
-
-
-def _sql_dot(a: str, b: str, dims: int = 64) -> str:
-    """Sequential left-assoc double dot product — same fold order as
-    jsonschema_spark.operators.dedup.dot_double, so bit-identical."""
-    terms = " + ".join(
-        f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)"
-        for i in range(1, dims + 1)
-    )
-    return f"(0.0 + {terms})"
-
-
-def _sql_cosine(a: str, b: str, dims: int = 64) -> str:
-    return (
-        f"({_sql_dot(a, b, dims)} / "
-        f"(sqrt({_sql_dot(a, a, dims)}) * sqrt({_sql_dot(b, b, dims)})))"
     )
 
 
@@ -448,46 +404,6 @@ def q_json_extract_events(spark, sf_dir):
     )
 
 
-def q_dedup_exact(spark, sf_dir):
-    """Exact dedup: md5(normalized text) hash-groupBy."""
-    docs = _docs(spark, sf_dir)
-    return dedup.exact_dedup(docs)
-
-
-def q_dedup_ngram_jaccard(spark, sf_dir):
-    """n-gram Jaccard near-dup pairs via inverted-index self-join."""
-    docs = _docs(spark, sf_dir)
-    return dedup.ngram_jaccard_pairs(docs, n=5, threshold=0.5, df_cap=1000)
-
-
-def q_dedup_minhash_lsh(spark, sf_dir):
-    """MinHash+LSH candidate pairs with estimated Jaccard."""
-    docs = _docs(spark, sf_dir)
-    return dedup.minhash_lsh_pairs(docs, n=5, k=16, bands=4, threshold=0.5)
-
-
-def q_dedup_minhash_incremental(spark, sf_dir):
-    """Continuous-ingest dedup (operators/dedup.incremental_minhash_
-    pairs): the corpus is split into an already-ingested store half
-    (even doc_id -> band-row store, built once) and a new batch (odd
-    doc_id); the batch reports its internal pairs plus batch-vs-store
-    pairs by BROADCASTING its band rows at the store scan — the store
-    is never re-hashed and never shuffled.  Oracle = the full-corpus
-    LSH pairs restricted to pairs involving the new half (store-
-    internal pairs were already reported when that half was
-    ingested)."""
-    docs = _docs(spark, sf_dir)
-    old_half = docs.filter(F.col("doc_id") % 2 == 0)
-    new_half = docs.filter(F.col("doc_id") % 2 == 1)
-    _, store = dedup.incremental_minhash_pairs(
-        old_half, None, n=5, k=16, bands=4, threshold=0.5
-    )
-    pairs, _ = dedup.incremental_minhash_pairs(
-        new_half, store, n=5, k=16, bands=4, threshold=0.5
-    )
-    return pairs
-
-
 def q_stats_incremental(spark, sf_dir):
     """Incremental corpus stats (operators/incremental.py): the corpus
     arrives as two independently-scanned batches; corpus-wide stats
@@ -511,118 +427,6 @@ def q_stats_incremental(spark, sf_dir):
         "column", "kind", "n_rows", "n_nulls",
         "min_num", "max_num", "min_str", "max_str",
     )
-
-
-def q_dedup_clusters(spark, sf_dir):
-    """Pair→cluster resolution (dedup.duplicate_clusters): connected
-    components over the MinHash-LSH near-dup pair graph;
-    cluster_id = canonical (minimum) doc id.  Adaptive: a driver-small
-    pair graph (ONE count on the checkpointed edges, AQE-style runtime
-    switch) resolves via union-find; above the documented bound the
-    min-label-propagation + pointer-jumping join loop runs — identical
-    output, no driver-side graph state at scale."""
-    docs = _docs(spark, sf_dir)
-    pairs = dedup.minhash_lsh_pairs(docs, n=5, k=16, bands=4, threshold=0.5)
-    return dedup.duplicate_clusters(pairs)
-
-
-def q_dedup_simhash(spark, sf_dir):
-    """SimHash near-dup pairs, Hamming ≤ 3 (banded = exact by
-    pigeonhole at bands=4)."""
-    docs = _docs(spark, sf_dir)
-    return dedup.simhash_pairs(docs, max_distance=3, bands=4)
-
-
-def q_embedding_neardup(spark, sf_dir):
-    """Embedding-cosine near-dup pairs (brute-force mode for the
-    oracle; LSH-bucketed variant benchmarked separately)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return dedup.embedding_neardup_pairs(
-        emb, threshold=0.4, planes=0, dims=64
-    ).select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-
-
-def q_text_tokens(spark, sf_dir):
-    """Token counting: whitespace + BPE-ish regex pre-tokens."""
-    docs = _docs(spark, sf_dir)
-    return docs.select(
-        "doc_id",
-        text.token_count(F.col("text")).alias("n_tokens"),
-        text.bpe_token_count(F.col("text")).alias("n_bpe_tokens"),
-    )
-
-
-def q_lm_score_docs(spark, sf_dir):
-    """Unigram-LM pseudo-perplexity quality scoring (text.lm_counts +
-    text.lm_score): train token counts over the corpus, score each
-    document by mean add-alpha token log-probability.  Per-token
-    log-probs snap to scaled longs BEFORE the per-doc sum, so the
-    aggregation is order-independent and the oracle lands on identical
-    values."""
-    docs = _docs(spark, sf_dir)
-    counts = text.lm_counts(docs)
-    return text.lm_score(docs, counts)
-
-
-def q_quality_classifier_docs(spark, sf_dir):
-    """Model-based quality filtering (text.classifier_score): a linear
-    classifier over hashed binary features (distinct unigrams +
-    bigrams), md5-derived stub weights broadcast as the model table.
-    Integer weight sums keep the aggregation order-free; keep at the
-    default 0.5 threshold is the exact predicate sum(w9) >= 0."""
-    docs = _docs(spark, sf_dir)
-    weights = text.classifier_weights(spark, dim=1024, seed="qc-v1")
-    return text.classifier_score(docs, weights, dim=1024)
-
-
-def q_text_langid(spark, sf_dir):
-    """Heuristic stopword language-ID vs the labeled lang column."""
-    docs = _docs(spark, sf_dir)
-    return docs.select(
-        "doc_id",
-        "lang",
-        text.lang_id(F.col("text")).alias("lang_guess"),
-    )
-
-
-def q_text_quality(spark, sf_dir):
-    """Quality-feature ratios (rounded for hash stability)."""
-    docs = _docs(spark, sf_dir)
-    feat = text.quality_features(docs)
-    return feat.select(
-        "doc_id",
-        "n_tokens",
-        F.round("punct_ratio", 6).alias("punct_ratio"),
-        F.round("digit_ratio", 6).alias("digit_ratio"),
-        F.round("repetition_ratio", 6).alias("repetition_ratio"),
-    )
-
-
-def q_doc_fingerprint(spark, sf_dir):
-    """Winnowing-style min rolling-hash fingerprint per document."""
-    docs = _docs(spark, sf_dir)
-    return docs.select(
-        "doc_id", text.fingerprint(F.col("text"), window=8).alias("fingerprint")
-    )
-
-
-def q_span_dup_stats(spark, sf_dir):
-    """Cross-document duplicated-SPAN profile (substring-level dedup,
-    Lee et al. 2022 shape): winnow-selected 8-token window hashes,
-    per-doc duplicated fraction.  operators/dedup.py span_dup_stats."""
-    docs = _docs(spark, sf_dir)
-    return dedup.span_dup_stats(docs, width=8, winnow=4)
-
-
-BM25_QUERY = ["spark", "window", "hash", "join"]
-
-
-def q_bm25_topk(spark, sf_dir):
-    """BM25 top-20 retrieval over documents — zero-shuffle two-scan
-    design (codegen tf via string arithmetic + one broadcast stats
-    row).  operators/text.py bm25_topk."""
-    docs = _docs(spark, sf_dir)
-    return text.bm25_topk(docs, BM25_QUERY, k=20)
 
 
 def q_top_values(spark, sf_dir):
@@ -1281,17 +1085,6 @@ def q_validate_customer_combinators(spark, sf_dir):
     return plan.validate(cust, keys=["c_custkey"]).violations
 
 
-def q_embedding_neardup_lsh(spark, sf_dir):
-    """Random-hyperplane LSH near-dup (scale path; bucket-local join).
-    dims=64 pins the md5-derived hyperplane matrix driver-side
-    (dedup.hyperplane_signs) so the oracle rebuilds identical buckets;
-    subset-of-brute-force additionally asserted in tests."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return dedup.embedding_neardup_pairs(
-        emb, threshold=0.4, planes=6, dims=64
-    ).select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-
-
 def q_events_user_sequence(spark, sf_dir):
     """Skew-safe ordered collect (operators.skew.salted_collect_list):
     per-user event-type sequence under deterministic (ts, event_id)
@@ -1430,47 +1223,6 @@ def q_transcript_rollup(spark, sf_dir):
     return transcripts.conversation_rollup(tdf)
 
 
-def _pii_planted(docs: DataFrame) -> DataFrame:
-    """The fixture corpus carries no PII, so the query plants
-    deterministic doc_id-derived PII (email / ipv4 / phone / ssn
-    shapes) before scanning — the oracle replays the identical
-    concatenation, so extraction and redaction are exercised on known
-    ground truth."""
-    i = F.col("doc_id")
-    t = F.col("text")
-    t = F.when(i % 7 == 0, F.concat(t, F.format_string(" mail user%d@example.com", i))).otherwise(t)
-    t = F.when(i % 11 == 0, F.concat(t, F.format_string(" from 10.0.%d.1", i % 256))).otherwise(t)
-    t = F.when(i % 13 == 0, F.concat(t, F.format_string(" call 1555%07d", i % 10000))).otherwise(t)
-    t = F.when(i % 17 == 0, F.concat(t, F.format_string(" ssn %03d-45-6789", i % 1000))).otherwise(t)
-    return docs.select("doc_id", t.alias("text"))
-
-
-def q_pii_scan_docs(spark, sf_dir):
-    """PII detection + redaction (operators/text.py pii_features /
-    pii_redact): per-kind match counts and the placeholder-redacted
-    text — a codegen'd map-only pass (RE2-subset regex, no Python)."""
-    planted = _pii_planted(_docs(spark, sf_dir))
-    feat = text.pii_features(planted)
-    return feat.select(
-        "doc_id", "pii_email", "pii_ipv4", "pii_phone", "pii_ssn",
-        "pii_total", text.pii_redact(F.col("text")).alias("redacted"),
-    )
-
-
-def q_text_repetition(spark, sf_dir):
-    """Gopher-style repetition features: duplicate bigram/trigram
-    fractions and top-bigram share, all higher-order-function Column
-    expressions (zero shuffles)."""
-    docs = _docs(spark, sf_dir)
-    feat = text.repetition_features(docs)
-    return feat.select(
-        "doc_id",
-        F.round("dup_bigram_frac", 6).alias("dup_bigram_frac"),
-        F.round("dup_trigram_frac", 6).alias("dup_trigram_frac"),
-        F.round("top_bigram_frac", 6).alias("top_bigram_frac"),
-    )
-
-
 def q_transcript_tool_pairing(spark, sf_dir):
     """Tool-call/result pairing over the derived transcripts
     (operators/transcripts.tool_call_pairing): tool turns must carry a
@@ -1528,17 +1280,6 @@ def q_migration_impact_orders(spark, sf_dir):
     )
 
 
-def q_chunk_docs(spark, sf_dir):
-    """Fixed-size overlapping token chunking
-    (operators/text.chunk_documents): chunk i covers tokens
-    [i*16, i*16+24) — the RAG-index / pretraining-example windowing
-    step.  Map-only: codegen tokenization, ONE Arrow kernel for the
-    chunk build (per-chunk string joins are interpreted under HOF
-    lambdas — pathology #3), posexplode; no shuffle at any size."""
-    docs = _docs(spark, sf_dir)
-    return text.chunk_documents(docs, size=24, stride=16)
-
-
 def q_volume_anomalies_events(spark, sf_dir):
     """Volume-anomaly detection over per-day ingest counts
     (operators/incremental.volume_anomalies): robust trailing-window
@@ -1553,55 +1294,6 @@ def q_volume_anomalies_events(spark, sf_dir):
         F.date_trunc("day", F.col("ts")).alias("bucket")
     ).agg(F.count(F.lit(1)).alias("n_rows"))
     return volume_anomalies(hist)
-
-
-def _accent_suffix():
-    return (
-        F.when(F.col("doc_id") % 7 == 0, F.lit(" café"))
-        .when(F.col("doc_id") % 11 == 0, F.lit(" naïve"))
-        .when(F.col("doc_id") % 13 == 0, F.lit(" Ångström"))
-        .otherwise(F.lit(""))
-    )
-
-
-def q_clean_text_docs(spark, sf_dir):
-    """Unicode text normalization (kernels.normalize_text_unicode):
-    NFC + accent stripping over deterministically planted accented
-    suffixes — ONE Arrow batch pass (Spark has no NFC builtin; the
-    row-at-a-time UDF is the slow path).  Map-only, zero shuffles."""
-    from jsonschema_spark.operators import kernels
-
-    docs = _docs(spark, sf_dir)
-    planted = docs.select(
-        "doc_id", F.concat(F.col("text"), _accent_suffix()).alias("t")
-    )
-    cleaned = kernels.normalize_text_unicode(F.col("t"), strip_accents=True)
-    return planted.select(
-        "doc_id",
-        F.length("t").cast("int").alias("n_before"),
-        F.length(cleaned).cast("int").alias("n_after"),
-        (cleaned != F.col("t")).alias("changed"),
-        cleaned.alias("text_clean"),
-    )
-
-
-def q_blocklist_docs(spark, sf_dir):
-    """Blocklist phrase matching (text.blocklist_hits): overlapping
-    token-run occurrence counts via a broadcast first-word candidate
-    join + map-side window-slice verification — the 100k-phrase-safe
-    replacement for one giant regex alternation.  The phrase list is
-    synthesized deterministically from the corpus itself (leading
-    bigrams/trigrams of md5-selected documents)."""
-    docs = _docs(spark, sf_dir)
-    t = dedup.tokens(F.col("text"))
-    p2 = docs.filter(F.col("doc_id") % 97 == 0).select(
-        F.array_join(F.slice(t, 1, 2), " ").alias("phrase")
-    )
-    p3 = docs.filter(F.col("doc_id") % 89 == 0).select(
-        F.array_join(F.slice(t, 1, 3), " ").alias("phrase")
-    )
-    phrases = p2.unionByName(p3).filter(F.col("phrase") != "").distinct()
-    return text.blocklist_hits(docs, phrases)
 
 
 def q_tool_loops(spark, sf_dir):
@@ -1665,26 +1357,6 @@ def q_fd_part_supplier(spark, sf_dir):
     return fd.violating_keys(_t(spark, sf_dir, "lineitem"))
 
 
-def q_lm_bigram_docs(spark, sf_dir):
-    """Stupid-backoff bigram LM scoring (text.lm_bigram_counts +
-    text.lm_score_bigram): train unigram+bigram counts on 80% of the
-    corpus (doc_id%5 != 0), score ALL documents — the held-out fifth
-    exercises the unseen-bigram backoff path.  Per-bigram log-scores
-    snap to scaled longs before the per-doc sum (order-free)."""
-    docs = _docs(spark, sf_dir)
-    train = docs.filter(F.col("doc_id") % 5 != 0)
-    return text.lm_score_bigram(
-        docs, text.lm_counts(train), text.lm_bigram_counts(train)
-    )
-
-
-def q_token_entropy_docs(spark, sf_dir):
-    """Token-distribution entropy (text.token_entropy): the
-    information-theoretic repetitiveness signal; c*ln(c) terms snap to
-    scaled longs before the exact per-doc sum."""
-    return text.token_entropy(_docs(spark, sf_dir))
-
-
 def q_script_builders_docs(spark, sf_dir):
     """r5 stateful-helper analogs end-to-end (str_builder write/string,
     atomic_int add, url.Values set/encode — funcs_obj.go:322,656,859):
@@ -1742,30 +1414,17 @@ def _rotate(qs: dict, path: str | None = None) -> dict:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return _rotate({
-        "dedup_minhash_incremental": q_dedup_minhash_incremental,
-        "dedup_clusters": q_dedup_clusters,
-        "lm_score_docs": q_lm_score_docs,
-        "quality_classifier_docs": q_quality_classifier_docs,
-        "span_dup_docs": q_span_dup_stats,
-        "bm25_topk_docs": q_bm25_topk,
         "transcript_integrity": q_transcript_integrity,
         "transcript_rollup": q_transcript_rollup,
-        "pii_scan_docs": q_pii_scan_docs,
-        "text_repetition": q_text_repetition,
         "transcript_tool_pairing": q_transcript_tool_pairing,
         "transcript_merge_runs": q_transcript_merge_runs,
         "migration_impact_orders": q_migration_impact_orders,
         "volume_anomalies_events": q_volume_anomalies_events,
-        "clean_text_docs": q_clean_text_docs,
         "conversation_verdicts": q_conversation_verdicts,
-        "chunk_docs": q_chunk_docs,
-        "blocklist_docs": q_blocklist_docs,
         "tool_loops": q_tool_loops,
         "tool_latency": q_tool_latency,
         "transcript_skew_report": q_transcript_skew_report,
         "fd_part_supplier": q_fd_part_supplier,
-        "lm_bigram_docs": q_lm_bigram_docs,
-        "token_entropy_docs": q_token_entropy_docs,
         "script_builders_docs": q_script_builders_docs,
         "validate_orders": q_validate_orders,
         "validate_events": q_validate_events,
@@ -1813,16 +1472,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rollup_orders": q_rollup_orders,
         "scalar_funcs": q_scalar_funcs,
         "json_extract_events": q_json_extract_events,
-        "dedup_exact": q_dedup_exact,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_simhash": q_dedup_simhash,
-        "embedding_neardup": q_embedding_neardup,
-        "embedding_neardup_lsh": q_embedding_neardup_lsh,
-        "text_tokens": q_text_tokens,
-        "text_langid": q_text_langid,
-        "text_quality": q_text_quality,
-        "doc_fingerprint": q_doc_fingerprint,
     })
 
 
@@ -1881,354 +1530,6 @@ def _oracle_validate_events() -> str:
     UNION ALL
     SELECT event_id, '$.value', 'value must be larger or equal than 5'
       FROM e WHERE event_type = 'purchase' AND value IS NOT NULL AND NOT (value >= 5)
-    """
-
-
-def _oracle_minhash(
-    pair_where: str = "",
-    docs_sql: str = "SELECT doc_id, text FROM documents",
-) -> str:
-    # signature: ONE md5-derived base hash per distinct 5-gram shingle,
-    # then 16 affine universal-hash maps (a_i*h+b_i) mod P minimized per
-    # doc (dedup.minhash_coeffs); bands of 4 components; candidate =
-    # pair sharing an identical band; est = matching components / 16.
-    # ``docs_sql`` supplies the (doc_id, text) source — the
-    # conversation-level variant rebuilds the corpus from split turns.
-    from jsonschema_spark.operators.dedup import MINHASH_P, minhash_coeffs
-
-    norm = _SQL_NORM.format(col="text")
-    coeffs = minhash_coeffs(16)
-    base_h = f"({_sql_md5_long('sh')} % {MINHASH_P})"
-    mins = ",\n           ".join(
-        f"min(({base_h} * {a} + {b}) % {MINHASH_P}) AS m{i + 1}"
-        for i, (a, b) in enumerate(coeffs)
-    )
-    sig_list = ", ".join(f"m{s}" for s in range(1, 17))
-    bands = []
-    for b in range(4):
-        comp = ", ".join(f"m{b * 4 + i}" for i in range(1, 5))
-        bands.append(
-            f"SELECT doc_id, {b} AS band, concat_ws('|', {comp}) AS bkey, [{sig_list}] AS sig FROM sigs"
-        )
-    band_union = "\nUNION ALL\n".join(bands)
-    eq_terms = " + ".join(f"CASE WHEN a.sig[{i}] = b.sig[{i}] THEN 1 ELSE 0 END" for i in range(1, 17))
-    return f"""
-    WITH src AS ({docs_sql}),
-    docs AS (SELECT doc_id, {norm} AS n FROM src),
-    sh AS (
-      SELECT doc_id, DISTINCT_SH.sh FROM docs,
-        LATERAL (SELECT DISTINCT unnest(list_transform(
-            range(1, greatest(length(n) - 4, 1) + 1),
-            i -> substr(n, CAST(i AS INT), 5))) AS sh) DISTINCT_SH
-    ),
-    sigs AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id),
-    banded AS ({band_union}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, a.sig AS sig, b.sig AS sigb
-      FROM banded a JOIN banded b
-        ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-    ),
-    est AS (
-      SELECT id_a, id_b,
-             ({" + ".join(f"CASE WHEN sig[{i}] = sigb[{i}] THEN 1 ELSE 0 END" for i in range(1, 17))}) / 16.0
-               AS est_jaccard
-      FROM cand
-    )
-    SELECT id_a, id_b, est_jaccard FROM est
-    WHERE est_jaccard >= 0.5{pair_where}
-    """
-
-
-def _oracle_simhash() -> str:
-    norm = _SQL_NORM.format(col="text")
-    pow2_60 = "[" + ", ".join(str(1 << b) for b in range(60)) + "]"
-    powbit = "[" + ", ".join(
-        [str(1 << b) for b in range(63)] + [str(-(1 << 63))]
-    ) + "]"
-    return f"""
-    WITH docs AS (SELECT doc_id, {norm} AS n FROM documents),
-    toks AS (SELECT doc_id, unnest(string_split(n, ' ')) AS tok FROM docs),
-    hashed AS (
-      SELECT doc_id,
-             {_sql_md5_long('tok', 1)} AS h1,
-             {_sql_md5_long('tok', 1, start=16)} AS h2
-      FROM toks
-    ),
-    votes AS (
-      SELECT doc_id, r.range AS b,
-             SUM(CASE WHEN (CASE WHEN r.range < 60
-                                 THEN (h1 // ({pow2_60})[CAST(r.range AS INT) + 1]) % 2
-                                 ELSE (h2 // ({pow2_60})[CAST(r.range AS INT) - 59]) % 2
-                            END) = 1
-                      THEN 1 ELSE -1 END) AS v
-      FROM hashed CROSS JOIN range(64) r
-      GROUP BY doc_id, r.range
-    ),
-    sig AS (
-      SELECT doc_id,
-             CAST(SUM(CASE WHEN v > 0 THEN ({powbit})[CAST(b AS INT) + 1] ELSE 0 END) AS BIGINT) AS s
-      FROM votes GROUP BY doc_id
-    )
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           bit_count(xor(a.s, b.s)) AS hamming
-    FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.s, b.s)) <= 3
-    """
-
-
-def _oracle_fingerprint() -> str:
-    norm = _SQL_NORM.format(col="text")
-    gram = "array_to_string(toks[CAST(i AS INT):CAST(i AS INT)+7], ' ')"
-    return f"""
-    WITH d AS (SELECT doc_id, string_split({norm}, ' ') AS toks FROM documents)
-    SELECT doc_id,
-           list_min(list_transform(
-             range(1, greatest(len(toks) - 7, 1) + 1),
-             i -> {_sql_md5_long(gram)})) AS fingerprint
-    FROM d
-    """
-
-
-def _oracle_span_dup_stats(width: int = 8, winnow: int = 4) -> str:
-    norm = _SQL_NORM.format(col="text")
-    gram = (
-        f"array_to_string(toks[CAST(i AS INT):CAST(i AS INT)+{width - 1}], ' ')"
-    )
-    return f"""
-    WITH d AS (SELECT doc_id, string_split({norm}, ' ') AS toks FROM documents),
-    w AS (SELECT doc_id,
-                 list_transform(
-                   range(1, greatest(len(toks) - {width - 1}, 1) + 1),
-                   i -> {_sql_md5_long(gram)}) AS hs
-          FROM d),
-    s0 AS (SELECT doc_id, hs, unnest(range(1, len(hs) + 1)) AS p FROM w),
-    s AS (SELECT doc_id, hs[CAST(p AS INT)] AS h
-          FROM s0
-          WHERE hs[CAST(p AS INT)]
-                = list_min(hs[CAST(p AS INT):CAST(p AS INT)+{winnow - 1}])),
-    hot AS (SELECT h FROM s GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
-    per AS (SELECT s.doc_id,
-                   count(*) AS n_selected,
-                   CAST(sum(CASE WHEN hot.h IS NOT NULL THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_dup
-            FROM s LEFT JOIN hot ON s.h = hot.h
-            GROUP BY s.doc_id)
-    SELECT doc_id, n_selected, n_dup,
-           round(CAST(n_dup AS DOUBLE) / CAST(n_selected AS DOUBLE), 6)
-             AS dup_frac
-    FROM per
-    """
-
-
-def _oracle_bm25_topk(k: int = 20, k1: float = 1.2, b: float = 0.75) -> str:
-    norm = _SQL_NORM.format(col="text")
-    terms = list(dict.fromkeys(BM25_QUERY))
-    tf_cols = ", ".join(
-        "CAST(floor((length(sp) - length(replace(sp, ' {t} ', '')))"
-        " / {L}) AS BIGINT) AS tf_{i}".format(t=t, L=len(t) + 2, i=i)
-        for i, t in enumerate(terms)
-    )
-    df_cols = ", ".join(
-        f"CAST(sum(CASE WHEN tf_{i} > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_{i}"
-        for i in range(len(terms))
-    )
-    # mirror the Spark expression tree exactly: same literals, same
-    # associativity, per-term snap to round(c*1e9) BIGINT before summing
-    contribs = " + ".join(
-        f"""(CASE WHEN tf_{i} > 0 THEN CAST(round(
-            ln(1.0 + (CAST(N AS DOUBLE) - CAST(df_{i} AS DOUBLE) + 0.5)
-                      / (CAST(df_{i} AS DOUBLE) + 0.5))
-            * (CAST(tf_{i} AS DOUBLE) * ({k1} + 1.0))
-            / (CAST(tf_{i} AS DOUBLE)
-               + {k1} * ((1.0 - {b}) + {b} * CAST(dl AS DOUBLE)
-                         / (CAST(L AS DOUBLE) / CAST(N AS DOUBLE))))
-            * 1e9, 0) AS BIGINT) ELSE 0 END)"""
-        for i in range(len(terms))
-    )
-    return f"""
-    WITH base AS (
-      SELECT doc_id, {norm} AS nrm FROM documents),
-    feat AS (
-      SELECT doc_id,
-             CASE WHEN length(nrm) = 0 THEN 0
-                  ELSE len(string_split(nrm, ' ')) END AS dl,
-             {tf_cols}
-      FROM (SELECT doc_id, nrm,
-                   ' ' || replace(nrm, ' ', '  ') || ' ' AS sp FROM base)),
-    stats AS (
-      SELECT count(*) AS N, CAST(sum(dl) AS BIGINT) AS L, {df_cols} FROM feat),
-    scored AS (
-      SELECT doc_id, CAST(({contribs}) AS DOUBLE) / 1e9 AS s
-      FROM feat, stats)
-    SELECT doc_id, round(s, 6) AS score
-    FROM scored WHERE s > 0
-    ORDER BY score DESC, doc_id ASC LIMIT {k}
-    """
-
-
-def _oracle_langid() -> str:
-    def hits(words: list[str]) -> str:
-        terms = " + ".join(
-            "CAST(floor((length(p) - length(replace(p, ' {w} ', ''))) / {L}) AS INT)".format(
-                w=w, L=len(w) + 2
-            )
-            for w in words
-        )
-        return f"({terms})"
-
-    langs = sorted(text.STOPWORDS.items())
-    cols = ", ".join(f"{hits(ws)} AS h_{lang}" for lang, ws in langs)
-    # tie-break = first lang in ascending order with max hits (>0)
-    case = "CASE "
-    names = [lang for lang, _ in langs]
-    for i, lang in enumerate(names):
-        conds = [f"h_{lang} >= h_{other}" for other in names[i + 1:]]
-        conds.append(f"h_{lang} > 0")
-        case += f"WHEN {' AND '.join(conds)} THEN '{lang}' "
-    case += "ELSE 'und' END"
-    norm = _SQL_NORM.format(col="text")
-    return f"""
-    WITH d AS (SELECT doc_id, lang, ' ' || {norm} || ' ' AS p FROM documents),
-    h AS (SELECT doc_id, lang, {cols} FROM d)
-    SELECT doc_id, lang, {case} AS lang_guess FROM h
-    """
-
-
-def _oracle_ngram_jaccard() -> str:
-    norm = _SQL_NORM.format(col="text")
-    return f"""
-    WITH docs AS (SELECT doc_id AS id, {norm} AS n FROM documents),
-    sh0 AS (
-      SELECT id, DISTINCT_SH.sh FROM docs,
-        LATERAL (SELECT DISTINCT unnest(list_transform(
-            range(1, greatest(length(n) - 4, 1) + 1),
-            i -> substr(n, CAST(i AS INT), 5))) AS sh) DISTINCT_SH
-    ),
-    szs AS (SELECT id, count(*) AS n_sh FROM sh0 GROUP BY id),
-    rare AS (SELECT sh FROM sh0 GROUP BY sh HAVING count(*) <= 1000),
-    ex AS (SELECT sh0.id, sh0.sh FROM sh0 JOIN rare USING (sh)),
-    inter AS (
-      SELECT a.id AS id_a, b.id AS id_b, count(*) AS i
-      FROM ex a JOIN ex b ON a.sh = b.sh AND a.id < b.id
-      GROUP BY a.id, b.id
-    )
-    SELECT id_a, id_b,
-           i / (sa.n_sh + sb.n_sh - i) AS jaccard
-    FROM inter
-    JOIN szs sa ON sa.id = id_a
-    JOIN szs sb ON sb.id = id_b
-    WHERE i / (sa.n_sh + sb.n_sh - i) >= 0.5
-    """
-
-
-def _oracle_lm_score(alpha: float = 0.5) -> str:
-    """Replay of text.lm_counts + lm_score: identical tokenization
-    (normalized whitespace split, empties dropped), identical add-alpha
-    probability rationals, per-token log-prob snapped to a scaled
-    BIGINT before the (exact, order-free) per-doc integer sum."""
-    norm = _SQL_NORM.format(col="text")
-    return f"""
-    WITH tk AS (
-      SELECT doc_id, token FROM (
-        SELECT doc_id, unnest(string_split({norm}, ' ')) AS token
-        FROM documents
-      ) WHERE token <> ''
-    ),
-    counts AS (SELECT token, COUNT(*) AS n FROM tk GROUP BY token),
-    tot AS (SELECT SUM(n) AS t, COUNT(*) AS v FROM counts),
-    scored AS (
-      SELECT tk.doc_id,
-             CAST(round(ln((CAST(c.n AS DOUBLE) + {alpha})
-                    / (CAST(tot.t AS DOUBLE) + {alpha} * (CAST(tot.v AS DOUBLE) + 1.0)))
-                  * 1000000000.0) AS BIGINT) AS lp9
-      FROM tk JOIN counts c USING (token), tot
-    ),
-    agg AS (
-      SELECT doc_id, SUM(lp9) AS s9, COUNT(*) AS n_tokens
-      FROM scored GROUP BY doc_id
-    )
-    SELECT d.doc_id,
-           COALESCE(a.n_tokens, 0) AS n_tokens,
-           round(CAST(a.s9 AS DOUBLE) / CAST(a.n_tokens AS DOUBLE) / 1000000000.0, 6)
-             AS avg_logp,
-           round(exp(-(CAST(a.s9 AS DOUBLE) / CAST(a.n_tokens AS DOUBLE) / 1000000000.0)), 6)
-             AS ppl
-    FROM documents d LEFT JOIN agg a USING (doc_id)
-    """
-
-
-def _oracle_quality_classifier(dim: int = 1024, seed: str = "qc-v1") -> str:
-    """Replay of text.classifier_weights + classifier_score: identical
-    tokenization, distinct unigrams + bigrams (empties dropped), the
-    same md5-derived bucket hash and stub weight table, exact integer
-    weight sum per doc, float division/exp only at output.  keep at
-    threshold 0.5 is the exact integer predicate sum(w9) >= 0."""
-    norm = _SQL_NORM.format(col="text")
-    bigram = "array_to_string(toks[CAST(i AS INT):CAST(i AS INT)+1], ' ')"
-    seeded = "'" + seed + "#' || CAST(b AS VARCHAR)"
-    w9 = f"({_sql_md5_long(seeded)} % 2001 - 1000)"
-    score = "CAST(a.s9 AS DOUBLE) / (1000.0 * CAST(a.n_feats AS DOUBLE))"
-    return f"""
-    WITH d AS (SELECT doc_id, string_split({norm}, ' ') AS toks FROM documents),
-    f0 AS (
-      SELECT doc_id, unnest(list_distinct(toks)) AS g FROM d
-      UNION ALL
-      SELECT doc_id,
-             unnest(list_distinct(list_transform(
-               range(1, greatest(len(toks) - 1, 0) + 1),
-               i -> {bigram}))) AS g
-      FROM d
-    ),
-    f AS (SELECT doc_id, g FROM f0 WHERE g <> ''),
-    w AS (SELECT CAST(b AS BIGINT) AS bucket, {w9} AS w9
-          FROM range({dim}) t(b)),
-    a AS (
-      SELECT f.doc_id, CAST(SUM(w.w9) AS BIGINT) AS s9, COUNT(*) AS n_feats
-      FROM f LEFT JOIN w ON ({_sql_md5_long("f.g")} % {dim}) = w.bucket
-      GROUP BY f.doc_id
-    )
-    SELECT d0.doc_id,
-           COALESCE(a.n_feats, 0) AS n_feats,
-           round(COALESCE({score}, 0.0), 6) AS score,
-           round(1.0 / (1.0 + exp(-COALESCE({score}, 0.0))), 6) AS prob,
-           (COALESCE({score}, 0.0) >= 0.0) AS keep
-    FROM (SELECT doc_id FROM documents) d0 LEFT JOIN a USING (doc_id)
-    """
-
-
-def _oracle_embedding_lsh() -> str:
-    """Rebuild the hyperplane sign matrix with the SAME driver-side
-    function the engine uses, project (sequential fold order matches
-    dot_double), bucket on the sign bits, then bucket-local pairs."""
-    from jsonschema_spark.operators.dedup import hyperplane_signs
-
-    signs = hyperplane_signs(6, 64, 42)
-
-    def proj(p: int) -> str:
-        terms = " + ".join(
-            f"CAST(e.embedding[{i + 1}] AS DOUBLE) * {signs[p][i]:.1f}"
-            for i in range(64)
-        )
-        return f"(0.0 + {terms})"
-
-    bucket = "concat(" + ", ".join(
-        f"CASE WHEN {proj(p)} > 0 THEN '1' ELSE '0' END" for p in range(6)
-    ) + ")"
-    cos = _sql_cosine("a.embedding", "b.embedding")
-    return f"""
-    WITH bk AS (SELECT vec_id, embedding, {bucket} AS bucket FROM embeddings e)
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b, round({cos}, 6) AS cosine
-    FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-    WHERE {cos} >= 0.4
-    """
-
-
-def _oracle_embedding_neardup() -> str:
-    cos = _sql_cosine("a.embedding", "b.embedding")
-    return f"""
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b, round({cos}, 6) AS cosine
-    FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-    WHERE {cos} >= 0.4
     """
 
 
@@ -2345,26 +1646,7 @@ def _oracle_stats_incremental() -> str:
     return "\nUNION ALL\n".join(parts)
 
 
-def _oracle_dedup_clusters() -> str:
-    # connected components over the SAME minhash pair graph, as a
-    # recursive label closure: r enumerates every label reachable from
-    # each node; min over them = the Spark side's converged min-label.
-    inner = _oracle_minhash()
-    return f"""
-    WITH RECURSIVE pairs AS (SELECT id_a, id_b FROM ({inner}) q),
-    e AS (SELECT id_a AS u, id_b AS v FROM pairs
-          UNION SELECT id_b, id_a FROM pairs),
-    r AS (
-      SELECT u AS id, u AS lab FROM e
-      UNION
-      SELECT e.u AS id, r.lab FROM e JOIN r ON r.id = e.v
-    )
-    SELECT id, min(lab) AS cluster_id FROM r GROUP BY id
-    """
-
-
 def oracle_sql() -> dict[str, str]:
-    norm = _SQL_NORM.format(col="text")
     return {
         "validate_orders": _oracle_validate_orders(),
         "validate_events": _oracle_validate_events(),
@@ -3160,55 +2442,18 @@ def oracle_sql() -> dict[str, str]:
             SELECT event_id, CAST(json_extract_string(props, '$.k') AS INT) AS k
             FROM events
         """,
-        "dedup_exact": f"""
-            SELECT md5({norm}) AS text_hash,
-                   min(doc_id) AS keep_id,
-                   count(*) AS dup_count
-            FROM documents GROUP BY 1
-        """,
-        "dedup_ngram_jaccard": _oracle_ngram_jaccard(),
-        "dedup_minhash_lsh": _oracle_minhash(),
-        "dedup_minhash_incremental": _oracle_minhash(
-            " AND (id_a % 2 = 1 OR id_b % 2 = 1)"
-        ),
-        "dedup_simhash": _oracle_simhash(),
-        "embedding_neardup": _oracle_embedding_neardup(),
-        "embedding_neardup_lsh": _oracle_embedding_lsh(),
-        "text_tokens": f"""
-            SELECT doc_id,
-                   CASE WHEN length({norm}) = 0 THEN 0
-                        ELSE len(string_split({norm}, ' ')) END AS n_tokens,
-                   len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]+'))
-                       AS n_bpe_tokens
-            FROM documents
-        """,
-        "text_langid": _oracle_langid(),
-        "lm_score_docs": _oracle_lm_score(),
-        "quality_classifier_docs": _oracle_quality_classifier(),
-        "text_quality": _oracle_text_quality(),
-        "doc_fingerprint": _oracle_fingerprint(),
-        "span_dup_docs": _oracle_span_dup_stats(),
-        "bm25_topk_docs": _oracle_bm25_topk(),
         "transcript_integrity": _oracle_transcript_integrity(),
         "transcript_rollup": _oracle_transcript_rollup(),
-        "dedup_clusters": _oracle_dedup_clusters(),
         "stats_incremental": _oracle_stats_incremental(),
-        "pii_scan_docs": _oracle_pii_scan(),
-        "text_repetition": _oracle_text_repetition(),
         "transcript_tool_pairing": _oracle_tool_pairing(),
         "transcript_merge_runs": _oracle_transcript_merge_runs(),
         "migration_impact_orders": _oracle_migration_impact_orders(),
         "volume_anomalies_events": _oracle_volume_anomalies(),
-        "clean_text_docs": _oracle_clean_text(),
         "conversation_verdicts": _oracle_conversation_verdicts(),
-        "chunk_docs": _oracle_chunk_docs(),
-        "blocklist_docs": _oracle_blocklist(),
         "tool_loops": _oracle_tool_loops(),
         "tool_latency": _oracle_tool_latency(),
         "transcript_skew_report": _oracle_transcript_skew_report(),
         "fd_part_supplier": _oracle_fd_part_supplier(),
-        "lm_bigram_docs": _oracle_lm_bigram(),
-        "token_entropy_docs": _oracle_token_entropy(),
         "script_builders_docs": """
     SELECT doc_id,
            'doc ' || CAST(doc_id AS VARCHAR)
@@ -3218,110 +2463,6 @@ def oracle_sql() -> dict[str, str]:
     FROM documents
     """,
     }
-
-
-def _oracle_token_entropy() -> str:
-    """Replay of text.token_entropy: identical tokenization, c*ln(c)
-    snapped to a scaled BIGINT per distinct (doc, token) before the
-    exact per-doc sum, same fixed-order double derivation."""
-    norm = _SQL_NORM.format(col="text")
-    return f"""
-    WITH tk AS (
-      SELECT doc_id, token FROM (
-        SELECT doc_id, unnest(string_split({norm}, ' ')) AS token
-        FROM documents
-      ) WHERE token <> ''
-    ),
-    cnt AS (
-      SELECT doc_id, token, CAST(COUNT(*) AS BIGINT) AS c
-      FROM tk GROUP BY doc_id, token
-    ),
-    agg AS (
-      SELECT doc_id,
-             CAST(SUM(c) AS BIGINT) AS n_tokens,
-             CAST(COUNT(*) AS BIGINT) AS n_distinct,
-             CAST(SUM(CAST(round(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE))
-                       * 1000000000.0) AS BIGINT)) AS BIGINT) AS s9
-      FROM cnt GROUP BY doc_id
-    )
-    SELECT d.doc_id,
-           COALESCE(a.n_tokens, 0) AS n_tokens,
-           COALESCE(a.n_distinct, 0) AS n_distinct,
-           round(ln(CAST(a.n_tokens AS DOUBLE))
-                 - CAST(a.s9 AS DOUBLE) / 1000000000.0
-                   / CAST(a.n_tokens AS DOUBLE), 6) AS entropy,
-           round(CASE WHEN a.n_distinct > 1
-                 THEN (ln(CAST(a.n_tokens AS DOUBLE))
-                       - CAST(a.s9 AS DOUBLE) / 1000000000.0
-                         / CAST(a.n_tokens AS DOUBLE))
-                      / ln(CAST(a.n_distinct AS DOUBLE))
-                 ELSE 0.0 END, 6) AS norm_entropy
-    FROM documents d LEFT JOIN agg a USING (doc_id)
-    """
-
-
-def _oracle_lm_bigram(alpha: float = 0.5, backoff: float = 0.4) -> str:
-    """Replay of lm_score_bigram: identical tokenization and bigram
-    explode, the same seen-branch n2/n1 conditional vs backoff *
-    add-alpha unigram expression (operand order preserved), per-bigram
-    log-score snapped to a scaled BIGINT before the exact per-doc
-    sum.  Training restricted to doc_id%5 != 0 like the engine query,
-    so the unseen branch is live."""
-    norm = _SQL_NORM.format(col="text")
-    return f"""
-    WITH dt AS (
-      SELECT doc_id, string_split({norm}, ' ') AS t FROM documents
-    ),
-    tk AS (
-      SELECT doc_id, token FROM (
-        SELECT doc_id, unnest(t) AS token FROM dt WHERE doc_id % 5 <> 0
-      ) WHERE token <> ''
-    ),
-    uni AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS n FROM tk GROUP BY token),
-    tot AS (SELECT CAST(SUM(n) AS BIGINT) AS t, CAST(COUNT(*) AS BIGINT) AS v FROM uni),
-    bg_train AS (
-      SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS n2 FROM (
-        SELECT t[i] AS w1, t[i + 1] AS w2 FROM (
-          SELECT t, generate_subscripts(t, 1) AS i FROM dt
-          WHERE doc_id % 5 <> 0 AND len(t) >= 2
-        ) WHERE i < len(t)
-      ) WHERE w1 <> '' AND w2 <> '' GROUP BY w1, w2
-    ),
-    bg_doc AS (
-      SELECT doc_id, w1, w2 FROM (
-        SELECT doc_id, t[i] AS w1, t[i + 1] AS w2 FROM (
-          SELECT doc_id, t, generate_subscripts(t, 1) AS i FROM dt
-          WHERE len(t) >= 2
-        ) WHERE i < len(t)
-      ) WHERE w1 <> '' AND w2 <> ''
-    ),
-    scored AS (
-      SELECT d.doc_id,
-             CAST(round(ln(
-               CASE WHEN b.n2 IS NOT NULL AND u1.n IS NOT NULL
-                    THEN CAST(b.n2 AS DOUBLE) / CAST(u1.n AS DOUBLE)
-                    ELSE {backoff} * ((CAST(COALESCE(u2.n, 0) AS DOUBLE) + {alpha})
-                         / (CAST(tot.t AS DOUBLE) + {alpha} * (CAST(tot.v AS DOUBLE) + 1.0)))
-               END) * 1000000000.0) AS BIGINT) AS ls9
-      FROM bg_doc d
-      LEFT JOIN bg_train b ON b.w1 = d.w1 AND b.w2 = d.w2
-      LEFT JOIN uni u1 ON u1.token = d.w1
-      LEFT JOIN uni u2 ON u2.token = d.w2
-      CROSS JOIN tot
-    ),
-    agg AS (
-      SELECT doc_id, CAST(SUM(ls9) AS BIGINT) AS s9,
-             CAST(COUNT(*) AS BIGINT) AS n_bigrams
-      FROM scored GROUP BY doc_id
-    )
-    SELECT d.doc_id,
-           COALESCE(a.n_bigrams, 0) AS n_bigrams,
-           round(CAST(a.s9 AS DOUBLE) / CAST(a.n_bigrams AS DOUBLE)
-                 / 1000000000.0, 6) AS avg_logs,
-           round(exp(-(CAST(a.s9 AS DOUBLE) / CAST(a.n_bigrams AS DOUBLE)
-                 / 1000000000.0)), 6) AS ppl
-    FROM documents d LEFT JOIN agg a USING (doc_id)
-    """
 
 
 def _oracle_fd_part_supplier() -> str:
@@ -3465,113 +2606,6 @@ def _oracle_tool_latency() -> str:
     """
 
 
-def _oracle_blocklist() -> str:
-    """Cross-join replay of the inverted-index blocklist matcher:
-    every start position checked (overlap-counting, same as the
-    engine's window-slice verification — a replace()-based count
-    would skip overlapping runs)."""
-    norm = _SQL_NORM.format(col="text")
-    return f"""
-    WITH docs AS (
-      SELECT doc_id, string_split({norm}, ' ') AS t FROM documents
-    ),
-    ph AS (
-      SELECT DISTINCT phrase FROM (
-        SELECT array_to_string(list_slice(t, 1, 2), ' ') AS phrase
-        FROM docs WHERE doc_id % 97 = 0
-        UNION ALL
-        SELECT array_to_string(list_slice(t, 1, 3), ' ') AS phrase
-        FROM docs WHERE doc_id % 89 = 0
-      ) WHERE phrase <> ''
-    ),
-    phx AS (
-      SELECT phrase, string_split(phrase, ' ') AS p,
-             len(string_split(phrase, ' ')) AS plen
-      FROM ph
-    ),
-    pos AS (
-      SELECT doc_id, t, generate_subscripts(t, 1) AS i FROM docs
-    )
-    SELECT p.doc_id, x.phrase, CAST(COUNT(*) AS BIGINT) AS hits
-    FROM pos p CROSS JOIN phx x
-    WHERE p.i + x.plen - 1 <= len(p.t)
-      AND list_slice(p.t, p.i, p.i + x.plen - 1) = x.p
-    GROUP BY p.doc_id, x.phrase
-    """
-
-
-def _oracle_pii_scan() -> str:
-    from jsonschema_spark.operators.text import PII_PATTERNS
-
-    pats = {k: v.replace("'", "''") for k, v in PII_PATTERNS.items()}
-    counts = ",\n           ".join(
-        f"CAST(len(regexp_extract_all(text, '{p}')) AS INT) AS pii_{k}"
-        for k, p in pats.items()
-    )
-    red = "text"
-    for kind in ("email", "ssn", "phone", "ipv4"):
-        red = f"regexp_replace({red}, '{pats[kind]}', '<{kind.upper()}>', 'g')"
-    return f"""
-    WITH planted AS (
-      SELECT doc_id,
-        text
-        || CASE WHEN doc_id % 7 = 0
-                THEN printf(' mail user%d@example.com', doc_id) ELSE '' END
-        || CASE WHEN doc_id % 11 = 0
-                THEN printf(' from 10.0.%d.1', doc_id % 256) ELSE '' END
-        || CASE WHEN doc_id % 13 = 0
-                THEN printf(' call 1555%07d', doc_id % 10000) ELSE '' END
-        || CASE WHEN doc_id % 17 = 0
-                THEN printf(' ssn %03d-45-6789', doc_id % 1000) ELSE '' END
-        AS text
-      FROM documents
-    )
-    SELECT doc_id,
-           {counts},
-           CAST(len(regexp_extract_all(text, '{pats["email"]}'))
-              + len(regexp_extract_all(text, '{pats["ipv4"]}'))
-              + len(regexp_extract_all(text, '{pats["phone"]}'))
-              + len(regexp_extract_all(text, '{pats["ssn"]}')) AS INT)
-             AS pii_total,
-           {red} AS redacted
-    FROM planted
-    """
-
-
-def _oracle_text_repetition() -> str:
-    norm = _SQL_NORM.format(col="text")
-    bg = (
-        "CASE WHEN len(t) >= 2 THEN list_transform(range(1, len(t)), "
-        "i -> t[CAST(i AS INT)] || ' ' || t[CAST(i AS INT) + 1]) "
-        "ELSE CAST([] AS VARCHAR[]) END"
-    )
-    tg = (
-        "CASE WHEN len(t) >= 3 THEN list_transform(range(1, len(t) - 1), "
-        "i -> t[CAST(i AS INT)] || ' ' || t[CAST(i AS INT) + 1]"
-        " || ' ' || t[CAST(i AS INT) + 2]) "
-        "ELSE CAST([] AS VARCHAR[]) END"
-    )
-    return f"""
-    WITH docs AS (SELECT doc_id, string_split({norm}, ' ') AS t
-                  FROM documents),
-    g AS (SELECT doc_id, {bg} AS bg, {tg} AS tg FROM docs)
-    SELECT doc_id,
-           round(CASE WHEN len(bg) > 0
-                 THEN 1.0 - len(list_distinct(bg)) / CAST(len(bg) AS DOUBLE)
-                 ELSE 0.0 END, 6) AS dup_bigram_frac,
-           round(CASE WHEN len(tg) > 0
-                 THEN 1.0 - len(list_distinct(tg)) / CAST(len(tg) AS DOUBLE)
-                 ELSE 0.0 END, 6) AS dup_trigram_frac,
-           round(CASE WHEN len(bg) > 0
-                 THEN list_aggregate(
-                        list_transform(list_distinct(bg),
-                            x -> len(list_filter(bg, y -> y = x))),
-                        'max') / CAST(len(bg) AS DOUBLE)
-                 ELSE 0.0 END, 6) AS top_bigram_frac
-    FROM g
-    """
-
-
 def _oracle_transcript_merge_runs() -> str:
     # gaps-and-islands re-derivation: run id = cumulative role-change
     # count - 1 (the merged turn index), then one grouped aggregation
@@ -3625,28 +2659,6 @@ def _oracle_conversation_verdicts() -> str:
            CAST(SUM(nv) AS BIGINT) AS n_violations,
            SUM(CASE WHEN nv > 0 THEN 1 ELSE 0 END) = 0 AS clean
     FROM v GROUP BY conv_id
-    """
-
-
-def _oracle_clean_text() -> str:
-    # identical accent planting; DuckDB's ICU strip_accents +
-    # nfc_normalize replay the kernel's NFD-filter-NFC pipeline
-    return """
-    WITH d AS (
-      SELECT doc_id,
-             text || CASE WHEN doc_id % 7 = 0 THEN ' café'
-                          WHEN doc_id % 11 = 0 THEN ' naïve'
-                          WHEN doc_id % 13 = 0 THEN ' Ångström'
-                          ELSE '' END AS t
-      FROM documents
-    ),
-    c AS (SELECT doc_id, t, nfc_normalize(strip_accents(t)) AS tc FROM d)
-    SELECT doc_id,
-           CAST(length(t) AS INTEGER) AS n_before,
-           CAST(length(tc) AS INTEGER) AS n_after,
-           tc <> t AS changed,
-           tc AS text_clean
-    FROM c
     """
 
 
@@ -3730,36 +2742,6 @@ def _oracle_migration_impact_orders() -> str:
     """
 
 
-def _oracle_chunk_docs(size: int = 24, stride: int = 16) -> str:
-    # replay of text.chunk_documents: same tokenization, chunk i =
-    # tokens[i*stride, i*stride+size), n_chunks = ceil(n_toks/stride);
-    # empty documents yield zero chunk rows.
-    norm = _SQL_NORM.format(col="text")
-    return f"""
-    WITH d AS (
-      SELECT doc_id,
-             CASE WHEN {norm} = '' THEN CAST([] AS VARCHAR[])
-                  ELSE string_split({norm}, ' ') END AS toks
-      FROM documents
-    ),
-    e AS (
-      SELECT doc_id, toks,
-             unnest(range(CAST(ceil(len(toks) / CAST({stride} AS DOUBLE))
-                               AS BIGINT))) AS i
-      FROM d
-    )
-    SELECT doc_id,
-           CAST(i AS INTEGER) AS chunk_idx,
-           CAST(len(list_slice(toks, CAST(i * {stride} + 1 AS BIGINT),
-                               CAST(i * {stride} + {size} AS BIGINT)))
-                AS INTEGER) AS n_tokens,
-           array_to_string(list_slice(toks, CAST(i * {stride} + 1 AS BIGINT),
-                                      CAST(i * {stride} + {size} AS BIGINT)),
-                           ' ') AS chunk_text
-    FROM e
-    """
-
-
 def _oracle_tool_pairing() -> str:
     return f"""
     WITH t0 AS ({{transcripts}}),
@@ -3793,27 +2775,3 @@ def _oracle_tool_pairing() -> str:
     """.format(transcripts=_SQL_TRANSCRIPTS)
 
 
-def _oracle_text_quality() -> str:
-    norm = _SQL_NORM.format(col="text")
-    return f"""
-    WITH d AS (
-      SELECT doc_id, text, {norm} AS n FROM documents
-    ),
-    f AS (
-      SELECT doc_id,
-             CASE WHEN length(n) = 0 THEN 0 ELSE len(string_split(n, ' ')) END AS n_tokens,
-             length(regexp_replace(text, '[^.,;:!?''"()\\[\\]{{}}-]', '', 'g')) AS punct,
-             length(regexp_replace(text, '[^0-9]', '', 'g')) AS digits,
-             CASE WHEN length(n) = 0 THEN 0
-                  ELSE len(list_distinct(string_split(n, ' '))) END AS distinct_tok,
-             greatest(CAST(length(text) AS DOUBLE), 1.0) AS nz
-      FROM d
-    )
-    SELECT doc_id, n_tokens,
-           round(punct / nz, 6) AS punct_ratio,
-           round(digits / nz, 6) AS digit_ratio,
-           round(CASE WHEN n_tokens > 0
-                      THEN 1.0 - CAST(distinct_tok AS DOUBLE) / n_tokens
-                      ELSE 0.0 END, 6) AS repetition_ratio
-    FROM f
-    """

@@ -1,8 +1,7 @@
 """Table-level operators: the checks (schema, stats, uniqueness, RI,
 drift), conversation-transcript checks, skew salting, stable turn
-ordering, incremental stats and mergeable sketches, plus the
-training-data operators still to be cut (dedup, text, kernels,
-temporal)."""
+ordering, incremental stats and mergeable sketches, plus temporal
+joins."""
 
 from .checks import (
     Check,

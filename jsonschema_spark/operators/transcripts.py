@@ -20,9 +20,6 @@ provides those conversation-level operators as first-class checks:
 * ``SequenceIntegrity`` — the same as a ``Check`` (operators/checks.py)
   emitting per-partition pass/fail verdict rows, so transcript-sequence
   health sits in the same resumable CheckSuite as schema/stats/drift.
-* ``conversation_text`` — skew-safe ordered per-conversation
-  concatenation (salted two-phase collect), the canonical document for
-  conversation-LEVEL dedup.
 * ``conversation_rollup`` — per-conversation metrics in one
   map-side-combinable aggregation.
 * ``merge_consecutive_turns`` — transcript repair: same-role runs
@@ -31,9 +28,7 @@ provides those conversation-level operators as first-class checks:
 
 Scale notes (100 TB): every operator here shuffles exactly once on
 ``conv_id`` (the window / the groupBy); conversations are
-bounded-length so the per-key payload is small even for hot keys, and
-``conversation_text`` still routes through ``skew.salted_agg`` so a
-pathological million-turn conversation cannot OOM a single task.
+bounded-length so the per-key payload is small even for hot keys.
 """
 
 from __future__ import annotations
@@ -45,7 +40,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .checks import Check, _partition_id, _verdict_select
-from .skew import salted_agg
 
 # A reasonable default FSM for agent transcripts: conversations open
 # with system/user, user and assistant alternate, the assistant may
@@ -279,41 +273,6 @@ class SequenceIntegrity(Check):
         return agg.select(
             *_verdict_select(self.name, F.col("__fail"), metrics)
         )
-
-
-def conversation_text(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    turn_col: str = "turn_idx",
-    text_col: str = "text",
-    order_by: Sequence[str] | None = None,
-    sep: str = " ",
-    buckets: int = 8,
-) -> DataFrame:
-    """Per-conversation ordered concatenation → ``(conv_id, text)``.
-
-    The canonical conversation document for conversation-level dedup /
-    fingerprinting.  Routed through ``skew.salted_agg`` (two-phase
-    collect) so one hot conversation never lands on one task; ordering
-    is restored with ``array_sort`` over (order keys, text) structs —
-    pure codegen, no Python.
-    """
-    order_cols = list(order_by) if order_by else [turn_col]
-    item = F.struct(
-        *[F.col(c).alias(f"o{i}") for i, c in enumerate(order_cols)],
-        F.col(text_col).alias("v"),
-    )
-    out = salted_agg(
-        df,
-        [conv_col],
-        aggs={"part": F.collect_list(item)},
-        merges={"part": F.flatten(F.collect_list("part"))},
-        buckets=buckets,
-    )
-    joined = F.array_join(
-        F.transform(F.array_sort("part"), lambda s: s["v"]), sep
-    )
-    return out.select(F.col(conv_col).alias("conv_id"), joined.alias("text"))
 
 
 def conversation_rollup(

@@ -312,18 +312,13 @@ def kw_exclusive_maximum(operand, path, siblings, ctx) -> Rule | None:
         return None
     v = _num_operand(operand, "exclusiveMaximum", path)
 
-    def fn(ref: ValueRef) -> Column:
+    def build(ref: ValueRef):
         c = _numeric_value(ref)
         if c is None:
-            return empty_violations()
-        return _skip_null(
-            ref,
-            F.when(c.isNull(), empty_violations()).otherwise(
-                viol_when(~(c < v), ref.path, f"value should be < {go_v(operand)}")
-            ),
-        )
+            return None
+        return ~(c < v), lambda: f"value should be < {go_v(operand)}", c.isNull()
 
-    return FnRule(fn)
+    return CondRule(build)
 
 
 @register_keyword("exclusiveMinimum")
@@ -332,18 +327,13 @@ def kw_exclusive_minimum(operand, path, siblings, ctx) -> Rule | None:
         return None
     v = _num_operand(operand, "exclusiveMinimum", path)
 
-    def fn(ref: ValueRef) -> Column:
+    def build(ref: ValueRef):
         c = _numeric_value(ref)
         if c is None:
-            return empty_violations()
-        return _skip_null(
-            ref,
-            F.when(c.isNull(), empty_violations()).otherwise(
-                viol_when(~(c > v), ref.path, f"value should be > {go_v(operand)}")
-            ),
-        )
+            return None
+        return ~(c > v), lambda: f"value should be > {go_v(operand)}", c.isNull()
 
-    return FnRule(fn)
+    return CondRule(build)
 
 
 @register_keyword("multipleOf")
@@ -352,24 +342,19 @@ def kw_multiple_of(operand, path, siblings, ctx) -> Rule:
     if m == 0:
         raise SchemaError(f"multipleOf must not be 0, path:{path}")
 
-    def fn(ref: ValueRef) -> Column:
+    def build(ref: ValueRef):
         c = _numeric_value(ref)
         if c is None:
-            return empty_violations()
+            return None
         q = c / m
-        fail = q != F.floor(q)
-        info = F.concat(
+        return q != F.floor(q), lambda: F.concat(
             F.lit(f"value must be multipleOf {go_num(m)},but:"),
             string_of(c, T.DoubleType()),
             F.lit(", divide:"),
             string_of(q, T.DoubleType()),
-        )
-        return _skip_null(
-            ref,
-            F.when(c.isNull(), empty_violations()).otherwise(viol_when(fail, ref.path, info)),
-        )
+        ), c.isNull()
 
-    return FnRule(fn)
+    return CondRule(build)
 
 
 # -------------------------------------------------------- enum / const
@@ -678,46 +663,42 @@ def kw_unique_items(operand, path, siblings, ctx) -> Rule | None:
     return FnRule(fn)
 
 
+def _item_count(ref: ValueRef) -> Column | None:
+    """Element count of an array value; None when statically not an
+    array."""
+    if isinstance(ref.dtype, T.VariantType):
+        from ..core.variant import nn_size
+
+        return nn_size(_variant_array_ref(ref).col)  # NULL unless array
+    if isinstance(ref.dtype, T.ArrayType):
+        return F.size(ref.col)
+    return None
+
+
 @register_keyword("maxItems")
 def kw_max_items(operand, path, siblings, ctx) -> Rule:
     n = _int_operand(operand, "maxItems", path)
 
-    def fn(ref: ValueRef) -> Column:
-        if isinstance(ref.dtype, T.VariantType):
-            from ..core.variant import nn_size
+    def build(ref: ValueRef):
+        sz = _item_count(ref)
+        if sz is None:
+            return None
+        return sz > n, lambda: f" max length is {n}"
 
-            sz = nn_size(_variant_array_ref(ref).col)  # NULL unless array
-            return _skip_null(
-                ref, viol_when(sz > n, ref.path, f" max length is {n}")
-            )
-        if not isinstance(ref.dtype, T.ArrayType):
-            return empty_violations()
-        return _skip_null(
-            ref, viol_when(F.size(ref.col) > n, ref.path, f" max length is {n}")
-        )
-
-    return FnRule(fn)
+    return CondRule(build)
 
 
 @register_keyword("minItems")
 def kw_min_items(operand, path, siblings, ctx) -> Rule:
     n = _int_operand(operand, "minItems", path)
 
-    def fn(ref: ValueRef) -> Column:
-        if isinstance(ref.dtype, T.VariantType):
-            from ..core.variant import nn_size
+    def build(ref: ValueRef):
+        sz = _item_count(ref)
+        if sz is None:
+            return None
+        return sz < n, lambda: f" min length is {n}"
 
-            sz = nn_size(_variant_array_ref(ref).col)
-            return _skip_null(
-                ref, viol_when(sz < n, ref.path, f" min length is {n}")
-            )
-        if not isinstance(ref.dtype, T.ArrayType):
-            return empty_violations()
-        return _skip_null(
-            ref, viol_when(F.size(ref.col) < n, ref.path, f" min length is {n}")
-        )
-
-    return FnRule(fn)
+    return CondRule(build)
 
 
 # --------------------------------------------- object key-count bounds
@@ -726,15 +707,13 @@ def kw_min_items(operand, path, siblings, ctx) -> Rule:
 def kw_min_properties(operand, path, siblings, ctx) -> Rule:
     n = _int_operand(operand, "minProperties", path)
 
-    def fn(ref: ValueRef) -> Column:
+    def build(ref: ValueRef):
         cnt = _prop_count(ref)
         if cnt is None:
-            return empty_violations()
-        return _skip_null(
-            ref, viol_when(cnt < n, ref.path, f"min properties is : {n}")
-        )
+            return None
+        return cnt < n, lambda: f"min properties is : {n}"
 
-    return FnRule(fn)
+    return CondRule(build)
 
 
 @register_keyword("maxProperties")
@@ -742,21 +721,16 @@ def kw_max_properties(operand, path, siblings, ctx) -> Rule:
     """Reference bug (validator_properties.go:86-89): NewMaxProperties
     returns a MinProperties, so `maxProperties` acts as a minimum.
     We implement the CORRECT maximum semantics — documented divergence
-    (SURVEY §7.4); set options['replicate_max_properties_bug']=True for
-    bug-compatible behavior."""
+    (SURVEY §7.4)."""
     n = _int_operand(operand, "maxProperties", path)
-    if ctx.options.get("replicate_max_properties_bug"):
-        return kw_min_properties(operand, path, siblings, ctx)
 
-    def fn(ref: ValueRef) -> Column:
+    def build(ref: ValueRef):
         cnt = _prop_count(ref)
         if cnt is None:
-            return empty_violations()
-        return _skip_null(
-            ref, viol_when(cnt > n, ref.path, f"max properties is :{n}")
-        )
+            return None
+        return cnt > n, lambda: f"max properties is :{n}"
 
-    return FnRule(fn)
+    return CondRule(build)
 
 
 def _prop_count(ref: ValueRef) -> Column | None:
@@ -773,6 +747,8 @@ def _prop_count(ref: ValueRef) -> Column | None:
         return F.size(ref.col)
     if isinstance(dt, T.StructType):
         nn = [F.when(ref.col.getField(f.name).isNotNull(), 1).otherwise(0) for f in dt.fields]
+        if not nn:  # a struct without fields holds no keys
+            return F.lit(0)
         out = nn[0]
         for c in nn[1:]:
             out = out + c
@@ -780,8 +756,6 @@ def _prop_count(ref: ValueRef) -> Column | None:
     if isinstance(dt, T.ArrayType):
         # the reference also counts arrays (validator_properties.go:29-35)
         return F.size(ref.col)
-    if ref.is_root and isinstance(dt, T.StructType):
-        return F.lit(len(dt.fields))
     return None
 
 
@@ -791,33 +765,36 @@ def _prop_count(ref: ValueRef) -> Column | None:
 def kw_max_b64(operand, path, siblings, ctx) -> Rule:
     n = _int_operand(operand, "maxB64DLen", path)
 
-    def fn(ref: ValueRef) -> Column:
-        s = _string_view(ref)
-        if s is None:
-            return empty_violations()
-        # Go base64.StdEncoding.DecodedLen = len/4*3 (validator_base.go:692-760)
-        dlen = F.floor(F.octet_length(s) / 4) * 3
-        return _skip_null(
-            ref, viol_when(dlen > n, ref.path, f"length is invalid, max length is  {n}")
-        )
+    def build(ref: ValueRef):
+        dlen = _b64_decoded_len(ref)
+        if dlen is None:
+            return None
+        return dlen > n, lambda: f"length is invalid, max length is  {n}"
 
-    return FnRule(fn)
+    return CondRule(build)
 
 
 @register_keyword("minB64DLen")
 def kw_min_b64(operand, path, siblings, ctx) -> Rule:
     n = _int_operand(operand, "minB64DLen", path)
 
-    def fn(ref: ValueRef) -> Column:
-        s = _string_view(ref)
-        if s is None:
-            return empty_violations()
-        dlen = F.floor(F.octet_length(s) / 4) * 3
-        return _skip_null(
-            ref, viol_when(dlen < n, ref.path, f"length is invalid ,min length is  {n}")
-        )
+    def build(ref: ValueRef):
+        dlen = _b64_decoded_len(ref)
+        if dlen is None:
+            return None
+        return dlen < n, lambda: f"length is invalid ,min length is  {n}"
 
-    return FnRule(fn)
+    return CondRule(build)
+
+
+def _b64_decoded_len(ref: ValueRef) -> Column | None:
+    """Go base64.StdEncoding.DecodedLen = len/4*3
+    (validator_base.go:692-760) of a string value; None when statically
+    non-string."""
+    s = _string_view(ref)
+    if s is None:
+        return None
+    return F.floor(F.octet_length(s) / 4) * 3
 
 
 def _string_view(ref: ValueRef) -> Column | None:
@@ -839,21 +816,18 @@ def kw_format(operand, path, siblings, ctx) -> Rule:
         raise SchemaError(f"value of 'format' must be string, path:{path}")
     check = compile_format(operand)
 
-    def fn(ref: ValueRef) -> Column:
+    def build(ref: ValueRef):
         if isinstance(ref.dtype, T.VariantType):
             s = ref.v_string()  # non-strings skip at runtime
         elif ref.dtype is not None and not isinstance(
             ref.dtype, (T.StringType, T.TimestampType, T.DateType)
         ):
-            return empty_violations()
+            return None
         else:
             s = ref.col.cast("string")
-        return _skip_null(
-            ref,
-            viol_when(~check(s), ref.path, f"value does not match format '{operand}'"),
-        )
+        return ~check(s), lambda: f"value does not match format '{operand}'"
 
-    return FnRule(fn)
+    return CondRule(build)
 
 
 # --------------------------------------------------------- dependencies

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import jsonschema_spark as js
-from jsonschema_spark.operators import checks, dedup
+from jsonschema_spark.operators import checks
 from jsonschema_spark.sources.fixtures import dim_roles, transcripts
 
 
@@ -127,16 +127,6 @@ def test_bucketed_layout_removes_corpus_exchange(spark, tmp_path):
     spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
-def test_minhash_no_cartesian(spark):
-    docs = spark.createDataFrame(
-        [(i, f"text number {i} with words") for i in range(20)],
-        "doc_id long, text string",
-    )
-    p = plan_of(dedup.minhash_lsh_pairs(docs, k=8, bands=2))
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" not in p
-
-
 def test_transform_pipeline_stays_narrow(tdf):
     plan = js.compile_schema(
         {
@@ -244,53 +234,12 @@ def test_items_without_whole_array_form_keeps_exists(spark, tmp_path):
     assert q.collect()[0]["n"] == slow == 2
 
 
-def test_span_dedup_no_cartesian_and_single_hash_pass(spark):
-    """duplicated_spans: the hash array must materialize in its own
-    Project (one md5 pass per doc — the O(n^2) re-inlining regression),
-    the hot-list join stays an equality join, nothing cartesian."""
-    df = spark.createDataFrame(
-        [(1, "a b c d e f g h i j"), (2, "a b c d e f g h i j")],
-        "doc_id long, text string",
-    )
-    p = plan_of(dedup.duplicated_spans(df, width=4, winnow=2))
-    assert "CartesianProduct" not in p
-    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-    # the materialized hash-array column appears as an alias exactly
-    # where the two-level projection puts it
-    assert "__hs" in p
-
-
-def test_bm25_topk_take_ordered_no_shuffle_scoring(spark):
-    """bm25_topk: stats ride in via ONE broadcast (single-row agg), the
-    scoring pass is codegen arithmetic, top-k is TakeOrderedAndProject
-    (per-partition top-k, driver merge — no global Sort)."""
-    from jsonschema_spark.operators import text as T
-
-    df = spark.createDataFrame(
-        [(1, "spark window"), (2, "hash join")], "doc_id long, text string"
-    )
-    p = plan_of(T.bm25_topk(df, ["spark", "join"], k=3))
-    assert "TakeOrderedAndProject" in p
-    assert "BroadcastNestedLoopJoin" in p or "BroadcastExchange" in p
-    assert "CartesianProduct" not in p
-    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-
-
-def test_neardup_pair_dot_is_unrolled_not_python(spark):
-    """embedding_neardup_pairs (planes>0, dims known): the bucket
-    projection is legitimately ONE Arrow kernel pass per side, but the
-    per-candidate-pair cosine after the bucket join must be the
-    unrolled JVM chain — no Python node above the join."""
-    emb = spark.createDataFrame(
-        [(i, [float(i % 7) + 0.25, 1.0, 0.5, float(i % 3)]) for i in range(30)],
-        "vec_id long, embedding array<float>",
-    )
-    p = plan_of(
-        dedup.embedding_neardup_pairs(emb, threshold=0.5, planes=2, dims=4)
-    )
-    # the only Arrow evals allowed are the two per-side bucket+norm
-    # projections BELOW the join (the pair path itself is pure JVM)
-    assert p.count("ArrowEvalPython") <= 2
-    assert "BatchEvalPython" not in p
-    assert "element_at" in p  # unrolled pair dot above the join
-    assert "CartesianProduct" not in p
+def test_single_condition_keyword_builds_no_violation_array(spark):
+    """``maxItems`` answers ``fails`` with its own condition: the
+    optimized predicate holds no violation-array literal."""
+    df = spark.createDataFrame([([1, 2, 3],), ([1],), (None,)], "xs array<int>")
+    plan = js.compile_schema({"properties": {"xs": {"maxItems": 2}}})
+    q = df.select(plan.fail_predicate(df).alias("f"))
+    p = q._jdf.queryExecution().optimizedPlan().toString()
+    assert "[[" not in p, p
+    assert [r["f"] for r in q.collect()] == [True, False, False]

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import json
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 import jsonschema_spark as js
@@ -60,6 +60,16 @@ leaf_keywords = st.one_of(
     st.fixed_dictionaries({"maxLength": st.integers(0, 3)}),
     st.fixed_dictionaries({"enum": st.lists(literals, min_size=1, max_size=3)}),
     st.fixed_dictionaries({"required": st.lists(st.sampled_from(KEYS), max_size=2, unique=True)}),
+    st.fixed_dictionaries({"maxItems": st.integers(0, 3)}),
+    st.fixed_dictionaries({"minItems": st.integers(0, 3)}),
+    st.fixed_dictionaries({"maxProperties": st.integers(0, 3)}),
+    st.fixed_dictionaries({"minProperties": st.integers(0, 3)}),
+    st.fixed_dictionaries({"maxB64DLen": st.integers(0, 3)}),
+    st.fixed_dictionaries({"minB64DLen": st.integers(0, 3)}),
+    st.fixed_dictionaries({"exclusiveMaximum": st.integers(-3, 3)}),
+    st.fixed_dictionaries({"exclusiveMinimum": st.integers(-3, 3)}),
+    st.fixed_dictionaries({"multipleOf": st.sampled_from([1, 2, 0.5])}),
+    st.fixed_dictionaries({"format": st.sampled_from(["date", "ipv4", "email"])}),
 )
 
 
@@ -139,6 +149,10 @@ def test_variant_fails_equals_violations(spark, schema, docs):
 @settings(max_examples=10, deadline=None,
           suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large])
 @given(schema=schemas(2), docs=st.lists(documents, min_size=20, max_size=40))
+# a root that parses to a struct with no fields
+@example(schema={"if": {"required": []}, "then": {"minProperties": 1},
+                 "else": {"maxProperties": 0}},
+         docs=["{}", '{"a": 1}', "[1]", "nope", None])
 def test_static_fails_equals_violations(spark, schema, docs):
     df = spark.createDataFrame(list(enumerate(docs)), "id int, doc string")
     pairs = _predicate_vs_arrays(js.compile_schema(schema), df, "static")

@@ -1,6 +1,7 @@
 """Conversation-transcript sequence operators
 (jsonschema_spark/operators/transcripts.py): integrity FSM, rollup,
-skew-safe conversation text, and the SequenceIntegrity Check surface."""
+turn merging, tool loops, latency and pairing, and the
+SequenceIntegrity Check surface."""
 
 from __future__ import annotations
 
@@ -13,7 +14,6 @@ from jsonschema_spark.operators.transcripts import (
     SequenceIntegrity,
     conversation_integrity,
     conversation_rollup,
-    conversation_text,
 )
 
 
@@ -99,14 +99,6 @@ def test_sequence_integrity_clean_passes(spark):
     assert verd[0][2] is True and verd[0][3] == 0
 
 
-def test_conversation_text_ordered_and_skew_safe(spark):
-    df = _corpus(spark)
-    out = rows(conversation_text(df, order_by=("turn_idx", "text")), "conv_id")
-    assert out[0] == ("c1", "hi hello result done")
-    # c2 ordered by (turn_idx, text): b(3) before c(3) -> "a b c"
-    assert out[1] == ("c2", "a b c")
-
-
 def test_conversation_rollup(spark):
     out = {r[0]: r for r in rows(conversation_rollup(_corpus(spark)))}
     c1 = out["c1"]
@@ -181,36 +173,6 @@ def test_merge_consecutive_turns_no_tool_no_ts(spark):
     assert out.count() == 5
 
 
-def test_chunk_documents_overlap_and_tail(spark):
-    from jsonschema_spark.operators.text import chunk_documents
-
-    df = spark.createDataFrame(
-        [(0, "a b c d e f g"), (1, ""), (2, None), (3, "x")],
-        "doc_id long, text string",
-    )
-    got = rows(
-        chunk_documents(df, size=4, stride=3), "doc_id", "chunk_idx"
-    )
-    assert got == [
-        (0, 0, 4, "a b c d"),
-        (0, 1, 4, "d e f g"),
-        (0, 2, 1, "g"),
-        (3, 0, 1, "x"),
-    ]
-
-
-def test_chunk_documents_plan_map_only(spark):
-    from jsonschema_spark.operators.text import chunk_documents
-
-    df = spark.createDataFrame([(0, "a b c")], "doc_id long, text string")
-    plan = (
-        chunk_documents(df, size=2, stride=2)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan
-    assert plan.count("ArrowEvalPython") == 1
-
-
 class TestToolLoops:
     def test_runs_and_breaks(self, spark):
         from jsonschema_spark.operators.transcripts import tool_loops
@@ -280,3 +242,38 @@ class TestToolLatency:
         assert s["mean_us"] == 500000.0
         assert s["p50_us"] == 500000.0  # interpolated midpoint
         assert s["max_us"] == 750000
+
+
+class TestToolPairing:
+    def test_violations(self, spark):
+        t0 = dt.datetime(2024, 1, 1)
+        rows = [
+            # well-formed: user -> assistant(call) -> tool(result)
+            ("c1", 0, "user", None, t0),
+            ("c1", 1, "assistant", "search", t0),
+            ("c1", 2, "tool", "search", t0),
+            # tool turn without a tool name
+            ("c2", 0, "user", None, t0),
+            ("c2", 1, "assistant", "search", t0),
+            ("c2", 2, "tool", None, t0),
+            # tool named on a user turn; tool result follows user
+            ("c3", 0, "user", "search", t0),
+            ("c3", 1, "tool", "search", t0),
+            # conversation opens with a tool result
+            ("c4", 0, "tool", "search", t0),
+        ]
+        df = spark.createDataFrame(
+            rows, "conv_id string, turn_idx int, role string, "
+                  "tool string, ts timestamp"
+        )
+        out = {
+            (r["conv_id"], r["turn_idx"], r["check"]): r["info"]
+            for r in transcripts.tool_call_pairing(df).collect()
+        }
+        assert ("c1", 2, "tool_pairing") not in out
+        assert not any(k[0] == "c1" for k in out)
+        assert out[("c2", 2, "tool_name")] == "tool turn carries no tool name"
+        assert out[("c3", 0, "tool_caller")] == "tool search named on role user"
+        assert out[("c3", 1, "tool_pairing")] == "tool result follows role user"
+        assert out[("c4", 0, "tool_pairing")] == "tool result follows role <none>"
+        assert len(out) == 4

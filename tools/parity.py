@@ -19,7 +19,7 @@ import pandas as pd
 sys.path.insert(0, "/root/repo")
 
 TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
+    "region nation customer supplier part orders lineitem events documents"
 ).split()
 
 
@@ -153,7 +153,7 @@ def main() -> None:
             if (st, ot) in ok_pairs or ot.startswith("timestamp"):
                 continue
             if ot in ("int8", "int16", "int32") and st in ("int", "bigint", "smallint", "tinyint"):
-                continue  # narrow ints hash fine (r1 dedup_simhash)
+                continue  # narrow ints hash fine
             hard = ot.startswith(("decimal", "int128")) or st == "?"
             msg = f"type {f_.name}: spark={st} oracle-arrow={ot}"
             if hard:

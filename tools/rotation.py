@@ -146,11 +146,10 @@ def query_deps(graph: dict[str, set[str]]) -> dict[str, set[str]]:
         "js": list(_ENGINE_ROOTS),
         "session": ["jsonschema_spark/core/session.py"],
     }
-    for name in (
-        "checks dedup incremental kernels order sketches skew "
-        "temporal text transcripts"
-    ).split():
-        alias_to_files[name] = [f"jsonschema_spark/operators/{name}.py"]
+    ops = "jsonschema_spark/operators"
+    for name in os.listdir(os.path.join(REPO, ops)):
+        if name.endswith(".py") and name != "__init__.py":
+            alias_to_files[name[:-3]] = [f"{ops}/{name}"]
     for name in ("streaming", "sources", "plans", "functions", "core"):
         alias_to_files[name] = [f"jsonschema_spark/{name}/__init__.py"]
 
