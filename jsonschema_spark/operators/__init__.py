@@ -1,7 +1,7 @@
 """Table-level operators: the checks (schema, stats, uniqueness, RI,
 drift), conversation-transcript checks, skew salting, stable turn
 ordering, incremental stats and mergeable sketches, plus temporal
-joins."""
+joins and document hygiene (PII, unigram-LM scoring, phrase blocklist)."""
 
 from .checks import (
     Check,

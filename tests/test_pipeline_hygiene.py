@@ -1,5 +1,5 @@
-"""Training-data hygiene operators: PII scan/redaction, repetition
-features, unigram LM scoring, transcript tool pairing."""
+"""Training-data hygiene operators: PII scan/redaction, unigram LM
+scoring, transcript tool pairing."""
 
 from __future__ import annotations
 
@@ -52,27 +52,6 @@ class TestPII:
                                    "doc_id long, text string")
         red = df.select(text.pii_redact(F.col("text")).alias("r")).first()["r"]
         assert red == "x <EMAIL> y"
-
-
-class TestRepetition:
-    def test_fractions(self, spark):
-        df = spark.createDataFrame(
-            [
-                (0, "spam spam spam spam spam"),
-                (1, "all words here are unique tokens"),
-                (2, ""),
-            ],
-            "doc_id long, text string",
-        )
-        out = {r["doc_id"]: r for r in text.repetition_features(df).collect()}
-        # doc 0: 4 bigrams all 'spam spam' -> dup frac 3/4, top frac 1.0
-        assert out[0]["dup_bigram_frac"] == pytest.approx(0.75)
-        assert out[0]["top_bigram_frac"] == pytest.approx(1.0)
-        assert out[0]["dup_trigram_frac"] == pytest.approx(2 / 3)
-        assert out[1]["dup_bigram_frac"] == 0.0
-        assert out[1]["top_bigram_frac"] == pytest.approx(1 / 5)
-        assert out[2]["dup_bigram_frac"] == 0.0
-        assert out[2]["top_bigram_frac"] == 0.0
 
 
 class TestToolPairing:

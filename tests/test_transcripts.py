@@ -243,37 +243,3 @@ class TestToolLatency:
         assert s["p50_us"] == 500000.0  # interpolated midpoint
         assert s["max_us"] == 750000
 
-
-class TestToolPairing:
-    def test_violations(self, spark):
-        t0 = dt.datetime(2024, 1, 1)
-        rows = [
-            # well-formed: user -> assistant(call) -> tool(result)
-            ("c1", 0, "user", None, t0),
-            ("c1", 1, "assistant", "search", t0),
-            ("c1", 2, "tool", "search", t0),
-            # tool turn without a tool name
-            ("c2", 0, "user", None, t0),
-            ("c2", 1, "assistant", "search", t0),
-            ("c2", 2, "tool", None, t0),
-            # tool named on a user turn; tool result follows user
-            ("c3", 0, "user", "search", t0),
-            ("c3", 1, "tool", "search", t0),
-            # conversation opens with a tool result
-            ("c4", 0, "tool", "search", t0),
-        ]
-        df = spark.createDataFrame(
-            rows, "conv_id string, turn_idx int, role string, "
-                  "tool string, ts timestamp"
-        )
-        out = {
-            (r["conv_id"], r["turn_idx"], r["check"]): r["info"]
-            for r in transcripts.tool_call_pairing(df).collect()
-        }
-        assert ("c1", 2, "tool_pairing") not in out
-        assert not any(k[0] == "c1" for k in out)
-        assert out[("c2", 2, "tool_name")] == "tool turn carries no tool name"
-        assert out[("c3", 0, "tool_caller")] == "tool search named on role user"
-        assert out[("c3", 1, "tool_pairing")] == "tool result follows role user"
-        assert out[("c4", 0, "tool_pairing")] == "tool result follows role <none>"
-        assert len(out) == 4
