@@ -28,7 +28,11 @@ Design (no Spark primitive does this — it is driver logic):
 
 Writes are atomic at file granularity (parquet append of one run's
 rows); a crash mid-run loses at most the in-flight partitions, never
-corrupts prior rows.
+corrupts prior rows.  A run writes its outputs (``ResumableRun.run``'s
+``sink``) before its one manifest append, so a crash anywhere before
+that append re-runs the same partitions; sinks that overwrite by
+partition (``sources.tables.write_output`` with ``partition_by``, as
+the CLI writes them) then hold each partition's rows exactly once.
 """
 
 from __future__ import annotations
@@ -36,7 +40,7 @@ from __future__ import annotations
 import hashlib
 import json
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -286,11 +290,12 @@ class ResumableRun:
         manifest; append new checkpoint rows; return the verdicts of
         THIS run (empty if everything was already done).
 
-        ``sink``, when given, is called with those verdicts BEFORE the
-        checkpoint rows are appended — the order SideOutput enforces for
-        the violations sink: a crash between the two re-runs the
-        partitions (at-least-once) instead of skipping them with their
-        verdicts never written."""
+        ``sink``, when given and anything ran, is called with those
+        verdicts BEFORE the one append of this run's checkpoint rows,
+        with ``last_ran`` already set, so it can write every output of
+        the partitions that ran: a crash between the two re-runs those
+        partitions instead of skipping them with their outputs never
+        written."""
         spark = df.sparkSession
         lineages = {c.name: _lineage(self.source_id, c) for c in self.suite.checks}
         done = self.manifest.completed(spark, lineages)
@@ -355,117 +360,8 @@ class ResumableRun:
             out = spark.createDataFrame([], VERDICT_SCHEMA)
         else:
             out = spark.createDataFrame(new_rows, all_new.schema)
-        if sink is not None:
-            sink(out)
         if new_rows:
+            if sink is not None:
+                sink(out)
             self.manifest.append(spark, new_rows, lineages)
         return out
-
-@dataclass
-class SideOutput:
-    """Per-partition completion tracking for a secondary sink (e.g. the
-    CLI's violation rows) in the same manifest, INDEPENDENT of the
-    check verdict rows.
-
-    Closes the crash window where the schema check's manifest rows
-    landed but the sink write did not (the verdict append and the sink
-    write are two non-atomic steps): the sink write is only skipped for
-    partitions whose completion row — written strictly AFTER the sink
-    write — is present with a matching lineage.  A crash between the
-    sink write and ``commit`` re-runs those partitions: at-least-once,
-    so an append sink (parquet OR iceberg) may carry duplicate rows
-    for the re-run partitions — the recoverable failure mode, vs. the
-    silent loss it replaces.  Exactly-once needs a sink that can
-    overwrite by partition (an Iceberg violations table partitioned by
-    the pid columns + overwritePartitions), which the CLI does not
-    assume about user sinks.
-
-    Sink-state transitions the caller must handle (cli.cmd_run does):
-    a MISSING sink invalidates all completion rows (rebuild
-    everything); a present sink with zero completion rows at this
-    lineage is ambiguous (legacy-complete vs crashed-before-write) and
-    defaults to re-append — the legacy backfill is an explicit opt-in
-    (``just_ran``, cli: output.violations_backfill)."""
-
-    manifest: CheckpointManifest
-    name: str  # pseudo-check name, e.g. "schema:violations"
-    lineage: str  # fingerprint of (source, schema doc, sink)
-    partition_by: Sequence[str] | None = None
-    # populated by todo(): pre-SideOutput-manifest partitions to
-    # commit without rewriting, and the enumeration route used
-    backfill: list = field(default_factory=list)
-    partition_source: str = "unset"
-
-    def todo(self, df: DataFrame, sink_present: bool = True,
-             just_ran: Sequence[tuple] | None = None):
-        """(pruned_df_or_None, todo_tuples, pid_of): the subset of the
-        input whose sink write is not yet confirmed.
-
-        ``sink_present=False`` (the sink was deleted/never created)
-        invalidates every completion row: the rows they confirmed are
-        gone, so everything is todo again.
-
-        ``just_ran`` (EXPLICIT opt-in — pass None by default) handles
-        the pre-SideOutput manifest: when the sink IS present but this
-        lineage has NO completion rows at all, partitions NOT in
-        ``just_ran`` are treated as already written by the older
-        release and exposed via ``self.backfill`` for the caller to
-        commit instead of being re-appended as duplicates.  This state
-        is indistinguishable from a crash between the verdict append
-        and the sink write, where assuming-done means SILENT LOSS —
-        which is why the inference never runs unless the caller
-        asserts the legacy-complete interpretation."""
-        spark = df.sparkSession
-        done = (
-            self.manifest.completed(spark, {self.name: self.lineage})
-            if sink_present
-            else set()
-        )
-        if self.partition_by:
-            # same metadata-first enumeration as ResumableRun.run: a
-            # fully-confirmed sink must not cost a fact-table scan
-            raw, self.partition_source = _enumerate_partitions(
-                df, self.partition_by
-            )
-            tuples = [tuple(r[c] for c in self.partition_by) for r in raw]
-            pid_of = {t: r["__pid"] for t, r in zip(tuples, raw)}
-        else:
-            self.partition_source = "none"
-            tuples, pid_of = [()], {(): "ALL"}
-        legacy = sink_present and not done and just_ran is not None
-        assumed = (
-            {t for t in tuples if t not in set(just_ran)} if legacy else set()
-        )
-        self.backfill = [t for t in tuples if t in assumed]
-        todo_t = [
-            t for t in tuples
-            if (pid_of[t], self.name) not in done and t not in assumed
-        ]
-        if not todo_t:
-            return None, [], pid_of
-        if self.partition_by and len(todo_t) < len(tuples):
-            sub = prune_to_partitions(df, self.partition_by, todo_t)
-        else:
-            sub = df
-        return sub, todo_t, pid_of
-
-    def commit(self, spark: SparkSession, todo_t, pid_of, metrics=None) -> None:
-        """Record completion AFTER the sink write succeeded."""
-        rows = [
-            {
-                "partition_id": pid_of[t],
-                "check": self.name,
-                "metrics": dict(metrics or {}),
-            }
-            for t in todo_t
-        ]
-        if rows:
-            self.manifest.append(spark, rows, {self.name: self.lineage})
-
-
-def side_lineage(source_id: str, *cfg_parts) -> str:
-    """Lineage fingerprint for a SideOutput: source + every config
-    object that determines the sink's content (schema doc, sink path)."""
-    blob = json.dumps({"source": source_id, "cfg": cfg_parts},
-                      sort_keys=True, default=str)
-    return hashlib.sha256(blob.encode()).hexdigest()[:16]

@@ -38,16 +38,30 @@ sources.tables.read_table)::
                    "save_baseline_to": "/state/drift_q_next"}
       },
       "output": {
-        "verdicts": "/out/verdicts",
-        "violations": "/out/violations",
-        "manifest": "/out/manifest",             // enables resume
-        "violations_backfill": false             // see cmd_run
+        "verdicts": "/out/verdicts",             // partitioned by
+                                                 // (partition_id, check)
+        "violations": "/out/violations",         // keys + partition_id,
+                                                 // partitioned by it
+        "manifest": "/out/manifest"              // enables resume
       }
     }
 
 A second run with the same config + manifest skips every
 (partition, check) already recorded (checkpoint.ResumableRun).  Any
-other key under ``checks`` is rejected (``build_suite``).
+other key under ``checks`` or ``output`` is rejected.
+
+Each run replaces the sink partitions of the partitions it ran and
+leaves every other partition as it was (``write_output`` with
+``partition_by``).  With a manifest, both sinks are written before the
+run's one manifest append, so a crash anywhere re-runs those partitions
+and the re-run overwrites them: each partition's verdict and violation
+rows are in the sinks exactly once.  A sink gets files only for
+partitions with rows, so after a run that wrote none there may be no
+sink to read yet.  A parquet sink written flat by an older release, or
+an Iceberg sink partitioned by other columns, is refused before
+anything runs.  The source, the sink paths and ``keys`` are part of
+every manifest row's lineage: a config pointed at a new sink re-runs
+everything instead of leaving the new sink empty.
 """
 
 from __future__ import annotations
@@ -59,6 +73,9 @@ import sys
 from pyspark.sql import SparkSession
 
 CHECK_KEYS = ("uniqueness", "referential", "stats", "sequence", "functional", "drift")
+# output sinks and their partition columns; "manifest" is the checkpoint
+SINK_PARTITIONS = {"verdicts": ["partition_id", "check"], "violations": ["partition_id"]}
+OUTPUT_KEYS = (*SINK_PARTITIONS, "manifest")
 
 
 def build_suite(spark: SparkSession, cfg: dict):
@@ -173,102 +190,66 @@ def build_suite(spark: SparkSession, cfg: dict):
 
 
 def cmd_run(args) -> int:
-    from jsonschema_spark.checkpoint import CheckpointManifest, ResumableRun
-    from jsonschema_spark.operators.checks import CheckSuite, SchemaCheck
-    from jsonschema_spark.sources.tables import read_table, write_output
+    from jsonschema_spark.checkpoint import CheckpointManifest, ResumableRun, prune_to_partitions
+    from jsonschema_spark.operators.checks import CheckSuite, SchemaCheck, _partition_id
+    from jsonschema_spark.sources.tables import read_table, require_partitioned_sink, write_output
 
     cfg = json.load(open(args.config))
+    out = cfg.get("output", {})
+    unknown = sorted(set(out) - set(OUTPUT_KEYS))
+    if unknown:
+        raise ValueError(
+            f"unknown key(s) {unknown} in config 'output'; "
+            f"accepted: {list(OUTPUT_KEYS)}"
+        )
     spark = (
         SparkSession.builder.appName("jsonschema_spark-run")
         .config("spark.sql.adaptive.enabled", "true")
         .getOrCreate()
     )
+    for name, cols in SINK_PARTITIONS.items():
+        if out.get(name):
+            require_partitioned_sink(spark, out[name], cols)
     df = read_table(spark, cfg["source"], where=cfg.get("where"))
     suite = CheckSuite(build_suite(spark, cfg))
-    out = cfg.get("output", {})
+    pcols = cfg.get("partition_by") or []
+    keys = cfg.get("keys", [])
+    schema = next((c for c in suite.checks if isinstance(c, SchemaCheck)), None)
 
-    def write_verdicts(v):
-        write_output(v, out["verdicts"])
+    def write(verdicts, todo=None):
+        """Write the verdicts, then the violation rows of the partition
+        tuples in ``todo`` (None: the whole input)."""
+        if out.get("verdicts"):
+            write_output(verdicts, out["verdicts"], partition_by=SINK_PARTITIONS["verdicts"])
+        if not out.get("violations") or schema is None or todo == []:
+            return
+        src = df if todo is None or not pcols else prune_to_partitions(df, pcols, todo)
+        # partition_id is derived after validation: over fixed columns
+        # the row is the document, and an added column would be an
+        # unknown field under additionalProperties: false
+        viols = schema.plan.validate(
+            src,
+            keys=keys + [c for c in pcols if c not in keys],
+            json_col=cfg.get("json_col"),
+            json_types=cfg.get("json_types"),
+        ).violations.select(*keys, _partition_id(pcols).alias("partition_id"), "path", "info")
+        write_output(viols, out["violations"], partition_by=SINK_PARTITIONS["violations"])
 
-    run = None
     if out.get("manifest"):
         run = ResumableRun(
             suite=suite,
             manifest=CheckpointManifest(out["manifest"]),
-            partition_by=cfg.get("partition_by"),
-            source_id=cfg["source"],
+            partition_by=pcols,
+            source_id=json.dumps([cfg["source"], out.get("verdicts"), out.get("violations"), keys]),
         )
-        # the verdict sink is written before the manifest marks the
-        # partitions done (ResumableRun.run), so a crash in between
-        # cannot lose their verdicts
-        verdicts = run.run(df, sink=write_verdicts if out.get("verdicts") else None)
-        n_fail = verdicts.filter("NOT pass").count()
+        # build_suite names the schema check "schema"
+        verdicts = run.run(df, sink=lambda v: write(v, run.last_ran.get("schema", [])))
     else:
         verdicts = suite.run(df)
-        n_fail = verdicts.filter("NOT pass").count()
-        if out.get("verdicts"):
-            write_verdicts(verdicts)
+        write(verdicts)
+    n_fail = verdicts.filter("NOT pass").count()
     if not out.get("verdicts"):
         verdicts.show(100, truncate=False)
-
-    if out.get("violations") and cfg.get("schema"):
-        # On a resumed run, scope the violations pass to the partitions
-        # whose sink write is CONFIRMED in the manifest — a completion
-        # row written strictly after the sink write, independent of the
-        # schema check's own verdict rows.  This closes the crash
-        # window where the verdict rows landed but the violations write
-        # did not (the two are non-atomic): the old last_ran scoping
-        # would see the schema check fully checkpointed and skip those
-        # partitions' violations forever.
-        side = None
-        viol_df, todo_t, pid_of = df, [], {}
-        if run is not None:
-            from jsonschema_spark.checkpoint import SideOutput, side_lineage
-            from jsonschema_spark.sources.tables import sink_exists
-
-            side = SideOutput(
-                manifest=run.manifest,
-                name="schema:violations",
-                lineage=side_lineage(
-                    cfg["source"],
-                    cfg["schema"] if not cfg.get("json_col") else {
-                        "schema": cfg["schema"],
-                        "json_col": cfg["json_col"],
-                        "json_types": cfg.get("json_types"),
-                    },
-                    out["violations"],
-                ),
-                partition_by=cfg.get("partition_by"),
-            )
-            # sink-state transitions: a deleted/absent sink voids all
-            # completion rows (rebuild everything).  A present sink
-            # with ZERO completion rows is ambiguous — either a
-            # pre-SideOutput manifest whose old release already wrote
-            # these partitions' violations (re-append = duplicates),
-            # or a crash between the verdict append and the violations
-            # write (skip = SILENT LOSS).  Loss is the worse failure,
-            # so the default re-appends (at-least-once); a deployment
-            # upgrading a known-complete legacy manifest opts into the
-            # backfill once via output.violations_backfill=true.
-            ran = {t for ts in run.last_ran.values() for t in ts}
-            viol_df, todo_t, pid_of = side.todo(
-                df,
-                sink_present=sink_exists(spark, out["violations"]),
-                just_ran=ran if out.get("violations_backfill") else None,
-            )
-        if viol_df is not None:
-            plan = next(c.plan for c in suite.checks if isinstance(c, SchemaCheck))
-            viols = plan.validate(
-                viol_df,
-                keys=cfg.get("keys", []),
-                json_col=cfg.get("json_col"),
-                json_types=cfg.get("json_types"),
-            ).violations
-            write_output(viols, out["violations"])
-        if side is not None and (todo_t or side.backfill):
-            # completion rows for what was written now AND the
-            # legacy-complete backfill (written by the old release)
-            side.commit(spark, list(todo_t) + list(side.backfill), pid_of)
 
     # store this run's quantile summary as the next run's drift baseline
     d = cfg.get("checks", {}).get("drift")

@@ -607,6 +607,10 @@ def _variant_array_ref(ref: ValueRef) -> ValueRef:
     return _replace(ref.with_col(ref.v_array()), dtype=T.ArrayType(T.VariantType()))
 
 
+_NOT_COMPARABLE = " items should be comparable type,like [ string boolean number ]"
+_NOT_UNIQUE = " items should be unique"
+
+
 @register_keyword("uniqueItems")
 def kw_unique_items(operand, path, siblings, ctx) -> Rule | None:
     if not isinstance(operand, bool):
@@ -614,7 +618,7 @@ def kw_unique_items(operand, path, siblings, ctx) -> Rule | None:
     if not operand:
         return None
 
-    def fn(ref: ValueRef) -> Column:
+    def build(ref: ValueRef):
         dt = ref.dtype
         if isinstance(dt, T.VariantType):
             # per-element runtime comparability (Go map-key interface
@@ -624,7 +628,7 @@ def kw_unique_items(operand, path, siblings, ctx) -> Rule | None:
             from ..core.variant import KIND_ARRAY, KIND_OBJECT, variant_kind
             from ..core.variant import variant_string_of as _vso
 
-            arr = _variant_array_ref(ref).col
+            arr = _variant_array_ref(ref).col  # NULL for a non-array: skip
             kinds = F.transform(arr, lambda x: variant_kind(x))
             has_container = F.exists(
                 kinds, lambda k: k.isin(KIND_OBJECT, KIND_ARRAY)
@@ -633,34 +637,22 @@ def kw_unique_items(operand, path, siblings, ctx) -> Rule | None:
                 arr, lambda x: F.concat_ws("|", variant_kind(x), _vso(x))
             )
             dup = F.size(F.array_distinct(tags)) != F.size(tags)
-            out = (
-                F.when(arr.isNull(), empty_violations())  # non-array: skip
-                .when(
-                    has_container,
-                    violation(
-                        ref.path,
-                        " items should be comparable type,like [ string boolean number ]",
-                    ),
-                )
-                .otherwise(viol_when(dup, ref.path, " items should be unique"))
+            return (
+                arr.isNotNull() & (has_container | dup),
+                lambda: F.when(has_container, F.lit(_NOT_COMPARABLE)).otherwise(
+                    F.lit(_NOT_UNIQUE)
+                ),
             )
-            return _skip_null(ref, out)
         if not isinstance(dt, T.ArrayType):
-            return empty_violations()
+            return None
         if not isinstance(
             dt.elementType, (T.StringType, T.BooleanType, T.NumericType)
         ):
-            return _skip_null(
-                ref,
-                violation(
-                    ref.path,
-                    " items should be comparable type,like [ string boolean number ]",
-                ),
-            )
+            return F.lit(True), lambda: _NOT_COMPARABLE
         fail = F.size(F.array_distinct(ref.col)) != F.size(ref.col)
-        return _skip_null(ref, viol_when(fail, ref.path, " items should be unique"))
+        return fail, lambda: _NOT_UNIQUE
 
-    return FnRule(fn)
+    return CondRule(build)
 
 
 def _item_count(ref: ValueRef) -> Column | None:
@@ -842,27 +834,19 @@ def kw_dependencies(operand, path, siblings, ctx) -> Rule:
             raise SchemaError(f"dependencies values must be arrays, path:{path}")
         deps[k] = [str(x) for x in v]
 
-    def fn(ref: ValueRef) -> Column:
-        from ..core.errors import concat_violations
-
-        parts = []
+    def build(ref: ValueRef):
+        # a variant non-object passes
+        guard = ref.v_object().isNotNull() if isinstance(ref.dtype, T.VariantType) else None
         for k, vs in deps.items():
             kc = ref.child(k)
             for dep in vs:
                 dc = ref.child(dep)
                 # m[key] PRESENCE on both sides (validator_logic.go:
                 # 198-218): a key holding JSON null counts as present
-                parts.append(
-                    viol_when(~kc.missing() & dc.missing(), dc.path, "is required")
-                )
-        out = concat_violations(*parts)
-        if isinstance(ref.dtype, T.VariantType):
-            out = F.when(
-                ref.v_object().isNull(), empty_violations()
-            ).otherwise(out)
-        return out
+                fail = ~kc.missing() & dc.missing()
+                yield (fail if guard is None else guard & fail), dc.path, "is required"
 
-    return FnRule(fn)
+    return TargetsRule(build)
 
 
 # ------------------------------------------------- children (sub-node)
@@ -875,22 +859,23 @@ def kw_children(operand, path, siblings, ctx) -> Rule:
         raise SchemaError(f"value of 'children' must be object, path:{path}")
     subs = {k: ctx.compile_node(v, f"{path}.{k}") for k, v in operand.items()}
 
+    def present(ref: ValueRef):
+        """(sub-node, child ref) per child that can be present."""
+        children = [(sub, ref.child(k)) for k, sub in subs.items()]
+        return [(sub, child) for sub, child in children if child.exists]
+
     def fn(ref: ValueRef) -> Column:
         from ..core.errors import concat_violations
 
-        parts = []
-        for k, sub in subs.items():
-            child = ref.child(k)
-            if not child.exists:
-                continue
-            parts.append(
-                F.when(child.null(), empty_violations()).otherwise(
-                    sub.violations(child)
-                )
-            )
-        return concat_violations(*parts)
+        return concat_violations(*[
+            F.when(child.null(), empty_violations()).otherwise(sub.violations(child))
+            for sub, child in present(ref)
+        ])
 
-    return FnRule(fn)
+    def fails(ref: ValueRef) -> Column:
+        return or_all([~child.null() & sub.fails(child) for sub, child in present(ref)])
+
+    return FnRule(fn, fails)
 
 
 # ------------------------------------- single-value string comparisons

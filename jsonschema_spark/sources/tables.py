@@ -16,9 +16,11 @@ Scan-side scale notes:
     references (`CompiledSchema.referenced_columns` union check keys).
 
 Sink-side:
-  * violations/verdicts append as parquet (or Iceberg `append`) with
-    partition columns carried through — the per-partition layout is
-    what makes checkpoint resume O(manifest).
+  * violation/verdict sinks are written partitioned, and each write
+    replaces exactly the partitions it holds rows for (parquet dynamic
+    partition overwrite, Iceberg ``overwritePartitions``): re-running a
+    partition replaces its rows instead of adding a second copy, which
+    is what makes a resumed CLI run exactly-once.
 """
 
 from __future__ import annotations
@@ -194,18 +196,58 @@ def write_output(
     mode: str = "append",
     partition_by: list[str] | None = None,
 ) -> None:
-    """Append verdict/violation rows.
+    """Write verdict/violation rows to ``sink`` (forms mirror
+    ``read_table``).
 
-    ``sink`` forms mirror ``read_table``; parquet appends are atomic at
-    file granularity which is all the checkpoint manifest needs."""
+    With ``partition_by`` the write is a per-partition overwrite: the
+    partitions ``df`` holds rows for are replaced, every other one is
+    kept (parquet: dynamic ``partitionOverwriteMode``; Iceberg:
+    ``overwritePartitions`` into the existing table, partitioned by
+    ``partition_by``), so writing a partition twice leaves one copy.
+    ``mode`` applies only without ``partition_by``."""
     if sink.startswith("iceberg:"):
         _require_iceberg(df.sparkSession)
-        df.writeTo(sink[len("iceberg:"):]).append()
+        w = df.writeTo(sink[len("iceberg:"):])
+        if partition_by:
+            w.overwritePartitions()
+        else:
+            w.append()
         return
-    w = df.write.mode(mode)
     if partition_by:
-        w = w.partitionBy(*partition_by)
+        w = (df.write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy(*partition_by))
+    else:
+        w = df.write.mode(mode)
     w.parquet(sink)
+
+
+def require_partitioned_sink(spark: SparkSession, sink: str,
+                             partition_by: list[str]) -> None:
+    """Refuse a sink that ``write_output(..., partition_by=...)`` cannot
+    overwrite by partition: a parquet directory with data files at its
+    root (the flat layout of an append sink; after a partitioned write
+    Spark reads only the partition directories, so those rows would drop
+    out of every read without an error), or an existing Iceberg table
+    partitioned by other columns.  A missing sink passes."""
+    if sink.startswith("iceberg:"):
+        table = sink[len("iceberg:"):]
+        if not spark.catalog.tableExists(table):
+            return
+        have = [c.name for c in spark.catalog.listColumns(table) if c.isPartition]
+        if set(have) != set(partition_by):
+            raise ValueError(f"sink {sink} is partitioned by {have}, not "
+                             f"{list(partition_by)}; write to a new table")
+        return
+    # Hadoop FS, not os.path: file:/hdfs:/s3a: sinks alike
+    p = spark._jvm.org.apache.hadoop.fs.Path(sink)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    flat = [st.getPath().getName() for st in (fs.listStatus(p) if fs.exists(p) else [])
+            if st.isFile() and not st.getPath().getName().startswith(("_", "."))]
+    if flat:
+        raise ValueError(f"sink {sink} holds data files at its root ({len(flat)}, e.g. "
+                         f"{flat[0]}), so it is not partitioned by {list(partition_by)}; "
+                         "move it aside or write to a new path")
 
 
 # The only read failures that mean "nothing written yet": the directory
@@ -226,18 +268,6 @@ def read_store(spark: SparkSession, path: str, schema: str) -> DataFrame:
         if e.getCondition() not in _EMPTY_STORE:
             raise
         return spark.createDataFrame([], schema)
-
-
-def sink_exists(spark, sink: str) -> bool:
-    """Whether a write_output sink already holds data: catalog lookup
-    for iceberg: sinks, Hadoop-FS existence for paths (works for
-    file:/hdfs:/s3a: alike — os.path would only see local paths)."""
-    if sink.startswith("iceberg:"):
-        return spark.catalog.tableExists(sink[len("iceberg:"):])
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(sink)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
 
 
 def write_bucketed(

@@ -433,57 +433,6 @@ def test_partition_listing_rejects_extra_partition_levels(spark, tmp_path):
     assert _partition_tuples_from_files(df, ["day"]) is None
 
 
-def test_sideoutput_metadata_route_and_transitions(spark, tmp_path):
-    """SideOutput.todo: (a) enumerates partitions scan-free on a bare
-    hive read; (b) a MISSING sink voids completion rows (rebuild);
-    (c) a present sink with no completion rows backfills the
-    partitions the verdict run skipped instead of re-appending."""
-    from jsonschema_spark.checkpoint import (CheckpointManifest, SideOutput,
-                                             side_lineage)
-
-    src = str(tmp_path / "so_parts")
-    spark.createDataFrame(
-        [("2025-01-01", "c1", 0), ("2025-01-02", "c2", 0)],
-        "day string, conv_id string, turn_idx int",
-    ).write.partitionBy("day").parquet(src)
-    df = spark.read.parquet(src)
-    manifest = CheckpointManifest(str(tmp_path / "so_m"))
-    side = SideOutput(manifest=manifest, name="schema:violations",
-                      lineage=side_lineage("t", {"x": 1}, "sink"),
-                      partition_by=["day"])
-
-    # fresh: everything todo, via the files route
-    sub, todo, pid_of = side.todo(df, sink_present=False)
-    assert side.partition_source == "files"
-    assert len(todo) == 2 and sub is not None
-    side.commit(spark, todo, pid_of)
-
-    # confirmed: nothing todo, still no scan needed
-    sub2, todo2, _ = side.todo(df)
-    assert sub2 is None and todo2 == []
-
-    # sink deleted: completion rows are void, everything rebuilds
-    sub3, todo3, _ = side.todo(df, sink_present=False)
-    assert len(todo3) == 2
-
-    # pre-SideOutput manifest (different lineage -> zero completion
-    # rows) + present sink: partitions NOT just run are backfilled
-    side_legacy = SideOutput(manifest=manifest, name="schema:violations",
-                             lineage=side_lineage("t", {"x": 2}, "sink"),
-                             partition_by=["day"])
-    # NOTE: partition-column inference reads "2025-01-01" back as a
-    # DATE — just_ran must carry the TYPED values, exactly what
-    # ResumableRun.last_ran holds (the cli passes those through)
-    import datetime as _dt
-
-    d1, d2 = _dt.date(2025, 1, 1), _dt.date(2025, 1, 2)
-    sub4, todo4, pid4 = side_legacy.todo(
-        df, sink_present=True, just_ran={(d2,)}
-    )
-    assert todo4 == [(d2,)]
-    assert side_legacy.backfill == [(d1,)]
-
-
 def test_windowed_verdicts_json_stream(spark, tmp_path):
     """Streaming JSON-string-column validation (the Kafka shape: a
     `value` column holding a JSON document) — both parse modes; the

@@ -67,34 +67,43 @@ def test_cli_run_with_manifest_resume(
     }
     viols = spark.read.parquet(str(tmp_path / "violations"))
     assert viols.count() > 0
-    assert set(viols.columns) == {"conv_id", "turn_idx", "path", "info"}
+    assert set(viols.columns) == {"conv_id", "turn_idx", "partition_id", "path", "info"}
 
     # resume: second run sees the manifest and re-runs nothing
     n_viols = viols.count()
     rc2 = main(["run", str(cfg_path)])
     assert rc2 == 0
     manifest = spark.read.parquet(str(tmp_path / "manifest"))
-    # 4 check rows + 1 schema:violations completion row, not doubled
-    assert manifest.count() == 5
-    assert manifest.filter("check = 'schema:violations'").count() == 1
+    # one row per check, not doubled
+    assert manifest.count() == 4
     # the violations sink must NOT accumulate duplicates on resume
     # (ADVICE r1: the append sink re-wrote the full table every run)
     assert spark.read.parquet(str(tmp_path / "violations")).count() == n_viols
 
 
-def test_cli_violations_crash_window(spark, data_dir, tmp_path):
-    """A run that appended the schema check's manifest rows but crashed
-    BEFORE the violations write (while the sink already exists from an
-    earlier run) must not lose those partitions' violations on the next
-    run — the skip is scoped to partitions whose schema:violations
-    completion row is present, not to the schema check's own rows
-    (ADVICE r2 medium)."""
-    from jsonschema_spark.checkpoint import CheckpointManifest, ResumableRun
-    from jsonschema_spark.cli import build_suite, main
-    from jsonschema_spark.operators.checks import CheckSuite
+WRITE_POINTS = ("verdicts", "violations", "manifest")
 
+
+def _crash_setup(spark, data_dir, tmp_path):
+    """(cfg, cfg_path, write_table, add_partition): a role-partitioned
+    copy of the transcripts without its NULL-role rows, which fail the
+    schema and are added back as one new partition, and a config
+    writing all three outputs under ``tmp_path/out``."""
+    from pyspark.sql import functions as F
+
+    src = str(tmp_path / "src")
+    rows = read_table(spark, str(data_dir / "transcripts"))
+    null_role = F.col("role").isNull()
+
+    def write_table():
+        rows.filter(~null_role).write.mode("overwrite").partitionBy("role").parquet(src)
+
+    def add_partition():
+        rows.filter(null_role).write.mode("append").partitionBy("role").parquet(src)
+
+    out = tmp_path / "out"
     cfg = {
-        "source": str(data_dir / "transcripts"),
+        "source": src,
         "schema": {
             "required": ["conv_id", "role"],
             "properties": {"turn_idx": {"minimum": 0}},
@@ -103,80 +112,200 @@ def test_cli_violations_crash_window(spark, data_dir, tmp_path):
         "partition_by": ["role"],
         "checks": {"uniqueness": {"keys": ["conv_id", "turn_idx"]}},
         "output": {
-            "verdicts": str(tmp_path / "verdicts"),
-            "violations": str(tmp_path / "violations"),
-            "manifest": str(tmp_path / "manifest"),
+            "verdicts": str(out / "verdicts"),
+            "violations": str(out / "violations"),
+            "manifest": str(out / "manifest"),
         },
     }
     cfg_path = tmp_path / "cfg.json"
     cfg_path.write_text(json.dumps(cfg))
+    return cfg, str(cfg_path), write_table, add_partition
 
-    # simulate the crashed run: verdict/manifest rows land ...
-    df = read_table(spark, cfg["source"])
-    run = ResumableRun(
-        suite=CheckSuite(build_suite(spark, cfg)),
-        manifest=CheckpointManifest(cfg["output"]["manifest"]),
-        partition_by=["role"],
-        source_id=cfg["source"],
+
+def _crash_once(monkeypatch, point, cfg):
+    """Make the first write at ``point`` raise: the verdict or the
+    violations sink's ``write_output``, or ``CheckpointManifest.append``."""
+    from jsonschema_spark.checkpoint import CheckpointManifest
+    from jsonschema_spark.sources import tables
+
+    crashed = []
+
+    def crash():
+        crashed.append(point)
+        raise RuntimeError(f"crash writing {point}")
+
+    if point == "manifest":
+        real_append = CheckpointManifest.append
+
+        def append(self, *a, **kw):
+            if not crashed:
+                crash()
+            return real_append(self, *a, **kw)
+
+        monkeypatch.setattr(CheckpointManifest, "append", append)
+    else:
+        real_write = tables.write_output
+
+        def write_output(df, sink, *a, **kw):
+            if sink == cfg["output"][point] and not crashed:
+                crash()
+            return real_write(df, sink, *a, **kw)
+
+        monkeypatch.setattr(tables, "write_output", write_output)
+
+
+def _outputs(spark, cfg):
+    """Verdict, violation and manifest rows, each sorted."""
+    out = cfg["output"]
+    verdicts = sorted(
+        (r["partition_id"], r["check"], r["pass"], r["violation_count"],
+         tuple(sorted(r["metrics"].items())))
+        for r in spark.read.parquet(out["verdicts"]).collect()
     )
-    run.run(df)
-    # ... the sink exists (earlier runs) but THIS data's violations were
-    # never written
-    spark.createDataFrame(
-        [], "conv_id string, turn_idx int, path string, info string"
-    ).write.parquet(str(tmp_path / "violations"))
+    viols = sorted(
+        (r["partition_id"], r["conv_id"], r["turn_idx"], r["path"], r["info"])
+        for r in spark.read.parquet(out["violations"]).collect()
+    )
+    manifest = sorted(
+        (r["partition_id"], r["check"], r["lineage"])
+        for r in spark.read.parquet(out["manifest"]).collect()
+    )
+    return verdicts, viols, manifest
 
-    rc = main(["run", str(cfg_path)])
-    assert rc == 0
-    viols = spark.read.parquet(str(tmp_path / "violations"))
-    n = viols.count()
-    assert n > 0  # the old last_ran scoping dropped these forever
 
-    # and a further resume does not duplicate them
-    rc2 = main(["run", str(cfg_path)])
-    assert rc2 == 0
-    assert spark.read.parquet(str(tmp_path / "violations")).count() == n
+def _sink_files(cfg) -> dict:
+    """{sink partition directory: its data file names} of both sinks."""
+    import os
+
+    files = {}
+    for sink in (cfg["output"]["verdicts"], cfg["output"]["violations"]):
+        for root, _, names in os.walk(sink):
+            data = sorted(n for n in names if n.endswith(".parquet"))
+            if data:
+                files[os.path.relpath(root, os.path.dirname(sink))] = data
+    return files
 
 
 def test_cli_verdicts_crash_window(spark, data_dir, tmp_path, monkeypatch):
-    """A run that crashes writing the verdict sink must not leave the
-    manifest marking those partitions done: the next run re-runs them,
-    and the sink ends with every partition's verdicts exactly once."""
-    from jsonschema_spark.cli import main
-    from jsonschema_spark.sources import tables
+    """A fresh run that crashes at any write point — the verdict sink,
+    the violations sink or the manifest append — and is then re-run
+    ends with exactly a clean run's verdict, violation and manifest
+    rows: every partition re-runs and overwrites, none is skipped or
+    written twice."""
+    import shutil
 
+    from jsonschema_spark.cli import main
+
+    cfg, cfg_path, write_table, _ = _crash_setup(spark, data_dir, tmp_path)
+    write_table()
+    assert main(["run", cfg_path]) == 0
+    clean = _outputs(spark, cfg)
+    n_roles = read_table(spark, cfg["source"]).select("role").distinct().count()
+    keys = [(p, c) for p, c, *_ in clean[0]]
+    assert len(keys) == len(set(keys)) == 2 * n_roles
+    assert {c for _, c in keys} == {"schema", "uniqueness"}
+    assert clean[1] and len(clean[2]) == 2 * n_roles
+
+    for point in WRITE_POINTS:
+        shutil.rmtree(tmp_path / "out")
+        with monkeypatch.context() as m:
+            _crash_once(m, point, cfg)
+            with pytest.raises(RuntimeError, match=f"crash writing {point}"):
+                main(["run", cfg_path])
+        assert main(["run", cfg_path]) == 0
+        got = _outputs(spark, cfg)
+        assert got == clean, point
+        keys = [(p, c) for p, c, *_ in got[0]]
+        assert len(keys) == len(set(keys)), point
+
+
+def test_cli_violations_crash_window(spark, data_dir, tmp_path, monkeypatch):
+    """A resumed run over one new partition that crashes at any write
+    point and is then re-run ends with exactly a clean resume's rows,
+    and only the new partition's sink directories change: the other
+    partitions' files are the ones the first run wrote."""
+    import shutil
+
+    from jsonschema_spark.cli import main
+
+    cfg, cfg_path, write_table, add_partition = _crash_setup(spark, data_dir, tmp_path)
+    new = "partition_id=role%3D__HIVE_DEFAULT_PARTITION__"
+    new_dirs = {f"verdicts/{new}/check=schema", f"verdicts/{new}/check=uniqueness",
+                f"violations/{new}"}
+
+    def first_run() -> dict:
+        shutil.rmtree(tmp_path / "out", ignore_errors=True)
+        write_table()
+        assert main(["run", cfg_path]) == 0
+        before = _sink_files(cfg)
+        assert before and not set(before) & new_dirs
+        add_partition()
+        return before
+
+    before = first_run()
+    assert main(["run", cfg_path]) == 0
+    clean = _outputs(spark, cfg)
+    after = _sink_files(cfg)
+    assert set(after) - set(before) == new_dirs
+    assert {d: after[d] for d in before} == before
+
+    for point in WRITE_POINTS:
+        before = first_run()
+        with monkeypatch.context() as m:
+            _crash_once(m, point, cfg)
+            with pytest.raises(RuntimeError, match=f"crash writing {point}"):
+                main(["run", cfg_path])
+        assert main(["run", cfg_path]) == 0
+        assert _outputs(spark, cfg) == clean, point
+        after = _sink_files(cfg)
+        assert set(after) - set(before) == new_dirs, point
+        assert {d: after[d] for d in before} == before, point
+
+
+def test_cli_run_refuses_flat_sink(spark, data_dir, tmp_path):
+    """A parquet sink holding a data file at its root (the flat layout
+    an append sink left) is refused before anything is written: no
+    verdict sink, no manifest."""
+    import os
+
+    from jsonschema_spark.cli import main
+
+    flat = str(tmp_path / "violations")
+    spark.createDataFrame(
+        [("c1", 0, "$", "x")], "conv_id string, turn_idx int, path string, info string"
+    ).coalesce(1).write.parquet(flat)
     cfg = {
         "source": str(data_dir / "transcripts"),
-        "schema": {"required": ["conv_id", "role"]},
-        "partition_by": ["role"],
-        "checks": {"uniqueness": {"keys": ["conv_id", "turn_idx"]}},
+        "schema": {"required": ["conv_id"]},
+        "keys": ["conv_id", "turn_idx"],
         "output": {
             "verdicts": str(tmp_path / "verdicts"),
+            "violations": flat,
             "manifest": str(tmp_path / "manifest"),
         },
     }
     cfg_path = tmp_path / "cfg.json"
     cfg_path.write_text(json.dumps(cfg))
-
-    real = tables.write_output
-    crashes = []
-
-    def crash_once(df, path, *a, **kw):
-        if path == cfg["output"]["verdicts"] and not crashes:
-            crashes.append(path)
-            raise RuntimeError("crash writing the verdict sink")
-        return real(df, path, *a, **kw)
-
-    monkeypatch.setattr(tables, "write_output", crash_once)
-    with pytest.raises(RuntimeError, match="crash writing"):
+    with pytest.raises(ValueError, match="data files at its root"):
         main(["run", str(cfg_path)])
-    assert main(["run", str(cfg_path)]) == 0
+    assert not os.path.exists(tmp_path / "manifest")
+    assert not os.path.exists(tmp_path / "verdicts")
+    assert spark.read.parquet(flat).count() == 1
 
-    n_roles = read_table(spark, cfg["source"]).select("role").distinct().count()
-    keys = [(r["partition_id"], r["check"])
-            for r in spark.read.parquet(cfg["output"]["verdicts"]).collect()]
-    assert len(keys) == len(set(keys)) == 2 * n_roles
-    assert {c for _, c in keys} == {"schema", "uniqueness"}
+
+def test_cli_run_rejects_unknown_output_key(tmp_path):
+    """Output keys the CLI does not know (a removed option, a typo)
+    raise naming them instead of being ignored."""
+    from jsonschema_spark.cli import main
+
+    cfg = {"source": "unused",
+           "output": {"verdicts": "v", "backfill": True, "manifset": "m"}}
+    cfg_path = tmp_path / "cfg.json"
+    cfg_path.write_text(json.dumps(cfg))
+    with pytest.raises(ValueError, match="backfill.*manifset") as e:
+        main(["run", str(cfg_path)])
+    for key in ("verdicts", "violations", "manifest"):
+        assert key in str(e.value)
 
 
 def test_read_table_pushdown(spark, data_dir):
@@ -304,11 +433,12 @@ def test_cli_run_json_col(spark, tmp_path):
     assert spark.read.parquet(str(tmp_path / "jv")).count() == 2
 
     # switching the parse mode changes semantics -> lineage must
-    # invalidate and the run re-appends fresh verdicts
+    # invalidate and the run re-runs both days, replacing their verdicts
     cfg["json_types"] = "static"
     cfg_path.write_text(json.dumps(cfg))
     assert main(["run", str(cfg_path)]) == 0
-    assert spark.read.parquet(str(tmp_path / "jv")).count() == 4
+    assert spark.read.parquet(str(tmp_path / "jv")).count() == 2
+    assert len(spark.read.parquet(str(tmp_path / "jm")).collect()) == 4
 
 
 def test_cli_run_sequence_check(spark, data_dir, tmp_path):

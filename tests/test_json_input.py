@@ -4,6 +4,8 @@ arbitrary JSON documents (schema.go:121-138) — over a string column."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -268,7 +270,7 @@ def test_json_path_equals_struct_path_on_corpus(spark):
     reports the decode failure, the struct path sees nulls.)"""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as E
 
     df = E._json_events_payload_df(spark, "/root/testdata/sf0.001")

@@ -4,6 +4,8 @@ whole-stage methods in HotSpot's 8,000..65,535-bytecode dead zone run
 interpreted forever; measured 5.6s vs 1.2s on the 64-dim unrolled dot
 pair join)."""
 
+from pathlib import Path
+
 from jsonschema_spark.core import session
 
 
@@ -26,7 +28,7 @@ def test_entry_table_loader_tunes(spark, tmp_path):
     runtime confs even on a session the engine did not build."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as E
 
     spark.conf.set("spark.sql.codegen.hugeMethodLimit", "65535")

@@ -70,6 +70,9 @@ leaf_keywords = st.one_of(
     st.fixed_dictionaries({"exclusiveMinimum": st.integers(-3, 3)}),
     st.fixed_dictionaries({"multipleOf": st.sampled_from([1, 2, 0.5])}),
     st.fixed_dictionaries({"format": st.sampled_from(["date", "ipv4", "email"])}),
+    st.fixed_dictionaries({"uniqueItems": st.booleans()}),
+    st.fixed_dictionaries({"dependencies": st.dictionaries(
+        st.sampled_from(KEYS), st.lists(st.sampled_from(KEYS), max_size=2), max_size=2)}),
 )
 
 

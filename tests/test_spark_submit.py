@@ -78,8 +78,10 @@ def test_spark_submit_py_files_run(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
 
+    # the verdict sink is partitioned by (partition_id, check)
     verdicts = duckdb.sql(
-        f"SELECT \"check\", pass FROM parquet_scan('{out}/verdicts/*.parquet')"
+        f"SELECT \"check\", pass FROM read_parquet("
+        f"'{out}/verdicts/*/*/*.parquet', hive_partitioning = true)"
     ).fetchall()
     names = {v[0] for v in verdicts}
     assert {"schema", "uniqueness"} <= names

@@ -12,11 +12,13 @@ import json
 import math
 import os
 import sys
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents"
@@ -176,7 +178,7 @@ def main() -> None:
         import subprocess
 
         head = subprocess.run(
-            ["git", "rev-parse", "--short", "HEAD"], cwd="/root/repo",
+            ["git", "rev-parse", "--short", "HEAD"], cwd=ROOT,
             capture_output=True, text=True,
         ).stdout.strip()
         with open(out, "w") as f:
