@@ -70,8 +70,6 @@ EVENTS_SCHEMA = {
 # queries
 # --------------------------------------------------------------------
 
-_STREAM_SINK_N = 0
-
 def q_validate_orders(spark, sf_dir):
     """Flagship row-level validation: compiled keyword plan → exploded
     violation rows (SURVEY.md §2.1: required/enum/min/max/pattern)."""
@@ -429,27 +427,6 @@ def q_stats_incremental(spark, sf_dir):
     )
 
 
-def q_top_values(spark, sf_dir):
-    """Per-column top-k categorical value histogram (Deequ-histogram
-    shape): one explode-to-(column,value) pass, one hash aggregation,
-    bounded per-column window.  operators/checks.top_values."""
-    from jsonschema_spark.operators.checks import top_values
-
-    ev = _t(spark, sf_dir, "events")
-    return top_values(ev, ["event_type", "user_id"], k=5)
-
-
-def q_drift_timeline(spark, sf_dir):
-    """Per-day PSI of the events value distribution vs the previous
-    day (operators/incremental.drift_timeline): exact-replayable
-    fixed-edge histograms, dense bucket x bin grid, scaled-long PSI
-    terms."""
-    from jsonschema_spark.operators.incremental import drift_timeline
-
-    ev = _t(spark, sf_dir, "events")
-    return drift_timeline(ev, "value", [10.0, 50.0, 100.0, 200.0])
-
-
 def q_funnel(spark, sf_dir):
     """Ordered funnel (view -> click -> purchase), strict event-time
     chain: one user-key shuffle + a columnar fold over the sorted
@@ -458,16 +435,6 @@ def q_funnel(spark, sf_dir):
 
     ev = _t(spark, sf_dir, "events")
     return funnel(ev, ["view", "click", "purchase"])
-
-
-def q_outliers(spark, sf_dir):
-    """Per-event-type z-score outlier profile from EXACT fixed-point
-    sums (order-free decimal accumulation).  operators/checks.
-    outlier_stats."""
-    from jsonschema_spark.operators.checks import outlier_stats
-
-    ev = _t(spark, sf_dir, "events")
-    return outlier_stats(ev, "value", by="event_type", z=2.0)
 
 
 def q_validate_part(spark, sf_dir):
@@ -614,47 +581,6 @@ def q_rolling_user_activity(spark, sf_dir):
     return out.select("event_id", "user_id", "n_7d", "cents_7d")
 
 
-def q_stream_windowed_verdicts(spark, sf_dir):
-    """Structured Streaming coverage: the same compiled plan over a
-    readStream source, watermarked 1-hour windowed verdicts, drained
-    with availableNow into a memory sink.  Equals the batch windowed
-    aggregation (the oracle)."""
-    from jsonschema_spark.streaming.validate import windowed_verdicts
-
-    # the file source needs a directory: point it at sf_dir with a
-    # glob filter selecting just the events file
-    stream = (
-        spark.readStream.schema(
-            "event_id bigint, ts timestamp, user_id bigint, "
-            "event_type string, value double, props string"
-        )
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    plan = js.compile_schema(EVENTS_SCHEMA)
-    out = windowed_verdicts(stream, plan, window="1 hour", watermark="2 hours")
-    global _STREAM_SINK_N
-    _STREAM_SINK_N += 1
-    name = f"stream_verdicts_sink_{_STREAM_SINK_N}"
-    from jsonschema_spark.streaming import bounded_state_partitions
-
-    with bounded_state_partitions(spark):
-        q = (
-            out.writeStream.format("memory").queryName(name)
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        q.processAllAvailable()
-    q.stop()
-    res = spark.table(name)
-    return res.select(
-        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-        "rows",
-        "bad_rows",
-        "violation_total",
-        "pass",
-    ).orderBy("window_start")
-
-
 JSON_EVENTS_SCHEMA = {
     "required": ["user"],
     "properties": {
@@ -770,8 +696,7 @@ def q_script_rewrite_docs(spark, sf_dir):
 
 def _json_events_payload_col():
     """Deterministic JSON payload Column from events (event_id,
-    user_id, props) — shared by the batch json queries AND the
-    streaming windowed-verdict query (stateless, stream-legal)."""
+    user_id, props)."""
     k = F.get_json_object("props", "$.k").cast("long")
     u = F.col("user_id")
     name_part = (
@@ -830,50 +755,6 @@ def q_verdict_counts_json(spark, sf_dir):
     )
 
 
-def q_stream_windowed_verdicts_json(spark, sf_dir):
-    """Streaming JSON-string-column validation end to end (the Kafka
-    shape): a readStream source carrying deterministic JSON payloads,
-    validated in the DEFAULT variant runtime-dispatch mode inside
-    watermarked 1-hour windowed verdicts, drained with availableNow.
-    The variant shred is stateless, so it is streaming-legal; the oracle re-derives each document's violation
-    count in pure SQL and windows by time_bucket."""
-    from jsonschema_spark.streaming.validate import windowed_verdicts
-
-    stream = (
-        spark.readStream.schema(
-            "event_id bigint, ts timestamp, user_id bigint, "
-            "event_type string, value double, props string"
-        )
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    doc = stream.select("ts", _json_events_payload_col().alias("payload"))
-    plan = js.compile_schema(JSON_EVENTS_SCHEMA)
-    out = windowed_verdicts(
-        doc, plan, window="1 hour", watermark="2 hours", json_col="payload"
-    )
-    global _STREAM_SINK_N
-    _STREAM_SINK_N += 1
-    name = f"stream_json_verdicts_sink_{_STREAM_SINK_N}"
-    from jsonschema_spark.streaming import bounded_state_partitions
-
-    with bounded_state_partitions(spark):
-        q = (
-            out.writeStream.format("memory").queryName(name)
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        q.processAllAvailable()
-    q.stop()
-    res = spark.table(name)
-    return res.select(
-        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-        "rows",
-        "bad_rows",
-        "violation_total",
-        "pass",
-    ).orderBy("window_start")
-
-
 JSON_TYPED_SCHEMA = {
     "required": ["id", "name"],
     "properties": {
@@ -929,38 +810,6 @@ def _json_typed_payload_df(spark, sf_dir):
         F.pmod(F.col("event_id"), 101) == 0, F.lit('{"bad": ')
     ).otherwise(payload)
     return ev.select("event_id", payload.alias("payload"))
-
-
-JSON_TYPED_SCHEMA_V2 = {
-    # tightened migration of JSON_TYPED_SCHEMA: id minimum 1 -> 10,
-    # name minLength 2 -> 6, tags maxItems 3 -> 2 (the corpus' clean
-    # tags are length-1, so that site provably contributes zero newly-
-    # violating rows — a no-false-positive check)
-    "required": ["id", "name"],
-    "properties": {
-        "id": {"type": "integer", "minimum": 10},
-        "name": {"type": "string", "minLength": 6},
-        "score": {"type": "number|string"},
-        "tags": {"maxItems": 2, "items": {"type": "string"}},
-    },
-}
-
-
-def q_migration_impact_json_events(spark, sf_dir):
-    """Schema migration over a dynamic JSON column
-    (plans/migration.migration_impact_json): ONE try_parse_json into
-    Variant feeds BOTH compiled rule sets through one shared shred —
-    newly-violating documents under the tightened schema, with
-    wrong-typed / malformed documents correctly excluded as
-    pre-existing dirt (they violate the old rules too)."""
-    doc_df = _json_typed_payload_df(spark, sf_dir)
-    return js.migration_impact_json(
-        doc_df,
-        JSON_TYPED_SCHEMA,
-        JSON_TYPED_SCHEMA_V2,
-        "payload",
-        keys=["event_id"],
-    )
 
 
 def q_validate_json_typed(spark, sf_dir):
@@ -1215,118 +1064,6 @@ def q_transcript_integrity(spark, sf_dir):
     return transcripts.conversation_integrity(tdf, order_by=("turn_idx", "seq"))
 
 
-def q_transcript_rollup(spark, sf_dir):
-    """Per-conversation metrics in ONE map-side-combinable aggregation:
-    turn count/range, distinct roles, tool calls, character volume,
-    wall duration, turn-contiguity flag."""
-    tdf = _transcripts_from_events(_t(spark, sf_dir, "events"))
-    return transcripts.conversation_rollup(tdf)
-
-
-def q_transcript_tool_pairing(spark, sf_dir):
-    """Tool-call/result pairing over the derived transcripts
-    (operators/transcripts.tool_call_pairing): tool turns must carry a
-    tool name, tool names only appear on caller roles, tool results
-    must follow an assistant call or sibling tool result.  Hazards are
-    planted deterministically (seq-derived) so every check fires."""
-    tdf = _transcripts_from_events(_t(spark, sf_dir, "events"))
-    i = F.col("seq")
-    tdf = tdf.withColumn(
-        "tool",
-        F.when(
-            (F.col("role") == "tool") & (i % 101 == 7),
-            F.lit(None).cast("string"),
-        ).otherwise(F.col("tool")),
-    ).withColumn(
-        "tool",
-        F.when(
-            (F.col("role") == "user") & (i % 103 == 11), F.lit("search")
-        ).otherwise(F.col("tool")),
-    )
-    return transcripts.tool_call_pairing(tdf, order_by=("turn_idx", "seq"))
-
-
-def q_transcript_merge_runs(spark, sf_dir):
-    """Transcript repair (operators/transcripts.merge_consecutive_turns):
-    runs of consecutive same-role turns (chunked streaming output /
-    retried tool writes) merged into one turn per run via the
-    gaps-and-islands window segmenter; the run id IS the new turn
-    index, so the whole repair is one conv_id window + one grouped
-    aggregation — no self-join, no re-index pass."""
-    tdf = _transcripts_from_events(_t(spark, sf_dir, "events"))
-    return transcripts.merge_consecutive_turns(tdf, order_by=("turn_idx", "seq"))
-
-
-ORDERS_SCHEMA_V2 = {
-    # the migration: maximum tightened 400000 -> 250000, priority
-    # pattern narrowed [1-4] -> [1-3]
-    "required": ["o_orderkey", "o_custkey", "o_orderstatus"],
-    "properties": {
-        "o_orderstatus": {"type": "string", "enum": ["F", "O"]},
-        "o_totalprice": {"minimum": 2000, "maximum": 250000},
-        "o_orderpriority": {"pattern": "^[1-3]-[A-Z ]+$"},
-    },
-}
-
-
-def q_migration_impact_orders(spark, sf_dir):
-    """Schema-migration impact (plans/migration.py): rows clean under
-    ORDERS_SCHEMA that newly violate the tightened ORDERS_SCHEMA_V2 —
-    both compiled rule sets evaluate in ONE fused codegen projection
-    over ONE scan (plan-shape pinned in tests/test_migration.py)."""
-    orders = _t(spark, sf_dir, "orders")
-    return js.migration_impact(
-        orders, ORDERS_SCHEMA, ORDERS_SCHEMA_V2, keys=["o_orderkey"]
-    )
-
-
-def q_volume_anomalies_events(spark, sf_dir):
-    """Volume-anomaly detection over per-day ingest counts
-    (operators/incremental.volume_anomalies): robust trailing-window
-    median/MAD z-score per batch — the Deequ-style anomaly check over
-    the metrics history a resumable pipeline already keeps.  The
-    history is metadata-sized (one row per day), so the single-task
-    ordered window is the right plan."""
-    from jsonschema_spark.operators.incremental import volume_anomalies
-
-    ev = _t(spark, sf_dir, "events")
-    hist = ev.groupBy(
-        F.date_trunc("day", F.col("ts")).alias("bucket")
-    ).agg(F.count(F.lit(1)).alias("n_rows"))
-    return volume_anomalies(hist)
-
-
-def q_tool_loops(spark, sf_dir):
-    """Agent-loop detection (transcripts.tool_loops): maximal runs of
-    >= 2 consecutive same-tool invocations with no intervening
-    user/system turn — the stuck-retry signature.  One conv-key window
-    pass; only loop-sized rows survive into the run aggregation."""
-    tdf = _transcripts_from_events(_t(spark, sf_dir, "events"))
-    return transcripts.tool_loops(
-        tdf, order_by=["turn_idx", "seq"], min_run=2
-    )
-
-
-def q_tool_latency(spark, sf_dir):
-    """Per-tool call->result latency profile (transcripts.tool_latency):
-    exact integer-microsecond latencies, order-free sums, exact
-    percentiles.  The fixture corpus's assistant turns don't name the
-    tool they invoke, so the query plants the caller's tool from the
-    following tool turn (a lead over the same conv window) — giving
-    ground-truth adjacent call->result pairs the oracle replays."""
-    tdf = _transcripts_from_events(_t(spark, sf_dir, "events"))
-    w = Window.partitionBy("conv_id").orderBy("turn_idx", "seq")
-    planted = tdf.withColumn(
-        "tool",
-        F.when(
-            (F.col("role") == "assistant")
-            & (F.lead("role").over(w) == "tool"),
-            F.lead("tool").over(w),
-        ).otherwise(F.col("tool")),
-    )
-    return transcripts.tool_latency(planted, order_by=["turn_idx", "seq"])
-
-
 def q_transcript_skew_report(spark, sf_dir):
     """Key-skew concentration report (skew.skew_report) over the
     transcript conv_id — the quantitative decision input for the north
@@ -1415,14 +1152,7 @@ def _rotate(qs: dict, path: str | None = None) -> dict:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return _rotate({
         "transcript_integrity": q_transcript_integrity,
-        "transcript_rollup": q_transcript_rollup,
-        "transcript_tool_pairing": q_transcript_tool_pairing,
-        "transcript_merge_runs": q_transcript_merge_runs,
-        "migration_impact_orders": q_migration_impact_orders,
-        "volume_anomalies_events": q_volume_anomalies_events,
         "conversation_verdicts": q_conversation_verdicts,
-        "tool_loops": q_tool_loops,
-        "tool_latency": q_tool_latency,
         "transcript_skew_report": q_transcript_skew_report,
         "fd_part_supplier": q_fd_part_supplier,
         "script_builders_docs": q_script_builders_docs,
@@ -1436,7 +1166,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "verdict_counts_json": q_verdict_counts_json,
         "validate_json_typed": q_validate_json_typed,
         "verdict_counts_json_typed": q_verdict_counts_json_typed,
-        "migration_impact_json_events": q_migration_impact_json_events,
         "foreach_fold_docs": q_foreach_fold_docs,
         "foreach_rewrite_docs": q_foreach_rewrite_docs,
         "script_break_docs": q_script_break_docs,
@@ -1447,12 +1176,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "asof_purchase_attribution": q_asof_purchase_attribution,
         "range_join_error_windows": q_range_join_error_windows,
         "rolling_user_activity": q_rolling_user_activity,
-        "stream_windowed_verdicts": q_stream_windowed_verdicts,
-        "outliers_events": q_outliers,
         "funnel_events": q_funnel,
-        "drift_timeline_events": q_drift_timeline,
-        "top_values_events": q_top_values,
-        "stream_windowed_verdicts_json": q_stream_windowed_verdicts_json,
         "transform_events": q_transform_events,
         "stats_lineitem": q_stats_lineitem,
         "stats_incremental": q_stats_incremental,
@@ -1595,24 +1319,6 @@ def _oracle_transcript_integrity() -> str:
            'role ' || role || ' cannot follow ' || p_role
       FROM l WHERE p_role IS NOT NULL AND role IS NOT NULL
                AND (p_role || '>' || role) NOT IN ({allowed})
-    """
-
-
-def _oracle_transcript_rollup() -> str:
-    return f"""
-    WITH t AS ({_SQL_TRANSCRIPTS})
-    SELECT conv_id,
-           CAST(count(*) AS BIGINT) AS n_turns,
-           min(turn_idx) AS first_turn,
-           max(turn_idx) AS last_turn,
-           CAST(count(DISTINCT role) AS BIGINT) AS n_roles,
-           CAST(SUM(CASE WHEN tool IS NOT NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_tool_calls,
-           CAST(SUM(length(text)) AS BIGINT) AS n_chars,
-           CAST(floor(epoch(max(ts))) AS BIGINT)
-             - CAST(floor(epoch(min(ts))) AS BIGINT) AS duration_sec,
-           (max(turn_idx) - min(turn_idx) + 1) = count(*) AS turns_contiguous
-    FROM t GROUP BY conv_id
     """
 
 
@@ -1808,49 +1514,6 @@ def oracle_sql() -> dict[str, str]:
                    THEN 1 ELSE 0 END) AS BIGINT) AS bad_rows
             FROM p
         """,
-        # migration over the JSON column: newly violating = clean
-        # under JSON_TYPED_SCHEMA, violating under the tightened V2
-        # (id minimum 10, name minLength 6; tags maxItems 2 provably
-        # hits nothing because old-clean tags are length 1).  The
-        # wrong-typed / malformed hazards are old-dirty so excluded.
-        "migration_impact_json_events": """
-            WITH base AS (
-              SELECT event_id, user_id AS u,
-                     CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-              FROM events
-            ),
-            p AS (
-              SELECT event_id, u, k,
-                     (event_id % 101 = 0) AS broken,
-                     (u % 11 = 0) AS id_str,
-                     (u % 11 <> 0 AND u % 19 = 0) AS id_flt,
-                     CASE WHEN u % 11 = 0 THEN NULL
-                          WHEN u % 19 = 0 THEN (u % 40) + 0.5
-                          ELSE CAST(u % 40 AS DOUBLE) END AS id_num,
-                     (u % 17 = 0) AS name_absent,
-                     (u % 17 <> 0 AND u % 13 = 0) AS name_null,
-                     (u % 17 <> 0 AND u % 13 <> 0 AND u % 29 = 0) AS name_short,
-                     (u % 17 <> 0 AND u % 13 <> 0 AND u % 29 <> 0) AS name_user,
-                     (u % 7 = 0) AS score_bool,
-                     (k % 10 = 0) AS tags_mixed,
-                     (k % 10 <> 0 AND k % 9 = 0) AS tags_long
-              FROM base
-            ),
-            clean AS (
-              SELECT * FROM p
-              WHERE NOT (broken OR id_str OR id_flt
-                         OR (id_num IS NOT NULL AND NOT (id_num >= 1))
-                         OR name_absent OR name_short OR score_bool
-                         OR tags_mixed OR tags_long)
-            )
-            SELECT event_id, '$.id' AS path,
-                   'value must be larger or equal than 10' AS info
-              FROM clean WHERE id_num IS NOT NULL AND NOT (id_num >= 10)
-            UNION ALL
-            SELECT event_id, '$.name', 'length must be larger or equal than 6'
-              FROM clean
-             WHERE name_user AND strlen('user' || CAST(u % 50 AS VARCHAR)) < 6
-        """,
         "foreach_rewrite_docs": """
             WITH d AS (
               SELECT doc_id,
@@ -2008,66 +1671,6 @@ def oracle_sql() -> dict[str, str]:
                    count(DISTINCT user_id) AS users
             FROM events GROUP BY event_type
         """,
-        "top_values_events": """
-        WITH pairs AS (
-          SELECT 'event_type' AS "column",
-                 coalesce(CAST(event_type AS VARCHAR), '<null>') AS value
-          FROM events
-          UNION ALL
-          SELECT 'user_id' AS "column",
-                 coalesce(CAST(user_id AS VARCHAR), '<null>') AS value
-          FROM events),
-        counts AS (
-          SELECT "column", value, count(*) AS n FROM pairs
-          GROUP BY "column", value),
-        tot AS (SELECT count(*) AS t FROM events),
-        ranked AS (
-          SELECT "column", value, n,
-                 row_number() OVER (PARTITION BY "column"
-                                    ORDER BY n DESC, value ASC) AS rk
-          FROM counts)
-        SELECT "column", value, n,
-               round(CAST(n AS DOUBLE) / CAST(t AS DOUBLE), 6) AS frac
-        FROM ranked, tot WHERE rk <= 5
-        """,
-        "drift_timeline_events": """
-        WITH h AS (
-          SELECT date_trunc('day', ts) AS bucket,
-                 (CAST((CAST(value AS DOUBLE) >= 10.0) AS INT) + CAST((CAST(value AS DOUBLE) >= 50.0) AS INT) + CAST((CAST(value AS DOUBLE) >= 100.0) AS INT) + CAST((CAST(value AS DOUBLE) >= 200.0) AS INT)) AS bin,
-                 count(*) AS n
-          FROM events
-          WHERE value IS NOT NULL AND ts IS NOT NULL
-          GROUP BY 1, 2),
-        b AS (SELECT DISTINCT bucket FROM h),
-        grid AS (SELECT bucket, CAST(g AS INT) AS bin
-                 FROM b, unnest(range(0, 5)) AS t(g)),
-        dense AS (SELECT grid.bucket, grid.bin, coalesce(h.n, 0) AS n
-                  FROM grid LEFT JOIN h USING (bucket, bin)),
-        pm AS (SELECT bucket,
-                      lag(bucket) OVER (ORDER BY bucket) AS prev_bucket
-               FROM b QUALIFY prev_bucket IS NOT NULL),
-        j AS (SELECT c.bucket, c.bin, c.n AS n_cur, p.n AS n_prev
-              FROM dense c JOIN pm USING (bucket)
-              JOIN dense p ON p.bucket = pm.prev_bucket AND p.bin = c.bin),
-        tot AS (SELECT bucket,
-                       CAST(sum(n_cur) AS BIGINT) AS t_cur,
-                       CAST(sum(n_prev) AS BIGINT) AS t_prev
-                FROM j GROUP BY bucket),
-        terms AS (
-          SELECT j.bucket,
-                 CAST(round(
-                   (((n_cur + 0.5) / (t_cur + 0.5 * 5))
-                    - ((n_prev + 0.5) / (t_prev + 0.5 * 5)))
-                   * ln(((n_cur + 0.5) / (t_cur + 0.5 * 5))
-                        / ((n_prev + 0.5) / (t_prev + 0.5 * 5)))
-                   * 1e9, 0) AS BIGINT) AS term9,
-                 t_cur, t_prev
-          FROM j JOIN tot USING (bucket))
-        SELECT bucket,
-               round(CAST(sum(term9) AS DOUBLE) / 1e9, 6) AS psi,
-               max(t_cur) AS n_cur, max(t_prev) AS n_prev
-        FROM terms GROUP BY bucket
-        """,
         "funnel_events": """
         WITH e AS (SELECT user_id, event_type, ts FROM events
                    WHERE event_type IN ('view', 'click', 'purchase')),
@@ -2089,101 +1692,6 @@ def oracle_sql() -> dict[str, str]:
         LEFT JOIN s1 USING (user_id)
         LEFT JOIN s2 USING (user_id)
         LEFT JOIN s3 USING (user_id)
-        """,
-        "outliers_events": """
-        WITH a AS (
-          SELECT event_type AS grp, count(*) AS n,
-                 sum(CAST(round(CAST(value AS DOUBLE) * 100, 0)
-                          AS HUGEINT)) AS s,
-                 sum(CAST(round(CAST(value AS DOUBLE) * 100, 0) AS HUGEINT)
-                     * CAST(round(CAST(value AS DOUBLE) * 100, 0)
-                            AS HUGEINT)) AS sq
-          FROM events WHERE value IS NOT NULL GROUP BY event_type),
-        b AS (SELECT grp, n,
-                     CAST(s AS DOUBLE) / CAST(n AS DOUBLE) / 100 AS mean_raw,
-                     sqrt(greatest(
-                       CAST(sq AS DOUBLE) / CAST(n AS DOUBLE) / (100 * 100)
-                       - (CAST(s AS DOUBLE) / CAST(n AS DOUBLE) / 100)
-                         * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE) / 100),
-                       0.0)) AS std_raw
-              FROM a),
-        c AS (SELECT grp, n, mean_raw, std_raw,
-                     mean_raw - 2.0 * std_raw AS lo_raw,
-                     mean_raw + 2.0 * std_raw AS hi_raw
-              FROM b),
-        r AS (SELECT e.event_type AS grp, count(*) AS n_outliers
-              FROM events e JOIN c ON c.grp = e.event_type
-              WHERE e.value IS NOT NULL
-                AND (CAST(e.value AS DOUBLE) < lo_raw
-                     OR CAST(e.value AS DOUBLE) > hi_raw)
-              GROUP BY e.event_type)
-        SELECT c.grp AS event_type, n,
-               round(mean_raw, 6) AS mean, round(std_raw, 6) AS std,
-               round(lo_raw, 6) AS lo, round(hi_raw, 6) AS hi,
-               coalesce(r.n_outliers, 0) AS n_outliers
-        FROM c LEFT JOIN r USING (grp)
-        """,
-        "stream_windowed_verdicts": """
-            WITH v AS (
-              SELECT time_bucket(INTERVAL '1 hour', ts) AS w, ts, event_id,
-                     (CASE WHEN event_type IS NOT NULL AND event_type NOT IN
-                            ('click','view','purchase','signup','error') THEN 1 ELSE 0 END
-                    + CASE WHEN value IS NOT NULL AND NOT (value >= 0) THEN 1 ELSE 0 END
-                    + CASE WHEN value IS NOT NULL AND NOT (value <= 450) THEN 1 ELSE 0 END
-                    + CASE WHEN props IS NOT NULL AND NOT regexp_matches(props, '^\\{.*\\}$') THEN 1 ELSE 0 END
-                    + CASE WHEN event_id IS NULL THEN 1 ELSE 0 END
-                    + CASE WHEN ts IS NULL THEN 1 ELSE 0 END
-                    + CASE WHEN event_type IS NULL THEN 1 ELSE 0 END
-                    + CASE WHEN event_type = 'purchase' AND value IS NOT NULL
-                           AND NOT (value >= 5) THEN 1 ELSE 0 END) AS nv
-              FROM events
-            )
-            SELECT strftime(w, '%Y-%m-%d %H:%M:%S') AS window_start,
-                   count(*) AS rows,
-                   CAST(SUM(CASE WHEN nv > 0 THEN 1 ELSE 0 END) AS BIGINT) AS bad_rows,
-                   CAST(SUM(nv) AS BIGINT) AS violation_total,
-                   SUM(CASE WHEN nv > 0 THEN 1 ELSE 0 END) = 0 AS pass
-            FROM v GROUP BY w
-            ORDER BY window_start
-        """,
-        "stream_windowed_verdicts_json": """
-            WITH base AS (
-              SELECT event_id, user_id, ts,
-                     CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-              FROM events
-            ),
-            p AS (
-              SELECT ts,
-                     user_id % 40 AS idv,
-                     CASE WHEN user_id % 17 = 0 THEN NULL
-                          WHEN user_id % 13 = 0 THEN 'x' || CAST(user_id % 50 AS VARCHAR)
-                          ELSE 'u' || CAST(user_id % 50 AS VARCHAR) END AS name,
-                     k AS q1, (k * 7) % 120 AS q2,
-                     CAST(event_id % 15 AS INT) AS note_len,
-                     (event_id % 97 = 0) AS broken
-              FROM base
-            ),
-            v AS (
-              SELECT time_bucket(INTERVAL '1 hour', ts) AS w,
-                     CASE WHEN broken THEN 1 ELSE
-                       (CASE WHEN NOT (idv >= 1) THEN 1 ELSE 0 END)
-                     + (CASE WHEN name IS NULL THEN 1 ELSE 0 END)
-                     + (CASE WHEN name IS NOT NULL
-                              AND NOT regexp_matches(name, '^u[0-9]+$')
-                        THEN 1 ELSE 0 END)
-                     + (CASE WHEN q1 > 100 THEN 1 ELSE 0 END)
-                     + (CASE WHEN q2 > 100 THEN 1 ELSE 0 END)
-                     + (CASE WHEN note_len > 10 THEN 1 ELSE 0 END)
-                     END AS nv
-              FROM p
-            )
-            SELECT strftime(w, '%Y-%m-%d %H:%M:%S') AS window_start,
-                   count(*) AS rows,
-                   CAST(SUM(CASE WHEN nv > 0 THEN 1 ELSE 0 END) AS BIGINT) AS bad_rows,
-                   CAST(SUM(nv) AS BIGINT) AS violation_total,
-                   SUM(CASE WHEN nv > 0 THEN 1 ELSE 0 END) = 0 AS pass
-            FROM v GROUP BY w
-            ORDER BY window_start
         """,
         "window_gaps": """
             SELECT user_id, event_id, gap_sec FROM (
@@ -2443,15 +1951,8 @@ def oracle_sql() -> dict[str, str]:
             FROM events
         """,
         "transcript_integrity": _oracle_transcript_integrity(),
-        "transcript_rollup": _oracle_transcript_rollup(),
         "stats_incremental": _oracle_stats_incremental(),
-        "transcript_tool_pairing": _oracle_tool_pairing(),
-        "transcript_merge_runs": _oracle_transcript_merge_runs(),
-        "migration_impact_orders": _oracle_migration_impact_orders(),
-        "volume_anomalies_events": _oracle_volume_anomalies(),
         "conversation_verdicts": _oracle_conversation_verdicts(),
-        "tool_loops": _oracle_tool_loops(),
-        "tool_latency": _oracle_tool_latency(),
         "transcript_skew_report": _oracle_transcript_skew_report(),
         "fd_part_supplier": _oracle_fd_part_supplier(),
         "script_builders_docs": """
@@ -2537,107 +2038,6 @@ def _oracle_transcript_skew_report(top: int = 10) -> str:
     """
 
 
-def _oracle_tool_loops(min_run: int = 2) -> str:
-    """Window replay of the gaps-and-islands loop detector: running
-    break-segment id over ALL turns, then lag/run-id over the
-    tool-bearing subsequence."""
-    return f"""
-    WITH t AS ({_SQL_TRANSCRIPTS}),
-    s AS (
-      SELECT conv_id, turn_idx, role, tool, seq,
-             SUM(CASE WHEN role IN ('system', 'user') THEN 1 ELSE 0 END)
-               OVER (PARTITION BY conv_id ORDER BY turn_idx, seq
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS seg
-      FROM t
-    ),
-    tl AS (
-      SELECT conv_id, turn_idx, tool, seg, seq,
-             lag(tool) OVER w AS ptool, lag(seg) OVER w AS pseg
-      FROM s WHERE tool IS NOT NULL
-      WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx, seq)
-    ),
-    r AS (
-      SELECT conv_id, turn_idx, tool,
-             SUM(CASE WHEN ptool IS NULL OR ptool <> tool
-                           OR pseg <> seg THEN 1 ELSE 0 END)
-               OVER (PARTITION BY conv_id ORDER BY turn_idx, seq
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS run
-      FROM tl
-    )
-    SELECT conv_id, tool,
-           CAST(MIN(turn_idx) AS BIGINT) AS run_start,
-           CAST(COUNT(*) AS BIGINT) AS run_len
-    FROM r GROUP BY conv_id, tool, run
-    HAVING COUNT(*) >= {min_run}
-    """
-
-
-def _oracle_tool_latency() -> str:
-    """Replays the planted caller tool (lead over the conv window),
-    the adjacent call->result pairing, and the exact integer-microsecond
-    latency aggregation; quantile_cont matches Spark's exact
-    percentile (both rank = p*(n-1), linear interpolation)."""
-    return f"""
-    WITH t AS ({_SQL_TRANSCRIPTS}),
-    p AS (
-      SELECT conv_id, turn_idx, seq, role, ts,
-             CASE WHEN role = 'assistant' AND lead(role) OVER w = 'tool'
-                  THEN lead(tool) OVER w ELSE tool END AS tool
-      FROM t WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx, seq)
-    ),
-    l AS (
-      SELECT role, tool,
-             lag(role) OVER w AS prole, lag(tool) OVER w AS ptool,
-             epoch_us(ts) - epoch_us(lag(ts) OVER w) AS lat
-      FROM p WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx, seq)
-    ),
-    pr AS (
-      SELECT tool, lat FROM l
-      WHERE role = 'tool' AND prole = 'assistant' AND ptool = tool
-    )
-    SELECT tool, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           round(CAST(SUM(lat) AS DOUBLE) / COUNT(*), 3) AS mean_us,
-           round(quantile_cont(lat, 0.5), 3) AS p50_us,
-           round(quantile_cont(lat, 0.9), 3) AS p90_us,
-           CAST(MAX(lat) AS BIGINT) AS max_us
-    FROM pr GROUP BY tool
-    """
-
-
-def _oracle_transcript_merge_runs() -> str:
-    # gaps-and-islands re-derivation: run id = cumulative role-change
-    # count - 1 (the merged turn index), then one grouped aggregation
-    # with in-order folds (string_agg / first / filtered list).
-    return f"""
-    WITH t AS ({_SQL_TRANSCRIPTS}),
-    p AS (
-      SELECT conv_id, turn_idx, seq, role, text, tool, ts,
-             lag(role) OVER (PARTITION BY conv_id
-                             ORDER BY turn_idx, seq) AS prev_role
-      FROM t
-    ),
-    s AS (
-      SELECT *,
-             CAST(SUM(CASE WHEN prev_role IS NULL OR prev_role <> role
-                           THEN 1 ELSE 0 END)
-                  OVER (PARTITION BY conv_id ORDER BY turn_idx, seq
-                        ROWS UNBOUNDED PRECEDING) - 1 AS BIGINT) AS seg
-      FROM p
-    )
-    SELECT conv_id,
-           seg AS turn_idx,
-           first(role ORDER BY turn_idx, seq) AS role,
-           string_agg(text, chr(10) ORDER BY turn_idx, seq) AS text,
-           (list(tool ORDER BY turn_idx, seq)
-              FILTER (WHERE tool IS NOT NULL))[1] AS tool,
-           first(ts ORDER BY turn_idx, seq) AS ts,
-           CAST(count(*) AS BIGINT) AS n_merged
-    FROM s GROUP BY conv_id, seg
-    """
-
-
 def _oracle_conversation_verdicts() -> str:
     # per-turn violation count replayed (required text / octet-length
     # budget / turn budget; the always-passing sites contribute 0),
@@ -2660,118 +2060,3 @@ def _oracle_conversation_verdicts() -> str:
            SUM(CASE WHEN nv > 0 THEN 1 ELSE 0 END) = 0 AS clean
     FROM v GROUP BY conv_id
     """
-
-
-def _oracle_volume_anomalies(
-    window: int = 7, k: float = 3.0, min_rel: float = 0.05, min_hist: int = 3
-) -> str:
-    # replay of incremental.volume_anomalies over per-day event counts:
-    # trailing-window list -> interpolated median (list_aggregate
-    # 'median' == Spark's (lo+hi)/2 sorted-middle), MAD over the
-    # absolute deviations, robust z with the mad>0 guard.
-    return f"""
-    WITH h AS (
-      SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS bucket,
-             CAST(COUNT(*) AS DOUBLE) AS metric
-      FROM events GROUP BY 1
-    ),
-    w AS (
-      SELECT bucket, metric,
-             list(metric) OVER (
-               ORDER BY bucket
-               ROWS BETWEEN {window} PRECEDING AND 1 PRECEDING
-             ) AS arr
-      FROM h
-    ),
-    m AS (
-      SELECT bucket, metric, COALESCE(len(arr), 0) AS nh,
-             list_aggregate(arr, 'median') AS med, arr
-      FROM w
-    ),
-    mm AS (
-      SELECT bucket, metric, nh, med,
-             list_aggregate(list_transform(arr, v -> abs(v - med)),
-                            'median') AS mad
-      FROM m
-    )
-    SELECT bucket, metric,
-           CASE WHEN nh >= {min_hist} THEN round(med, 6) END
-             AS trailing_median,
-           CASE WHEN nh >= {min_hist} THEN round(mad, 6) END
-             AS trailing_mad,
-           CASE WHEN nh >= {min_hist} AND 1.4826 * mad > 0
-                THEN round(abs(metric - med) / (1.4826 * mad), 6) END
-             AS robust_z,
-           CAST(nh AS INTEGER) AS n_history,
-           COALESCE(nh >= {min_hist}
-                    AND abs(metric - med) > {k} * 1.4826 * mad
-                    AND abs(metric - med) > {min_rel} * med,
-                    FALSE) AS anomaly
-    FROM mm
-    """
-
-
-def _oracle_migration_impact_orders() -> str:
-    # newly violating = clean under OLD, violating under NEW.  OLD
-    # cleanliness replays _oracle_validate_orders' violation set as a
-    # NOT EXISTS; NEW violations are only the tightened sites (the
-    # unchanged keywords cannot newly fire on an OLD-clean row).
-    return """
-    WITH o AS (SELECT * FROM orders),
-    old_bad AS (
-      SELECT o_orderkey FROM o
-      WHERE (o_orderstatus IS NOT NULL AND o_orderstatus NOT IN ('F','O'))
-         OR (o_totalprice IS NOT NULL AND NOT (o_totalprice >= 2000))
-         OR (o_totalprice IS NOT NULL AND NOT (o_totalprice <= 400000))
-         OR (o_orderpriority IS NOT NULL
-             AND NOT regexp_matches(o_orderpriority, '^[1-4]-[A-Z ]+$'))
-         OR o_orderkey IS NULL OR o_custkey IS NULL OR o_orderstatus IS NULL
-    ),
-    clean AS (
-      SELECT * FROM o
-      WHERE NOT EXISTS (SELECT 1 FROM old_bad b WHERE b.o_orderkey = o.o_orderkey)
-    )
-    SELECT o_orderkey, '$.o_totalprice' AS path,
-           'value must be <= than 250000' AS info
-      FROM clean WHERE o_totalprice IS NOT NULL AND NOT (o_totalprice <= 250000)
-    UNION ALL
-    SELECT o_orderkey, '$.o_orderpriority',
-           o_orderpriority || ' ,value does not match pattern: ^[1-3]-[A-Z ]+$'
-      FROM clean WHERE o_orderpriority IS NOT NULL
-               AND NOT regexp_matches(o_orderpriority, '^[1-3]-[A-Z ]+$')
-    """
-
-
-def _oracle_tool_pairing() -> str:
-    return f"""
-    WITH t0 AS ({{transcripts}}),
-    t AS (
-      SELECT conv_id, turn_idx, role, ts, seq,
-             CASE
-               WHEN role = 'tool' AND seq % 101 = 7 THEN NULL
-               WHEN role = 'user' AND seq % 103 = 11 THEN 'search'
-               ELSE tool
-             END AS tool
-      FROM t0
-    ),
-    l AS (
-      SELECT conv_id, turn_idx, role, tool,
-             lag(role) OVER w AS p_role
-      FROM t WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx, seq)
-    )
-    SELECT conv_id, turn_idx, 'tool_name' AS "check",
-           'tool turn carries no tool name' AS info
-      FROM l WHERE role = 'tool' AND tool IS NULL
-    UNION ALL
-    SELECT conv_id, turn_idx, 'tool_caller',
-           'tool ' || tool || ' named on role ' || role
-      FROM l WHERE tool IS NOT NULL AND role IS NOT NULL
-               AND role NOT IN ('assistant', 'tool')
-    UNION ALL
-    SELECT conv_id, turn_idx, 'tool_pairing',
-           'tool result follows role ' || coalesce(p_role, '<none>')
-      FROM l WHERE role = 'tool'
-               AND (p_role IS NULL OR p_role NOT IN ('assistant', 'tool'))
-    """.format(transcripts=_SQL_TRANSCRIPTS)
-
-

@@ -34,11 +34,6 @@ from .plans.compiler import (
     register_keyword,
 )
 from .plans.formats import register_format
-from .plans.migration import (
-    migration_impact,
-    migration_impact_json,
-    migration_summary,
-)
 from .functions.values import register_func
 from .functions.expr_lang import register_expr_fn
 from .core.generate import (
@@ -58,9 +53,6 @@ __all__ = [
     "generate_schema_doc",
     "get_schema",
     "register_schema",
-    "migration_impact",
-    "migration_impact_json",
-    "migration_summary",
     "register_keyword",
     "register_format",
     "register_func",

@@ -31,8 +31,9 @@ rows); a crash mid-run loses at most the in-flight partitions, never
 corrupts prior rows.  A run writes its outputs (``ResumableRun.run``'s
 ``sink``) before its one manifest append, so a crash anywhere before
 that append re-runs the same partitions; sinks that overwrite by
-partition (``sources.tables.write_output`` with ``partition_by``, as
-the CLI writes them) then hold each partition's rows exactly once.
+partition (``sources.tables.write_output`` with ``partition_by`` or
+``replace_partitions``, as the CLI writes them) then hold each
+partition's rows exactly once.
 """
 
 from __future__ import annotations
@@ -276,9 +277,10 @@ class ResumableRun:
 
     After ``run``, ``last_ran`` maps each check name to the partition
     tuples it actually executed this invocation (missing key = the
-    check was fully checkpointed and skipped) — callers use it to scope
-    secondary outputs (e.g. the CLI's violation sink) to the work that
-    was really (re)done."""
+    check was fully checkpointed and skipped), and ``pid_of`` maps each
+    partition tuple of the input to its ``partition_id`` — callers use
+    them to scope secondary outputs (e.g. the CLI's violation sink) to
+    the work that was really (re)done."""
 
     suite: CheckSuite
     manifest: CheckpointManifest
@@ -292,10 +294,10 @@ class ResumableRun:
 
         ``sink``, when given and anything ran, is called with those
         verdicts BEFORE the one append of this run's checkpoint rows,
-        with ``last_ran`` already set, so it can write every output of
-        the partitions that ran: a crash between the two re-runs those
-        partitions instead of skipping them with their outputs never
-        written."""
+        with ``last_ran`` and ``pid_of`` already set, so it can write
+        every output of the partitions that ran: a crash between the two
+        re-runs those partitions instead of skipping them with their
+        outputs never written."""
         spark = df.sparkSession
         lineages = {c.name: _lineage(self.source_id, c) for c in self.suite.checks}
         done = self.manifest.completed(spark, lineages)
@@ -319,16 +321,15 @@ class ResumableRun:
                 df, self.partition_by
             )
             tuples = [tuple(r[c] for c in self.partition_by) for r in raw]
-            pid_of = {t: r["__pid"] for t, r in zip(tuples, raw)}
-            pids = [r["__pid"] for r in raw]
+            self.pid_of = {t: r["__pid"] for t, r in zip(tuples, raw)}
         else:
             self.partition_source = "none"
-            tuples, pid_of, pids = [()], {(): "ALL"}, ["ALL"]
+            tuples, self.pid_of = [()], {(): "ALL"}
 
         all_new: DataFrame | None = None
         new_rows: list = []
         todo_by_check = {
-            c.name: [t for t in tuples if (pid_of[t], c.name) not in done]
+            c.name: [t for t in tuples if (self.pid_of[t], c.name) not in done]
             for c in self.suite.checks
         }
         if all(len(todo_by_check[c.name]) == len(tuples) for c in self.suite.checks):

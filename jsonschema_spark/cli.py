@@ -50,16 +50,19 @@ A second run with the same config + manifest skips every
 (partition, check) already recorded (checkpoint.ResumableRun).  Any
 other key under ``checks`` or ``output`` is rejected.
 
-Each run replaces the sink partitions of the partitions it ran and
-leaves every other partition as it was (``write_output`` with
-``partition_by``).  With a manifest, both sinks are written before the
-run's one manifest append, so a crash anywhere re-runs those partitions
-and the re-run overwrites them: each partition's verdict and violation
-rows are in the sinks exactly once.  A sink gets files only for
-partitions with rows, so after a run that wrote none there may be no
-sink to read yet.  A parquet sink written flat by an older release, or
-an Iceberg sink partitioned by other columns, is refused before
-anything runs.  The source, the sink paths and ``keys`` are part of
+Each run replaces the sink partitions of the partitions it ran, a
+partition now without violation rows included, and leaves every other
+partition as it was (``write_output`` with ``partition_by``,
+``replace_partitions``).  With a manifest, both sinks are written
+before the run's one manifest append, so a crash anywhere re-runs
+those partitions and the re-run overwrites them: each partition's
+verdict and violation rows are in the sinks exactly once.  A sink gets
+files only for partitions with rows, so after a run that wrote none
+``spark.read.parquet`` finds no sink to read; read a sink with
+``sources.tables.read_store(spark, path, schema)``, which reads such a
+sink as an empty frame.  A parquet sink written flat by an older
+release, or an Iceberg sink partitioned by other columns, is refused
+before anything runs.  The source, the sink paths and ``keys`` are part of
 every manifest row's lineage: a config pointed at a new sink re-runs
 everything instead of leaving the new sink empty.
 """
@@ -192,7 +195,9 @@ def build_suite(spark: SparkSession, cfg: dict):
 def cmd_run(args) -> int:
     from jsonschema_spark.checkpoint import CheckpointManifest, ResumableRun, prune_to_partitions
     from jsonschema_spark.operators.checks import CheckSuite, SchemaCheck, _partition_id
-    from jsonschema_spark.sources.tables import read_table, require_partitioned_sink, write_output
+    from jsonschema_spark.sources.tables import (
+        read_table, replace_partitions, require_partitioned_sink, write_output,
+    )
 
     cfg = json.load(open(args.config))
     out = cfg.get("output", {})
@@ -216,12 +221,13 @@ def cmd_run(args) -> int:
     keys = cfg.get("keys", [])
     schema = next((c for c in suite.checks if isinstance(c, SchemaCheck)), None)
 
-    def write(verdicts, todo=None):
-        """Write the verdicts, then the violation rows of the partition
-        tuples in ``todo`` (None: the whole input)."""
+    def write(verdicts, pids, todo=None):
+        """Write the verdicts, then replace the violation rows of the
+        partitions ``pids``, whose tuples are ``todo`` (None: the whole
+        input), a partition with none left included."""
         if out.get("verdicts"):
             write_output(verdicts, out["verdicts"], partition_by=SINK_PARTITIONS["verdicts"])
-        if not out.get("violations") or schema is None or todo == []:
+        if not out.get("violations") or schema is None or not pids:
             return
         src = df if todo is None or not pcols else prune_to_partitions(df, pcols, todo)
         # partition_id is derived after validation: over fixed columns
@@ -233,7 +239,7 @@ def cmd_run(args) -> int:
             json_col=cfg.get("json_col"),
             json_types=cfg.get("json_types"),
         ).violations.select(*keys, _partition_id(pcols).alias("partition_id"), "path", "info")
-        write_output(viols, out["violations"], partition_by=SINK_PARTITIONS["violations"])
+        replace_partitions(viols, out["violations"], "partition_id", pids)
 
     if out.get("manifest"):
         run = ResumableRun(
@@ -242,11 +248,19 @@ def cmd_run(args) -> int:
             partition_by=pcols,
             source_id=json.dumps([cfg["source"], out.get("verdicts"), out.get("violations"), keys]),
         )
-        # build_suite names the schema check "schema"
-        verdicts = run.run(df, sink=lambda v: write(v, run.last_ran.get("schema", [])))
+
+        def sink(verdicts):
+            # build_suite names the schema check "schema"
+            todo = run.last_ran.get("schema", [])
+            write(verdicts, [run.pid_of[t] for t in todo], todo)
+
+        verdicts = run.run(df, sink=sink)
     else:
+        # collected once: the sinks, the failure count and the pids read it
         verdicts = suite.run(df)
-        write(verdicts)
+        rows = verdicts.collect()
+        verdicts = spark.createDataFrame(rows, verdicts.schema)
+        write(verdicts, [r["partition_id"] for r in rows if r["check"] == "schema"])
     n_fail = verdicts.filter("NOT pass").count()
     if not out.get("verdicts"):
         verdicts.show(100, truncate=False)

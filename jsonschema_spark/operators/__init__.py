@@ -1,7 +1,8 @@
-"""Table-level operators: the checks (schema, stats, uniqueness, RI,
-drift), conversation-transcript checks, skew salting, stable turn
-ordering, incremental stats and mergeable sketches, plus temporal
-joins and document hygiene (PII, unigram-LM scoring, phrase blocklist)."""
+"""Table-level operators: the checks (schema, stats, uniqueness,
+functional dependency, RI, drift), the conversation-sequence check,
+skew salting, stable turn ordering, incremental stats over mergeable
+HLL sketches, plus temporal joins and document hygiene (PII, unigram-LM
+scoring, phrase blocklist)."""
 
 from .checks import (
     Check,

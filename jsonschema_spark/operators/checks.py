@@ -45,7 +45,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 VERDICT_SCHEMA = (
@@ -846,210 +846,3 @@ class CheckSuite:
             if v is not None:
                 res[c.name] = v
         return res
-
-
-# --------------------------------------------------------------------
-# Categorical value profiling + stats-driven constraint suggestion
-# --------------------------------------------------------------------
-
-
-def top_values(
-    df: DataFrame,
-    columns: Sequence[str],
-    k: int = 10,
-) -> DataFrame:
-    """Per-column top-k value histogram: (column, value, n, frac) —
-    the categorical companion to ColumnStats (what Deequ calls a
-    histogram constraint; the reference has no dataset-level analog,
-    SURVEY §2.9).
-
-    One pass: each row explodes into (column, value) pairs via a
-    literal map (values stringified — this is a CATEGORICAL profile),
-    then ONE hash aggregation counts (column, value) with map-side
-    partials, and a bounded window takes the top k per column
-    (partition count = len(columns), each holding its distinct values
-    — never corpus-sized after the count).  NULL appears as its own
-    bucket so null-share is visible in the same table.  Deterministic
-    tie-break: value ascending."""
-    pairs = df.select(
-        F.explode(
-            F.create_map(
-                *[
-                    x
-                    for c in columns
-                    for x in (
-                        F.lit(c),
-                        F.coalesce(
-                            F.col(c).cast("string"), F.lit("<null>")
-                        ),
-                    )
-                ]
-            )
-        ).alias("column", "value")
-    )
-    counts = pairs.groupBy("column", "value").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    totals = df.count()
-    w = Window.partitionBy("column").orderBy(
-        F.col("n").desc(), F.col("value").asc()
-    )
-    return (
-        counts.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= k)
-        .select(
-            "column",
-            "value",
-            "n",
-            F.round(F.col("n").cast("double") / F.lit(float(totals)), 6).alias(
-                "frac"
-            ),
-        )
-    )
-
-
-def suggest_schema(
-    df: DataFrame,
-    columns: Sequence[str] | None = None,
-    enum_max_distinct: int = 12,
-    numeric_margin: float = 0.0,
-) -> dict:
-    """Stats-driven constraint suggestion (the Deequ
-    ConstraintSuggestion shape): profile the data in ONE exact typed
-    aggregation pass (plus one bounded top_values pass for enum
-    candidates) and emit a schema DOCUMENT this engine compiles —
-    `required` for zero-null columns, `minimum`/`maximum` (± margin)
-    for numerics, `enum` for low-cardinality strings, `maxLength`
-    (octet semantics, matching the engine's keyword) for the rest.
-
-    The suggested document round-trips: ``compile_schema(
-    suggest_schema(df)).validate(df)`` is violation-free on the
-    profiled data by construction.  Output is the schema dict
-    (driver-metadata-sized); the profile is one map-side-combinable
-    aggregation over the scan."""
-    from pyspark.sql.types import NumericType, StringType
-
-    cols = list(columns) if columns is not None else list(df.columns)
-    schema_types = {f.name: f.dataType for f in df.schema.fields}
-    aggs: list[Column] = [F.count(F.lit(1)).alias("__n")]
-    for c in cols:
-        col = F.col(c)
-        aggs.append(F.sum(col.isNull().cast("long")).alias(f"{c}__nulls"))
-        aggs.append(F.count_distinct(col).alias(f"{c}__distinct"))
-        if isinstance(schema_types[c], NumericType):
-            aggs.append(F.min(col).alias(f"{c}__min"))
-            aggs.append(F.max(col).alias(f"{c}__max"))
-        elif isinstance(schema_types[c], StringType):
-            aggs.append(
-                F.max(F.octet_length(col)).alias(f"{c}__maxlen")
-            )
-    prof = df.agg(*aggs).collect()[0]
-    enum_cols = [
-        c
-        for c in cols
-        if isinstance(schema_types[c], StringType)
-        and prof[f"{c}__distinct"] <= enum_max_distinct
-    ]
-    enums: dict[str, list[str]] = {}
-    if enum_cols:
-        for r in top_values(df, enum_cols, k=enum_max_distinct + 1).collect():
-            if r["value"] != "<null>":
-                enums.setdefault(r["column"], []).append(r["value"])
-    props: dict = {}
-    required: list[str] = []
-    for c in cols:
-        rule: dict = {}
-        dt = schema_types[c]
-        if prof[f"{c}__nulls"] == 0:
-            required.append(c)
-        if isinstance(dt, NumericType) and prof[f"{c}__min"] is not None:
-            # keep native numeric types when no margin is applied (a
-            # bigint column should suggest integer bounds, not floats)
-            rule["minimum"] = (
-                prof[f"{c}__min"] - numeric_margin
-                if numeric_margin
-                else prof[f"{c}__min"]
-            )
-            rule["maximum"] = (
-                prof[f"{c}__max"] + numeric_margin
-                if numeric_margin
-                else prof[f"{c}__max"]
-            )
-        elif c in enums:
-            rule["enum"] = sorted(enums[c])
-        elif isinstance(dt, StringType) and prof[f"{c}__maxlen"] is not None:
-            rule["maxLength"] = int(prof[f"{c}__maxlen"])
-        if rule:
-            props[c] = rule
-    doc: dict = {"properties": props}
-    if required:
-        doc["required"] = sorted(required)
-    return doc
-
-
-def outlier_stats(
-    df: DataFrame,
-    column: str,
-    by: str | None = None,
-    z: float = 3.0,
-    scale: int = 2,
-) -> DataFrame:
-    """Per-group z-score outlier profile: (group, n, mean, std, lo,
-    hi, n_outliers) — the anomaly-detection member of the checks
-    family (Deequ's anomaly constraint shape).
-
-    Determinism contract: values are fixed-point at ``scale`` decimals
-    (the testdata's value columns are 2-decimal money-like), so
-    sum and sum-of-squares accumulate as EXACT decimals — order-free
-    at any parallelism — and every derived double (mean, variance,
-    bounds) is computed in one fixed expression order the DuckDB
-    oracle mirrors (HUGEINT sums).  ONE map-side-combinable
-    aggregation; the outlier recount joins the metadata-sized bounds
-    back by broadcast."""
-    g = F.col(by) if by else F.lit("__all")
-    m = 10 ** scale
-    vdec = F.round(F.col(column).cast("double") * m, 0).cast("decimal(19,0)")
-    agg = (
-        df.filter(F.col(column).isNotNull())
-        .groupBy(g.alias("grp"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(vdec).alias("__s"),
-            F.sum(vdec * vdec).alias("__sq"),
-        )
-    )
-    mean = F.col("__s").cast("double") / F.col("n").cast("double") / m
-    var = F.greatest(
-        F.col("__sq").cast("double") / F.col("n").cast("double") / (m * m)
-        - mean * mean,
-        F.lit(0.0),
-    )
-    std = F.sqrt(var)
-    bounds = agg.select(
-        "grp",
-        "n",
-        F.round(mean, 6).alias("mean"),
-        F.round(std, 6).alias("std"),
-        (mean - F.lit(z) * std).alias("__lo"),
-        (mean + F.lit(z) * std).alias("__hi"),
-    )
-    rec = (
-        df.filter(F.col(column).isNotNull())
-        .select(g.alias("grp"), F.col(column).cast("double").alias("__v"))
-        .join(F.broadcast(bounds.select("grp", "__lo", "__hi")), "grp")
-        .filter((F.col("__v") < F.col("__lo")) | (F.col("__v") > F.col("__hi")))
-        .groupBy("grp")
-        .agg(F.count(F.lit(1)).alias("n_outliers"))
-    )
-    return (
-        bounds.join(rec, "grp", "left")
-        .select(
-            F.col("grp").alias(by if by else "group"),
-            "n",
-            "mean",
-            "std",
-            F.round("__lo", 6).alias("lo"),
-            F.round("__hi", 6).alias("hi"),
-            F.coalesce(F.col("n_outliers"), F.lit(0)).alias("n_outliers"),
-        )
-    )

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 
@@ -317,149 +317,3 @@ class StatsStore:
 
     def current(self, spark: SparkSession) -> DataFrame:
         return merge_partials(spark.read.parquet(self.path))
-
-
-def drift_timeline(
-    df: DataFrame,
-    column: str,
-    edges: list[float],
-    ts_col: str = "ts",
-    unit: str = "day",
-) -> DataFrame:
-    """(bucket, psi, n_cur, n_prev): PSI of each time bucket's value
-    distribution against the PREVIOUS bucket — the ops-monitoring
-    timeline ("did yesterday's ingest drift?") built on the same
-    exact-replayable fixed-edge histograms as HistStore.
-
-    One pass: bin per row (the hist_partials fold), ONE hash
-    aggregation on (bucket, bin); the timeline is then pure
-    metadata-size work — a dense bucket x bin grid (so empty bins
-    contribute their smoothed term on both sides), a window lag over
-    the DISTINCT bucket list (bounded by the corpus's time span, never
-    row count — the single-partition window is over that tiny list),
-    and the Laplace-smoothed PSI sum per bucket.  The first bucket has
-    no predecessor and is omitted."""
-    if sorted(edges) != list(edges):
-        raise ValueError("drift_timeline: edges must be sorted ascending")
-    n_bins = len(edges) + 1
-    col = F.col(column).cast("double")
-    bin_ = F.aggregate(
-        F.array(*[F.lit(float(e)) for e in edges]),
-        F.lit(0),
-        lambda acc, e: acc + (col >= e).cast("int"),
-    )
-    bucket = F.date_trunc(unit, F.col(ts_col)).alias("bucket")
-    hist = (
-        df.filter(col.isNotNull() & F.col(ts_col).isNotNull())
-        .groupBy(bucket, bin_.cast("int").alias("bin"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    buckets = hist.select("bucket").distinct()
-    grid = buckets.select(
-        "bucket", F.explode(F.sequence(F.lit(0), F.lit(n_bins - 1))).alias("bin")
-    )
-    dense = grid.join(hist, ["bucket", "bin"], "left").fillna(0, subset=["n"])
-    w = Window.orderBy("bucket")
-    prev_map = buckets.select(
-        "bucket", F.lag("bucket").over(w).alias("prev_bucket")
-    ).filter(F.col("prev_bucket").isNotNull())
-    cur = dense.select("bucket", "bin", F.col("n").alias("n_cur"))
-    prv = dense.select(
-        F.col("bucket").alias("prev_bucket"), "bin", F.col("n").alias("n_prev")
-    )
-    j = (
-        cur.join(F.broadcast(prev_map), "bucket")
-        .join(prv, ["prev_bucket", "bin"])
-    )
-    tot = j.groupBy("bucket").agg(
-        F.sum("n_cur").alias("t_cur"), F.sum("n_prev").alias("t_prev")
-    )
-    j = j.join(F.broadcast(tot), "bucket")
-    p = (F.col("n_prev") + 0.5) / (F.col("t_prev") + 0.5 * n_bins)
-    q = (F.col("n_cur") + 0.5) / (F.col("t_cur") + 0.5 * n_bins)
-    term = (q - p) * F.log(q / p)
-    # snap per-bin terms to scaled longs before the per-bucket sum
-    # (the lm_score determinism convention: integer sums are
-    # order-free, so the oracle lands on identical PSI values)
-    term9 = F.round(term * 1e9, 0).cast("long")
-    return (
-        j.groupBy("bucket")
-        .agg(
-            F.round(F.sum(term9).cast("double") / 1e9, 6).alias("psi"),
-            F.max("t_cur").alias("n_cur"),
-            F.max("t_prev").alias("n_prev"),
-        )
-    )
-
-
-def volume_anomalies(
-    history: DataFrame,
-    order_col: str = "bucket",
-    metric_col: str = "n_rows",
-    window: int = 7,
-    k: float = 3.0,
-    min_rel: float = 0.05,
-    min_history: int = 3,
-) -> DataFrame:
-    """Robust volume-anomaly detection over a per-batch metric history
-    (Deequ-style anomaly checks over the metrics the store already
-    keeps): for each batch in ``order_col`` order, compare
-    ``metric_col`` against the TRAILING ``window`` batches' median,
-    flagging
-
-        |x - med| > k * 1.4826 * MAD(window)   AND
-        |x - med| > min_rel * med
-
-    — the classic robust z-score with a relative floor so a zero-MAD
-    flat history doesn't flap on trivial jitter.  Output per batch:
-    ``(order, metric, trailing_median, trailing_mad, robust_z,
-    n_history, anomaly)``; batches with fewer than ``min_history``
-    predecessors report ``anomaly = false`` with ``robust_z`` null.
-
-    Scale: the history is metadata-sized — one row per batch/partition
-    (never row count), so the single-task ordered window is the right
-    plan (same bounded-collect discipline as drift_timeline).  The
-    trailing median/MAD compute as array HOFs on the ≤``window``
-    collected values — no UDF, no second pass.
-    """
-    if window < 1:
-        raise ValueError("volume_anomalies: window must be >= 1")
-    x = history[metric_col].cast("double")
-    # order by the DataFrame-bound column, not the name: the output
-    # aliases `bucket`/`metric`, and a bare name in the window would
-    # resolve against those lateral aliases
-    w = Window.orderBy(history[order_col]).rowsBetween(-window, -1)
-    arr = F.array_sort(F.collect_list(x).over(w))
-    n = F.size(arr)
-
-    def _median(a: Column, m: Column) -> Column:
-        # try_element_at, not element_at: every consumer is guarded by
-        # the `enough` CASE (so m >= min_history >= 1 whenever this
-        # evaluates), but ANSI mode would make an index-0 probe on a
-        # warmup row a hard error if a future edit loosens a guard —
-        # null is the correct degraded value either way
-        lo = F.try_element_at(a, ((m + 1) / 2).cast("int"))
-        hi = F.try_element_at(a, (m / 2 + 1).cast("int"))
-        return (lo + hi) / 2.0
-
-    med = _median(arr, n)
-    devs = F.array_sort(F.transform(arr, lambda v: F.abs(v - med)))
-    mad = _median(devs, n)
-    sigma = F.lit(1.4826) * mad
-    dev = F.abs(x - med)
-    z = F.when(sigma > 0, dev / sigma)
-    enough = n >= min_history
-    anomaly = (
-        enough
-        & (dev > F.lit(float(k)) * sigma)
-        & (dev > F.lit(float(min_rel)) * med)
-    )
-    return history.select(
-        history[order_col].alias("bucket"),
-        x.alias("metric"),
-        F.when(enough, F.round(med, 6)).alias("trailing_median"),
-        F.when(enough, F.round(mad, 6)).alias("trailing_mad"),
-        F.when(enough, F.round(z, 6)).alias("robust_z"),
-        n.cast("int").alias("n_history"),
-        F.coalesce(anomaly, F.lit(False)).alias("anomaly"),
-    )

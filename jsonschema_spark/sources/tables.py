@@ -18,15 +18,17 @@ Scan-side scale notes:
 Sink-side:
   * violation/verdict sinks are written partitioned, and each write
     replaces exactly the partitions it holds rows for (parquet dynamic
-    partition overwrite, Iceberg ``overwritePartitions``): re-running a
-    partition replaces its rows instead of adding a second copy, which
-    is what makes a resumed CLI run exactly-once.
+    partition overwrite, Iceberg ``overwritePartitions``), or the ones
+    it names (``replace_partitions``): re-running a partition replaces
+    its rows instead of adding a second copy, which is what makes a
+    resumed CLI run exactly-once.
 """
 
 from __future__ import annotations
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 _ICEBERG_HELP = (
     "the Iceberg Spark runtime is not on this session's classpath. "
@@ -81,21 +83,6 @@ def read_table(
     if columns:
         df = df.select(*columns)
     return df
-
-
-def read_stream(
-    spark: SparkSession, source: str, schema: str, **options
-) -> DataFrame:
-    """Streaming scan of a file/Iceberg source for continuous
-    validation (jsonschema_spark.streaming)."""
-    if source.startswith("iceberg:"):
-        _require_iceberg(spark)
-        return (
-            spark.readStream.format("iceberg")
-            .options(**options)
-            .load(source[len("iceberg:"):])
-        )
-    return spark.readStream.schema(schema).options(**options).parquet(source)
 
 
 _SNAPLOG = "_snapshots.jsonl"
@@ -222,6 +209,26 @@ def write_output(
     w.parquet(sink)
 
 
+def replace_partitions(df: DataFrame, sink: str, column: str, values: list[str]) -> None:
+    """Replace the ``column`` partitions ``values`` of a sink partitioned
+    by ``column`` alone with ``df``, whose rows all fall in them.  Unlike
+    ``write_output``'s dynamic overwrite, a partition ``df`` holds no
+    rows for is emptied too (parquet: its directory, named the way
+    Spark's partition writer names it, is deleted before the write;
+    Iceberg: one overwrite by filter)."""
+    if sink.startswith("iceberg:"):
+        _require_iceberg(df.sparkSession)
+        df.writeTo(sink[len("iceberg:"):]).overwrite(F.col(column).isin(values))
+        return
+    jvm = df.sparkSession._jvm
+    root = jvm.org.apache.hadoop.fs.Path(sink)
+    fs = root.getFileSystem(df.sparkSession._jsc.hadoopConfiguration())
+    path_of = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.getPartitionPathString
+    for v in values:
+        fs.delete(jvm.org.apache.hadoop.fs.Path(root, path_of(column, v)), True)
+    write_output(df, sink, partition_by=[column])
+
+
 def require_partitioned_sink(spark: SparkSession, sink: str,
                              partition_by: list[str]) -> None:
     """Refuse a sink that ``write_output(..., partition_by=...)`` cannot
@@ -258,7 +265,8 @@ _EMPTY_STORE = frozenset({"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"})
 
 def read_store(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """An append-only parquet state store (checkpoint manifest, stats or
-    histogram partials); one nothing was written to yet reads as empty.
+    histogram partials) or a parquet sink; one nothing was written to
+    yet, or whose partitions all hold no rows, reads as empty.
     Any other failure (a corrupt part file, a permission error) raises:
     reading it as empty would redo, and append again, everything the
     store already records."""
@@ -292,42 +300,3 @@ def write_bucketed(
     if path:
         w = w.option("path", path)
     w.saveAsTable(table)
-
-
-def write_jsonl_shards(
-    df: DataFrame,
-    path: str,
-    max_rows_per_shard: int | None = None,
-    partition_by: list[str] | None = None,
-    shards: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Export a DataFrame as sharded JSONL — the SFT-corpus handoff
-    format (one JSON object per line; each output file is one shard a
-    downstream trainer streams independently).
-
-    * ``max_rows_per_shard`` caps rows per file via Spark's
-      ``maxRecordsPerFile`` — enforced at write time WITHOUT a
-      repartition: each task rolls to a new file at the cap, so shard
-      sizing never adds a shuffle.
-    * ``shards`` optionally repartitions to exactly that many tasks
-      first (deterministic round-robin) when a fixed shard COUNT
-      matters more than avoiding the one shuffle.
-    * ``partition_by`` lays shards out under key=value directories
-      (e.g. split=train/val) — partition pruning for the reader.
-
-    Writers stay text-faithful: Spark's JSON writer emits UTF-8 with
-    \\n line separators; nulls are omitted per JSON-lines convention.
-    """
-    if max_rows_per_shard is not None and max_rows_per_shard <= 0:
-        raise ValueError("max_rows_per_shard must be positive")
-    if shards is not None:
-        if shards <= 0:
-            raise ValueError("shards must be positive")
-        df = df.repartition(shards)
-    w = df.write.mode(mode)
-    if max_rows_per_shard is not None:
-        w = w.option("maxRecordsPerFile", max_rows_per_shard)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.json(path)

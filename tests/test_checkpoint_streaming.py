@@ -1,4 +1,5 @@
-"""Checkpoint/resume manifest + structured-streaming validation."""
+"""Checkpoint/resume manifest: skip, invalidation, partition pruning
+and listing."""
 
 from __future__ import annotations
 
@@ -9,10 +10,6 @@ from pyspark.sql import functions as F
 import jsonschema_spark as js
 from jsonschema_spark.checkpoint import CheckpointManifest, ResumableRun
 from jsonschema_spark.operators import checks
-from jsonschema_spark.streaming.validate import (
-    stateful_dedup_stream,
-    windowed_verdicts,
-)
 
 
 @pytest.fixture()
@@ -88,88 +85,6 @@ def test_resume_invalidated_by_config_change(spark, part_df, tmp_path):
     out = ResumableRun(suite=s2, manifest=manifest, partition_by=["day"],
                        source_id="test").run(part_df).collect()
     assert len(out) == 2
-
-
-PLAN_DOC = {
-    "required": ["conv_id", "role"],
-    "properties": {"role": {"enum": ["user", "assistant"]}},
-}
-
-
-@pytest.fixture()
-def stream_src(spark, tmp_path):
-    rows = [
-        ("c1", 0, "user", "2025-01-01 00:00:10"),
-        ("c1", 1, "assistant", "2025-01-01 00:00:20"),
-        ("c1", 1, "assistant", "2025-01-01 00:00:21"),  # dup key
-        ("c2", 0, "narrator", "2025-01-01 00:01:10"),   # enum violation
-        ("c2", 1, None, "2025-01-01 00:01:30"),         # required violation
-    ]
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, ts_s string"
-    ).withColumn("ts", F.to_timestamp("ts_s")).drop("ts_s")
-    path = str(tmp_path / "stream_src")
-    df.coalesce(1).write.parquet(path)
-    return spark.readStream.schema(
-        "conv_id string, turn_idx int, role string, ts timestamp"
-    ).parquet(path)
-
-
-def _drain(q):
-    q.processAllAvailable()
-    q.stop()
-
-
-def test_windowed_verdicts_stream(spark, stream_src):
-    plan = js.compile_schema(PLAN_DOC)
-    out = windowed_verdicts(stream_src, plan, window="1 minute")
-    # complete mode: append would only emit windows already sealed by
-    # the watermark, which never happens within one availableNow batch
-    q = (
-        out.writeStream.format("memory")
-        .queryName("verdicts_t")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    rows = {str(r["window_start"]): (r["rows"], r["bad_rows"], r["pass"])
-            for r in spark.sql("select * from verdicts_t").collect()}
-    assert rows["2025-01-01 00:00:00"] == (3, 0, True)
-    assert rows["2025-01-01 00:01:00"] == (2, 2, False)
-
-
-def test_stateful_dedup_stream(spark, stream_src):
-    out = stateful_dedup_stream(stream_src, keys=["conv_id", "turn_idx"])
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_t")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    got = spark.sql("select conv_id, turn_idx from dedup_t").collect()
-    keys = sorted((r["conv_id"], r["turn_idx"]) for r in got)
-    assert keys == [("c1", 0), ("c1", 1), ("c2", 0), ("c2", 1)]
-
-
-def test_ks_grouped_udaf(spark):
-    from jsonschema_spark.operators.sketches import ks_grouped
-
-    base = spark.range(0, 4000).selectExpr("CAST(id % 100 AS DOUBLE) AS v")
-    same = spark.range(0, 2000).selectExpr(
-        "'same' AS part", "CAST(id % 100 AS DOUBLE) AS v"
-    )
-    shifted = spark.range(0, 2000).selectExpr(
-        "'shift' AS part", "CAST(id % 100 + 75 AS DOUBLE) AS v"
-    )
-    cur = same.union(shifted)
-    out = {r["partition_id"]: r for r in
-           ks_grouped(cur, base, "v", partition_by=["part"]).collect()}
-    assert out["part=same"]["drifted"] is False
-    assert out["part=shift"]["drifted"] is True
-    assert out["part=shift"]["ks"] > 0.5
 
 
 def test_resume_prunes_partition_files(spark, tmp_path):
@@ -433,52 +348,6 @@ def test_partition_listing_rejects_extra_partition_levels(spark, tmp_path):
     assert _partition_tuples_from_files(df, ["day"]) is None
 
 
-def test_windowed_verdicts_json_stream(spark, tmp_path):
-    """Streaming JSON-string-column validation (the Kafka shape: a
-    `value` column holding a JSON document) — both parse modes; the
-    variant shred must be streaming-legal (stateless projections
-    only)."""
-    from jsonschema_spark.streaming.validate import windowed_verdicts
-
-    rows = [
-        ("2025-01-01 00:00:05", '{"id": 1, "name": "ok"}'),
-        ("2025-01-01 00:00:30", '{"id": "x", "name": "ok"}'),   # type err
-        ("2025-01-01 00:01:10", '{"name": "missing id"}'),      # required
-        ("2025-01-01 00:01:40", '{"bad": '),                    # malformed
-    ]
-    df = spark.createDataFrame(rows, "ts_s string, value string").withColumn(
-        "ts", F.to_timestamp("ts_s")
-    ).drop("ts_s")
-    path = str(tmp_path / "json_stream_src")
-    df.coalesce(1).write.parquet(path)
-    plan = js.compile_schema(
-        {"required": ["id"], "properties": {"id": {"type": "integer"}}}
-    )
-    for i, mode in enumerate(("variant", "static")):
-        src = spark.readStream.schema("value string, ts timestamp").parquet(path)
-        out = windowed_verdicts(
-            src, plan, window="1 minute", json_col="value", json_types=mode
-        )
-        q = (
-            out.writeStream.format("memory")
-            .queryName(f"jverdicts_{i}")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        got = {
-            str(r["window_start"]): (r["rows"], r["bad_rows"])
-            for r in spark.sql(f"select * from jverdicts_{i}").collect()
-        }
-        # variant mode flags the wrong-typed id; static degrades it to
-        # a null field which `required` (field presence on the struct)
-        # still reports — both windows carry 1 bad row in window 0
-        assert got["2025-01-01 00:00:00"] == (2, 1), (mode, got)
-        assert got["2025-01-01 00:01:00"] == (2, 2), (mode, got)
-
-
 def test_resume_invalidated_by_schema_doc_change(spark, part_df, tmp_path):
     """The schema DOCUMENT is check config: editing it must invalidate
     cached schema verdicts (the compiled plan object itself is not a
@@ -526,31 +395,3 @@ def test_schema_check_json_col(spark):
     assert v == {"part=p1": ("2", "1"), "part=p2": ("2", "2")}
     viols = {(r["k"], r["path"]) for r in chk.violations(df).collect()}
     assert viols == {(2, "$.id"), (3, "$"), (4, "$.id")}
-
-
-def test_bounded_state_partitions_caps_and_restores(spark):
-    """r4: the bound caps the conf at 2x defaultParallelism for the
-    stream's start, never raises an already-lower setting, and always
-    restores (state-store partition count is a durable property of a
-    streaming checkpoint, so the cap must be deliberate)."""
-    from jsonschema_spark.streaming import bounded_state_partitions
-
-    key = "spark.sql.shuffle.partitions"
-    orig = spark.conf.get(key)
-    try:
-        cores = spark.sparkContext.defaultParallelism
-        spark.conf.set(key, "4096")
-        with bounded_state_partitions(spark):
-            assert int(spark.conf.get(key)) == max(2 * cores, 8)
-        assert spark.conf.get(key) == "4096"
-        spark.conf.set(key, "2")  # lower than the bound: untouched
-        with bounded_state_partitions(spark):
-            assert spark.conf.get(key) == "2"
-        assert spark.conf.get(key) == "2"
-        with bounded_state_partitions(spark, n=6):
-            assert spark.conf.get(key) == "2"  # min(cur, n)
-        spark.conf.set(key, "512")
-        with bounded_state_partitions(spark, n=6):
-            assert spark.conf.get(key) == "6"
-    finally:
-        spark.conf.set(key, orig)

@@ -280,78 +280,6 @@ def test_fused_suite_same_named_checks_do_not_collide(spark):
     assert counts == [0, 2]
 
 
-def test_top_values_histogram(spark):
-    from jsonschema_spark.operators.checks import top_values
-
-    df = spark.createDataFrame(
-        [("a", 1), ("a", 2), ("b", 1), (None, 1)],
-        "cat string, num int",
-    )
-    got = {
-        (r["column"], r["value"]): (r["n"], r["frac"])
-        for r in top_values(df, ["cat", "num"], k=2).collect()
-    }
-    assert got[("cat", "a")] == (2, 0.5)
-    assert got[("cat", "<null>")] == (1, 0.25)   # null is its own bucket
-    assert got[("num", "1")] == (3, 0.75)
-    # k bound respected per column
-    assert sum(1 for k_ in got if k_[0] == "cat") == 2
-
-
-def test_suggest_schema_round_trips(spark):
-    import jsonschema_spark as js
-    from jsonschema_spark.operators.checks import suggest_schema
-
-    rows = [(i, "click" if i % 2 else "view", float(i),
-             "note-%040d" % i if i != 3 else None) for i in range(1, 21)]
-    df = spark.createDataFrame(
-        rows, "id long, etype string, score double, note string"
-    )
-    doc = suggest_schema(df)
-    assert doc["required"] == ["etype", "id", "score"]  # note has a null
-    assert doc["properties"]["id"] == {"minimum": 1, "maximum": 20}
-    assert doc["properties"]["etype"] == {"enum": ["click", "view"]}
-    assert doc["properties"]["score"] == {"minimum": 1.0, "maximum": 20.0}
-    # 19 distinct notes > enum_max_distinct -> length bound instead
-    assert doc["properties"]["note"] == {"maxLength": 45}
-    # round-trip: zero violations on the profiled data
-    plan = js.compile_schema(doc)
-    assert plan.validate(df, keys=["id"]).violations.count() == 0
-
-
-def test_suggest_schema_margin_widen(spark):
-    from jsonschema_spark.operators.checks import suggest_schema
-
-    df = spark.createDataFrame([(5,)], "v int")
-    doc = suggest_schema(df, numeric_margin=2.0)
-    assert doc["properties"]["v"] == {"minimum": 3.0, "maximum": 7.0}
-
-
-def test_outlier_stats_hand_computed(spark):
-    from jsonschema_spark.operators.checks import outlier_stats
-
-    # group g: values 1..9 plus one 100.0 spike
-    rows = [("g", float(v)) for v in range(1, 10)] + [("g", 100.0)]
-    df = spark.createDataFrame(rows, "k string, value double")
-    out = outlier_stats(df, "value", by="k", z=2.0).collect()[0]
-    import statistics
-    vals = [float(v) for v in range(1, 10)] + [100.0]
-    mean = sum(vals) / len(vals)
-    std = (sum(v * v for v in vals) / len(vals) - mean * mean) ** 0.5
-    assert out["n"] == 10
-    assert abs(out["mean"] - round(mean, 6)) < 1e-9
-    assert abs(out["std"] - round(std, 6)) < 1e-6
-    assert out["n_outliers"] == 1  # only the 100.0 spike
-
-
-def test_outlier_stats_constant_group_no_nan(spark):
-    from jsonschema_spark.operators.checks import outlier_stats
-
-    df = spark.createDataFrame([("g", 5.0)] * 4, "k string, value double")
-    out = outlier_stats(df, "value", by="k").collect()[0]
-    assert out["std"] == 0.0 and out["n_outliers"] == 0
-
-
 class TestFunctionalDependency:
     def test_violations_and_examples(self, spark):
         from jsonschema_spark.operators.checks import FunctionalDependency

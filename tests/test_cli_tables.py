@@ -308,6 +308,65 @@ def test_cli_run_rejects_unknown_output_key(tmp_path):
         assert key in str(e.value)
 
 
+def _two_day_run(spark, tmp_path, minimum):
+    """Run the CLI over a two-day table whose day b holds ``x = -1``,
+    with ``{"minimum": minimum}`` on ``x``; return the config."""
+    from jsonschema_spark.cli import main
+
+    src = tmp_path / "two_days"
+    if not src.exists():
+        spark.createDataFrame(
+            [("a", 1, 1), ("b", 2, -1)], "day string, k int, x int"
+        ).write.partitionBy("day").parquet(str(src))
+    cfg = {
+        "source": str(src),
+        "schema": {"properties": {"x": {"minimum": minimum}}},
+        "keys": ["k"],
+        "partition_by": ["day"],
+        "output": {name: str(tmp_path / name)
+                   for name in ("verdicts", "violations", "manifest")},
+    }
+    cfg_path = tmp_path / "two_days.json"
+    cfg_path.write_text(json.dumps(cfg))
+    assert main(["run", str(cfg_path)]) == 0
+    return cfg
+
+
+VIOLATION_SINK = "k int, partition_id string, path string, info string"
+
+
+def test_cli_rerun_clears_stale_violation_rows(spark, tmp_path):
+    """A partition that re-runs after a schema change and now has no
+    violations loses the rows an earlier run wrote for it."""
+    from jsonschema_spark.sources.tables import read_store
+
+    cfg = _two_day_run(spark, tmp_path, 0)
+    viols = read_store(spark, cfg["output"]["violations"], VIOLATION_SINK)
+    assert [(r["partition_id"], r["path"]) for r in viols.collect()] == [("day=b", "$.x")]
+
+    cfg = _two_day_run(spark, tmp_path, -5)
+    verdicts = spark.read.parquet(cfg["output"]["verdicts"]).collect()
+    assert sorted((r["partition_id"], r["violation_count"]) for r in verdicts) == [
+        ("day=a", 0), ("day=b", 0)]
+    assert read_store(spark, cfg["output"]["violations"], VIOLATION_SINK).count() == 0
+
+
+def test_cli_empty_violations_sink_reads_as_empty(spark, tmp_path):
+    """A first run without violation rows leaves a violations sink that
+    ``spark.read.parquet`` cannot read and ``read_store`` reads as an
+    empty frame."""
+    from pyspark.errors import AnalysisException
+
+    from jsonschema_spark.sources.tables import read_store
+
+    sink = _two_day_run(spark, tmp_path, -5)["output"]["violations"]
+    with pytest.raises(AnalysisException):
+        spark.read.parquet(sink)
+    empty = read_store(spark, sink, VIOLATION_SINK)
+    assert empty.count() == 0
+    assert empty.columns == ["k", "partition_id", "path", "info"]
+
+
 def test_read_table_pushdown(spark, data_dir):
     df = read_table(
         spark, str(data_dir / "transcripts"),

@@ -212,66 +212,3 @@ def test_store_new_partition_appends_only_batch_partials(spark, events, tmp_path
     assert all(
         cur[c]["n_rows"] == single[c]["n_rows"] for c in COLS
     )
-
-
-def test_drift_timeline_identical_days_zero_psi(spark):
-    from jsonschema_spark.operators.incremental import drift_timeline
-
-    # two days with IDENTICAL value distributions -> psi == 0
-    rows = []
-    for day in ("2026-01-01", "2026-01-02"):
-        for v in (5.0, 20.0, 70.0, 150.0, 300.0):
-            rows += [(v, f"{day} 10:00:00")] * 4
-    df = spark.createDataFrame(rows, "value double, ts string").selectExpr(
-        "value", "CAST(ts AS TIMESTAMP) AS ts"
-    )
-    out = drift_timeline(df, "value", [10.0, 50.0, 100.0, 200.0]).collect()
-    assert len(out) == 1  # first day has no predecessor
-    assert out[0]["psi"] == 0.0
-    assert out[0]["n_cur"] == 20 and out[0]["n_prev"] == 20
-
-
-def test_drift_timeline_shift_detected(spark):
-    from jsonschema_spark.operators.incremental import drift_timeline
-
-    rows = [(5.0, "2026-01-01 10:00:00")] * 20 + [
-        (300.0, "2026-01-02 10:00:00")
-    ] * 20
-    df = spark.createDataFrame(rows, "value double, ts string").selectExpr(
-        "value", "CAST(ts AS TIMESTAMP) AS ts"
-    )
-    out = drift_timeline(df, "value", [10.0, 50.0, 100.0, 200.0]).collect()
-    assert len(out) == 1 and out[0]["psi"] > 1.0  # total mass shift
-
-
-def test_volume_anomalies_spike_and_warmup(spark):
-    from jsonschema_spark.operators.incremental import volume_anomalies
-
-    hist = spark.createDataFrame(
-        [(i, 100 + (i % 3)) for i in range(10)] + [(10, 300), (11, 101)],
-        "bucket int, n_rows int",
-    )
-    got = {r["bucket"]: r for r in volume_anomalies(hist).collect()}
-    # warmup: fewer than min_history predecessors -> never anomalous
-    for b in (0, 1, 2):
-        assert got[b]["anomaly"] is False and got[b]["robust_z"] is None
-    # the 3x spike is flagged; its neighbors are not
-    assert got[10]["anomaly"] is True and got[10]["robust_z"] > 100
-    assert got[9]["anomaly"] is False
-    assert got[11]["anomaly"] is False
-    assert got[10]["trailing_median"] == 101.0
-
-
-def test_volume_anomalies_flat_history_no_flap(spark):
-    from jsonschema_spark.operators.incremental import volume_anomalies
-
-    # constant history: MAD = 0; a tiny jitter must NOT flag (relative
-    # floor), a big jump must
-    hist = spark.createDataFrame(
-        [(i, 1000) for i in range(8)] + [(8, 1001), (9, 2000)],
-        "bucket int, n_rows int",
-    )
-    got = {r["bucket"]: r for r in volume_anomalies(hist).collect()}
-    assert got[8]["anomaly"] is False        # 0.1% jitter, zero MAD
-    assert got[8]["robust_z"] is None        # sigma == 0
-    assert got[9]["anomaly"] is True         # 2x jump

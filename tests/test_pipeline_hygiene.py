@@ -1,14 +1,12 @@
 """Training-data hygiene operators: PII scan/redaction, unigram LM
-scoring, transcript tool pairing."""
+scoring."""
 
 from __future__ import annotations
-
-import datetime as dt
 
 import pytest
 from pyspark.sql import functions as F
 
-from jsonschema_spark.operators import text, transcripts
+from jsonschema_spark.operators import text
 
 
 @pytest.fixture(scope="module")
@@ -52,41 +50,6 @@ class TestPII:
                                    "doc_id long, text string")
         red = df.select(text.pii_redact(F.col("text")).alias("r")).first()["r"]
         assert red == "x <EMAIL> y"
-
-
-class TestToolPairing:
-    def test_violations(self, spark):
-        t0 = dt.datetime(2024, 1, 1)
-        rows = [
-            # well-formed: user -> assistant(call) -> tool(result)
-            ("c1", 0, "user", None, t0),
-            ("c1", 1, "assistant", "search", t0),
-            ("c1", 2, "tool", "search", t0),
-            # tool turn without a tool name
-            ("c2", 0, "user", None, t0),
-            ("c2", 1, "assistant", "search", t0),
-            ("c2", 2, "tool", None, t0),
-            # tool named on a user turn; tool result follows user
-            ("c3", 0, "user", "search", t0),
-            ("c3", 1, "tool", "search", t0),
-            # conversation opens with a tool result
-            ("c4", 0, "tool", "search", t0),
-        ]
-        df = spark.createDataFrame(
-            rows, "conv_id string, turn_idx int, role string, "
-                  "tool string, ts timestamp"
-        )
-        out = {
-            (r["conv_id"], r["turn_idx"], r["check"]): r["info"]
-            for r in transcripts.tool_call_pairing(df).collect()
-        }
-        assert ("c1", 2, "tool_pairing") not in out
-        assert not any(k[0] == "c1" for k in out)
-        assert out[("c2", 2, "tool_name")] == "tool turn carries no tool name"
-        assert out[("c3", 0, "tool_caller")] == "tool search named on role user"
-        assert out[("c3", 1, "tool_pairing")] == "tool result follows role user"
-        assert out[("c4", 0, "tool_pairing")] == "tool result follows role <none>"
-        assert len(out) == 4
 
 
 class TestLMScore:

@@ -1,35 +1,3 @@
-
-
-def test_write_jsonl_shards(spark, tmp_path):
-    import glob
-    import json as _json
-
-    from jsonschema_spark.sources.tables import write_jsonl_shards
-
-    df = spark.range(100).selectExpr(
-        "id", "concat('text-', id) AS text",
-        "CASE WHEN id % 10 = 0 THEN 'val' ELSE 'train' END AS split",
-    )
-    out = str(tmp_path / "sft")
-    write_jsonl_shards(
-        df, out, max_rows_per_shard=7, partition_by=["split"], shards=2
-    )
-    files = glob.glob(f"{out}/split=*/part-*")
-    assert files, "no shards written"
-    rows = []
-    for f in files:
-        with open(f) as fh:
-            lines = [l for l in fh.read().splitlines() if l]
-        assert len(lines) <= 7  # shard cap enforced
-        rows += [_json.loads(l) for l in lines]
-    assert len(rows) == 100
-    assert {r["id"] for r in rows} == set(range(100))
-    # partition layout prunes: split dir carries the key, rows don't
-    assert all("split" not in r for r in rows)
-    back = spark.read.json(out)
-    assert back.count() == 100 and set(back.columns) == {"id", "text", "split"}
-
-
 class TestIcebergGate:
     """sources/tables.py iceberg: paths (SURVEY §2.9). This container
     ships no Iceberg runtime jars, so the production path is

@@ -150,7 +150,7 @@ def query_deps(graph: dict[str, set[str]]) -> dict[str, set[str]]:
     for name in os.listdir(os.path.join(REPO, ops)):
         if name.endswith(".py") and name != "__init__.py":
             alias_to_files[name[:-3]] = [f"{ops}/{name}"]
-    for name in ("streaming", "sources", "plans", "functions", "core"):
+    for name in ("sources", "plans", "functions", "core"):
         alias_to_files[name] = [f"jsonschema_spark/{name}/__init__.py"]
 
     deps: dict[str, set[str]] = {}
