@@ -25,6 +25,10 @@ Design (no Spark primitive does this — it is driver logic):
     run the suite ONLY over the missing partitions — the data-side
     filter is a partition-pruning predicate, so Spark never reads
     completed partitions' files on an Iceberg/hive-partitioned table.
+    Checks are grouped by the partitions they still miss, and each
+    group is one fused ``CheckSuite.run`` with one ``collect()``: a
+    fresh run and the usual resume (every check missing the same new
+    partitions) are both a single fused pass.
 
 Writes are atomic at file granularity (parquet append of one run's
 rows); a crash mid-run loses at most the in-flight partitions, never
@@ -47,7 +51,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.checks import Check, CheckSuite, _partition_id
+from .operators.checks import VERDICT_SCHEMA, Check, CheckSuite, _partition_id, _sql_str
 from .sources.tables import read_store
 
 CHECKPOINT_SCHEMA = (
@@ -56,11 +60,35 @@ CHECKPOINT_SCHEMA = (
 )
 
 
+def _scan_files(df: DataFrame) -> list[str] | None:
+    """The data files of ``df`` when it is a bare file-scan relation
+    (no filter or projection above the scan), else None."""
+    try:
+        plan = df._jdf.queryExecution().analyzed().toString().strip()
+        if len(plan.splitlines()) == 1 and plan.startswith("Relation"):
+            return list(df.inputFiles())
+    except Exception:
+        pass
+    return None
+
+
 def _df_fingerprint(df: DataFrame) -> str:
-    """Content fingerprint of a DataFrame-valued check input (RI dim,
-    drift baseline): row count + order-insensitive xxhash64 sum.  One
-    cheap agg job over a table that is small by contract (dim/baseline
-    << fact); makes the lineage change when the dim content changes."""
+    """Fingerprint of a DataFrame-valued check input (RI dim, drift
+    baseline), so the lineage changes when its content does.  A bare
+    file scan is fingerprinted from its file listing (path, length,
+    modification time) without a Spark job; any other DataFrame by
+    row count + order-insensitive xxhash64 sum, one agg job over a
+    table that is small by contract (dim/baseline << fact)."""
+    files = _scan_files(df)
+    if files is not None:
+        spark = df.sparkSession
+        conf = spark._jsc.hadoopConfiguration()
+        listing = []
+        for f in sorted(files):
+            path = spark._jvm.org.apache.hadoop.fs.Path(f)
+            st = path.getFileSystem(conf).getFileStatus(path)
+            listing.append(f"{f}\t{st.getLen()}\t{st.getModificationTime()}")
+        return "files:" + hashlib.sha256("\n".join(listing).encode()).hexdigest()
     row = df.select(
         F.count(F.lit(1)).alias("n"),
         # decimal(38,0) sum: ANSI-safe (a long sum of xxhash64 overflows)
@@ -105,12 +133,7 @@ class CheckpointManifest:
     def completed(self, spark: SparkSession, lineages: dict[str, str]) -> set[tuple[str, str]]:
         """(partition_id, check) pairs already recorded with a matching
         lineage.  Driver-small: one row per partition × check."""
-        m = self.read(spark)
-        rows = (
-            m.select("partition_id", "check", "lineage")
-            .distinct()
-            .collect()
-        )
+        rows = self.read(spark).select("partition_id", "check", "lineage").collect()
         return {
             (r["partition_id"], r["check"])
             for r in rows
@@ -150,16 +173,7 @@ def _partition_tuples_from_files(df: DataFrame, cols: Sequence[str]):
       * any file path lacks a ``col=`` segment for some partition
         column (table not physically partitioned by ``cols``)
     """
-    try:
-        plan = df._jdf.queryExecution().analyzed().toString().strip()
-    except Exception:
-        return None
-    if len(plan.splitlines()) != 1 or not plan.startswith("Relation"):
-        return None
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
+    files = _scan_files(df)
     if not files:
         return None
     from urllib.parse import unquote
@@ -171,7 +185,8 @@ def _partition_tuples_from_files(df: DataFrame, cols: Sequence[str]):
     # partition exists, its own col=val segments end up in that prefix,
     # so trailing segments matching the requested columns are peeled
     # back off into shared values.
-    dirs = [f.split("/")[:-1] for f in files]
+    # inputFiles are URIs: URI-decode here, hive-unescape values below
+    dirs = [unquote(f).split("/")[:-1] for f in files]
     common = dirs[0]
     for d in dirs[1:]:
         i = 0
@@ -218,18 +233,21 @@ def _enumerate_partitions(df: DataFrame, cols: Sequence[str]):
     fact-table bytes), else one distinct scan.  pids always come from
     the SAME Spark _partition_id expression the verdicts use — a
     driver-side '/'.join would diverge on booleans/NULLs."""
-    from pyspark.sql import types as T
-
-    spark = df.sparkSession
     cols = list(cols)
     str_tuples = _partition_tuples_from_files(df, cols)
     if str_tuples is not None:
-        tiny = spark.createDataFrame(
-            str_tuples,
-            T.StructType([T.StructField(c, T.StringType(), True) for c in cols]),
+        # an inline VALUES table is a local relation: Catalyst folds the
+        # casts and pids into it and the collect runs no Spark job
+        values = ", ".join(
+            "(" + ", ".join("CAST(NULL AS STRING)" if v is None else _sql_str(v) for v in t) + ")"
+            for t in str_tuples
+        )
+        names = [f"c{i}" for i in range(len(cols))]
+        tiny = df.sparkSession.sql(
+            f"SELECT * FROM VALUES {values} AS t({', '.join(names)})"
         )
         typed = tiny.select(
-            *[F.col(c).cast(df.schema[c].dataType).alias(c) for c in cols]
+            *[F.col(n).cast(df.schema[c].dataType).alias(c) for n, c in zip(names, cols)]
         )
         raw = typed.select(_partition_id(cols).alias("__pid"), *cols).collect()
         return raw, "files"
@@ -277,10 +295,11 @@ class ResumableRun:
 
     After ``run``, ``last_ran`` maps each check name to the partition
     tuples it actually executed this invocation (missing key = the
-    check was fully checkpointed and skipped), and ``pid_of`` maps each
-    partition tuple of the input to its ``partition_id`` — callers use
-    them to scope secondary outputs (e.g. the CLI's violation sink) to
-    the work that was really (re)done."""
+    check was fully checkpointed and skipped), ``pid_of`` maps each
+    partition tuple of the input to its ``partition_id`` and ``rows``
+    holds the collected verdict rows of this run — callers use them to
+    scope secondary outputs (e.g. the CLI's violation sink) to the work
+    that was really (re)done, and to read the verdicts without a job."""
 
     suite: CheckSuite
     manifest: CheckpointManifest
@@ -291,6 +310,10 @@ class ResumableRun:
         """Execute only the (partition, check) pairs missing from the
         manifest; append new checkpoint rows; return the verdicts of
         THIS run (empty if everything was already done).
+
+        Checks missing the same partitions run as one fused
+        ``CheckSuite.run`` over the input pruned to those partitions,
+        with one ``collect()`` per group.
 
         ``sink``, when given and anything ran, is called with those
         verdicts BEFORE the one append of this run's checkpoint rows,
@@ -308,15 +331,11 @@ class ResumableRun:
         # partition columns themselves, a computed pid string would
         # defeat partition pruning
         if self.partition_by:
-            # pids come from the SAME Spark expression the verdicts use
-            # (_partition_id) — a driver-side '/'.join would diverge on
-            # booleans (Python 'True' vs Spark 'true') and NULLs, making
-            # completed() never match and silently re-running everything.
-            # metadata route when available: enumerate partitions from
-            # the file listing (no scan, no shuffle — a fully-
-            # checkpointed resume touches ZERO fact-table bytes), with
-            # typed values + pids re-derived by one Spark job over
-            # n_partitions driver-local rows
+            # pids from the verdicts' own _partition_id (a driver-side
+            # join would render booleans and NULLs differently, and
+            # completed() would never match); metadata route when
+            # available: no scan, no Spark job, and a fully checkpointed
+            # resume touches ZERO fact-table bytes
             raw, self.partition_source = _enumerate_partitions(
                 df, self.partition_by
             )
@@ -326,43 +345,23 @@ class ResumableRun:
             self.partition_source = "none"
             tuples, self.pid_of = [()], {(): "ALL"}
 
-        all_new: DataFrame | None = None
-        new_rows: list = []
-        todo_by_check = {
-            c.name: [t for t in tuples if (self.pid_of[t], c.name) not in done]
-            for c in self.suite.checks
-        }
-        if all(len(todo_by_check[c.name]) == len(tuples) for c in self.suite.checks):
-            # fresh run (nothing checkpointed): the fused suite shares
-            # ONE scan across all agg-shaped checks — the common case
-            # for the first pass over a 10^12-row corpus
-            for c in self.suite.checks:
-                self.last_ran[c.name] = todo_by_check[c.name]
-            all_new = self.suite.run(df)
-            new_rows = all_new.collect()
-        else:
-            for check in self.suite.checks:
-                todo_t = todo_by_check[check.name]
-                if not todo_t:
-                    continue
-                self.last_ran[check.name] = todo_t
-                if self.partition_by and len(todo_t) < len(tuples):
-                    sub = prune_to_partitions(df, self.partition_by, todo_t)
-                else:
-                    sub = df
-                v = check.verdicts(sub)
-                rows = v.collect()
-                new_rows.extend(rows)
-                all_new = v if all_new is None else all_new.unionByName(v)
+        groups: dict[tuple, list[Check]] = {}
+        for c in self.suite.checks:
+            todo = tuple(t for t in tuples if (self.pid_of[t], c.name) not in done)
+            if todo:
+                groups.setdefault(todo, []).append(c)
+                self.last_ran[c.name] = list(todo)
+        self.rows: list = []
+        for todo, checks in groups.items():
+            if self.partition_by and len(todo) < len(tuples):
+                sub = prune_to_partitions(df, self.partition_by, todo)
+            else:
+                sub = df
+            self.rows.extend(CheckSuite(checks).run(sub).collect())
 
-        if all_new is None:
-            from .operators.checks import VERDICT_SCHEMA
-
-            out = spark.createDataFrame([], VERDICT_SCHEMA)
-        else:
-            out = spark.createDataFrame(new_rows, all_new.schema)
-        if new_rows:
+        out = spark.createDataFrame(self.rows, VERDICT_SCHEMA)
+        if self.rows:
             if sink is not None:
                 sink(out)
-            self.manifest.append(spark, new_rows, lineages)
+            self.manifest.append(spark, self.rows, lineages)
         return out

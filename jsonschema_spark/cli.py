@@ -255,13 +255,14 @@ def cmd_run(args) -> int:
             write(verdicts, [run.pid_of[t] for t in todo], todo)
 
         verdicts = run.run(df, sink=sink)
+        rows = run.rows
     else:
         # collected once: the sinks, the failure count and the pids read it
         verdicts = suite.run(df)
         rows = verdicts.collect()
         verdicts = spark.createDataFrame(rows, verdicts.schema)
         write(verdicts, [r["partition_id"] for r in rows if r["check"] == "schema"])
-    n_fail = verdicts.filter("NOT pass").count()
+    n_fail = sum(r["pass"] is False for r in rows)
     if not out.get("verdicts"):
         verdicts.show(100, truncate=False)
 

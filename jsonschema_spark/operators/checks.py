@@ -13,9 +13,10 @@ scale the engine additionally needs:
                     combine + shuffle on the composite key, so hot
                     conv_ids cannot skew a single reducer).
   * ReferentialIntegrity — membership of a fact column in a dimension
-                    table via BROADCAST anti-join (violations) /
-                    semi-join (passes); never a sort-merge join at
-                    dimension sizes.
+                    table via BROADCAST anti-join (violation rows) /
+                    left join (verdicts, fused with the other
+                    aggregations); never a sort-merge join at dimension
+                    sizes.
   * Drift         — distribution drift of a numeric column vs a baseline
                     via quantile sketches (percentile_approx ≈ KLL/GK)
                     compared with PSI and KS statistics.
@@ -42,6 +43,8 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import bisect
+import math
 from dataclasses import dataclass, field
 from typing import Sequence
 
@@ -75,6 +78,24 @@ def _partition_id(partition_by: Sequence[str] | None) -> Column:
             for c in partition_by
         ],
     )
+
+
+def _sql_str(s: str) -> str:
+    """``s`` as a SQL string expression that reads the same under either
+    ``spark.sql.parser.escapedStringLiterals`` setting: its UTF-8 bytes
+    as a binary literal, cast to string, so no quote or backslash ever
+    sits inside a quoted literal."""
+    return f"CAST(X'{s.encode().hex()}' AS STRING)"
+
+
+def _sql_double(x: float) -> str:
+    """``x`` as a SQL DOUBLE literal (an unsuffixed ``1.5`` parses as
+    DECIMAL); ``repr`` round-trips every finite double exactly."""
+    return f"{x!r}D" if math.isfinite(x) else f"CAST('{x}' AS DOUBLE)"
+
+
+def _sql_name(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _verdict_select(check_name: str, fail_count: Column, metrics: Column):
@@ -450,7 +471,8 @@ class FunctionalDependency(Check):
 
 @dataclass
 class ReferentialIntegrity(Check):
-    """fact[fact_key] ⊆ dim[dim_key], violations via BROADCAST anti-join.
+    """fact[fact_key] ⊆ dim[dim_key]: violation rows via BROADCAST
+    anti-join, verdicts via BROADCAST left join (``flag``).
 
     The dim side is always broadcast (role/tool dimension tables are
     tiny); the fact side streams through without a shuffle — at 100 TB
@@ -478,33 +500,56 @@ class ReferentialIntegrity(Check):
         dim_keys = self.dim.select(F.col(self.dim_key).alias(self.fact_key)).distinct()
         return facts.join(F.broadcast(dim_keys), self.fact_key, "left_anti")
 
-    def verdicts(self, df: DataFrame) -> DataFrame:
-        # ONE scan + broadcast LEFT join (membership flag), so
-        # partitions with zero orphans keep their passing verdict
-        # without a second pass over the fact table.
-        pid = _partition_id(self.partition_by).alias("partition_id")
+    def flag(self, df: DataFrame, p: str) -> DataFrame:
+        """``df`` + ``{p}hit``: 1 where the fact key is a dim key, else
+        NULL.  A broadcast LEFT join of the DISTINCT dim keys matches each
+        fact row at most once, so the checks fused over the flagged frame
+        count the same rows as over ``df``."""
         dim_keys = (
-            self.dim.select(F.col(self.dim_key).alias(self.fact_key))
+            self.dim.select(F.col(self.dim_key).alias(f"{p}key"))
             .distinct()
-            .withColumn("__hit", F.lit(1))
+            .withColumn(f"{p}hit", F.lit(1))
         )
-        flagged = (
-            df.select(pid, F.col(self.fact_key))
-            .join(F.broadcast(dim_keys), self.fact_key, "left")
+        return df.join(
+            F.broadcast(dim_keys), F.col(self.fact_key) == F.col(f"{p}key"), "left"
         )
-        orphan = F.col(self.fact_key).isNotNull() & F.col("__hit").isNull()
-        agg = flagged.groupBy("partition_id").agg(
-            F.count_distinct(F.when(orphan, F.col(self.fact_key))).alias("orphan_keys"),
-            F.sum(orphan.cast("long")).alias("orphan_rows"),
-        )
-        metrics = F.create_map(
-            F.lit("orphan_keys"), F.col("orphan_keys").cast("string"),
-            F.lit("orphan_rows"), F.col("orphan_rows").cast("string"),
+
+    def _agg_exprs(self, p: str) -> list[Column]:
+        # orphan_keys is exact and memory-bounded: count_distinct
+        # aggregates through a shuffle, where collect_set would hold
+        # every orphan value of a partition in one buffer
+        key = F.col(self.fact_key)
+        orphan = key.isNotNull() & F.col(f"{p}hit").isNull()
+        return [
+            F.count_distinct(F.when(orphan, key)).alias(f"{p}orphan_keys"),
+            F.sum(orphan.cast("long")).alias(f"{p}orphan_rows"),
+        ]
+
+    def _verdict_parts(self, p: str) -> tuple[Column, Column]:
+        return F.col(f"{p}orphan_rows"), F.create_map(
+            F.lit("orphan_keys"), F.col(f"{p}orphan_keys").cast("string"),
+            F.lit("orphan_rows"), F.col(f"{p}orphan_rows").cast("string"),
             F.lit("fact_key"), F.lit(self.fact_key),
         )
-        return agg.select(
-            *_verdict_select(self.name, F.col("orphan_rows"), metrics)
-        )
+
+    def verdicts(self, df: DataFrame) -> DataFrame:
+        # ONE scan: partitions with zero orphans keep their passing
+        # verdict without a second pass over the fact table
+        p = f"__{self.name}__"
+        agg = self.flag(df, p).groupBy(
+            _partition_id(self.partition_by).alias("partition_id")
+        ).agg(*self._agg_exprs(p))
+        return agg.select(*_verdict_select(self.name, *self._verdict_parts(p)))
+
+    def fused_aggs(self, df: DataFrame, prefix: str | None = None):
+        """(agg exprs, verdict-struct builder) for single-pass fusion;
+        the aggregation input must be ``flag(df, prefix)``."""
+        p = prefix or f"__{self.name}__"
+
+        def build() -> Column:
+            return _verdict_struct(self.name, *self._verdict_parts(p))
+
+        return self._agg_exprs(p), build
 
     def violations(self, df: DataFrame) -> DataFrame:
         return self.orphans(df)
@@ -516,8 +561,8 @@ class Drift(Check):
 
     Sketch: ``percentile_approx`` (Spark's GK/KLL-like quantile sketch,
     mergeable map-side → one tiny shuffle) produces an n-quantile
-    summary of both current and baseline; from the two summaries the
-    driver computes
+    summary of both current and baseline; from the two summaries one
+    SQL expression per partition computes
       * PSI  (population stability index over equal-population baseline
               bins; >0.2 conventionally = drifted), and
       * KS   (max CDF gap estimated on the merged quantile grid).
@@ -539,19 +584,20 @@ class Drift(Check):
     partition_by: Sequence[str] | None = None
     name: str = "drift"
 
-    def _quantiles(self, df: DataFrame, pid: bool) -> DataFrame:
+    def _quantiles_agg(self) -> Column:
         qs = [i / self.n_quantiles for i in range(self.n_quantiles + 1)]
         col = F.col(self.column).cast("double")
         if self.approx:
-            q = F.percentile_approx(col, qs, self.accuracy)
-        else:
-            q = F.percentile(col, F.array(*[F.lit(x) for x in qs]))
+            return F.percentile_approx(col, qs, self.accuracy)
+        return F.percentile(col, F.array(*[F.lit(x) for x in qs]))
+
+    def _quantiles(self, df: DataFrame, pid: bool) -> DataFrame:
         group = (
             df.groupBy(_partition_id(self.partition_by).alias("partition_id"))
             if pid
             else df.groupBy(F.lit("ALL").alias("partition_id"))
         )
-        return group.agg(q.alias("quantiles"))
+        return group.agg(self._quantiles_agg().alias("quantiles"))
 
     @staticmethod
     def psi_ks(base_q: list[float], cur_q: list[float]) -> tuple[float, float]:
@@ -562,10 +608,9 @@ class Drift(Check):
         and a piecewise-linear CDF through duplicated knots is
         ill-defined — it reported drift for a distribution against
         itself.  bisect_right/len is exact for the summary's point
-        masses and treats both sides identically."""
-        import bisect
-        import math
-
+        masses and treats both sides identically.  verdicts() computes
+        the same arithmetic in SQL; this is the reference it is tested
+        against."""
         if len(base_q) < 2 or len(cur_q) < 2:
             return 0.0, 0.0
 
@@ -599,37 +644,75 @@ class Drift(Check):
         at this size — use an Iceberg table in production)."""
         self._quantiles(df, pid=False).write.mode("overwrite").parquet(path)
 
+    def _psi_ks_sql(self, base_q: list[float], cur: str) -> tuple[str, str]:
+        """(PSI, KS) as SQL over the quantile-array column ``cur``, with
+        the baseline summary embedded as literals: psi_ks's step-CDF
+        arithmetic, cdf(q, x) = |{e in q : e <= x}| / |q|.  A NULL or
+        one-knot ``cur`` reads 0 for both."""
+        if len(base_q) < 2:
+            return "0.0D", "0.0D"
+        lit = _sql_double
+        eps = 1e-6
+        nb = len(base_q)
+
+        def cdf_cur(x: str) -> str:
+            return f"(size(filter({cur}, e -> e <= {x})) / size({cur}))"
+
+        psi, ks = [], []
+        prev_b, prev_c = 0.0, "0.0D"
+        for g in sorted(set(base_q)):
+            b = bisect.bisect_right(base_q, g) / nb
+            c = cdf_cur(lit(g))
+            expected = lit(max(b - prev_b, eps))
+            actual = f"greatest({c} - {prev_c}, {lit(eps)})"
+            psi.append(f"({actual} - {expected}) * ln({actual} / {expected})")
+            ks.append(f"abs({lit(b)} - {c})")
+            prev_b, prev_c = b, c
+        # tail mass above the last baseline knot
+        expected = lit(max(1.0 - prev_b, eps))
+        actual = f"greatest(1.0D - {prev_c}, {lit(eps)})"
+        psi.append(f"({actual} - {expected}) * ln({actual} / {expected})")
+        # KS on the merged grid: the baseline knots above, the current
+        # knots here
+        base = "array(" + ", ".join(lit(x) for x in sorted(base_q)) + ")"
+        ks.append(
+            f"array_max(transform({cur}, x -> abs("
+            f"size(filter({base}, e -> e <= x)) / {nb} - {cdf_cur('x')})))"
+        )
+        valid = f"{cur} IS NOT NULL AND size({cur}) >= 2"
+        return (
+            f"CASE WHEN {valid} THEN {' + '.join(psi)} ELSE 0.0D END",
+            f"CASE WHEN {valid} THEN greatest({', '.join(ks)}) ELSE 0.0D END",
+        )
+
+    def _verdict_parts(self, base_q: list[float], cur: str) -> tuple[Column, Column]:
+        psi, ks = self._psi_ks_sql(base_q, _sql_name(cur))
+        fail = F.expr(
+            f"CAST(({psi}) > {_sql_double(self.psi_threshold)}"
+            f" OR ({ks}) > {_sql_double(self.ks_threshold)} AS INT)"
+        )
+        metrics = F.expr(
+            f"map('psi', format_string('%.6f', {psi}),"
+            f" 'ks', format_string('%.6f', {ks}),"
+            f" 'column', {_sql_str(self.column)},"
+            f" 'n_quantiles', '{int(self.n_quantiles)}')"
+        )
+        return fail, metrics
+
     def verdicts(self, df: DataFrame) -> DataFrame:
-        spark = df.sparkSession
-        base_q = self._base_quantiles(spark)
-        cur = self._quantiles(df, pid=True).collect()
-        rows = []
-        for r in cur:
-            cur_q = list(r["quantiles"] or [])
-            if not base_q or not cur_q:
-                psi, ks = 0.0, 0.0
-            else:
-                psi, ks = self.psi_ks(base_q, cur_q)
-            drifted = psi > self.psi_threshold or ks > self.ks_threshold
-            rows.append(
-                (
-                    r["partition_id"],
-                    self.name,
-                    not drifted,
-                    int(drifted),
-                    {
-                        "psi": f"{psi:.6f}",
-                        "ks": f"{ks:.6f}",
-                        "column": self.column,
-                        "n_quantiles": str(self.n_quantiles),
-                    },
-                )
-            )
-        return spark.createDataFrame(rows, VERDICT_SCHEMA)
+        base_q = self._base_quantiles(df.sparkSession)
+        fail, metrics = self._verdict_parts(base_q, "quantiles")
+        return self._quantiles(df, pid=True).select(
+            *_verdict_select(self.name, fail, metrics)
+        )
 
     def _base_quantiles(self, spark) -> list[float]:
         if self.baseline_path is not None:
-            base = spark.read.parquet(self.baseline_path).collect()
+            base = (
+                spark.read.schema("partition_id string, quantiles array<double>")
+                .parquet(self.baseline_path)
+                .collect()
+            )
         elif self.baseline is not None:
             base = self._quantiles(self.baseline, pid=False).collect()
         else:
@@ -638,74 +721,14 @@ class Drift(Check):
 
     def fused_aggs(self, df: DataFrame, prefix: str | None = None):
         """Join the shared single-scan aggregation: the quantile sketch
-        is one agg expression; PSI/KS compile COLUMNAR against the
-        baseline summary embedded as literals (the baseline is one tiny
-        collected row — same bound as verdicts()).  Same step-CDF
-        arithmetic as psi_ks: cdf(q, x) = |{e in q : e <= x}| / |q|."""
-        import bisect
-
+        is one agg expression and the verdict is verdicts()' SQL over it
+        (the baseline is one tiny collected row)."""
         p = prefix or f"__{self.name}__"
         base_q = self._base_quantiles(df.sparkSession)
-        qs = [i / self.n_quantiles for i in range(self.n_quantiles + 1)]
-        col = F.col(self.column).cast("double")
-        if self.approx:
-            agg = F.percentile_approx(col, qs, self.accuracy)
-        else:
-            agg = F.percentile(col, F.array(*[F.lit(x) for x in qs]))
+        agg = self._quantiles_agg()
 
         def build() -> Column:
-            cur = F.col(f"{p}quantiles")
-            n_cur = F.size(cur).cast("double")
-
-            def cdf_cur(x: Column) -> Column:
-                return F.size(F.filter(cur, lambda e: e <= x)) / n_cur
-
-            eps = 1e-6
-            if len(base_q) >= 2:
-                grid = sorted(set(base_q))
-                psi = F.lit(0.0)
-                prev_b, prev_c = 0.0, F.lit(0.0)
-                for g in grid:
-                    b = bisect.bisect_right(base_q, g) / len(base_q)
-                    c = cdf_cur(F.lit(float(g)))
-                    expected = max(b - prev_b, eps)
-                    actual = F.greatest(c - prev_c, F.lit(eps))
-                    psi = psi + (actual - expected) * F.log(actual / F.lit(expected))
-                    prev_b, prev_c = b, c
-                expected = max(1.0 - prev_b, eps)
-                actual = F.greatest(F.lit(1.0) - prev_c, F.lit(eps))
-                psi = psi + (actual - expected) * F.log(actual / F.lit(expected))
-                # KS over the merged grid = max over base knots + cur knots
-                base_lit = F.array(*[F.lit(float(x)) for x in sorted(base_q)])
-                nb = float(len(base_q))
-
-                def cdf_base(x: Column) -> Column:
-                    return F.size(F.filter(base_lit, lambda e: e <= x)) / F.lit(nb)
-
-                ks_base = [
-                    F.abs(
-                        F.lit(bisect.bisect_right(base_q, g) / len(base_q))
-                        - cdf_cur(F.lit(float(g)))
-                    )
-                    for g in grid
-                ]
-                ks_cur = F.array_max(
-                    F.transform(cur, lambda e: F.abs(cdf_base(e) - cdf_cur(e)))
-                )
-                ks = F.greatest(*ks_base, ks_cur)
-                valid = cur.isNotNull() & (F.size(cur) >= 2)
-                psi = F.when(valid, psi).otherwise(F.lit(0.0))
-                ks = F.when(valid, ks).otherwise(F.lit(0.0))
-            else:
-                psi, ks = F.lit(0.0), F.lit(0.0)
-            drifted = (psi > self.psi_threshold) | (ks > self.ks_threshold)
-            metrics = F.create_map(
-                F.lit("psi"), F.format_string("%.6f", psi),
-                F.lit("ks"), F.format_string("%.6f", ks),
-                F.lit("column"), F.lit(self.column),
-                F.lit("n_quantiles"), F.lit(str(self.n_quantiles)),
-            )
-            return _verdict_struct(self.name, drifted.cast("int"), metrics)
+            return _verdict_struct(self.name, *self._verdict_parts(base_q, f"{p}quantiles"))
 
         return [agg.alias(f"{p}quantiles")], build
 
@@ -785,13 +808,14 @@ class CheckSuite:
         """Union of all verdict rows.
 
         ``fused`` (default): every aggregation-shaped check (schema
-        verdicts, column stats) that shares a partition_by contributes
-        its aggregate expressions to ONE
-        ``groupBy(partition_id).agg(...)`` — the corpus is scanned once
-        for the whole group instead of once per check (the verdict
+        verdicts, column stats, referential integrity, drift) that
+        shares a partition_by contributes its aggregate expressions to
+        ONE ``groupBy(partition_id).agg(...)`` — the corpus is scanned
+        once for the whole group instead of once per check (the verdict
         builders all read the same aggregated exchange, which Spark
-        reuses).  Shuffle-shaped checks (uniqueness, referential
-        integrity, drift) keep their own jobs."""
+        reuses).  Referential-integrity checks first flag the scan with
+        a broadcast left join of their dim keys.  Uniqueness, which
+        shuffles on its key, keeps its own jobs."""
         out: DataFrame | None = None
 
         def add(v: DataFrame):
@@ -816,13 +840,19 @@ class CheckSuite:
                 continue
             aggs: list[Column] = []
             builders = []
+            src = df
             for i, c in enumerate(cs):
                 # index in the prefix: same-named checks must not
                 # collide in the shared aggregate
-                a, b = c.fused_aggs(df, prefix=f"__{i}_{c.name}__")
+                p = f"__{i}_{c.name}__"
+                # rules bind against df itself: the flag columns are
+                # not fields of the validated row
+                a, b = c.fused_aggs(df, prefix=p)
+                if isinstance(c, ReferentialIntegrity):
+                    src = c.flag(src, p)
                 aggs.extend(a)
                 builders.append(b)
-            g = df.groupBy(
+            g = src.groupBy(
                 _partition_id(list(pb) or None).alias("partition_id")
             ).agg(*aggs)
             # ONE select emitting every check's verdict struct: a union

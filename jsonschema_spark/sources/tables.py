@@ -257,23 +257,20 @@ def require_partitioned_sink(spark: SparkSession, sink: str,
                          "move it aside or write to a new path")
 
 
-# The only read failures that mean "nothing written yet": the directory
-# is missing, or holds no data file (empty, or only the _temporary/ of
-# a crash during the first append).
-_EMPTY_STORE = frozenset({"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"})
-
-
 def read_store(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """An append-only parquet state store (checkpoint manifest, stats or
-    histogram partials) or a parquet sink; one nothing was written to
-    yet, or whose partitions all hold no rows, reads as empty.
+    histogram partials) or a parquet sink, read with its known
+    ``schema`` (no schema-inference job); one nothing was written to
+    yet, or whose partitions all hold no rows, reads as empty: the
+    directory is missing, or holds no data file (empty, or only the
+    ``_temporary/`` of a crash during the first append).
     Any other failure (a corrupt part file, a permission error) raises:
     reading it as empty would redo, and append again, everything the
     store already records."""
     try:
-        return spark.read.parquet(path)
+        return spark.read.schema(schema).parquet(path)
     except AnalysisException as e:
-        if e.getCondition() not in _EMPTY_STORE:
+        if e.getCondition() != "PATH_NOT_FOUND":
             raise
         return spark.createDataFrame([], schema)
 

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import contextlib
+import itertools
 import os
 
 import pytest
@@ -26,6 +28,32 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+_job_groups = itertools.count()
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``with spark_jobs() as ids:`` — on exit ``ids`` holds the Spark
+    jobs started inside the block (counted under a job group of its
+    own)."""
+
+    @contextlib.contextmanager
+    def counted():
+        sc = spark.sparkContext
+        gid = f"counted-{next(_job_groups)}"
+        sc.setJobGroup(gid, gid)
+        ids: list[int] = []
+        try:
+            yield ids
+        finally:
+            # job starts reach the status tracker through the listener bus
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            ids.extend(sc.statusTracker().getJobIdsForGroup(gid))
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    return counted
 
 
 def rows(df, *order):

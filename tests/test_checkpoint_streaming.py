@@ -395,3 +395,172 @@ def test_schema_check_json_col(spark):
     assert v == {"part=p1": ("2", "1"), "part=p2": ("2", "2")}
     viols = {(r["k"], r["path"]) for r in chk.violations(df).collect()}
     assert viols == {(2, "$.id"), (3, "$"), (4, "$.id")}
+
+
+def _day_rows(day, n_convs, extra=()):
+    """Ten turns per conversation, alternating user/assistant."""
+    out = [(day, f"{day}/c{c}", t, ("user", "assistant")[t % 2])
+           for c in range(n_convs) for t in range(10)]
+    return out + [(day, *r) for r in extra]
+
+
+DAY_SCHEMA = "day string, conv_id string, turn_idx int, role string"
+
+
+def _verdict_key(r):
+    return (r["partition_id"], r["check"], r["pass"], r["violation_count"],
+            tuple(sorted(r["metrics"].items())))
+
+
+def test_resumed_fused_verdicts_equal_per_check_verdicts(spark, tmp_path):
+    """A resume runs the checks missing the same partitions as one fused
+    pass; its verdict rows equal each check's own verdicts() over the
+    same partitions: RI with NULL fact keys and repeated orphan values,
+    and drift both passing and drifted."""
+    src = str(tmp_path / "days")
+    spark.createDataFrame(
+        _day_rows("2025-01-01", 4) + _day_rows("2025-01-02", 4), DAY_SCHEMA
+    ).write.partitionBy("day").parquet(src)
+    # the new day: a duplicate turn, two NULL roles, orphans repeated
+    new_day = _day_rows("2025-01-03", 3, extra=[
+        ("2025-01-03/c0", 0, "user"), ("2025-01-03/c9", 0, None),
+        ("2025-01-03/c9", 1, None), ("2025-01-03/c9", 2, "narrator"),
+        ("2025-01-03/c9", 3, "narrator"), ("2025-01-03/c9", 4, "ghost"),
+    ])
+    # drift_same's baseline is the new day itself, drift_shifted's lies
+    # far above it
+    same = spark.createDataFrame([(r[2],) for r in new_day], "turn_idx int")
+    shifted = same.selectExpr("turn_idx + 40 AS turn_idx")
+    dim = spark.createDataFrame([("user",), ("assistant",), ("user",)], "role string")
+    suite = checks.CheckSuite([
+        checks.SchemaCheck(plan=js.compile_schema(
+            {"properties": {"turn_idx": {"maximum": 8}}}), partition_by=["day"]),
+        checks.Uniqueness(keys=["conv_id", "turn_idx"], partition_by=["day"]),
+        checks.ReferentialIntegrity(dim=dim, fact_key="role", dim_key="role",
+                                    partition_by=["day"], name="ri_role"),
+        checks.ColumnStats(columns=["role"], approx=False, partition_by=["day"]),
+        checks.Drift(column="turn_idx", baseline=same, approx=False,
+                     partition_by=["day"], name="drift_same"),
+        checks.Drift(column="turn_idx", baseline=shifted, approx=False,
+                     partition_by=["day"], name="drift_shifted"),
+    ])
+    run = ResumableRun(suite=suite, manifest=CheckpointManifest(str(tmp_path / "m")),
+                       partition_by=["day"], source_id="t")
+    run.run(spark.read.parquet(src))
+
+    spark.createDataFrame(new_day, DAY_SCHEMA).write.mode("append").partitionBy(
+        "day").parquet(src)
+    df = spark.read.parquet(src)
+    got = sorted(map(_verdict_key, run.run(df).collect()))
+
+    from jsonschema_spark.checkpoint import prune_to_partitions
+
+    new = prune_to_partitions(df, ["day"], [("2025-01-03",)])
+    want = sorted(_verdict_key(r) for c in suite.checks for r in c.verdicts(new).collect())
+    assert got == want
+    by = {r[1]: r for r in got}
+    assert set(by) == {c.name for c in suite.checks}
+    assert {r[0] for r in got} == {"day=2025-01-03"}
+    ri = dict(by["ri_role"][4])
+    assert (ri["orphan_rows"], ri["orphan_keys"]) == ("3", "2")
+    assert by["drift_same"][2] is True and by["drift_shifted"][2] is False
+    assert by["uniqueness"][3] == 1
+
+
+def test_resume_added_check_runs_as_second_group(spark, part_df, tmp_path, monkeypatch):
+    """Checks missing different partitions run as separate groups: a
+    check added to the suite runs over every partition, the others only
+    over the new one."""
+    manifest = CheckpointManifest(str(tmp_path / "m_added"))
+    uniq = checks.Uniqueness(keys=["conv_id", "turn_idx"], partition_by=["day"])
+    ResumableRun(suite=checks.CheckSuite([uniq]), manifest=manifest,
+                 partition_by=["day"], source_id="t").run(part_df)
+
+    groups = []
+    real_run = checks.CheckSuite.run
+
+    def spy(self, df, fused=True):
+        groups.append([c.name for c in self.checks])
+        return real_run(self, df, fused)
+
+    monkeypatch.setattr(checks.CheckSuite, "run", spy)
+    more = part_df.union(spark.createDataFrame([("2025-01-03", "c3", 0)], part_df.schema))
+    stats = checks.ColumnStats(columns=["conv_id"], approx=False,
+                               partition_by=["day"], name="stats")
+    run = ResumableRun(suite=checks.CheckSuite([uniq, stats]), manifest=manifest,
+                       partition_by=["day"], source_id="t")
+    out = run.run(more).collect()
+    assert groups == [["uniqueness"], ["stats"]]
+    days = {("2025-01-01",), ("2025-01-02",), ("2025-01-03",)}
+    assert {k: set(v) for k, v in run.last_ran.items()} == {
+        "uniqueness": {("2025-01-03",)}, "stats": days}
+    assert sorted((r["check"], r["partition_id"]) for r in out) == [
+        ("stats", f"day={d}") for (d,) in sorted(days)] + [("uniqueness", "day=2025-01-03")]
+    assert run.run(more).collect() == []
+
+
+@pytest.mark.parametrize("escaped", ["false", "true"])
+def test_partition_listing_values_without_a_job(spark, tmp_path, spark_jobs, escaped):
+    """The metadata route types its partition values on the driver, with
+    no Spark job, and reads quotes, backslashes, the NULL partition and
+    booleans as the scan route does, under either string-literal parser
+    setting."""
+    from jsonschema_spark.checkpoint import _enumerate_partitions
+    from jsonschema_spark.operators.checks import _partition_id
+
+    src = str(tmp_path / "hazards")
+    values = ["it's", 'say "hi"', "back\\slash", "\\'", "''", "%41", "a=b/c", None]
+    spark.createDataFrame(
+        [(v, i % 2 == 0, i) for i, v in enumerate(values)], "s string, b boolean, k int"
+    ).write.partitionBy("s", "b").parquet(src)
+    df = spark.read.parquet(src)
+    scanned = {tuple(r) for r in df.select(
+        _partition_id(["s", "b"]).alias("__pid"), "s", "b").distinct().collect()}
+    assert len(scanned) == len(values)
+
+    key = "spark.sql.parser.escapedStringLiterals"
+    old = spark.conf.get(key)
+    spark.conf.set(key, escaped)
+    try:
+        with spark_jobs() as jobs:
+            raw, route = _enumerate_partitions(df, ["s", "b"])
+    finally:
+        spark.conf.set(key, old)
+    assert route == "files"
+    assert jobs == []
+    assert {tuple(r) for r in raw} == scanned
+
+
+def test_lineage_of_file_dims_follows_their_files(spark, part_df, tmp_path, spark_jobs):
+    """A parquet dim is fingerprinted from its file listing without a
+    Spark job: overwriting it with changed content re-runs its RI check,
+    and the check over an untouched dim is skipped."""
+    from jsonschema_spark.checkpoint import _df_fingerprint
+
+    dim_conv, dim_turn = str(tmp_path / "dim_conv"), str(tmp_path / "dim_turn")
+    spark.createDataFrame([("c1",)], "conv_id string").write.parquet(dim_conv)
+    spark.createDataFrame([(0,)], "turn_idx int").write.parquet(dim_turn)
+    manifest = CheckpointManifest(str(tmp_path / "m_files"))
+
+    def run():
+        suite = checks.CheckSuite([
+            checks.ReferentialIntegrity(dim=spark.read.parquet(dim_conv), fact_key="conv_id",
+                                        dim_key="conv_id", partition_by=["day"], name="ri_conv"),
+            checks.ReferentialIntegrity(dim=spark.read.parquet(dim_turn), fact_key="turn_idx",
+                                        dim_key="turn_idx", partition_by=["day"], name="ri_turn"),
+        ])
+        return ResumableRun(suite=suite, manifest=manifest, partition_by=["day"],
+                            source_id="t").run(part_df).collect()
+
+    assert len(run()) == 4
+    dim = spark.read.parquet(dim_conv)
+    with spark_jobs() as jobs:
+        fp = _df_fingerprint(dim)
+    assert jobs == [] and fp.startswith("files:")
+    assert run() == []
+
+    spark.createDataFrame([("c1",), ("c2",)], "conv_id string").write.mode(
+        "overwrite").parquet(dim_conv)
+    out = run()
+    assert sorted((r["check"], r["partition_id"], r["violation_count"]) for r in out) == [
+        ("ri_conv", "day=2025-01-01", 0), ("ri_conv", "day=2025-01-02", 0)]

@@ -260,6 +260,15 @@ def test_drift_fused_matches_driver_path(spark):
         assert fus["pass"] == seq["pass"] == (not want_drift)
         assert fus["metrics"]["psi"] == seq["metrics"]["psi"]
         assert fus["metrics"]["ks"] == seq["metrics"]["ks"]
+        # both paths share one SQL builder: check it against the driver
+        # arithmetic over the collected quantile summaries
+        drift = suite.checks[1]
+        base_q = drift._base_quantiles(spark)
+        cur_q = drift._quantiles(cur, pid=True).collect()[0]["quantiles"]
+        psi, ks = checks.Drift.psi_ks(base_q, list(cur_q))
+        assert float(fus["metrics"]["psi"]) == pytest.approx(psi, abs=1e-6)
+        assert float(fus["metrics"]["ks"]) == pytest.approx(ks, abs=1e-6)
+        assert (psi > 0.2 or ks > 0.2) == want_drift
 
 
 def test_fused_suite_same_named_checks_do_not_collide(spark):

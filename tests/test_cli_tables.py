@@ -81,6 +81,58 @@ def test_cli_run_with_manifest_resume(
     assert spark.read.parquet(str(tmp_path / "violations")).count() == n_viols
 
 
+# Spark jobs of a resumed run over one new day (measured 16 with this
+# suite on local[4]): manifest, baseline and input reads, one fused pass
+# over the new day, the sinks, the manifest append and the next drift
+# baseline.  The per-check resume it replaced took 32.
+RESUME_JOBS = 16
+
+
+def test_cli_resume_one_new_day_job_count(spark, data_dir, tmp_path, spark_jobs):
+    """A resumed run over one new day checks it in one fused pass: the
+    run's Spark jobs stay within RESUME_JOBS and only the new day gets
+    verdict rows."""
+    from pyspark.sql import functions as F
+
+    from jsonschema_spark.cli import main
+    from jsonschema_spark.operators.checks import Drift
+
+    rows = read_table(spark, str(data_dir / "transcripts")).withColumn(
+        "day", F.concat(F.lit("d"), F.pmod(F.hash("conv_id"), F.lit(3)).cast("string")))
+    src = str(tmp_path / "days")
+    rows.filter("day != 'd2'").write.partitionBy("day").parquet(src)
+    drift_q = str(tmp_path / "drift_q")
+    Drift(column="turn_idx").save_baseline(spark.read.parquet(src), drift_q)
+    cfg = {
+        "source": src,
+        "schema": {"required": ["conv_id", "role"], "properties": {"turn_idx": {"minimum": 0}}},
+        "keys": ["day", "conv_id", "turn_idx"],
+        "partition_by": ["day"],
+        "checks": {
+            "uniqueness": {"keys": ["conv_id", "turn_idx"]},
+            "referential": [{"name": "ri_role", "fact_key": "role",
+                             "dim": str(data_dir / "dim_roles"), "dim_key": "role"}],
+            "stats": {"columns": ["role", "tool"]},
+            "drift": {"column": "turn_idx", "baseline_path": drift_q,
+                      "save_baseline_to": drift_q},
+        },
+        "output": {name: str(tmp_path / name)
+                   for name in ("verdicts", "violations", "manifest")},
+    }
+    cfg_path = tmp_path / "days.json"
+    cfg_path.write_text(json.dumps(cfg))
+    assert main(["run", str(cfg_path)]) == 0
+
+    rows.filter("day = 'd2'").write.mode("append").partitionBy("day").parquet(src)
+    with spark_jobs() as jobs:
+        assert main(["run", str(cfg_path)]) == 0
+    assert len(jobs) <= RESUME_JOBS
+    verdicts = spark.read.parquet(cfg["output"]["verdicts"]).collect()
+    assert sorted((r["partition_id"], r["check"]) for r in verdicts) == sorted(
+        (f"day=d{d}", c) for d in range(3)
+        for c in ("schema", "uniqueness", "ri_role", "column_stats", "drift"))
+
+
 WRITE_POINTS = ("verdicts", "violations", "manifest")
 
 
