@@ -62,11 +62,14 @@ CHECKPOINT_SCHEMA = (
 
 def _scan_files(df: DataFrame) -> list[str] | None:
     """The data files of ``df`` when it is a bare file-scan relation
-    (no filter or projection above the scan), else None."""
+    (no filter or projection above the scan), else None.  A relation
+    that lists no files (an Iceberg ``RelationV2``, a non-file v1
+    source, an empty directory) is None too: its content must be
+    hashed, since an empty listing never changes."""
     try:
         plan = df._jdf.queryExecution().analyzed().toString().strip()
         if len(plan.splitlines()) == 1 and plan.startswith("Relation"):
-            return list(df.inputFiles())
+            return list(df.inputFiles()) or None
     except Exception:
         pass
     return None
@@ -74,11 +77,14 @@ def _scan_files(df: DataFrame) -> list[str] | None:
 
 def _df_fingerprint(df: DataFrame) -> str:
     """Fingerprint of a DataFrame-valued check input (RI dim, drift
-    baseline), so the lineage changes when its content does.  A bare
-    file scan is fingerprinted from its file listing (path, length,
-    modification time) without a Spark job; any other DataFrame by
-    row count + order-insensitive xxhash64 sum, one agg job over a
-    table that is small by contract (dim/baseline << fact)."""
+    baseline), so the lineage changes when it does.  A bare file scan
+    is fingerprinted from its file listing (path, length, modification
+    time) without a Spark job: this suits dims whose files are only
+    added to, but rewriting a dim, even with identical content, changes
+    its fingerprint and re-runs its checks over every partition.  Any
+    other DataFrame is fingerprinted by row count + order-insensitive
+    xxhash64 sum, one agg job over a table that is small by contract
+    (dim/baseline << fact)."""
     files = _scan_files(df)
     if files is not None:
         spark = df.sparkSession
@@ -104,8 +110,9 @@ def _df_fingerprint(df: DataFrame) -> str:
 def _lineage(source_id: str, check: Check) -> str:
     """Stable fingerprint of (input, check config): same lineage ⇒ the
     cached verdict is valid for this re-run.  DataFrame-valued config
-    (e.g. ReferentialIntegrity.dim, Drift.baseline) contributes a
-    content fingerprint so a changed dim invalidates old manifest rows."""
+    (e.g. ReferentialIntegrity.dim, Drift.baseline) contributes
+    ``_df_fingerprint`` (file listing for a bare file scan, else a
+    content hash) so a changed dim invalidates old manifest rows."""
     cfg = {}
     for k, v in sorted(vars(check).items()):
         if isinstance(v, (str, int, float, bool, list, tuple, dict, type(None))):
@@ -215,13 +222,8 @@ def _partition_tuples_from_files(df: DataFrame, cols: Sequence[str]):
             vals[key] = v
         if set(vals) != colset:
             return None  # table not physically partitioned by `cols`
-        t = tuple(
-            None
-            if unquote(vals[c]) == "__HIVE_DEFAULT_PARTITION__"
-            else unquote(vals[c])
-            for c in cols
-        )
-        tuples.add(t)
+        t = tuple(unquote(vals[c]) for c in cols)
+        tuples.add(tuple(None if v == "__HIVE_DEFAULT_PARTITION__" else v for v in t))
     return sorted(
         tuples, key=lambda t: tuple("" if x is None else str(x) for x in t)
     )
@@ -251,12 +253,7 @@ def _enumerate_partitions(df: DataFrame, cols: Sequence[str]):
         )
         raw = typed.select(_partition_id(cols).alias("__pid"), *cols).collect()
         return raw, "files"
-    raw = (
-        df.select(_partition_id(cols).alias("__pid"), *cols)
-        .distinct()
-        .collect()
-    )
-    return raw, "scan"
+    return df.select(_partition_id(cols).alias("__pid"), *cols).distinct().collect(), "scan"
 
 
 def prune_to_partitions(
@@ -326,16 +323,10 @@ class ResumableRun:
         done = self.manifest.completed(spark, lineages)
         self.last_ran: dict[str, list[tuple]] = {}
 
-        # all partitions present in the input (driver-small): keep the
-        # RAW column values — the pruning predicate must be on the
-        # partition columns themselves, a computed pid string would
-        # defeat partition pruning
+        # all partitions present in the input (driver-small), as RAW
+        # column values: the pruning predicate must be on the partition
+        # columns themselves (a computed pid string defeats pruning)
         if self.partition_by:
-            # pids from the verdicts' own _partition_id (a driver-side
-            # join would render booleans and NULLs differently, and
-            # completed() would never match); metadata route when
-            # available: no scan, no Spark job, and a fully checkpointed
-            # resume touches ZERO fact-table bytes
             raw, self.partition_source = _enumerate_partitions(
                 df, self.partition_by
             )

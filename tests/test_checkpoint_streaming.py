@@ -564,3 +564,26 @@ def test_lineage_of_file_dims_follows_their_files(spark, part_df, tmp_path, spar
     out = run()
     assert sorted((r["check"], r["partition_id"], r["violation_count"]) for r in out) == [
         ("ri_conv", "day=2025-01-01", 0), ("ri_conv", "day=2025-01-02", 0)]
+
+
+def test_lineage_of_unlisted_relation_dims_follows_their_content(spark, part_df, tmp_path):
+    """A bare relation that lists no files (an Iceberg ``RelationV2``, a
+    non-file source) falls back to the content hash: changing the dim's
+    rows re-runs its RI check, an unchanged dim is skipped."""
+    manifest = CheckpointManifest(str(tmp_path / "m_unlisted"))
+
+    def run(path):
+        dim = spark.read.parquet(path)
+        dim.inputFiles = lambda: []  # what inputFiles() gives for RelationV2
+        suite = checks.CheckSuite([checks.ReferentialIntegrity(
+            dim=dim, fact_key="conv_id", dim_key="conv_id",
+            partition_by=["day"], name="ri_conv")])
+        return ResumableRun(suite=suite, manifest=manifest, partition_by=["day"],
+                            source_id="t").run(part_df).collect()
+
+    dim_a, dim_b = str(tmp_path / "dim_a"), str(tmp_path / "dim_b")
+    spark.createDataFrame([("c1",)], "conv_id string").write.parquet(dim_a)
+    spark.createDataFrame([("c1",), ("c2",)], "conv_id string").write.parquet(dim_b)
+    assert len(run(dim_a)) == 2
+    assert run(dim_a) == []
+    assert sorted(r["partition_id"] for r in run(dim_b)) == ["day=2025-01-01", "day=2025-01-02"]
